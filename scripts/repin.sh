@@ -25,7 +25,8 @@
 # cool-down, instead of silently handing a hot leg to the gates (rounds
 # 10/12 both shipped or nearly shipped contaminated legs this way). A
 # leg still over budget after the retry is kept and flagged loudly for
-# manual graft.TimeQ adjudication — never commit it as-is.
+# manual adjudication (a fresh-JVM graft.Bench subset run, README
+# "Disputing a bench number") — never commit it as-is.
 #
 # Usage: nohup bash scripts/repin.sh > /tmp/repin_chain.log 2>&1 &
 #
@@ -86,7 +87,7 @@ run_leg() {
       sleep 120
     else
       echo "[repin] WARNING: $out STILL over noisy budget / drift gate after retry —"
-      echo "[repin]   kept for inspection; adjudicate with graft.TimeQ, do NOT commit as-is"
+      echo "[repin]   kept for inspection; adjudicate with a fresh-JVM graft.Bench subset run (SPARK_GRAFT_BENCH_ONLY + SPARK_GRAFT_BENCH_OUT), do NOT commit as-is"
       CHAIN_OK=0
     fi
   done
@@ -134,7 +135,8 @@ done
 # 11% over its ABSOLUTE bound — suite-position inflation the budget
 # cannot see. Catching it inside the chain saves the round a full
 # sbt-test discovery cycle; a red gate here means: adjudicate the
-# offender with graft.TimeQ in a fresh JVM, then re-run that leg.
+# offender with a fresh-JVM graft.Bench subset run (SPARK_GRAFT_BENCH_ONLY
+# + SPARK_GRAFT_BENCH_OUT), then re-run that leg.
 if sbt -batch "testOnly graft.Sf1GrowthGateSpec graft.Bench30xGateSpec" \
     > /tmp/repin_gates.log 2>&1; then
   GATES=green
@@ -146,5 +148,6 @@ if [ "$CHAIN_OK" = 1 ] && [ "$GATES" = green ]; then
   echo "REPIN_DONE — artifact gates green; run full sbt test before committing"
 else
   echo "REPIN_DONE_WITH_WARNINGS — noisy budget ($CHAIN_OK=ok) / gates ($GATES);"
-  echo "  adjudicate with graft.TimeQ and re-run the offending leg before committing"
+  echo "  adjudicate with a fresh-JVM graft.Bench subset run (SPARK_GRAFT_BENCH_ONLY +"
+  echo "  SPARK_GRAFT_BENCH_OUT) and re-run the offending leg before committing"
 fi

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -102,36 +100,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Shuffles START wide (8x cores) and AQE coalesces them down to
-      // the advisory size: coalescing is free, but AQE can never
-      // SPLIT an oversized non-skew-join partition — with a flat 32
-      // at the 30x step every sort/join task carried 30x the state in
-      // one heap slice (the g2 OOM class). On a real cluster this is
-      // exactly the "partitions ~ 2-3x total cores, let AQE shrink"
-      // sizing rule; at sf0.01 the coalesced plan is unchanged.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the streaming parity queries use auto temp checkpoints; delete
-      // them on success and keep their INFO/WARN chatter out of the
-      // tail the driver parses the contract line from
-      .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming",
       org.apache.logging.log4j.Level.ERROR)
 
     val qs = SparkEntry.queries
-    // local-iteration escape hatch: comma-separated subset of names.
+    // Comma-separated subset of names: local iteration, and with
+    // SPARK_GRAFT_BENCH_OUT pointed at a scratch file the adjudication
+    // run for a disputed row (a fresh JVM, the same 3-run protocol, no
+    // committed baseline to retry against).
     // Unknown names FAIL LOUDLY: scripts/repin.sh derives the heavy
     // list from the committed artifact's keys, so after a query rename
     // a silent drop would shrink BOTH fresh heavy artifacts in step

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.Etl
 import graft.classify.Geo
 import graft.processors.AccessProcessors._
@@ -16,15 +14,7 @@ object EtlCli {
     val Array(logGlob, factRoot, ckptDir) = args.take(3)
     val localHost = args.lift(3).getOrElse("localhost")
 
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("ERROR")
 
     val written = Etl.run(spark, Etl.Config(
       logGlob = logGlob, factRoot = factRoot, checkpointDir = ckptDir,

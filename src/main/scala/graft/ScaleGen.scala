@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the local scaling rehearsal.
@@ -37,16 +37,9 @@ object ScaleGen {
     val out = if (args.length > 1) args(1) else "target/sfgen/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS); read as long (Tables.loadNanos
-      // applies the same setting, so the written long column round-trips)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is TIMESTAMP(NANOS) and reads as long under the
+    // session's nanosAsLong, so the written long column round-trips
+    val spark = GraftSession.create()
 
     /** Cross-join each row with copy indexes 0..copies-1 as `cp`. */
     def replicate(df: DataFrame): DataFrame =

@@ -32,20 +32,30 @@ object Report {
       item.view -> QueryCompiler.compile(ctx, cat)
     }
 
+  /** Render one item to its JSON payload, with the item's resolved
+    * context (what a cache entry for the payload is keyed on). The
+    * envelope carries the item's own datatype, which an override may
+    * change from the report's base. The one renderer behind both
+    * [[renderJson]] and [[ReportCache.warm]]. */
+  def renderItem(spec: Spec, item: Item, cat: Catalog,
+      today: java.time.LocalDate): (Context, String) = {
+    val ctx = item.overrides(spec.base).resolved(today)
+    val df = QueryCompiler.compile(ctx, cat)
+    val payload =
+      if (item.view == "geochart") geoChartJson(df)
+      else graft.export.Export.toJson(df,
+        context = Map("report" -> spec.name, "view" -> item.view,
+          "datatype" -> ctx.datatype))
+    ctx -> payload
+  }
+
   /** Pre-render every item to its JSON payload — the equivalent of
     * the reference's nightly report-cache warm-up
     * (`process_stats:144-159` executes each report view server-side
     * and caches the AJAX payload). The result map IS the cache. */
   def renderJson(spec: Spec, cat: Catalog,
       today: java.time.LocalDate): Map[String, String] =
-    compile(spec, cat, today).map { case (view, df) =>
-      val payload =
-        if (view == "geochart") geoChartJson(df)
-        else graft.export.Export.toJson(df,
-          context = Map("report" -> spec.name, "view" -> view,
-            "datatype" -> spec.base.datatype))
-      view -> payload
-    }.toMap
+    spec.items.map(item => item.view -> renderItem(spec, item, cat, today)._2).toMap
 
   /** GeoChart item payload (ref `View/Google/GeoChart.pm:16-41`): the
     * reference selects `fields => ['value']` — value being the

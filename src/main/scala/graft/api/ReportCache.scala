@@ -115,16 +115,12 @@ object ReportCache {
 
   /** Pre-warm: render every item of the report and publish each
     * payload under the key a later `get` with the same (resolved)
-    * context would probe. Returns view -> payload, like
-    * [[Report.renderJson]]. */
+    * context would probe. Returns view -> payload, the same map
+    * [[Report.renderJson]] returns. */
   def warm(dir: String, spec: Report.Spec, cat: Catalog,
       today: java.time.LocalDate): Map[String, String] =
     spec.items.map { item =>
-      val ctx = item.overrides(spec.base).resolved(today)
-      val payload = graft.export.Export.toJson(
-        graft.query.QueryCompiler.compile(ctx, cat),
-        context = Map("report" -> spec.name, "view" -> item.view,
-          "datatype" -> ctx.datatype))
+      val (ctx, payload) = Report.renderItem(spec, item, cat, today)
       store(dir, paramsOf(ctx, item.view), payload)
       item.view -> payload
     }.toMap

@@ -27,28 +27,18 @@ import graft.functions.Text
   */
 object Dedup {
 
-  /** Materialization policy for the bounded pair-table OUTPUTS of
-    * d2/d3/d4/d11 (minhash/simhash/jaccard/containment): each op
-    * unpersists its internal feature cache before returning, so by
-    * default the output is eagerly `localCheckpoint`ed SERIALIZED
-    * while the cache is still hot — the 30x heap insurance from
-    * round 9 (deserialized checkpoint rows cost 5-10x their
-    * serialized size). `Some(level)` = eager checkpoint at that
-    * level; `None` = return the LAZY plan and leave materialization
-    * to the caller (who then pays the feature-pipeline recompute on
-    * every action — both self-join sides re-shingle). A var, not a
-    * per-call param: it is a measurement/ops knob (`DedupCkptBench`
-    * sweeps it and COVERAGE.md records the measured trade), not
-    * query semantics — results are identical under every setting. */
-  @volatile private[graft] var pairCheckpoint
-      : Option[org.apache.spark.storage.StorageLevel] =
-    Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
-  /** Apply [[pairCheckpoint]] to a bounded pair-table output. */
-  private def ckptPairs(df: DataFrame): DataFrame = pairCheckpoint match {
-    case Some(lvl) => df.localCheckpoint(true, lvl) // MEMORY_AND_DISK_SER default
-    case None => df
-  }
+  /** Materialize a bounded pair-table OUTPUT of d2/d3/d4/d11
+    * (minhash/simhash/jaccard/containment): each op unpersists its
+    * internal feature cache before returning, so the output is eagerly
+    * `localCheckpoint`ed SERIALIZED while the cache is still hot — the
+    * 30x heap insurance from round 9. The round-10 A/B (COVERAGE.md
+    * checkpoint-trade table) settled the alternatives: a deserialized
+    * checkpoint pays the same materialization at 5-10x the block
+    * footprint (the class that OOM'd two 30x steps), no checkpoint
+    * makes every caller action re-shingle both self-join sides, and
+    * the 30x gates were pinned under this form. */
+  private def ckptPairs(df: DataFrame): DataFrame =
+    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Shared skew guard: drop rows whose group (by `cols`) exceeds
     * `cap` members. The sizing window rides the same shuffle the
@@ -434,8 +424,6 @@ object Dedup {
       var prevSum: Option[java.math.BigDecimal] = None
       var converged = false
       var i = 0
-      val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-      var tRound = System.nanoTime()
       while (!converged && i < maxIters) {
         // messages: my label, delivered to each neighbor; plus the
         // pointer jump label(label(id)) — path halving; the jumped-to
@@ -480,10 +468,6 @@ object Dedup {
         } else {
           labels.unpersist()
           labels = next
-        }
-        if (dbg) {
-          println(f"[cc] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2f s sum=$sumNow")
-          tRound = System.nanoTime()
         }
         i += 1
       }

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.DataType
   * to one task (Spark warns and serializes) — fine for a bounded
   * series, fatal for a table-sized rank at scale. This operator gets
   * the same exact answer with every stage parallel, via two
-  * interchangeable strategies (property-tested equal):
+  * interchangeable strategies (property-tested equal), picked from
+  * the input's plan (see "Strategy selection" below):
   *
-  * '''pinned''' (default): the bucket id is a PURE ROW FUNCTION —
+  * '''pinned''': the bucket id is a PURE ROW FUNCTION —
   * sample the sort key once (hash-top-k, a narrow column-pruned
   * pass), pick ≤ p-1 boundary cut rows, and compile them into a
   * codegen'd lexicographic-compare expression. Because every pass
@@ -32,15 +33,19 @@ import org.apache.spark.sql.types.DataType
   * deliver that — the branches carry self-join-style fresh exprIds
   * and each would re-sample its own range boundaries, the round-11
   * mis-rank hazard). One full shuffle, but the ranked frame is
-  * materialized in the block store. The right trade when the INPUT
-  * IS EXPENSIVE to recompute (the pinned form re-executes the
-  * upstream plan for its two narrow passes; a heavy upstream
-  * aggregation or join may dwarf the cache cost) — persist it
-  * explicitly or pick this strategy.
+  * materialized in the block store. Immune to an upstream whose row
+  * multiset changes between executions: every branch reads the one
+  * materialized assignment.
   *
-  * Strategy selection: `GRAFT_RANK_STRATEGY` env /
-  * `graft.rank.strategy` system property (`pinned` | `persist`),
-  * default pinned.
+  * Strategy selection: `withRowNumber` / `withPrefixSum` / `withNtile`
+  * pick persist when the input's analyzed plan may yield a different
+  * row multiset on re-execution — it holds a nondeterministic
+  * expression (`rand()`, a UDF marked nondeterministic, `first` or
+  * `collect_list` over an unordered input, ...) or a `Limit` whose
+  * child is not a `Sort` — and pinned otherwise. The pinned form
+  * re-executes the upstream for its two narrow passes, so a caller
+  * with an EXPENSIVE deterministic upstream (a heavy aggregate or
+  * join) should persist it before ranking.
   *
   * Ranks are total-order exact when the sort key is unique (pass a
   * tiebreaker column, as any deterministic global rank requires).
@@ -68,9 +73,16 @@ object GlobalRank {
     * the warning would be noise drowning out real regressions. */
   def onePartitionKey(c: Column): Column = pmod(c, lit(1))
 
-  private def chosenStrategy: String =
-    sys.env.getOrElse("GRAFT_RANK_STRATEGY",
-      System.getProperty("graft.rank.strategy", "pinned"))
+  /** Whether re-executing `df` may yield a different row multiset —
+    * the input the pinned strategy's re-executed passes cannot rank. */
+  private def unstableInput(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Limit, Sort}
+    df.queryExecution.analyzed.exists {
+      case Limit(_, _: Sort) => false
+      case Limit(_, _) => true
+      case node => node.expressions.exists(!_.deterministic)
+    }
+  }
 
   private def defaultP(df: DataFrame, partitions: Int): Int =
     if (partitions > 0) partitions
@@ -258,8 +270,8 @@ object GlobalRank {
 
   /** Persist-strategy row_number: range exchange + persisted shared
     * frame — both branches read ONE InMemoryRelation (plan invariant
-    * guarded by PlanShapeSpec). Prefer when the upstream plan is
-    * expensive to recompute; costs a corpus-sized cache. */
+    * guarded by PlanShapeSpec). The pick for an unstable input;
+    * costs a corpus-sized cache. */
   def withRowNumberPersist(df: DataFrame, order: Seq[Column],
       out: String = "rn", partitions: Int = 0): DataFrame = {
     val p = defaultP(df, partitions)
@@ -315,51 +327,42 @@ object GlobalRank {
   }
 
   // ---------------------------------------------------------------
-  // public API — strategy-dispatched
+  // public API — strategy chosen from the input's plan
   //
-  // CALLER CONTRACT (pinned default): calling any of these launches
-  // an EAGER Spark job at plan-construction time (the boundary
-  // sample's executeCollect, bounded at ≤8,192 key tuples) and the
-  // returned plan RE-EXECUTES the upstream for the two narrow
-  // auxiliary passes. Two consequences:
-  //   1. An upstream with an unstable row MULTISET across executions
-  //      (df.sample() without a seed, LIMIT without ORDER BY) yields
-  //      wrong ranks — the passes disagree on membership. Persist the
-  //      upstream first, or use the *Persist variants, which read one
-  //      materialized assignment and are immune.
-  //   2. An EXPENSIVE upstream (heavy aggregate/join) is recomputed
-  //      2× column-pruned + 1× full — persist it, or set
-  //      GRAFT_RANK_STRATEGY=persist, when that dominates.
-  // (Also in README "Exact global rank" — keep the two in sync.)
+  // CALLER CONTRACT: on a stable input (the pinned pick) each of
+  // these launches an EAGER Spark job at plan-construction time (the
+  // boundary sample's executeCollect, bounded at ≤8,192 key tuples),
+  // and the returned plan RE-EXECUTES the upstream for the two narrow
+  // auxiliary passes — 2× column-pruned + 1× full. Persist an
+  // EXPENSIVE upstream (heavy aggregate/join) first when that
+  // dominates. An unstable input ([[unstableInput]]) goes to the
+  // persist form, so no caller has to know which inputs the pinned
+  // passes would mis-rank.
+  // (Also in README "Global-rank strategy choice" — keep the two in sync.)
   // ---------------------------------------------------------------
 
   /** Append `out` = exact global row_number under `order`.
-    * See the caller contract above: eager boundary-sample job at call
-    * time; upstream re-executed for the auxiliary passes — persist a
-    * nondeterministic or expensive upstream, or use
-    * [[withRowNumberPersist]]. */
+    * Caller contract above. */
   def withRowNumber(df: DataFrame, order: Seq[Column],
       out: String = "rn", partitions: Int = 0): DataFrame =
-    if (chosenStrategy == "persist") withRowNumberPersist(df, order, out, partitions)
+    if (unstableInput(df)) withRowNumberPersist(df, order, out, partitions)
     else withRowNumberPinned(df, order, out, partitions)
 
   /** Append `out` = exact global INCLUSIVE prefix sum of `value`
     * under `order` (`ROWS UNBOUNDED PRECEDING` semantics — exact when
     * the sort key is unique; pass a tiebreaker). The
     * weighted-systematic-sampling and sequence-packing operators
-    * build on this. Caller contract above applies (eager sample job;
-    * upstream re-executed — see [[withPrefixSumPersist]]). */
+    * build on this. Caller contract above. */
   def withPrefixSum(df: DataFrame, value: Column, order: Seq[Column],
       out: String = "cum", partitions: Int = 0): DataFrame =
-    if (chosenStrategy == "persist") withPrefixSumPersist(df, value, order, out, partitions)
+    if (unstableInput(df)) withPrefixSumPersist(df, value, order, out, partitions)
     else withPrefixSumPinned(df, value, order, out, partitions)
 
   /** Append `out` = exact NTILE(buckets) under `order` (SQL
     * semantics, same rows-per-bucket split as the window function).
-    * Caller contract above applies (eager sample job; upstream
-    * re-executed — see [[withNtilePersist]]). */
+    * Caller contract above. */
   def withNtile(df: DataFrame, buckets: Int, order: Seq[Column],
       out: String = "ntile", partitions: Int = 0): DataFrame =
-    if (chosenStrategy == "persist") withNtilePersist(df, buckets, order, out, partitions)
+    if (unstableInput(df)) withNtilePersist(df, buckets, order, out, partitions)
     else withNtilePinned(df, buckets, order, out, partitions)
 }

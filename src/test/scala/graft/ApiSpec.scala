@@ -306,6 +306,31 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException](Report.geoChartJson(badCount))
   }
 
+  test("cache warm stores exactly the renderJson payloads (geochart, datatype override)") {
+    // one renderer behind both: a geochart item in its wire format,
+    // and each envelope stamped with the item's own (overridden)
+    // datatype, not the report base's
+    import graft.api.ReportCache
+    val s = spark; import s.implicits._
+    val countryFact = Seq(
+      (java.sql.Date.valueOf("2024-03-01"), 1L, "US", 7L),
+      (java.sql.Date.valueOf("2024-03-01"), 2L, "DE", 3L))
+      .toDF("date", "id", "value", "count")
+    val cat = Catalog(facts = Map("countries" -> countryFact, "downloads" -> fact()))
+    val today = java.time.LocalDate.of(2024, 6, 15)
+    val spec = Report.Spec("geo-page",
+      base = Context(datatype = "countries", fields = Seq("value")),
+      items = Seq(
+        Report.Item("geochart"),
+        Report.Item("table", _.copy(datatype = "downloads"))))
+    val rendered = Report.renderJson(spec, cat, today)
+    val warmed = ReportCache.warm(
+      Files.createTempDirectory("ir2render").toString, spec, cat, today)
+    assert(warmed == rendered)
+    assert(rendered("geochart") == """{ "data": [["US", 7],["DE", 3]] }""")
+    assert(rendered("table").contains("\"datatype\": \"downloads\""), rendered("table"))
+  }
+
   test("W3 graph labels: golden reference output per date resolution") {
     val s = spark; import s.implicits._
     // golden strings from ref Graph.pm:131-150 — day "$3 $month $1",

@@ -831,14 +831,15 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // wire once, hash-partitioned by the pure-function __pid for the
     // window); every row_number/sum window stays __pid-partitioned.
     //
-    // CALLER CONTRACT NOTE (README "Global-rank strategy knob" +
+    // CALLER CONTRACT NOTE (README "Global-rank strategy choice" +
     // GlobalRank dispatch scaladoc): the no-cache shape asserted here
     // is exactly why the pinned form RE-EXECUTES the upstream for its
     // auxiliary passes and runs an eager boundary-sample job at plan
-    // construction — an upstream with an unstable row multiset
-    // (unseeded sample(), LIMIT without ORDER BY) must be persisted
-    // or routed to the persist strategy (next test), which is immune
-    // because its branches read one InMemoryRelation.
+    // construction — so an upstream with an unstable row multiset
+    // (a nondeterministic expression, LIMIT without ORDER BY) is
+    // routed to the persist strategy automatically (the automatic-
+    // choice test below), which is immune because its branches read
+    // one InMemoryRelation. These board inputs are deterministic.
     for (q <- Seq("o10_rank_sample", "o11_weighted_sample", "o16_range_bounds")) {
       val p = plan(q)
       assert(!p.contains("InMemoryTableScan"),
@@ -875,6 +876,37 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"persist strategy lost its shared cache — the offsets and join " +
           s"branches re-execute repartitionByRange independently and " +
           s"may sample different range boundaries:\n$p")
+    } finally s.sharedState.cacheManager.clearCache()
+  }
+
+  test("GlobalRank picks persist for an unstable input, pinned otherwise") {
+    // The choice is read from the input's analyzed plan: rows that can
+    // differ between the pinned form's re-executed passes (here rand(),
+    // or a LIMIT with no ORDER BY beneath it) would be mis-ranked, so
+    // they get the persist form's one materialized InMemoryRelation.
+    val s = spark
+    import org.apache.spark.sql.functions.{col, rand}
+    import graft.operators.GlobalRank
+    val df = graft.Tables.customer(s, dir)
+      .select(col("c_custkey"), col("c_acctbal"))
+    val order = Seq(col("c_acctbal").desc, col("c_custkey"))
+    def rankPlan(in: org.apache.spark.sql.DataFrame): String =
+      GlobalRank.withRowNumber(in, order).queryExecution.executedPlan.toString
+    try {
+      for ((what, in) <- Seq(
+          "nondeterministic" -> df.withColumn("noise", rand(7)),
+          "unsorted limit" -> df.limit(4))) {
+        val p = rankPlan(in)
+        assert(p.contains("InMemoryRelation"),
+          s"$what upstream was not routed to the persist form:\n$p")
+      }
+      for ((what, in) <- Seq(
+          "deterministic" -> df,
+          "sorted limit" -> df.orderBy(col("c_custkey")).limit(4))) {
+        val p = rankPlan(in)
+        assert(!p.contains("InMemoryRelation"),
+          s"$what upstream lost the pinned form:\n$p")
+      }
     } finally s.sharedState.cacheManager.clearCache()
   }
 
