@@ -121,12 +121,17 @@ object Bench {
         s"SPARK_GRAFT_BENCH_ONLY names not on the board: " +
           s"${unknown.toSeq.sorted.mkString(",")}")
     }
+    // ...and so does a headline name: filtering it out would silently
+    // reorder the stdout contract line.
+    val unregistered = headline.filterNot(qs.contains)
+    require(unregistered.isEmpty,
+      s"Bench.headline names not on the board: ${unregistered.mkString(",")}")
     // FULL board: the headline shapes first (their relative order is
     // the stdout-contract-line priority), then every remaining
     // SparkEntry query in name order — a green oracle row without a
     // wall-time trail is a perf regression nobody sees.
     val rest = qs.keys.toSeq.filterNot(headline.contains).sorted
-    val names = (headline.filter(qs.contains) ++ rest)
+    val names = (headline ++ rest)
       .filter(n => only.forall(_.contains(n)))
     // JVM-wide warmup (guarded: entry reads a fixed smoke path that
     // may not exist on every bench host) — pays the one-off Spark

@@ -1,0 +1,3205 @@
+package graft
+package board
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+import graft.dedup.Dedup
+import graft.functions.Text
+import graft.model.Context
+import graft.query.QueryCompiler
+import graft.series.Series
+import graft.similarity.Similarity
+
+import Shared._
+
+/** ETL-side board queries, each declared with its DuckDB oracle:
+  * classifiers, ETL stages, streaming replays, and further TPC-H,
+  * window and custom-operator shapes.
+  *
+  * Golden oracles for the classifier queries: the synthetic UA /
+  * referrer per event_type has a known classification, so the oracle
+  * pins the expected label directly — a golden test of the real
+  * cascade, not a re-implementation. */
+private[graft] object EtlQueries {
+
+  /** Bucketed-table fixture shared by o19/o20: write `df` bucketed
+    * (8) on `key` ONCE per (JVM, sfDir) into a swept temp dir under
+    * a deterministic sfDir-suffixed table name, then read it back
+    * through the catalog so the scan reports the bucket layout. */
+  private def bucketedTable(s: SparkSession, sfDir: String, tag: String,
+      name: String, key: String, df: => DataFrame): DataFrame = {
+    val tmp = fixtureDir(tag, sfDir)(_ => ())
+    val sfx = java.lang.Long.toHexString(
+      java.util.UUID.nameUUIDFromBytes(sfDir.getBytes("UTF-8"))
+        .getMostSignificantBits)
+    val tbl = s"graft_${tag}_${name}_$sfx"
+    if (!s.catalog.tableExists(tbl))
+      graft.store.Bucketing.writeBucketed(df, tbl, key,
+        buckets = 8, path = Some(s"$tmp/$name"))
+    s.table(tbl)
+  }
+
+  /** Deterministic UA / referrer strings per event_type — the driver
+    * tables carry no UA/URL columns, so classifier queries synthesize
+    * them, then run the REAL classifier cascade over the column. */
+  private def syntheticUa = {
+    val t = col("event_type")
+    when(t === "view", "Mozilla/5.0 (X11; Linux) Chrome/99.0 Safari/537")
+      .when(t === "click", "Mozilla/5.0 (Windows) Firefox/115.0")
+      .when(t === "purchase", "Opera/9.80 (Macintosh)")
+      .when(t === "signup", "Mozilla/4.0 (compatible; MSIE 6.0)")
+      .otherwise("curl/7.88")
+  }
+
+  private def syntheticReferrer = {
+    val t = col("event_type")
+    when(t === "view", "https://www.google.com/search?q=spark+sql+engine")
+      .when(t === "click", "https://myrepo.org/123")
+      .when(t === "purchase", "https://search.yahoo.com/search?p=fast%20query%20plans")
+      .when(t === "signup", "")
+      .otherwise("partner.example.com/docs")
+  }
+
+  val all: Seq[Query] = Seq(
+
+    // ---- C2 + F1: browser classification after robot filtering ----
+    Query("c2_browser",
+      """SELECT CASE event_type
+        |    WHEN 'view' THEN 'Chrome' WHEN 'click' THEN 'Firefox'
+        |    WHEN 'purchase' THEN 'Opera' WHEN 'signup' THEN 'IE' END AS browser,
+        |  COUNT(*) AS cnt
+        |FROM events WHERE event_type <> 'error'
+        |GROUP BY 1 ORDER BY browser""".stripMargin)((s, d) => {
+      val e = ev(s, d).withColumn("ua", syntheticUa)
+      // thread the frame's own session for the native-path probe
+      // (Robots.scala: the mixed-session 'undefined function' trap)
+      e.filter(!graft.filters.Robots.isRobotUa(col("ua"),
+          graft.filters.Robots.defaultUaPatterns, Some(e.sparkSession)))
+        .select(graft.classify.Classify.browser(col("ua")).as("browser"))
+        .groupBy("browser").agg(count(lit(1)).as("cnt"))
+        .orderBy("browser")
+    }),
+
+    // ---- C3: URL parse quirks (numeric -> localhost, protocol
+    // forcing) through the REAL parser; golden oracle pins each
+    // synthetic referrer's known (proto, host, path) ----
+    Query("c3_url_parse",
+      """SELECT event_type,
+        |  CASE event_type WHEN 'signup' THEN 'http'
+        |       WHEN 'error' THEN 'http' ELSE 'https' END AS proto,
+        |  CASE event_type
+        |    WHEN 'view' THEN 'www.google.com'
+        |    WHEN 'click' THEN 'myrepo.org'
+        |    WHEN 'purchase' THEN 'search.yahoo.com'
+        |    WHEN 'signup' THEN ''
+        |    ELSE 'partner.example.com' END AS host,
+        |  CASE event_type
+        |    WHEN 'view' THEN '/search'
+        |    WHEN 'click' THEN '/123'
+        |    WHEN 'purchase' THEN '/search'
+        |    WHEN 'signup' THEN ''
+        |    ELSE '/docs' END AS path,
+        |  COUNT(*) AS cnt
+        |FROM events GROUP BY 1, 2, 3, 4 ORDER BY event_type""".stripMargin)((s, d) => {
+      val u = graft.classify.Classify.parseUrl(syntheticReferrer)
+      ev(s, d).select(col("event_type"),
+          u.getField("protocol").as("proto"),
+          u.getField("host").as("host"), u.getField("path").as("path"))
+        .groupBy("event_type", "proto", "host", "path")
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy("event_type")
+    }),
+
+    // ---- C14: URL canonicalization — the web-crawl dedup key.
+    // Five synthetic raw variants per id collapse under the canonical
+    // form (case, default port, www, tracking params, trailing
+    // slash); two-level aggregate keeps the distinct-count Expand-free ----
+    Query("c14_url_canonical",
+      """WITH raw AS (
+        |  SELECT CASE
+        |    WHEN event_id % 5 = 0 THEN 'https://WWW.Example.com/Path/page/?id='
+        |      || CAST(user_id % 50 AS VARCHAR) || '&utm_source=x'
+        |    WHEN event_id % 5 = 1 THEN 'https://example.com:443/Path/page?id='
+        |      || CAST(user_id % 50 AS VARCHAR)
+        |    WHEN event_id % 5 = 2 THEN 'http://example.com/Other?id='
+        |      || CAST(user_id % 50 AS VARCHAR) || '#sec'
+        |    WHEN event_id % 5 = 3 THEN 'https://example.com/Path/page?utm_campaign=c&id='
+        |      || CAST(user_id % 50 AS VARCHAR)
+        |    ELSE 'https://other.org/a/b/' END AS u
+        |  FROM events),
+        |s1 AS (SELECT u, regexp_replace(u, '#.*$', '') AS v FROM raw),
+        |s2 AS (SELECT u,
+        |  lower(regexp_extract(v, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)) ||
+        |  substr(v, length(regexp_extract(v, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)) + 1)
+        |  AS v FROM s1),
+        |s3 AS (SELECT u, regexp_replace(v, '^(https?://)www\.', '\1') AS v FROM s2),
+        |s4 AS (SELECT u, regexp_replace(regexp_replace(v,
+        |  '^(https://[^/?#]*):443([/?#].*)?$', '\1\2'),
+        |  '^(http://[^/?#]*):80([/?#].*)?$', '\1\2') AS v FROM s3),
+        |s5 AS (SELECT u, regexp_replace(v,
+        |  '[?&](utm_[a-z0-9_]+|fbclid|gclid)=[^&#]*', '', 'g') AS v FROM s4),
+        |s6 AS (SELECT u, regexp_replace(v, '^([^?&]*)&', '\1?') AS v FROM s5),
+        |s7 AS (SELECT u, regexp_replace(v, '[?&]$', '') AS v FROM s6),
+        |s8 AS (SELECT u, regexp_replace(regexp_replace(v,
+        |  '^([^?]*)/\?', '\1?'), '/$', '') AS v FROM s7),
+        |g AS (SELECT v AS canon, u, COUNT(*) AS cnt FROM s8 GROUP BY 1, 2)
+        |SELECT canon, CAST(SUM(cnt) AS BIGINT) AS n_raw, COUNT(*) AS n_variants
+        |FROM g GROUP BY 1 ORDER BY canon""".stripMargin)((s, d) => {
+      val m = col("event_id") % 5
+      val idv = (col("user_id") % 50).cast("string")
+      val raw = when(m === 0, concat(lit("https://WWW.Example.com/Path/page/?id="),
+          idv, lit("&utm_source=x")))
+        .when(m === 1, concat(lit("https://example.com:443/Path/page?id="), idv))
+        .when(m === 2, concat(lit("http://example.com/Other?id="), idv, lit("#sec")))
+        .when(m === 3, concat(lit("https://example.com/Path/page?utm_campaign=c&id="), idv))
+        .otherwise(lit("https://other.org/a/b/"))
+      ev(s, d).select(raw.as("u"))
+        .select(col("u"), graft.classify.Classify.canonicalUrl(col("u")).as("canon"))
+        .groupBy("canon", "u").agg(count(lit(1)).as("cnt"))
+        .groupBy("canon")
+        .agg(sum("cnt").as("n_raw"), count(lit(1)).as("n_variants"))
+        .orderBy("canon")
+    }),
+
+    // ---- C4: percent-decoding (url_decode: %XX and '+') ----
+    Query("c4_percent_decode",
+      """SELECT event_type,
+        |  CASE event_type
+        |    WHEN 'view' THEN 'spark sql engine'
+        |    WHEN 'click' THEN 'a/b?c'
+        |    WHEN 'purchase' THEN 'fast query plans'
+        |    WHEN 'signup' THEN '100%'
+        |    ELSE 'plain' END AS decoded,
+        |  COUNT(*) AS cnt
+        |FROM events GROUP BY 1, 2 ORDER BY event_type""".stripMargin)((s, d) => {
+      val t = col("event_type")
+      val encoded = when(t === "view", "spark+sql+engine")
+        .when(t === "click", "a%2Fb%3Fc")
+        .when(t === "purchase", "fast%20query%20plans")
+        .when(t === "signup", "100%25")
+        .otherwise("plain")
+      ev(s, d).select(t.as("event_type"),
+          graft.classify.Classify.percentDecode(encoded).as("decoded"))
+        .groupBy("event_type", "decoded").agg(count(lit(1)).as("cnt"))
+        .orderBy("event_type")
+    }),
+
+    // ---- C5: referrer classification cascade — every branch of ref
+    // Referrer.pm:39-116: the search engines, the Internal paths
+    // (abstract/search/view/latest/profile), the config-driven
+    // local_domains hook, Direct, and the raw-hostname fallback ----
+    Query("c5_referrer",
+      """SELECT CASE event_id % 8
+        |    WHEN 0 THEN 'Google'
+        |    WHEN 1 THEN 'Internal (Abstract page)'
+        |    WHEN 2 THEN 'Yahoo'
+        |    WHEN 3 THEN 'Direct'
+        |    WHEN 4 THEN 'MSN/Bing'
+        |    WHEN 5 THEN 'Internal (MePrints Profile Page)'
+        |    WHEN 6 THEN 'Campus Intranet'
+        |    ELSE 'unknown.example.net' END AS label,
+        |  COUNT(*) AS cnt
+        |FROM events GROUP BY 1 ORDER BY label""".stripMargin)((s, d) => {
+      // Aggregate BEFORE the regex cascade (guide §2.3 "aggregate
+      // before you shuffle" applied to an expensive projection): the
+      // referrer is a pure function of event_id % 8, so count by the
+      // cheap integer key first and run the 15-branch rlike cascade
+      // once per DISTINCT value instead of once per event — the
+      // classify-distinct-then-weigh shape a 100 TB referrer pipeline
+      // uses (head-domain cardinality ≪ row count). Result identical:
+      // same labels, counts summed per label (measured 1.6s → 0.3s
+      // warm at sf0.1; oracle hash unchanged).
+      val m = col("m")
+      val ref = when(m === 0, "https://www.google.com/search?q=spark")
+        .when(m === 1, "https://myrepo.org/123")
+        .when(m === 2, "https://search.yahoo.com/search?p=plans")
+        .when(m === 3, "")
+        .when(m === 4, "https://www.bing.com/search?q=x")
+        .when(m === 5, "https://myrepo.org/profile/jsmith")
+        .when(m === 6, "https://intranet.campus.example/page")
+        .otherwise("https://unknown.example.net/page")
+      ev(s, d).groupBy((col("event_id") % 8).as("m"))
+        .agg(count(lit(1)).as("n"))
+        .select(
+          graft.classify.Classify.referrer(ref, "myrepo.org",
+            localDomains = Seq(
+              "Campus Intranet" -> "(^|\\.)campus\\.example$")).as("label"),
+          col("n"))
+        .groupBy("label").agg(sum("n").as("cnt"))
+        .orderBy("label")
+    }),
+
+    // ---- C5 strict-parity mode: the reference DROPS empty-referrer
+    // records before classification (ref Referrer.pm:46-47) instead
+    // of labeling them Direct; dropEmptyReferrer=true + a null filter
+    // reproduces that byte-for-byte (round-10 verdict, last
+    // behavioral delta for migrating dashboards) ----
+    // strict mode: the empty-referrer rows (event_id % 8 = 3) are
+    // DROPPED, matching ref Referrer.pm:46-47 exactly
+    Query("c5_referrer_strict",
+      """SELECT CASE event_id % 8
+        |    WHEN 0 THEN 'Google'
+        |    WHEN 1 THEN 'Internal (Abstract page)'
+        |    WHEN 2 THEN 'Yahoo'
+        |    WHEN 4 THEN 'MSN/Bing'
+        |    WHEN 5 THEN 'Internal (MePrints Profile Page)'
+        |    WHEN 6 THEN 'Campus Intranet'
+        |    ELSE 'unknown.example.net' END AS label,
+        |  COUNT(*) AS cnt
+        |FROM events WHERE event_id % 8 <> 3
+        |GROUP BY 1 ORDER BY label""".stripMargin)((s, d) => {
+      // Same aggregate-before-cascade shape as c5 (guide §2.3); the
+      // strict empty-referrer drop (Referrer.pm:46-47) filters the
+      // raw URL between the count-by-key aggregate and the cascade —
+      // same rows dropped, same labels, counts summed per label.
+      // dropEmptyReferrer stays on so the strict API path is the one
+      // exercised.
+      val m = col("m")
+      val ref = when(m === 0, "https://www.google.com/search?q=spark")
+        .when(m === 1, "https://myrepo.org/123")
+        .when(m === 2, "https://search.yahoo.com/search?p=plans")
+        .when(m === 3, "")
+        .when(m === 4, "https://www.bing.com/search?q=x")
+        .when(m === 5, "https://myrepo.org/profile/jsmith")
+        .when(m === 6, "https://intranet.campus.example/page")
+        .otherwise("https://unknown.example.net/page")
+      ev(s, d).groupBy((col("event_id") % 8).as("m"))
+        .agg(count(lit(1)).as("n"))
+        .select(ref.as("ref"), col("n"))
+        .filter(col("ref").isNotNull && col("ref") =!= "")
+        .select(
+          graft.classify.Classify.referrer(col("ref"), "myrepo.org",
+            localDomains = Seq(
+              "Campus Intranet" -> "(^|\\.)campus\\.example$"),
+            dropEmptyReferrer = true).as("label"),
+          col("n"))
+        .groupBy("label").agg(sum("n").as("cnt"))
+        .orderBy("label")
+    }),
+
+    // ---- C6: search-term extraction (UDTF-style explode) ----
+    Query("c6_search_terms",
+      """WITH terms AS (
+        |  SELECT unnest(CASE event_type
+        |    WHEN 'view' THEN ['spark', 'sql', 'engine']
+        |    WHEN 'purchase' THEN ['fast', 'query', 'plans']
+        |    ELSE [] END) AS term
+        |  FROM events)
+        |SELECT term, COUNT(*) AS cnt FROM terms
+        |GROUP BY term ORDER BY term""".stripMargin)((s, d) => {
+      // Aggregate-before-extraction (same §2.3 shape as c5): the
+      // referrer is a pure function of event_type (5 distinct
+      // values), so count by event_type first, then URL-parse /
+      // percent-decode / split / stopword-filter once per distinct
+      // referrer and weigh each exploded term by its group count.
+      ev(s, d).groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("ref", syntheticReferrer)
+        .select(explode(
+          graft.classify.Classify.searchTerms(
+            graft.classify.Classify.searchQuery(col("ref")))).as("term"),
+          col("n"))
+        .groupBy("term").agg(sum("n").as("cnt"))
+        .orderBy("term")
+    }),
+
+    // ---- F2: robot IP-prefix filter ----
+    Query("f2_robot_ip", {
+      // a non-robot-constructed IP still matches a robot prefix when
+      // (first, second) octets collide with one — enumerate those from
+      // the same list the Spark filter uses
+      val collisions = graft.filters.Robots.defaultIpPrefixes.map { p =>
+        val Array(a, b) = p.stripSuffix(".").split("\\.")
+        s"((user_id % 223 + 1) = $a AND (event_id % 256) = $b)"
+      }.mkString(" OR ")
+      s"""SELECT COUNT(*) AS kept FROM events
+         |WHERE event_id % 20 <> 0 AND NOT ($collisions)""".stripMargin
+    })((s, d) => {
+      // deterministic IPs; every 20th event gets a known robot prefix
+      val e = ev(s, d).withColumn("requester_id",
+        when(col("event_id") % 20 === 0,
+          concat(lit("66.249."), (col("event_id") % 256).cast("int"), lit(".1")))
+          .otherwise(concat_ws(".",
+            (col("user_id") % 223 + 1).cast("int"),
+            (col("event_id") % 256).cast("int"), lit(0), lit(1))))
+      e.filter(!graft.filters.Robots.isRobotIp(col("requester_id")))
+        .agg(count(lit(1)).as("kept"))
+    }),
+
+    // ---- F3 faithful sequential repeat filter ("since last KEPT") ----
+    Query("f3_repeat_seq",
+      """WITH RECURSIVE ev AS (
+        |  SELECT user_id, event_type, CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec, event_id,
+        |         ROW_NUMBER() OVER (PARTITION BY user_id, event_type
+        |           ORDER BY CAST(FLOOR(epoch(ts)) AS BIGINT), event_id) AS rn
+        |  FROM events),
+        |keep AS (
+        |  SELECT user_id, event_type, sec, rn, sec AS last_kept, TRUE AS kept
+        |  FROM ev WHERE rn = 1
+        |  UNION ALL
+        |  SELECT e.user_id, e.event_type, e.sec, e.rn,
+        |         CASE WHEN e.sec - k.last_kept > 3600 THEN e.sec ELSE k.last_kept END,
+        |         e.sec - k.last_kept > 3600
+        |  FROM ev e JOIN keep k ON e.user_id = k.user_id
+        |    AND e.event_type = k.event_type AND e.rn = k.rn + 1)
+        |SELECT user_id AS id, event_type AS value, COUNT(*) AS count
+        |FROM keep WHERE kept GROUP BY 1, 2 ORDER BY id, value""".stripMargin)((s, d) => {
+      val e = ev(s, d)
+        .withColumn("sec", unix_timestamp(col("ts")))
+        .select("user_id", "event_type", "sec", "event_id")
+      graft.filters.Repeat.sequential(e,
+          keyCols = Seq("user_id", "event_type"), secCol = "sec",
+          timeout = 3600L, tieBreakCol = "event_id")
+        .groupBy(col("user_id").as("id"), col("event_type").as("value"))
+        .agg(count(lit(1)).as("count"))
+        .orderBy("id", "value")
+    }),
+
+    // ---- W8: batch sessionization (gaps-and-islands; the batch
+    // counterpart of the streaming St5 state op) ----
+    Query("w8_sessionize",
+      """WITH x AS (
+        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec, event_id,
+        |         LAG(CAST(FLOOR(epoch(ts)) AS BIGINT)) OVER (
+        |           PARTITION BY user_id
+        |           ORDER BY CAST(FLOOR(epoch(ts)) AS BIGINT), event_id) AS prev
+        |  FROM events),
+        |ss AS (
+        |  SELECT user_id,
+        |         SUM(CASE WHEN prev IS NULL OR sec - prev > 1800 THEN 1 ELSE 0 END)
+        |           OVER (PARTITION BY user_id ORDER BY sec, event_id
+        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
+        |  FROM x)
+        |SELECT user_id AS id, CAST(MAX(session) AS BIGINT) AS n_sessions,
+        |       COUNT(*) AS n_events
+        |FROM ss GROUP BY 1 ORDER BY id""".stripMargin)((s, d) => {
+      val e = ev(s, d).withColumn("sec", unix_timestamp(col("ts")))
+      graft.filters.Repeat.sessionize(e, Seq("user_id"), "sec",
+          gapSec = 1800L, tieBreakCol = "event_id")
+        .groupBy(col("user_id").as("id"))
+        .agg(max("session").as("n_sessions"), count(lit(1)).as("n_events"))
+        .orderBy("id")
+    }),
+
+    // ---- X1: as-of join — attribute each purchase to the most
+    // recent prior view by the same user (DuckDB oracles it with a
+    // native ASOF LEFT JOIN; Spark lacks the operator, composed here
+    // from union + last-ignoring-nulls window) ----
+    Query("x1_asof_attribution",
+      """WITH v AS (
+        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS vsec,
+        |         MAX(event_id) AS vid
+        |  FROM events WHERE event_type = 'view'
+        |    AND user_id IS NOT NULL GROUP BY 1, 2),
+        |p AS (
+        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS psec,
+        |         event_id AS pid
+        |  FROM events WHERE event_type = 'purchase'
+        |    AND user_id IS NOT NULL)
+        |SELECT p.pid, v.vid, p.psec - v.vsec AS lag_sec
+        |FROM p ASOF LEFT JOIN v
+        |  ON p.user_id = v.user_id AND p.psec >= v.vsec
+        |ORDER BY pid""".stripMargin)((s, d) => {
+      // null user_ids are dropped: AsOfJoin keys compare null-safely
+      // (nulls group together) while the SQL ASOF oracle uses equality
+      // (nulls never match) — only the non-null universe agrees.
+      val e = ev(s, d).filter(col("user_id").isNotNull)
+        .withColumn("sec", unix_timestamp(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("sec"), col("event_id"))
+      val views = e.filter(col("event_type") === "view")
+        .select(col("user_id"), col("sec").as("vsec"), col("event_id").as("vid"))
+      graft.operators.AsOfJoin.leftAsOf(purchases, views, "user_id",
+          ltime = "sec", lid = "event_id", rtime = "vsec", rid = "vid")
+        .select(col("event_id").as("pid"), col("vid"),
+          (col("sec") - col("vsec")).as("lag_sec"))
+        .orderBy("pid")
+    }),
+
+    // ---- X5: multi-touch LINEAR attribution — x1's last-touch model
+    // generalized: every in-window view splits the purchase's credit
+    // equally (integer thousandths, floor(1000/n)), rolled up to the
+    // touch day. Equi-join on the high-cardinality user key with a
+    // residual 7-day range; the split-sizing window partitions by
+    // conversion id, so no partition exceeds one purchase's touches ----
+    Query("x5_linear_attribution",
+      """WITH e AS (
+        |  SELECT user_id, event_type, event_id,
+        |         CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec,
+        |         CAST(ts AS DATE) AS d
+        |  FROM events WHERE user_id IS NOT NULL),
+        |p AS (SELECT user_id, sec AS psec, event_id AS pid
+        |      FROM e WHERE event_type = 'purchase'),
+        |v AS (SELECT user_id, sec AS vsec, d AS vdate
+        |      FROM e WHERE event_type = 'view'),
+        |t AS (
+        |  SELECT v.vdate, p.pid FROM v JOIN p
+        |    ON v.user_id = p.user_id AND v.vsec <= p.psec
+        |   AND v.vsec > p.psec - 604800),
+        |c AS (
+        |  SELECT vdate, CAST(FLOOR(1000.0 /
+        |    COUNT(*) OVER (PARTITION BY pid)) AS BIGINT) AS credit
+        |  FROM t)
+        |SELECT vdate AS date, COUNT(*) AS touches,
+        |       CAST(SUM(credit) AS BIGINT) AS credit_x1000
+        |FROM c GROUP BY 1 ORDER BY date""".stripMargin)((s, d) =>
+      graft.series.Behavior.linearAttribution(ev(s, d),
+        userCol = "user_id", typeCol = "event_type",
+        touchType = "view", convType = "purchase")),
+
+    // same join through the whole-operator Catalyst stack
+    // (AsOfJoinPlan -> AsOfJoinStrategy -> sort-merge AsOfJoinExec)
+    Query("x2_asof_native",
+      """WITH v AS (
+        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS vsec,
+        |         MAX(event_id) AS vid
+        |  FROM events WHERE event_type = 'view'
+        |    AND user_id IS NOT NULL GROUP BY 1, 2),
+        |p AS (
+        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS psec,
+        |         event_id AS pid
+        |  FROM events WHERE event_type = 'purchase'
+        |    AND user_id IS NOT NULL)
+        |SELECT p.pid, v.vid, p.psec - v.vsec AS lag_sec
+        |FROM p ASOF LEFT JOIN v
+        |  ON p.user_id = v.user_id AND p.psec >= v.vsec
+        |ORDER BY pid""".stripMargin)((s, d) => {
+      // same null-key rationale as x1
+      val e = ev(s, d).filter(col("user_id").isNotNull)
+        .withColumn("sec", unix_timestamp(col("ts")))
+      val purchases = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("sec"), col("event_id"))
+      val views = e.filter(col("event_type") === "view")
+        .select(col("user_id"), col("sec").as("vsec"), col("event_id").as("vid"))
+      graft.operators.AsOfJoin.leftAsOfNative(s, purchases, views, "user_id",
+          ltime = "sec", lid = "event_id", rtime = "vsec", rid = "vid")
+        .select(col("event_id").as("pid"), col("vid"),
+          (col("sec") - col("vsec")).as("lag_sec"))
+        .orderBy("pid")
+    }),
+
+    // ---- X3: generic point-in-interval range join. Raw range
+    // predicates compile to BroadcastNestedLoopJoin in Spark (O(n·m));
+    // RangeJoin bucketizes intervals so the same exact semantics run
+    // as a hash join. DuckDB oracles the raw predicate via its native
+    // IEJoin — two engines, two strategies, one result ----
+    Query("x3_range_join",
+      """SELECT CAST(n_nationkey AS BIGINT) AS band, COUNT(*) AS cnt,
+        |       MIN(o_orderkey) AS min_ok, MAX(o_orderkey) AS max_ok
+        |FROM orders JOIN nation
+        |  ON o_totalprice >= n_nationkey * 7000.0
+        | AND o_totalprice <  n_nationkey * 7000.0 + 15000.0
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, d) => {
+      val bands = Tables.nation(s, d).select(
+        col("n_nationkey").cast("long").as("band"),
+        (col("n_nationkey") * lit(7000.0)).as("lo"),
+        (col("n_nationkey") * lit(7000.0) + lit(15000.0)).as("hi"))
+      val pts = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
+      graft.operators.RangeJoin.pointInInterval(pts, bands,
+          "o_totalprice", "lo", "hi", bucketWidth = 5000.0)
+        .groupBy("band")
+        .agg(count(lit(1)).as("cnt"),
+          min("o_orderkey").as("min_ok"), max("o_orderkey").as("max_ok"))
+        .orderBy("band")
+    }),
+
+    // ---- X4: interval-OVERLAP join — co-presence of per-user daily
+    // view and purchase activity windows; bucketized equi-join with
+    // the emit-once-at-overlap-start dedup (no distinct pass), exact
+    // overlap predicate decides ----
+    Query("x4_interval_overlap",
+      """WITH e AS (
+        |  SELECT user_id, event_type, CAST(ts AS DATE) AS day,
+        |         CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec
+        |  FROM events),
+        |v AS (
+        |  SELECT user_id, day AS view_day, MIN(sec) AS v_lo,
+        |         MAX(sec) + 1 AS v_hi
+        |  FROM e WHERE event_type = 'view' GROUP BY 1, 2),
+        |p AS (
+        |  SELECT user_id, day AS purch_day, MIN(sec) AS p_lo,
+        |         MAX(sec) + 1 AS p_hi
+        |  FROM e WHERE event_type = 'purchase' GROUP BY 1, 2)
+        |SELECT user_id, view_day, purch_day
+        |FROM v JOIN p USING (user_id)
+        |WHERE v_lo < p_hi AND p_lo < v_hi
+        |ORDER BY user_id, view_day, purch_day""".stripMargin)((s, d) => {
+      val e = ev(s, d).withColumn("sec", unix_timestamp(col("ts")))
+        .withColumn("day", to_date(col("ts")))
+      def iv(t: String, p: String) = e.filter(col("event_type") === t)
+        .groupBy(col("user_id"), col("day").as(p + "_day"))
+        .agg(min("sec").as(p + "_lo"), (max("sec") + 1L).as(p + "_hi"))
+      graft.operators.RangeJoin.intervalOverlap(
+          iv("view", "v"), iv("purchase", "p"), keys = Seq("user_id"),
+          "v_lo", "v_hi", "p_lo", "p_hi", bucketWidth = 21600.0)
+        .select(col("user_id"), col("v_day").as("view_day"),
+          col("p_day").as("purch_day"))
+        .orderBy("user_id", "view_day", "purch_day")
+    }),
+
+    // ---- O19: bucketed co-located join — THE shuffle-killer layout
+    // at 100 TB: both tables pre-bucketed (8 buckets, saveAsTable)
+    // on the join key, so the sort-merge join consumes the scans'
+    // HashPartitioning directly and NEITHER side shuffles — the plan
+    // carries zero exchanges on the custkey path (pinned by
+    // PlanShapeSpec "o19 bucketed join"). The bucketed tables are
+    // written ONCE per (JVM, sfDir) into a swept temp dir; warm runs
+    // measure the read-side join, the layout's actual payoff (write
+    // cost is o13/s13's domain). hint("merge") pins SMJ so a small
+    // sf doesn't flip to broadcast and silently skip the co-location
+    // the query exists to prove ----
+    // layout never changes results: the oracle is the plain join over
+    // the original parquet — only the Spark PLAN (zero exchanges on
+    // the custkey path) distinguishes the bucketed run
+    Query("o19_bucketed_join",
+      """SELECT c_mktsegment,
+        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, d) => {
+      val o = bucketedTable(s, d, "o19", "orders", "o_custkey",
+        Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice")))
+      val c = bucketedTable(s, d, "o19", "customer", "c_custkey",
+        Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")))
+      o.hint("merge").join(c, col("o_custkey") === col("c_custkey"))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double").as("revenue"))
+        .orderBy("c_mktsegment")
+    }),
+
+    // ---- O20: bucketed-table aggregation — the OTHER shuffle the
+    // bucket layout pays for at write time. A groupBy on the bucket
+    // key consumes the scan's HashPartitioning directly: the
+    // aggregate compiles with NO Exchange (partial and final collapse
+    // into one stage), so the recurring per-customer rollup reads
+    // co-located rows and shuffles nothing but the presentation sort.
+    // At 100 TB this is the difference between a full-fact shuffle
+    // per report and zero — same trade the reference's clustered
+    // (custkey) index makes. Plan pinned in PlanShapeSpec ----
+    // o20: like o19, the bucket layout never changes results — the
+    // oracle aggregates the original parquet; only the PLAN (zero
+    // exchanges before the presentation sort) distinguishes the
+    // bucketed run
+    Query("o20_bucketed_agg",
+      """SELECT o_custkey,
+        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        |  MAX(o_orderpriority) AS top_priority
+        |FROM orders GROUP BY 1 ORDER BY o_custkey""".stripMargin)((s, d) =>
+      bucketedTable(s, d, "o20", "orders", "o_custkey",
+        Tables.orders(s, d).select(col("o_custkey"), col("o_totalprice"),
+          col("o_orderpriority")))
+        .groupBy("o_custkey")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double").as("revenue"),
+          max("o_orderpriority").as("top_priority"))
+        .orderBy("o_custkey")),
+
+    // ---- O17: Poisson bootstrap — per-replicate deterministic
+    // Poisson(1) row weights (inverse-CDF over salted-hash uniforms)
+    // give resample-with-replacement statistics with ZERO data
+    // movement: the replicate aggregates read each row once ----
+    Query("o17_poisson_bootstrap",
+      s"""WITH r AS (SELECT unnest(generate_series(0, 9)) AS rep),
+         |x AS (
+         |  SELECT rep, event_id, value,
+         |    ${hex60("'boot:' || event_id || ':' || rep")} % 1000000 AS u
+         |  FROM events CROSS JOIN r WHERE event_type = 'purchase'),
+         |w AS (
+         |  SELECT rep, value,
+         |    CASE WHEN u < 367879 THEN 0 WHEN u < 735758 THEN 1
+         |         WHEN u < 919698 THEN 2 WHEN u < 981011 THEN 3
+         |         WHEN u < 996340 THEN 4 WHEN u < 999405 THEN 5
+         |         ELSE 6 END AS w
+         |  FROM x)
+         |SELECT CAST(rep AS INTEGER) AS rep,
+         |       CAST(SUM(w) AS BIGINT) AS n_boot,
+         |       CAST(SUM(w * CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT)
+         |         AS val_x100
+         |FROM w GROUP BY 1 ORDER BY rep""".stripMargin)((s, d) => {
+      val reps = explode(sequence(lit(0), lit(9))).as("rep")
+      ev(s, d).filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("value"), reps)
+        .withColumn("w",
+          Text.poissonWeight(col("event_id"), col("rep"), "boot"))
+        .groupBy("rep")
+        .agg(sum("w").as("n_boot"),
+          sum(col("w") * floor(col("value") * 100).cast("long")).as("val_x100"))
+        .orderBy("rep")
+    }),
+
+    // ---- J5: bloom-prefiltered exact semi-join (the F6 archive
+    // filter's scale path when the dim key set fits a few MB of bloom
+    // bits but not a broadcast hash relation; result provably equals
+    // the plain semi-join, which is what the oracle runs) ----
+    Query("j5_bloom_semi",
+      """SELECT l_returnflag, COUNT(*) AS cnt,
+        |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
+        |FROM lineitem
+        |WHERE l_orderkey IN
+        |  (SELECT o_orderkey FROM orders WHERE o_totalprice > 200000.0)
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, d) => {
+      val dim = Tables.orders(s, d)
+        .filter(col("o_totalprice") > lit(200000.0))
+      graft.operators.BloomJoin.semiJoinLong(
+          Tables.lineitem(s, d), dim, "l_orderkey", "o_orderkey",
+          expectedDimKeys = 1L << 17)
+        .groupBy("l_returnflag")
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("l_quantity").cast("long")).as("qty"))
+        .orderBy("l_returnflag")
+    }),
+
+    // ---- H7: customer distribution (TPC-H Q13 shape) — the one
+    // relational shape the reference lacks entirely: LEFT OUTER join
+    // preserving zero-order customers, then a second aggregation over
+    // the first. Orders are pre-aggregated per custkey BEFORE the
+    // join, so the outer join moves one row per customer, not one per
+    // order ----
+    Query("h7_custdist",
+      """SELECT c_count, COUNT(*) AS custdist FROM (
+        |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
+        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+        |  GROUP BY 1)
+        |GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin)((s, d) => {
+      val perCust = Tables.orders(s, d)
+        .groupBy("o_custkey").agg(count(lit(1)).as("n_orders"))
+      Tables.customer(s, d).select(col("c_custkey"))
+        .join(perCust, col("c_custkey") === col("o_custkey"), "left")
+        .select(coalesce(col("n_orders"), lit(0L)).as("c_count"))
+        .groupBy("c_count").agg(count(lit(1)).as("custdist"))
+        .orderBy(col("custdist").desc, col("c_count").desc)
+    }),
+
+    // ---- J6: anti-join — customers with NO orders ----
+    Query("j6_anti",
+      """SELECT COUNT(*) AS cnt, MIN(c_custkey) AS min_ck,
+        |       MAX(c_custkey) AS max_ck
+        |FROM customer c
+        |WHERE NOT EXISTS
+        |  (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin)((s, d) =>
+      Tables.customer(s, d)
+        .join(Tables.orders(s, d).select(col("o_custkey")),
+          col("c_custkey") === col("o_custkey"), "left_anti")
+        .agg(count(lit(1)).as("cnt"),
+          min("c_custkey").as("min_ck"), max("c_custkey").as("max_ck"))),
+
+    // ---- A15: CUBE — all four (value × year) subtotal combinations
+    // in one pass (the multi-level generalization of a11's ROLLUP);
+    // subtotal NULLs folded to 'ALL' sentinels (neither column is
+    // nullable, so the sentinel is unambiguous) ----
+    Query("a15_cube",
+      s"""WITH $factCte
+         |SELECT COALESCE(value, 'ALL') AS value,
+         |       COALESCE(CAST(yr AS VARCHAR), 'ALL') AS yr,
+         |       CAST(SUM(count) AS BIGINT) AS total
+         |FROM (SELECT value, CAST(EXTRACT(year FROM date) AS INTEGER) AS yr,
+         |             count FROM fact)
+         |GROUP BY CUBE(value, yr) ORDER BY value, yr""".stripMargin)((s, d) => {
+      val f = fact(s, d).withColumn("yr", year(col("date")))
+      f.cube(col("value"), col("yr"))
+        .agg(sum("count").as("total"))
+        .select(coalesce(col("value"), lit("ALL")).as("value"),
+          coalesce(col("yr").cast("string"), lit("ALL")).as("yr"),
+          col("total"))
+        .orderBy("value", "yr")
+    }),
+
+    // ---- W9: RANGE-frame sliding window — trailing 7 calendar days
+    // per event type. A RANGE frame widens with calendar gaps where
+    // w7's ROWS frame would silently span them ----
+    Query("w9_range_frame",
+      """WITH daily AS (
+        |  SELECT event_type AS value, CAST(ts AS DATE) AS d, COUNT(*) AS cnt
+        |  FROM events GROUP BY 1, 2)
+        |SELECT value, d,
+        |  CAST(SUM(cnt) OVER (PARTITION BY value ORDER BY d
+        |    RANGE BETWEEN INTERVAL 6 DAYS PRECEDING AND CURRENT ROW)
+        |    AS BIGINT) AS win7
+        |FROM daily ORDER BY value, d""".stripMargin)((s, d) => {
+      val daily = ev(s, d).groupBy(col("event_type").as("value"),
+          to_date(col("ts")).as("d"))
+        .agg(count(lit(1)).as("cnt"))
+      val w = Window.partitionBy("value").orderBy("dn").rangeBetween(-6, 0)
+      daily
+        .withColumn("dn", datediff(col("d"), lit("2023-01-01").cast("date")).cast("long"))
+        .withColumn("win7", sum("cnt").over(w))
+        .select(col("value"), col("d"), col("win7"))
+        .orderBy("value", "d")
+    }),
+
+    // ---- H8: large-order customers (TPC-H Q18 shape) — HAVING-driven
+    // build side: the lineitem aggregate shrinks ~100x before the join,
+    // so AQE broadcasts it instead of shuffling orders ----
+    Query("h8_large_orders",
+      """SELECT o_orderkey, o_custkey, sum_qty, o_totalprice
+        |FROM orders JOIN (
+        |  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+        |  FROM lineitem GROUP BY 1
+        |  HAVING SUM(CAST(l_quantity AS BIGINT)) > 250) b
+        |  ON o_orderkey = b.l_orderkey
+        |ORDER BY sum_qty DESC, o_orderkey LIMIT 10""".stripMargin)((s, d) => {
+      val big = Tables.lineitem(s, d).groupBy("l_orderkey")
+        .agg(sum(col("l_quantity").cast("long")).as("sum_qty"))
+        .filter(col("sum_qty") > 250)
+      Tables.orders(s, d)
+        .join(big, col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_orderkey"), col("o_custkey"), col("sum_qty"),
+          col("o_totalprice"))
+        .orderBy(col("sum_qty").desc, col("o_orderkey"))
+        .limit(10)
+    }),
+
+    // ---- H9: returned-item revenue per customer (TPC-H Q10 shape) —
+    // the quarter filter shrinks orders ~25x, so the FILTERED orders
+    // side broadcasts into the lineitem scan (no lineitem shuffle);
+    // revenue pre-aggregates on custkey before the small customer and
+    // nation dims broadcast in; top-20 is TakeOrderedAndProject ----
+    Query("h9_returned_revenue",
+      """SELECT c_custkey, c_name, n_name,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
+        |GROUP BY 1, 2, 3
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)((s, d) => {
+      val l = Tables.lineitem(s, d).filter(col("l_returnflag") === "R")
+      val o = Tables.orders(s, d).filter(
+        col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
+        col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1996-04-01 00:00:00")))
+      val rev = l.join(broadcast(o), l("l_orderkey") === o("o_orderkey"))
+        .groupBy(col("o_custkey"))
+        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .cast("decimal(18,4)")).cast("double").as("revenue"))
+      rev.join(broadcast(Tables.customer(s, d)),
+          col("o_custkey") === col("c_custkey"))
+        .join(broadcast(Tables.nation(s, d)),
+          col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_custkey"), col("c_name"), col("n_name"), col("revenue"))
+        .orderBy(col("revenue").desc, col("c_custkey"))
+        .limit(20)
+    }),
+
+    // ---- H10: priority-class line counts (TPC-H Q12 shape) —
+    // conditional aggregation (CASE inside SUM) after an equi join;
+    // the shipdate window prunes lineitem at the scan, orders
+    // broadcasts (3 columns of a 10%-of-fact dim) ----
+    Query("h10_priority_class",
+      """SELECT l_linestatus,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, d) => {
+      val l = Tables.lineitem(s, d).filter(
+        col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
+        col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
+      val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
+      val isHigh = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+      l.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("l_linestatus"))
+        .agg(sum(when(isHigh, 1L).otherwise(0L)).as("high_line_count"),
+          sum(when(isHigh, 0L).otherwise(1L)).as("low_line_count"))
+        .orderBy("l_linestatus")
+    }),
+
+    // ---- H11: supplier diversity per part group (TPC-H Q16 shape) —
+    // COUNT(DISTINCT) over a joined key: part prunes+broadcasts, the
+    // distinct expands to a two-phase aggregate (partial distinct on
+    // (brand,type,suppkey) map-side, exact count after one shuffle) ----
+    Query("h11_supplier_cnt",
+      """SELECT p_brand, p_type,
+        |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_size BETWEEN 1 AND 5 AND l_quantity < 10
+        |GROUP BY 1, 2
+        |ORDER BY supplier_cnt DESC, p_brand, p_type LIMIT 10""".stripMargin)((s, d) => {
+      val p = Tables.part(s, d).filter(col("p_size").between(1, 5))
+        .select(col("p_partkey"), col("p_brand"), col("p_type"))
+      Tables.lineitem(s, d).filter(col("l_quantity") < 10)
+        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .groupBy(col("p_brand"), col("p_type"))
+        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
+        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"))
+        .limit(10)
+    }),
+
+    // ---- H12: disjunctive-predicate join (TPC-H Q19 shape) — the OR
+    // residual can't be a join key, but its per-branch ranges imply
+    // CONJUNCTIVE envelopes (qty 1-30, size 1-15) that push to both
+    // scans and shrink the broadcast build side before the exact OR
+    // evaluates on the joined row ----
+    Query("h12_disjunctive_join",
+      """SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+        |        AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+        |        AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#24' AND p_size BETWEEN 1 AND 15
+        |        AND l_quantity BETWEEN 20 AND 30)""".stripMargin)((s, d) => {
+      val p = Tables.part(s, d).filter(col("p_size").between(1, 15))
+        .select(col("p_partkey"), col("p_brand"), col("p_size"))
+      val l = Tables.lineitem(s, d).filter(col("l_quantity").between(1, 30))
+      val branch = (col("p_brand") === "Brand#12" &&
+          col("p_size").between(1, 5) && col("l_quantity").between(1, 11)) ||
+        (col("p_brand") === "Brand#23" &&
+          col("p_size").between(1, 10) && col("l_quantity").between(10, 20)) ||
+        (col("p_brand") === "Brand#24" &&
+          col("p_size").between(1, 15) && col("l_quantity").between(20, 30))
+      l.join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .filter(branch)
+        .agg(count(lit(1)).as("cnt"),
+          sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+            .cast("decimal(18,4)")).cast("double").as("revenue"))
+    }),
+
+    // ---- H14: promo revenue share (TPC-H Q14 shape) — conditional
+    // ratio over a broadcast join, kept in exact integer money units
+    // (decimal x10000) so the permille is engine-reproducible ----
+    Query("h14_promo_share",
+      """WITH r AS (
+        |  SELECT p_type,
+        |    CAST(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
+        |      * 10000 AS BIGINT) AS rc
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1996-03-01 00:00:00')
+        |SELECT
+        |  CAST(COALESCE(SUM(CASE WHEN p_type = 'PROMO' THEN rc ELSE 0 END), 0)
+        |    AS BIGINT) AS promo_c,
+        |  CAST(COALESCE(SUM(rc), 0) AS BIGINT) AS total_c,
+        |  CASE WHEN COALESCE(SUM(rc), 0) = 0 THEN CAST(0 AS BIGINT)
+        |       ELSE CAST((1000 * SUM(CASE WHEN p_type = 'PROMO' THEN rc ELSE 0 END))
+        |         // SUM(rc) AS BIGINT) END AS promo_pm
+        |FROM r""".stripMargin)((s, d) => {
+      val p = Tables.part(s, d)
+        .select(col("p_partkey"), (col("p_type") === "PROMO").as("isPromo"))
+      val rc = (col("l_extendedprice") * (lit(1) - col("l_discount")))
+        .cast("decimal(18,4)") * 10000
+      Tables.lineitem(s, d)
+        .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
+          col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1996-03-01 00:00:00")))
+        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .agg(
+          coalesce(sum(when(col("isPromo"), rc).otherwise(lit(0))), lit(0))
+            .cast("long").as("promo_c"),
+          coalesce(sum(rc), lit(0)).cast("long").as("total_c"))
+        // empty ship-date window: SUM over zero rows is NULL and the
+        // integer div would be engine-divergent (Spark NULL, DuckDB
+        // error) — emit an explicit 0 share instead
+        .select(col("promo_c"), col("total_c"),
+          when(col("total_c") === 0, lit(0L))
+            .otherwise(expr("(1000 * promo_c) div total_c")).as("promo_pm"))
+    }),
+
+    // ---- H13: groupwise argmin (TPC-H Q2's essence — the row
+    // ACHIEVING a per-group minimum, not just the minimum). min_by
+    // with a (price, tiebreak) struct does it in ONE hash aggregate:
+    // no join-back (two shuffles) and no per-group sort (window) —
+    // the cheapest of the three classic argmin strategies ----
+    Query("h13_min_cost",
+      """WITH c AS (
+        |  SELECT l_partkey,
+        |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS pc,
+        |         l_orderkey
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_size <= 3),
+        |r AS (SELECT l_partkey, pc, l_orderkey,
+        |        ROW_NUMBER() OVER (PARTITION BY l_partkey
+        |          ORDER BY pc, l_orderkey) AS rk
+        |      FROM c)
+        |SELECT l_partkey AS partkey, pc AS min_price_c,
+        |       l_orderkey AS witness
+        |FROM r WHERE rk = 1 ORDER BY partkey""".stripMargin)((s, d) => {
+      val p = Tables.part(s, d).filter(col("p_size") <= 3)
+        .select(col("p_partkey"))
+      Tables.lineitem(s, d)
+        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .select(col("l_partkey"),
+          (col("l_extendedprice").cast("decimal(18,2)") * 100)
+            .cast("long").as("pc"),
+          col("l_orderkey"))
+        .groupBy(col("l_partkey").as("partkey"))
+        .agg(min(col("pc")).as("min_price_c"),
+          min_by(col("l_orderkey"), struct(col("pc"), col("l_orderkey")))
+            .as("witness"))
+        .orderBy("partkey")
+    }),
+
+    // ---- H15: top supplier by period revenue (TPC-H Q15 shape) —
+    // the revenue "view" is ONE shuffle on l_suppkey; the MAX is a
+    // 1-row aggregate of that view broadcast back as a scalar filter
+    // (no second shuffle, no global sort), and the supplier dim
+    // broadcasts into the surviving row(s). Money in integer
+    // hundredths-of-cents so the equality against MAX is exact ----
+    Query("h15_top_supplier",
+      """WITH rev AS (
+        |  SELECT l_suppkey,
+        |    CAST(SUM(CAST(CAST(l_extendedprice * (1 - l_discount)
+        |      AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS rev_c
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey AS suppkey, s_name, rev_c
+        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
+        |WHERE rev_c = (SELECT MAX(rev_c) FROM rev)
+        |ORDER BY suppkey""".stripMargin)((s, d) => {
+      val rev = Tables.lineitem(s, d)
+        .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
+          col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1996-04-01 00:00:00")))
+        .select(col("l_suppkey"),
+          ((col("l_extendedprice") * (lit(1) - col("l_discount")))
+            .cast("decimal(18,4)") * 10000).cast("long").as("rc"))
+        .groupBy("l_suppkey").agg(sum("rc").as("rev_c"))
+      val mx = rev.agg(max("rev_c").as("mx"))
+      Tables.supplier(s, d)
+        .join(broadcast(rev.join(broadcast(mx), col("rev_c") === col("mx"))),
+          col("s_suppkey") === col("l_suppkey"))
+        .select(col("s_suppkey").as("suppkey"), col("s_name"), col("rev_c"))
+        .orderBy("suppkey")
+    }),
+
+    // ---- H17: small-quantity revenue (TPC-H Q17 shape — correlated
+    // per-part AVG). The classic self-agg join would scan lineitem
+    // TWICE and shuffle twice; a per-partkey window gets the same
+    // per-part totals with ONE scan and ONE exchange (the window key
+    // is the would-be join key). `qty < 0.2*avg` is multiplied
+    // through to `5*qty*cnt < sum_qty` — all-integer, no division,
+    // so the threshold is engine-exact ----
+    Query("h17_small_qty",
+      """WITH l AS (
+        |  SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
+        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |      AS price_c
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_brand = 'Brand#23'),
+        |st AS (SELECT l_partkey, SUM(qty) AS sum_qty, COUNT(*) AS cnt
+        |       FROM l GROUP BY l_partkey)
+        |SELECT COUNT(*) AS n,
+        |  CAST(COALESCE(SUM(price_c), 0) AS BIGINT) AS total_c
+        |FROM l JOIN st USING (l_partkey)
+        |WHERE qty * 5 * cnt < sum_qty""".stripMargin)((s, d) => {
+      val p = Tables.part(s, d).filter(col("p_brand") === "Brand#23")
+        .select("p_partkey")
+      val l = Tables.lineitem(s, d)
+        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
+          (col("l_extendedprice").cast("decimal(18,2)") * 100)
+            .cast("long").as("price_c"))
+      val w = Window.partitionBy("l_partkey")
+      l.withColumn("sum_qty", sum("qty").over(w))
+        .withColumn("cnt", count(lit(1)).over(w))
+        .filter(col("qty") * 5 * col("cnt") < col("sum_qty"))
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum("price_c"), lit(0L)).as("total_c"))
+    }),
+
+    // ---- H22: dormant rich customers (TPC-H Q22 essence —
+    // global-avg threshold + NOT EXISTS). The positive-balance
+    // average arrives as a 1-row broadcast compared multiplied-
+    // through in integer cents (`bal*cnt > sum` ⇔ `bal > avg`, no
+    // double division); "no order since 2000" is a shuffled LEFT
+    // ANTI on o_custkey — the unavoidable big-big step, one shuffle
+    // each side, with the date filter pushed to the orders scan ----
+    Query("h22_idle_rich",
+      """WITH c AS (
+        |  SELECT c_custkey, c_nationkey,
+        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_c
+        |  FROM customer),
+        |thr AS (SELECT SUM(bal_c) AS sum_c, COUNT(*) AS cnt
+        |        FROM c WHERE bal_c > 0)
+        |SELECT c_nationkey, COUNT(*) AS numcust,
+        |  CAST(SUM(bal_c) AS BIGINT) AS totbal_c
+        |FROM c, thr
+        |WHERE bal_c * cnt > sum_c
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey
+        |                    AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
+        |GROUP BY c_nationkey
+        |ORDER BY c_nationkey""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_nationkey"),
+          (col("c_acctbal").cast("decimal(18,2)") * 100)
+            .cast("long").as("bal_c"))
+      val thr = c.filter(col("bal_c") > 0)
+        .agg(sum("bal_c").as("sum_c"), count(lit(1)).as("cnt"))
+      val recent = Tables.orders(s, d)
+        .filter(col("o_orderdate") >=
+          lit(java.sql.Timestamp.valueOf("2000-01-01 00:00:00")))
+        .select(col("o_custkey"))
+      c.crossJoin(broadcast(thr))
+        .filter(col("bal_c") * col("cnt") > col("sum_c"))
+        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
+        .groupBy("c_nationkey")
+        .agg(count(lit(1)).as("numcust"), sum("bal_c").as("totbal_c"))
+        .orderBy("c_nationkey")
+    }),
+
+    // ---- H20: qualified part-suppliers (TPC-H Q20 shape — the
+    // nested semi-join chain). Tiny name-filtered part list
+    // broadcasts into the date-pruned lineitem scan; the
+    // HAVING-gated (supplier, part) aggregate pays the ONE shuffle;
+    // the surviving supplier keys semi-join the dim. No step
+    // materializes more than the aggregate's output ----
+    Query("h20_part_suppliers",
+      """SELECT s_suppkey AS suppkey, s_name,
+        |  CAST(CAST(s_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_c
+        |FROM supplier
+        |WHERE s_suppkey IN (
+        |  SELECT l_suppkey
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_name LIKE 'red%'
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        |  GROUP BY l_suppkey, l_partkey
+        |  HAVING SUM(CAST(l_quantity AS BIGINT)) > 50)
+        |ORDER BY suppkey""".stripMargin)((s, d) => {
+      val red = Tables.part(s, d).filter(col("p_name").startsWith("red"))
+        .select("p_partkey")
+      val heavy = Tables.lineitem(s, d)
+        .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
+          col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
+        .join(broadcast(red), col("l_partkey") === col("p_partkey"))
+        .groupBy("l_suppkey", "l_partkey")
+        .agg(sum(col("l_quantity").cast("long")).as("q"))
+        .filter(col("q") > 50)
+        .select("l_suppkey").distinct()
+      Tables.supplier(s, d)
+        .join(heavy, col("s_suppkey") === col("l_suppkey"), "left_semi")
+        .select(col("s_suppkey").as("suppkey"), col("s_name"),
+          (col("s_acctbal").cast("decimal(18,2)") * 100)
+            .cast("long").as("bal_c"))
+        .orderBy("suppkey")
+    }),
+
+    // ---- V6: int8 scalar quantization of embeddings — the
+    // compression half of large-scale ANN (4x smaller vectors before
+    // IVF/LSH probing). Pure per-row codegen'd array expressions, ZERO
+    // shuffle; min/max are exact float comparisons and the bucket
+    // arithmetic is all-double with one floor, so codes are
+    // engine-exact (summarized in integers for the oracle) ----
+    Query("v6_sq_quantize",
+      """WITH q AS (
+        |  SELECT vec_id,
+        |    CAST(list_min(embedding) AS DOUBLE) AS mn,
+        |    CAST(list_max(embedding) AS DOUBLE) AS mx,
+        |    embedding
+        |  FROM embeddings),
+        |c AS (
+        |  SELECT vec_id,
+        |    CASE WHEN mx = mn
+        |      THEN list_transform(embedding, x -> CAST(0 AS BIGINT))
+        |      ELSE list_transform(embedding, x ->
+        |        CAST(FLOOR(((CAST(x AS DOUBLE) - mn) * 255.0) / (mx - mn))
+        |          AS BIGINT))
+        |    END AS codes
+        |  FROM q)
+        |SELECT vec_id,
+        |  CAST(list_sum(codes) AS BIGINT) AS code_sum,
+        |  CAST(list_min(codes) AS BIGINT) AS code_min,
+        |  CAST(list_max(codes) AS BIGINT) AS code_max
+        |FROM c ORDER BY vec_id""".stripMargin)((s, d) =>
+      Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          array_min(col("embedding")).cast("double").as("mn"),
+          array_max(col("embedding")).cast("double").as("mx"),
+          col("embedding"))
+        .withColumn("codes", when(col("mx") === col("mn"),
+            expr("transform(embedding, x -> CAST(0 AS BIGINT))"))
+          .otherwise(expr("transform(embedding, x -> " +
+            "CAST(FLOOR(((CAST(x AS DOUBLE) - mn) * 255.0D) / (mx - mn)) AS BIGINT))")))
+        .select(col("vec_id"),
+          expr("aggregate(codes, CAST(0 AS BIGINT), (a, c) -> a + c)")
+            .as("code_sum"),
+          expr("CAST(array_min(codes) AS BIGINT)").as("code_min"),
+          expr("CAST(array_max(codes) AS BIGINT)").as("code_max"))
+        .orderBy("vec_id")),
+
+    // ---- O10: systematic rank sample — every 100th customer by
+    // balance rank. Forces a FULL exact global ranking (unlike o3's
+    // top-N short-circuit), which is exactly what
+    // [[graft.operators.GlobalRank]] parallelizes: range exchange +
+    // per-partition offsets instead of a one-task global window ----
+    Query("o10_rank_sample",
+      """WITH r AS (
+        |  SELECT c_custkey,
+        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal_c,
+        |    ROW_NUMBER() OVER (
+        |      ORDER BY CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |        DESC, c_custkey) AS rn
+        |  FROM customer)
+        |SELECT rn, c_custkey, bal_c FROM r
+        |WHERE rn % 100 = 0 ORDER BY rn""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d)
+        .select(col("c_custkey"),
+          (col("c_acctbal").cast("decimal(18,2)") * 100)
+            .cast("long").as("bal_c"))
+      graft.operators.GlobalRank.withRowNumber(c,
+          Seq(col("bal_c").desc, col("c_custkey")), out = "rn")
+        .filter(col("rn") % 100 === 0)
+        .select(col("rn"), col("c_custkey"), col("bal_c"))
+        .orderBy("rn")
+    }),
+
+    // ---- O16: exact range-partition bounds — the 31 cut values a
+    // 32-way repartitionByRange would want, computed EXACTLY (the
+    // rows where the 32-tile index increments under the full global
+    // ranking). Layout planning as data: these bounds drive range
+    // bucketing / sort-order file splits; the ranking itself is the
+    // o10 range-exchange machinery, never a one-task window ----
+    Query("o16_range_bounds",
+      """WITH r AS (
+        |  SELECT o_orderkey,
+        |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_c,
+        |    ROW_NUMBER() OVER (ORDER BY
+        |      CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
+        |      o_orderkey) AS rn
+        |  FROM orders),
+        |n AS (SELECT COUNT(*) AS n_rows FROM orders)
+        |SELECT (rn * 32) // n_rows AS tile, rn, price_c, o_orderkey
+        |FROM r, n
+        |WHERE (rn * 32) // n_rows > ((rn - 1) * 32) // n_rows
+        |  AND (rn * 32) // n_rows < 32
+        |ORDER BY tile""".stripMargin)((s, d) => {
+      val o = Tables.orders(s, d)
+        .select(col("o_orderkey"),
+          (col("o_totalprice").cast("decimal(18,2)") * 100)
+            .cast("long").as("price_c"))
+      val ranked = graft.operators.GlobalRank.withRowNumber(o,
+        Seq(col("price_c"), col("o_orderkey")), out = "rn")
+      val n = o.agg(count(lit(1)).as("n_rows"))
+      ranked.crossJoin(broadcast(n))
+        .filter(expr("rn * 32 div n_rows > (rn - 1) * 32 div n_rows") &&
+          expr("rn * 32 div n_rows < 32"))
+        .select(expr("rn * 32 div n_rows").as("tile"),
+          col("rn"), col("price_c"), col("o_orderkey"))
+        .orderBy("tile")
+    }),
+
+    // ---- O9: per-group top-N (rank window under a partition key —
+    // the distributed form of "top users per metric"; contrast with
+    // o3's GLOBAL top-N, which is a TakeOrderedAndProject) ----
+    Query("o9_group_topn",
+      """WITH c AS (
+        |  SELECT event_type, user_id, COUNT(*) AS cnt FROM events
+        |  WHERE user_id IS NOT NULL GROUP BY 1, 2),
+        |r AS (SELECT event_type, user_id, cnt,
+        |        ROW_NUMBER() OVER (PARTITION BY event_type
+        |          ORDER BY cnt DESC, user_id) AS rk
+        |      FROM c)
+        |SELECT event_type, user_id, CAST(cnt AS BIGINT) AS cnt,
+        |       CAST(rk AS INTEGER) AS rk
+        |FROM r WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin)((s, d) => {
+      val cnt = ev(s, d).filter(col("user_id").isNotNull)
+        .groupBy(col("event_type"), col("user_id"))
+        .agg(count(lit(1)).as("cnt"))
+      val w = Window.partitionBy("event_type")
+        .orderBy(col("cnt").desc, col("user_id"))
+      cnt.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= 3)
+        .select(col("event_type"), col("user_id"), col("cnt"),
+          col("rk").cast("int").as("rk"))
+        .orderBy("event_type", "rk")
+    }),
+
+    // ---- A16: salted two-stage aggregation — A2's hot-key scale
+    // path. event_type has 5 values over the whole fact table (every
+    // key is hot); the salt spreads each key over 16 reducers before
+    // the tiny (key x salt) partial set collapses. Result-identical
+    // to the direct groupBy — the oracle is plain SQL ----
+    Query("a16_salted_agg",
+      s"""WITH $factCte
+         |SELECT value, CAST(SUM(count) AS BIGINT) AS count
+         |FROM fact GROUP BY value ORDER BY count DESC, value""".stripMargin)((s, d) =>
+      graft.operators.Skew.saltedSum(fact(s, d), Seq("value"), "count",
+          sumName = "count", nSalts = 16)
+        .orderBy(col("count").desc, col("value"))),
+
+    // ---- J7: salted equi-join — J1's skew path when the fact side
+    // concentrates on few join keys and the dim can't broadcast. Dim
+    // rows replicate x8, fact rows salt deterministically; the shuffle
+    // splits each hot key across 8 partitions. Row-identical to the
+    // plain join (oracle) ----
+    Query("j7_salted_join",
+      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS cnt,
+        |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, d) =>
+      graft.store.Bucketing.saltedJoin(
+          Tables.lineitem(s, d),
+          Tables.orders(s, d).withColumnRenamed("o_orderkey", "l_orderkey"),
+          key = "l_orderkey", saltFactor = 8, saltSource = "l_partkey")
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("l_quantity").cast("long")).as("qty"))
+        .orderBy("o_orderpriority")),
+
+    // ---- W12: gap-fill by linear interpolation (every 3rd observed
+    // day kept as the sparse input; W1 densify answers zero-traffic,
+    // this answers feed-gap) ----
+    Query("w12_interpolate",
+      """WITH daily AS (
+        |  SELECT CAST(ts AS DATE) AS d, COUNT(*) AS v FROM events
+        |  WHERE event_type = 'purchase' GROUP BY 1),
+        |sparse AS (SELECT d, v FROM daily WHERE EXTRACT(day FROM d) % 3 = 0),
+        |b AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM sparse),
+        |cal AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS d FROM b),
+        |j AS (SELECT cal.d AS d, sparse.v AS v
+        |      FROM cal LEFT JOIN sparse ON cal.d = sparse.d),
+        |wnd AS (SELECT d, v,
+        |  last_value(v IGNORE NULLS) OVER
+        |    (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
+        |  last_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS) OVER
+        |    (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
+        |  first_value(v IGNORE NULLS) OVER
+        |    (ORDER BY d ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
+        |  first_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS) OVER
+        |    (ORDER BY d ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
+        |  FROM j)
+        |SELECT d,
+        |  CAST(COALESCE(v, pv + CAST(floor(
+        |    ((nv - pv) * date_diff('day', pd, d))::DOUBLE /
+        |    date_diff('day', pd, nd)) AS BIGINT)) AS BIGINT) AS v,
+        |  CAST(CASE WHEN v IS NULL THEN 1 ELSE 0 END AS INTEGER) AS interpolated
+        |FROM wnd ORDER BY d""".stripMargin)((s, d) => {
+      val daily = ev(s, d).filter(col("event_type") === "purchase")
+        .groupBy(to_date(col("ts")).as("d"))
+        .agg(count(lit(1)).cast("long").as("v"))
+      val sparse = daily.filter(pmod(dayofmonth(col("d")), lit(3)) === 0)
+      Series.interpolate(sparse, "d", "v").orderBy("d")
+    }),
+
+    // ---- W13: cumulative distinct users — the first-seen trick:
+    // cumulative COUNT(DISTINCT) without per-window re-scans (the
+    // naive form re-aggregates the whole history each day). One
+    // distinct shuffle computes first_seen; the running total runs
+    // over the CALENDAR-bounded daily row set ----
+    Query("w13_cumulative_distinct",
+      """WITH f AS (
+        |  SELECT user_id, MIN(CAST(ts AS DATE)) AS d0
+        |  FROM events GROUP BY 1),
+        |n AS (SELECT d0, COUNT(*) AS new_users FROM f GROUP BY 1)
+        |SELECT d0, new_users,
+        |       CAST(SUM(new_users) OVER (ORDER BY d0
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |         AS cum_users
+        |FROM n ORDER BY d0""".stripMargin)((s, d) => {
+      val first = ev(s, d).groupBy("user_id")
+        .agg(min(to_date(col("ts"))).as("d0"))
+      val perDay = first.groupBy("d0").agg(count(lit(1)).as("new_users"))
+      val w = Window
+        .partitionBy(graft.operators.GlobalRank.onePartitionKey(
+          dayofmonth(col("d0"))))
+        .orderBy("d0").rowsBetween(Window.unboundedPreceding, 0)
+      perDay.withColumn("cum_users", sum("new_users").over(w))
+        .orderBy("d0")
+    }),
+
+    // ---- W14: CUSUM changepoint detection — the level-shift locator
+    // on each metric's daily series. Deviations are multiplied
+    // through by n (S_t = Σ (n·x_i − total)) so the whole statistic
+    // is exact long arithmetic; argmax |S_t| with earliest-day ties
+    // resolves via one struct-min aggregate ----
+    Query("w14_cusum_changepoint",
+      s"""WITH $factCte,
+         |daily AS (
+         |  SELECT value, date, CAST(SUM(count) AS BIGINT) AS cnt
+         |  FROM fact GROUP BY 1, 2),
+         |tot AS (
+         |  SELECT value, CAST(COUNT(*) AS BIGINT) AS n,
+         |         CAST(SUM(cnt) AS BIGINT) AS total
+         |  FROM daily GROUP BY 1),
+         |cs AS (
+         |  SELECT d.value, d.date,
+         |    CAST(SUM(d.cnt * t.n - t.total) OVER (PARTITION BY d.value
+         |      ORDER BY d.date
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS s
+         |  FROM daily d JOIN tot t ON d.value = t.value),
+         |r AS (
+         |  SELECT value, date, ABS(s) AS a,
+         |    ROW_NUMBER() OVER (PARTITION BY value
+         |      ORDER BY ABS(s) DESC, date) AS rk
+         |  FROM cs)
+         |SELECT value, date AS cp_date, CAST(a AS BIGINT) AS max_absdev
+         |FROM r WHERE rk = 1 ORDER BY value""".stripMargin)((s, d) => {
+      val daily = fact(s, d).groupBy("value", "date")
+        .agg(sum("count").as("cnt"))
+      val tot = daily.groupBy("value")
+        .agg(count(lit(1)).as("n"), sum("cnt").as("total"))
+      val w = Window.partitionBy("value").orderBy("date")
+        .rowsBetween(Window.unboundedPreceding, 0)
+      daily.join(broadcast(tot), Seq("value"))
+        .withColumn("s", sum(col("cnt") * col("n") - col("total")).over(w))
+        .groupBy("value")
+        .agg(min(struct((-abs(col("s"))).as("na"), col("date").as("d")))
+          .as("m"))
+        .select(col("value"), col("m.d").as("cp_date"),
+          (-col("m.na")).as("max_absdev"))
+        .orderBy("value")
+    }),
+
+    // ---- W15: lag-7 autocorrelation components — seasonality
+    // detection on each metric's daily series. Calendar-lagged pairs
+    // (a gap never slides the window), and the output is the four
+    // integer Pearson pieces (n, n·Σxy−ΣxΣy, n·Σxx−Σx², n·Σyy−Σy²)
+    // so the row hash-matches any engine; √/÷ stays in the caller ----
+    Query("w15_autocorr",
+      s"""WITH $factCte,
+         |daily AS (
+         |  SELECT value, date, CAST(SUM(count) AS BIGINT) AS cnt
+         |  FROM fact GROUP BY 1, 2),
+         |p AS (
+         |  SELECT a.value, a.cnt AS x, b.cnt AS y
+         |  FROM daily a JOIN daily b
+         |    ON b.value = a.value AND b.date = a.date + 7)
+         |SELECT value, COUNT(*) AS n,
+         |  CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS BIGINT) AS cov_num,
+         |  CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS BIGINT) AS var_x,
+         |  CAST(COUNT(*) * SUM(y * y) - SUM(y) * SUM(y) AS BIGINT) AS var_y
+         |FROM p GROUP BY value ORDER BY value""".stripMargin)((s, d) =>
+      graft.series.Stats.autocorrComponents(
+        fact(s, d).groupBy("value", "date").agg(sum("count").as("cnt")),
+        lag = 7)
+        .orderBy("value")),
+
+    // ---- W16: exponentially-weighted moving sum, power-of-two decay
+    // over an 8-day lookback. No range join: each day fans out to the
+    // ≤ 8 future dates it feeds (constant-length explode), one hash
+    // aggregate, equi-join back to real dates — exact long weights ----
+    Query("w16_ewma",
+      s"""WITH $factCte,
+         |daily AS (
+         |  SELECT value, date, CAST(SUM(count) AS BIGINT) AS cnt
+         |  FROM fact GROUP BY 1, 2),
+         |e AS (
+         |  SELECT value, date + CAST(g.k AS INTEGER) AS date,
+         |         cnt * (1 << (7 - g.k)) AS nc, (1 << (7 - g.k)) AS dc
+         |  FROM daily, generate_series(0, 7) AS g(k)),
+         |w AS (
+         |  SELECT value, date, CAST(SUM(nc) AS BIGINT) AS ewma_num,
+         |         CAST(SUM(dc) AS BIGINT) AS ewma_den
+         |  FROM e GROUP BY 1, 2)
+         |SELECT d.value, d.date, d.cnt, w.ewma_num, w.ewma_den
+         |FROM daily d JOIN w ON d.value = w.value AND d.date = w.date
+         |ORDER BY d.value, d.date""".stripMargin)((s, d) =>
+      graft.series.Stats.ewma(
+        fact(s, d).groupBy("value", "date").agg(sum("count").as("cnt")),
+        halfWindow = 7)
+        .orderBy("value", "date")),
+
+    // ---- W17: weekday seasonality profile — each metric's per-
+    // weekday traffic index vs its own all-days mean, integer
+    // permille via cross-multiplied DIV (no float ratio). The
+    // profile feeds day-of-week normalization in anomaly checks ----
+    Query("w17_weekday_profile",
+      s"""WITH $factCte,
+         |daily AS (
+         |  SELECT value, date, CAST(SUM(count) AS BIGINT) AS cnt
+         |  FROM fact GROUP BY 1, 2),
+         |tot AS (
+         |  SELECT value, CAST(SUM(cnt) AS BIGINT) AS total,
+         |         CAST(COUNT(*) AS BIGINT) AS days
+         |  FROM daily GROUP BY 1),
+         |dw AS (
+         |  SELECT value, dayofweek(date) AS dow,
+         |         CAST(SUM(cnt) AS BIGINT) AS dow_cnt,
+         |         CAST(COUNT(*) AS BIGINT) AS dow_days
+         |  FROM daily GROUP BY 1, 2)
+         |SELECT dw.value, CAST(dw.dow AS INTEGER) AS dow, dw.dow_cnt,
+         |       CAST((1000 * dw.dow_cnt * t.days) // (dw.dow_days * t.total)
+         |         AS BIGINT) AS index_permille
+         |FROM dw JOIN tot t ON dw.value = t.value
+         |ORDER BY dw.value, dow""".stripMargin)((s, d) => {
+      val daily = fact(s, d).groupBy("value", "date")
+        .agg(sum("count").as("cnt"))
+      val tot = daily.groupBy("value")
+        .agg(sum("cnt").as("total"), count(lit(1)).as("days"))
+      daily
+        .withColumn("dow", dayofweek(col("date")) - 1)
+        .groupBy("value", "dow")
+        .agg(sum("cnt").as("dow_cnt"), count(lit(1)).as("dow_days"))
+        .join(broadcast(tot), Seq("value"))
+        .select(col("value"), col("dow"), col("dow_cnt"),
+          expr("1000 * dow_cnt * days DIV (dow_days * total)")
+            .as("index_permille"))
+        .orderBy("value", "dow")
+    }),
+
+    // ---- W18: weekday-normalized anomaly flags — a19's MAD flags
+    // fire on every weekend dip unless the series is deseasonalized
+    // first; here each day compares against ITS OWN weekday's mean
+    // (w17's profile), flagged when it deviates by more than 150
+    // permille of that mean. Cross-multiplied integers (cnt·dow_days
+    // vs dow_cnt), no float ratio; the weekday stats broadcast back ----
+    Query("w18_dow_anomaly",
+      s"""WITH $factCte,
+         |daily AS (
+         |  SELECT value, date, CAST(SUM(count) AS BIGINT) AS cnt
+         |  FROM fact GROUP BY 1, 2),
+         |dw AS (
+         |  SELECT value, dayofweek(date) AS dow,
+         |         CAST(SUM(cnt) AS BIGINT) AS dow_cnt,
+         |         CAST(COUNT(*) AS BIGINT) AS dow_days
+         |  FROM daily GROUP BY 1, 2)
+         |SELECT d.value, d.date, d.cnt,
+         |       CAST(1 AS BIGINT) AS anomaly
+         |FROM daily d JOIN dw
+         |  ON d.value = dw.value AND dayofweek(d.date) = dw.dow
+         |WHERE ABS(d.cnt * dw.dow_days - dw.dow_cnt) * 1000 > dw.dow_cnt * 150
+         |ORDER BY d.value, d.date""".stripMargin)((s, d) => {
+      val daily = fact(s, d).groupBy("value", "date")
+        .agg(sum("count").as("cnt"))
+      val dw = daily
+        .withColumn("dow", dayofweek(col("date")) - 1)
+        .groupBy("value", "dow")
+        .agg(sum("cnt").as("dow_cnt"), count(lit(1)).as("dow_days"))
+      daily.withColumn("dow", dayofweek(col("date")) - 1)
+        .join(broadcast(dw), Seq("value", "dow"))
+        .select(col("value"), col("date"), col("cnt"),
+          (abs(col("cnt") * col("dow_days") - col("dow_cnt")) * 1000 >
+            col("dow_cnt") * 150).cast("long").as("anomaly"))
+        .filter(col("anomaly") === 1)
+        .orderBy("value", "date")
+    }),
+
+    // ---- W20: growth accounting — the daily new / retained /
+    // resurrected / churned user ledger. One (user, day) dedup feeds
+    // everything: first-seen via a per-user min, yesterday's set via
+    // a day-shifted self-equi-join (full outer on (user, day) — never
+    // a per-day set comparison loop), churn counted on the morning
+    // after. Every stage a hash aggregate or equi-join on the user
+    // key; restricted to days the data actually contains ----
+    Query("w20_growth_accounting",
+      """WITH p AS (
+        |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id
+        |  FROM events WHERE user_id IS NOT NULL),
+        |f AS (SELECT user_id, MIN(day) AS first_day FROM p GROUP BY 1),
+        |t AS (SELECT p.day, p.user_id, f.first_day
+        |      FROM p JOIN f ON p.user_id = f.user_id),
+        |y AS (SELECT day + 1 AS day, user_id, 1 AS yy FROM p),
+        |days AS (SELECT DISTINCT day FROM p),
+        |j AS (
+        |  SELECT COALESCE(t.day, y.day) AS day, t.first_day, y.yy
+        |  FROM t FULL OUTER JOIN y
+        |    ON t.day = y.day AND t.user_id = y.user_id)
+        |SELECT j.day,
+        |  CAST(SUM(CASE WHEN first_day = j.day THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS new_users,
+        |  CAST(SUM(CASE WHEN first_day < j.day AND yy = 1 THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS retained,
+        |  CAST(SUM(CASE WHEN first_day < j.day AND yy IS NULL THEN 1 ELSE 0
+        |    END) AS BIGINT) AS resurrected,
+        |  CAST(SUM(CASE WHEN first_day IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS churned
+        |FROM j JOIN days ON days.day = j.day
+        |GROUP BY 1 ORDER BY j.day""".stripMargin)((s, d) => {
+      val e = ev(s, d).filter(col("user_id").isNotNull)
+      val pairs = e.select(to_date(col("ts")).as("day"), col("user_id"))
+        .distinct()
+      val first = pairs.groupBy("user_id").agg(min("day").as("first_day"))
+      val today = pairs.join(first, Seq("user_id"))
+      val yesterday = pairs
+        .select(date_add(col("day"), 1).as("day"), col("user_id"))
+      val days = pairs.select("day").distinct()
+      today.join(yesterday.withColumn("__y", lit(1)),
+          Seq("day", "user_id"), "full_outer")
+        .join(days, Seq("day"), "left_semi")
+        .groupBy("day")
+        .agg(
+          sum(when(col("first_day") === col("day"), 1L).otherwise(0L))
+            .as("new_users"),
+          sum(when(col("first_day") < col("day") && col("__y") === 1, 1L)
+            .otherwise(0L)).as("retained"),
+          sum(when(col("first_day") < col("day") && col("__y").isNull &&
+              col("first_day").isNotNull, 1L)
+            .otherwise(0L)).as("resurrected"),
+          sum(when(col("first_day").isNull, 1L).otherwise(0L)).as("churned"))
+        .orderBy("day")
+    }),
+
+    // ---- W19: sliding 7-day distinct users — the rolling-window
+    // twin of w13's cumulative distinct. No window function can
+    // slide a COUNT(DISTINCT); the scalable form dedups to (user,
+    // day) grain first, fans each pair out to the ≤7 window ends it
+    // feeds (constant map-side explode, the w16 trick), and counts
+    // per end-day — every stage a hash aggregate, shuffle volume
+    // 7×|distinct pairs|, never |events|·window ----
+    Query("w19_rolling_distinct",
+      """WITH p AS (
+        |  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id
+        |  FROM events WHERE user_id IS NOT NULL),
+        |days AS (SELECT DISTINCT day FROM p),
+        |x AS (
+        |  SELECT DISTINCT p.user_id, p.day + CAST(g.k AS INTEGER) AS day
+        |  FROM p, generate_series(0, 6) AS g(k)),
+        |j AS (SELECT x.day, x.user_id FROM x JOIN days ON days.day = x.day)
+        |SELECT day, COUNT(*) AS users_7d
+        |FROM j GROUP BY 1 ORDER BY day""".stripMargin)((s, d) => {
+      val e = ev(s, d).filter(col("user_id").isNotNull)
+      val pairs = e.select(to_date(col("ts")).as("day"), col("user_id"))
+        .distinct()
+      val days = e.select(to_date(col("ts")).as("day")).distinct()
+      pairs
+        .select(col("user_id"),
+          explode(sequence(lit(0), lit(6))).as("k"),
+          col("day"))
+        .select(col("user_id"), date_add(col("day"), col("k")).as("day"))
+        .distinct()
+        .join(days, Seq("day"), "left_semi")
+        .groupBy("day").agg(count(lit(1)).as("users_7d"))
+        .orderBy("day")
+    }),
+
+    // ---- A22: moment sketch — the five integer power sums (n, Σx,
+    // Σx², Σx³ over centiunits) that any downstream skewness /
+    // kurtosis / variance derives from in closed form; one aggregate,
+    // engine-exact, mergeable across shards by construction ----
+    Query("a22_moments",
+      """WITH x AS (
+        |  SELECT event_type, CAST(FLOOR(value * 100) AS BIGINT) AS x
+        |  FROM events)
+        |SELECT event_type, COUNT(*) AS n,
+        |       CAST(SUM(x) AS BIGINT) AS s1,
+        |       CAST(SUM(x * x) AS BIGINT) AS s2,
+        |       CAST(SUM(x * x * x) AS BIGINT) AS s3
+        |FROM x GROUP BY 1 ORDER BY event_type""".stripMargin)((s, d) => {
+      val x = floor(col("value") * 100).cast("long")
+      ev(s, d).select(col("event_type"), x.as("x"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("x").as("s1"),
+          sum(col("x") * col("x")).as("s2"),
+          sum(col("x") * col("x") * col("x")).as("s3"))
+        .orderBy("event_type")
+    }),
+
+    // ---- W10: ordered conversion funnel — each step's entry must be
+    // at-or-after the user's previous step entry ----
+    Query("w10_funnel",
+      """WITH e AS (
+        |  SELECT user_id, event_type,
+        |         CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec FROM events),
+        |s1 AS (SELECT user_id, MIN(sec) AS t1 FROM e
+        |       WHERE event_type = 'view' GROUP BY 1),
+        |s2 AS (SELECT e.user_id, MIN(sec) AS t2 FROM e JOIN s1 USING (user_id)
+        |       WHERE event_type = 'click' AND sec >= t1 GROUP BY 1),
+        |s3 AS (SELECT e.user_id, MIN(sec) AS t3 FROM e JOIN s2 USING (user_id)
+        |       WHERE event_type = 'purchase' AND sec >= t2 GROUP BY 1)
+        |SELECT 1 AS step, 'view' AS name, COUNT(*) AS users FROM s1
+        |UNION ALL SELECT 2, 'click', COUNT(*) FROM s2
+        |UNION ALL SELECT 3, 'purchase', COUNT(*) FROM s3
+        |ORDER BY step""".stripMargin)((s, d) =>
+      graft.series.Behavior.funnel(
+        ev(s, d).withColumn("sec", unix_timestamp(col("ts"))),
+        "user_id", "event_type", "sec",
+        Seq("view", "click", "purchase"))),
+
+    // ---- W11: weekly cohort retention (users by first-seen week ×
+    // whole-week offset) ----
+    Query("w11_cohort",
+      """WITH f AS (
+        |  SELECT user_id, MIN(CAST(ts AS DATE)) AS d0
+        |  FROM events GROUP BY 1)
+        |SELECT date_trunc('week', d0) AS cohort,
+        |       CAST((CAST(ts AS DATE) - d0) // 7 AS INTEGER) AS wk,
+        |       COUNT(DISTINCT e.user_id) AS active
+        |FROM events e JOIN f USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, d) =>
+      graft.series.Behavior.cohortRetention(
+        ev(s, d).withColumn("d", to_date(col("ts"))),
+        "user_id", "d")),
+
+    // ---- O8: NTILE quartiles of customers by total spend (exact
+    // decimal money sums). Ranks via [[graft.operators.GlobalRank]]:
+    // `ntile(4).over(Window.orderBy(...))` would move every customer
+    // to ONE task; the range-exchange + per-partition-offset form is
+    // the same exact answer with the sort parallel (measured at sf1:
+    // 2.9 s -> sub-second, and the gap widens linearly with the
+    // customer count) ----
+    Query("o8_ntile",
+      """WITH spend AS (
+        |  SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS spend
+        |  FROM orders GROUP BY 1),
+        |q AS (
+        |  SELECT o_custkey, spend,
+        |    CAST(NTILE(4) OVER (ORDER BY spend DESC, o_custkey) AS INTEGER)
+        |      AS quartile
+        |  FROM spend)
+        |SELECT quartile, COUNT(*) AS cnt, MIN(o_custkey) AS min_ck,
+        |       CAST(SUM(spend) AS DOUBLE) AS total_spend
+        |FROM q GROUP BY 1 ORDER BY 1""".stripMargin)((s, d) => {
+      val spend = Tables.orders(s, d).groupBy("o_custkey")
+        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("spend"))
+      graft.operators.GlobalRank.withNtile(spend, 4,
+          Seq(col("spend").desc, col("o_custkey")), out = "quartile")
+        .groupBy("quartile")
+        .agg(count(lit(1)).as("cnt"), min("o_custkey").as("min_ck"),
+          sum(col("spend")).cast("double").as("total_spend"))
+        .orderBy("quartile")
+    }),
+
+    // ---- A4 registry: all KPIs in ONE pass per datatype + ratios.
+    // The reference issues one query per metric (KeyFigures.pm:13-61);
+    // here each datatype's metrics are conditional aggregates in a
+    // single scan: the events fact feeds the usage KPIs, and the
+    // doc_access fact (DocumentAccess.pm rewrites: total_fulltext,
+    // total_openaccess, deposits + the two ratio metrics,
+    // KeyFigures.pm:33-44,59-61) is ONE pass over archived items ⋈
+    // docs. The two 1-row boards meet in a trivial cross join ----
+    Query("kf_metrics",
+      """WITH usage AS (
+        |  SELECT
+        |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchases,
+        |    CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views,
+        |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
+        |    CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
+        |    CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signups,
+        |    CAST(ROUND(100.0 * SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+        |      / SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END), 0) AS BIGINT) AS purchase_pct
+        |  FROM events),
+        |da AS (
+        |  SELECT o.o_orderkey,
+        |         MAX(CASE WHEN l.l_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS has_doc,
+        |         MAX(CASE WHEN l.l_returnflag = 'N' THEN 1 ELSE 0 END) AS has_pub
+        |  FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        |  WHERE o.o_orderstatus = 'F'
+        |  GROUP BY 1),
+        |board AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS deposits,
+        |         CAST(COALESCE(SUM(has_doc), 0) AS BIGINT) AS total_fulltext,
+        |         CAST(COALESCE(SUM(has_pub), 0) AS BIGINT) AS total_openaccess
+        |  FROM da)
+        |SELECT usage.*, board.deposits, board.total_fulltext, board.total_openaccess,
+        |  CASE WHEN board.deposits <> 0 THEN
+        |    CAST(ROUND(100.0 * board.total_fulltext / board.deposits, 0) AS BIGINT)
+        |  END AS ratio_fulltext,
+        |  CASE WHEN board.deposits <> 0 THEN
+        |    CAST(ROUND(100.0 * board.total_openaccess / board.deposits, 0) AS BIGINT)
+        |  END AS ratio_openaccess
+        |FROM usage CROSS JOIN board""".stripMargin)((s, d) => {
+      import graft.views.KeyFigures
+      import graft.views.KeyFigures.Metric
+      val f = fact(s, d)
+      val m = KeyFigures.compute(f, Seq(
+        Metric("purchases", col("value") === "purchase"),
+        Metric("views", col("value") === "view"),
+        Metric("clicks", col("value") === "click"),
+        Metric("errors", col("value") === "error"),
+        Metric("signups", col("value") === "signup")))
+      val usage = KeyFigures.withRatio(m, "purchase_pct", "purchases", "views")
+      val da = graft.processors.MetadataProcessors.DocumentAccess(
+          dateCol = "o_orderdate", idCol = "o_orderkey",
+          statusCol = "o_orderstatus", archiveValue = "F",
+          docs = Tables.lineitem(s, d), docIdCol = "l_orderkey",
+          publicPred = col("l_returnflag") === "N")
+        .process(Tables.orders(s, d))
+      // deposits (datafilter=archive) = one full-text status row per
+      // archived item, so it reads off the same scan
+      val daM = KeyFigures.compute(da, Seq(
+        Metric("deposits", col("value").isin("full_text", "no_full_text")),
+        Metric("total_fulltext", col("value") === "full_text"),
+        Metric("total_openaccess", col("value") === "open_access")))
+      val daBoard = KeyFigures.withRatio(
+        KeyFigures.withRatio(daM, "ratio_fulltext", "total_fulltext", "deposits"),
+        "ratio_openaccess", "total_openaccess", "deposits")
+      usage.crossJoin(broadcast(daBoard))
+    }),
+
+    // ---- W5 sparkline: leading zero-count rows dropped ----
+    Query("w5_sparkline",
+      """SELECT CAST(ts AS DATE) AS d, COUNT(*) AS cnt FROM events
+        |WHERE event_type = 'error' GROUP BY 1 ORDER BY d""".stripMargin)((s, d) => {
+      val spark = s; import spark.implicits._
+      val daily = fact(s, d).filter(col("value") === "error")
+        .groupBy(col("date").as("d")).agg(sum("count").as("cnt"))
+      val zeros = Seq("2023-12-20", "2023-12-21")
+        .map(x => (java.sql.Date.valueOf(x), 0L)).toDF("d", "cnt")
+      Series.sparkline(daily.unionByName(zeros))
+    }),
+
+    // ---- W6 year-over-year compare (single-pass pivot) ----
+    Query("w6_compare_years",
+      """SELECT CAST(year(l_shipdate) AS INTEGER) AS year,
+        |       CAST(month(l_shipdate) AS INTEGER) AS month,
+        |       COUNT(*) AS cnt
+        |FROM lineitem GROUP BY 1, 2 ORDER BY year, month""".stripMargin)((s, d) => {
+      val daily = Tables.lineitem(s, d)
+        .groupBy(to_date(col("l_shipdate")).as("d"))
+        .agg(count(lit(1)).as("cnt"))
+      Series.compareYears(daily).orderBy("year", "month")
+    }),
+
+    // ---- P1: metadata processor — deposits per day by status ----
+    Query("p1_deposits",
+      """SELECT CAST(o_orderdate AS DATE) AS date, o_orderstatus AS value,
+        |       COUNT(*) AS count
+        |FROM orders GROUP BY 1, 2 ORDER BY date, value""".stripMargin)((s, d) =>
+      graft.processors.MetadataProcessors
+        .Deposits("o_orderdate", "o_custkey", "o_orderstatus")
+        .process(Tables.orders(s, d))
+        .groupBy(col("date"), col("value"))
+        .agg(sum("count").as("count"))
+        .orderBy("date", "value")),
+
+    // ---- P2: doc_access datatype (ref DocumentAccess.pm:20-75) —
+    // archived items classified full_text/no_full_text (any attached
+    // doc) and open_access/no_open_access (any PUBLIC attached doc).
+    // orders = items (archive gate o_orderstatus='F'), lineitem =
+    // attached docs, l_returnflag='N' = public ----
+    Query("p2_doc_access",
+      """WITH da AS (
+        |  SELECT o.o_orderkey,
+        |         MAX(CASE WHEN l.l_orderkey IS NOT NULL THEN 1 ELSE 0 END) AS has_doc,
+        |         MAX(CASE WHEN l.l_returnflag = 'N' THEN 1 ELSE 0 END) AS has_pub
+        |  FROM orders o LEFT JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        |  WHERE o.o_orderstatus = 'F'
+        |  GROUP BY 1),
+        |statuses AS (
+        |  SELECT CASE WHEN has_doc = 1 THEN 'full_text' ELSE 'no_full_text' END AS value
+        |  FROM da
+        |  UNION ALL
+        |  SELECT CASE WHEN has_pub = 1 THEN 'open_access' ELSE 'no_open_access' END
+        |  FROM da)
+        |SELECT value, CAST(COUNT(*) AS BIGINT) AS total
+        |FROM statuses GROUP BY 1 ORDER BY value""".stripMargin)((s, d) =>
+      graft.processors.MetadataProcessors.DocumentAccess(
+          dateCol = "o_orderdate", idCol = "o_orderkey",
+          statusCol = "o_orderstatus", archiveValue = "F",
+          docs = Tables.lineitem(s, d), docIdCol = "l_orderkey",
+          publicPred = col("l_returnflag") === "N")
+        .process(Tables.orders(s, d))
+        .groupBy(col("value")).agg(sum("count").as("total"))
+        .orderBy("value")),
+
+    // ---- P3: k-anonymity audit — the privacy gate paired with the
+    // C9 MD5 anonymization: after pseudonymizing requesters, the
+    // released quasi-identifier tuple (day, event_type, value band)
+    // must not isolate fewer than k individuals per cell. One
+    // map-side-combining groupBy + HAVING; at 100 TB the QI
+    // cardinality (days × types × bands), not the event count, bounds
+    // the shuffle ----
+    Query("p3_k_anonymity",
+      """SELECT CAST(ts AS DATE) AS day, event_type,
+        |       CAST(FLOOR(value / 50) AS BIGINT) AS vband,
+        |       COUNT(*) AS n
+        |FROM events GROUP BY 1, 2, 3 HAVING COUNT(*) < 5
+        |ORDER BY day, event_type, vband""".stripMargin)((s, d) =>
+      ev(s, d)
+        .select(to_date(col("ts")).as("day"), col("event_type"),
+          floor(col("value") / 50).cast("long").as("vband"))
+        .groupBy("day", "event_type", "vband")
+        .agg(count(lit(1)).as("n"))
+        .filter(col("n") < 5)
+        .orderBy("day", "event_type", "vband")),
+
+    // ---- P4: DP-style noisy count release — p3's audit says which
+    // cells are too small to publish; this is the publishing side:
+    // per-metric counts plus bounded integer noise, clamped at zero.
+    // The noise is DERIVED (hash60 of the cell key mod the noise
+    // span), so the release is reproducible and hash-oracle-able —
+    // a stand-in for the sampled Laplace draw a real DP release
+    // would use, with the identical dataflow: one aggregate, one
+    // map-side noise expression, no second scan ----
+    Query("p4_dp_noise",
+      s"""SELECT event_type,
+         |  GREATEST(0, COUNT(*) +
+         |    (${hex60("event_type || '|dp'")} % 7) - 3) AS cnt_noisy
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)((s, d) =>
+      ev(s, d)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("__n"))
+        .select(col("event_type"),
+          greatest(lit(0L),
+            col("__n") + (pmod(Text.hash60(
+              concat(col("event_type"), lit("|dp"))), lit(7L)) - lit(3L)))
+            .as("cnt_noisy"))
+        .orderBy("event_type")),
+
+    // ---- P5: l-diversity audit — k-anonymity's sibling: a quasi-
+    // identifier group is re-identifiable not just when SMALL (p3)
+    // but when its sensitive values are UNIFORM; flag groups whose
+    // sensitive column carries < 5 distinct values (l = 5 for this
+    // band domain). Two stacked aggregates (per-value counts, then
+    // per-group), never the mixed-distinct Expand ----
+    Query("p5_l_diversity",
+      """WITH g AS (
+        |  SELECT CAST(ts AS DATE) AS day, event_type,
+        |         CAST(FLOOR(value / 50) AS BIGINT) AS vband, COUNT(*) AS c
+        |  FROM events GROUP BY 1, 2, 3)
+        |SELECT day, event_type, CAST(SUM(c) AS BIGINT) AS n,
+        |       COUNT(*) AS n_vals
+        |FROM g GROUP BY 1, 2 HAVING COUNT(*) < 5
+        |ORDER BY day, event_type""".stripMargin)((s, d) =>
+      ev(s, d)
+        .select(to_date(col("ts")).as("day"), col("event_type"),
+          floor(col("value") / 50).cast("long").as("vband"))
+        .groupBy("day", "event_type", "vband")
+        .agg(count(lit(1)).as("c"))
+        .groupBy("day", "event_type")
+        .agg(sum("c").as("n"), count(lit(1)).as("n_vals"))
+        .filter(col("n_vals") < 5)
+        .orderBy("day", "event_type")),
+
+    // ---- S12: schema-drift ingestion — an old-vintage extract
+    // missing later columns unions with the current vintage via
+    // unionByName(allowMissingColumns): absent columns null-fill, no
+    // positional mismatch. The per-column presence counts are the
+    // audit a 100 TB backfill over years of drifting parquet needs
+    // before trusting the union ----
+    Query("s12_union_drift",
+      """WITH legacy AS (
+        |  SELECT event_id, event_type FROM events WHERE event_id % 3 = 0),
+        |cur AS (SELECT * FROM events WHERE event_id % 3 <> 0),
+        |u AS (SELECT * FROM legacy UNION ALL BY NAME SELECT * FROM cur)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+        |       CAST(COUNT(user_id) AS BIGINT) AS user_id_present,
+        |       CAST(COUNT(value) AS BIGINT) AS value_present,
+        |       CAST(COUNT(props) AS BIGINT) AS props_present
+        |FROM u""".stripMargin)((s, d) => {
+      val e = ev(s, d)
+      val legacy = e.filter(col("event_id") % 3 === 0)
+        .select("event_id", "event_type")
+      val current = e.filter(col("event_id") % 3 =!= 0)
+      legacy.unionByName(current, allowMissingColumns = true)
+        .agg(count(lit(1)).as("n_rows"),
+          count(col("user_id")).as("user_id_present"),
+          count(col("value")).as("value_present"),
+          count(col("props")).as("props_present"))
+    }),
+
+    // ---- S13: multi-format source/sink round-trip — the same
+    // extract written to and read back from ORC, CSV and JSON (the
+    // legacy-dump formats a 100 TB lakehouse actually ingests);
+    // identical per-format stats prove lossless round-trips. Schema
+    // is enforced on read (no inference pass over the data) ----
+    Query("s13_multiformat",
+      """WITH f AS (
+        |  SELECT 'csv' AS format UNION ALL SELECT 'json' UNION ALL SELECT 'orc'),
+        |a AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+        |         CAST(SUM(event_id) AS BIGINT) AS id_sum,
+        |         CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types,
+        |         CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days
+        |  FROM events)
+        |SELECT format, n_rows, id_sum, n_types, n_days
+        |FROM f CROSS JOIN a ORDER BY format""".stripMargin)((s, d) => {
+      val e = ev(s, d).select(col("event_id"), col("event_type"),
+        date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      // dir comes from the session fixture cache (one per sfDir, swept
+      // at JVM exit); the writes below ARE the measured round-trip, so
+      // they rerun each invocation in overwrite mode
+      val tmp = fixtureDir("fmt", d)(_ => ())
+      e.write.mode("overwrite").orc(s"$tmp/orc")
+      e.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
+      e.write.mode("overwrite").json(s"$tmp/json")
+      val back = Seq(
+        "csv" -> s.read.option("header", "true").schema(e.schema).csv(s"$tmp/csv"),
+        "json" -> s.read.schema(e.schema).json(s"$tmp/json"),
+        "orc" -> s.read.orc(s"$tmp/orc"))
+      back.map { case (fmt, df) =>
+        df.agg(count(lit(1)).as("n_rows"),
+            sum(col("event_id")).as("id_sum"),
+            countDistinct(col("event_type")).as("n_types"),
+            countDistinct(col("day")).as("n_days"))
+          .select(lit(fmt).as("format"), col("n_rows"), col("id_sum"),
+            col("n_types"), col("n_days"))
+      }.reduce(_ unionByName _).orderBy("format")
+    }),
+
+    // ---- S17: schema evolution across snapshot generations — an
+    // older narrow snapshot and a newer one that added a column read
+    // together under mergeSchema (footer-only merge: no data pass to
+    // union schemas at 100 TB); missing columns surface as NULLs and
+    // the aggregate accounts for both generations ----
+    Query("s17_schema_evolution",
+      """SELECT COUNT(*) AS n_rows,
+        |  CAST(SUM(CASE WHEN c_custkey % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_with_bal,
+        |  CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_missing
+        |FROM customer""".stripMargin)((s, d) => {
+      // generations materialize once per (session, sfDir) via the
+      // fixture cache — the TIMED portion is only the mergeSchema
+      // read, which is the operator being gated
+      val tmp = fixtureDir("evo", d) { dir =>
+        val c = Tables.customer(s, d)
+        c.filter(col("c_custkey") % 2 === 0)
+          .select(col("c_custkey"), col("c_name"))
+          .write.mode("overwrite").parquet(s"$dir/gen1")
+        c.filter(col("c_custkey") % 2 === 1)
+          .select(col("c_custkey"), col("c_name"),
+            col("c_acctbal").cast("decimal(18,2)").as("c_bal"))
+          .write.mode("overwrite").parquet(s"$dir/gen2")
+      }
+      s.read.option("mergeSchema", "true")
+        .parquet(s"$tmp/gen1", s"$tmp/gen2")
+        .agg(count(lit(1)).as("n_rows"),
+          count(col("c_bal")).as("n_with_bal"),
+          sum(when(col("c_bal").isNull, 1L).otherwise(0L)).as("n_missing"))
+    }),
+
+    // ---- S18: partition-stats manifest + zone-map pruning — the
+    // Iceberg/Delta file-statistics pattern: one tiny per-partition
+    // row (count, ndv, min/max of the clustered column) built in a
+    // single scan, then a point/range predicate is answered FROM THE
+    // MANIFEST — the `prunable` flag shows which day partitions a
+    // scan of `event_id ∈ [lo, lo + span/10]` would skip without
+    // opening them. The probe bounds derive from the data (global
+    // min/max, integer DIV), so the row is deterministic
+    // cross-engine; the bounds frame is one row and broadcasts ----
+    // manifest per day + data-derived probe bounds; `prunable` says
+    // the day's zone map excludes event_id in [lo, lo + span/10]
+    Query("s18_partition_stats",
+      """WITH m AS (
+        |  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_rows,
+        |         COUNT(DISTINCT user_id) AS n_users,
+        |         MIN(event_id) AS min_eid, MAX(event_id) AS max_eid
+        |  FROM events GROUP BY 1),
+        |b AS (
+        |  SELECT MIN(event_id) AS lo,
+        |         MIN(event_id) + (MAX(event_id) - MIN(event_id)) // 10
+        |           AS probe_hi
+        |  FROM events)
+        |SELECT day, CAST(n_rows AS BIGINT) AS n_rows,
+        |  CAST(n_users AS BIGINT) AS n_users, min_eid, max_eid,
+        |  CAST(CASE WHEN min_eid > probe_hi OR max_eid < lo
+        |    THEN 1 ELSE 0 END AS BIGINT) AS prunable
+        |FROM m CROSS JOIN b ORDER BY day""".stripMargin)((s, d) => {
+      val e = ev(s, d)
+      val manifest = e.groupBy(to_date(col("ts")).as("day")).agg(
+        count(lit(1)).as("n_rows"),
+        count_distinct(col("user_id")).as("n_users"),
+        min("event_id").as("min_eid"), max("event_id").as("max_eid"))
+      val bounds = e.agg(min("event_id").as("lo"),
+        expr("min(event_id) + (max(event_id) - min(event_id)) div 10")
+          .as("probe_hi"))
+      manifest.crossJoin(broadcast(bounds))
+        .withColumn("prunable",
+          (col("min_eid") > col("probe_hi") || col("max_eid") < col("lo"))
+            .cast("long"))
+        .select("day", "n_rows", "n_users", "min_eid", "max_eid", "prunable")
+        .orderBy("day")
+    }),
+
+    // ---- S11: table profiling (ANALYZE shape). Exact-ndv mode
+    // (oracle-gated here) runs as TWO column-pruned scans since r17 —
+    // hash-aggregated distinct counts + an Expand-free sort-free
+    // stats pass, attached by a 1-row broadcast (the mixed aggregate
+    // forced 6x Expand through two SortAggregate sorts; measured
+    // 2.3s -> 0.8s). approx mode (HLL++, the 100 TB path) keeps the
+    // true single-scan single-aggregate shape ----
+    Query("s11_profile",
+      """WITH o AS (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus,
+        |         CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
+        |  FROM orders),
+        |p AS (
+        |  SELECT 'o_orderkey' AS "column", COUNT(*) AS n_rows,
+        |         COUNT(o_orderkey) AS n_nonnull,
+        |         COUNT(DISTINCT o_orderkey) AS ndv,
+        |         CAST(MIN(o_orderkey) AS VARCHAR) AS min_s,
+        |         CAST(MAX(o_orderkey) AS VARCHAR) AS max_s FROM o
+        |  UNION ALL
+        |  SELECT 'o_custkey', COUNT(*), COUNT(o_custkey),
+        |         COUNT(DISTINCT o_custkey),
+        |         CAST(MIN(o_custkey) AS VARCHAR),
+        |         CAST(MAX(o_custkey) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_orderstatus', COUNT(*), COUNT(o_orderstatus),
+        |         COUNT(DISTINCT o_orderstatus),
+        |         CAST(MIN(o_orderstatus) AS VARCHAR),
+        |         CAST(MAX(o_orderstatus) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_orderdate', COUNT(*), COUNT(o_orderdate),
+        |         COUNT(DISTINCT o_orderdate),
+        |         CAST(MIN(o_orderdate) AS VARCHAR),
+        |         CAST(MAX(o_orderdate) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_orderpriority', COUNT(*), COUNT(o_orderpriority),
+        |         COUNT(DISTINCT o_orderpriority),
+        |         CAST(MIN(o_orderpriority) AS VARCHAR),
+        |         CAST(MAX(o_orderpriority) AS VARCHAR) FROM o)
+        |SELECT "column", CAST(n_rows AS BIGINT) AS n_rows,
+        |       CAST(n_nonnull AS BIGINT) AS n_nonnull,
+        |       CAST(ndv AS BIGINT) AS ndv, min_s, max_s
+        |FROM p ORDER BY "column"""".stripMargin)((s, d) =>
+      graft.functions.Profile.profile(
+          Tables.orders(s, d)
+            .withColumn("o_orderdate", to_date(col("o_orderdate"))),
+          Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate",
+            "o_orderpriority"))
+        .orderBy("column")),
+
+    // ---- S14: SCD type-2 history build — per-user daily attribute
+    // stream collapsed to validity intervals (run-length change
+    // detection + half-open [valid_from, valid_to) windows); one
+    // shuffle on the business key, stacked windows reuse it ----
+    Query("s14_scd2",
+      """WITH daily AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS day, MAX(event_type) AS etype
+        |  FROM events GROUP BY 1, 2),
+        |runs AS (
+        |  SELECT user_id, day, etype,
+        |         LAG(etype) OVER (PARTITION BY user_id ORDER BY day) AS prev
+        |  FROM daily),
+        |ch AS (
+        |  SELECT user_id, etype, day AS valid_from
+        |  FROM runs WHERE prev IS NULL OR prev <> etype)
+        |SELECT user_id, etype, valid_from,
+        |       LEAD(valid_from) OVER
+        |         (PARTITION BY user_id ORDER BY valid_from) AS valid_to,
+        |       (LEAD(valid_from) OVER
+        |         (PARTITION BY user_id ORDER BY valid_from) IS NULL) AS is_current
+        |FROM ch ORDER BY user_id, valid_from""".stripMargin)((s, d) => {
+      val daily = ev(s, d)
+        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
+        .agg(max("event_type").as("etype"))
+      graft.store.Changes.scd2(daily, "user_id", "day", "etype")
+        .orderBy("user_id", "valid_from")
+    }),
+
+    // ---- J8: point-in-time SCD2 lookup — the consumption side of
+    // s14: each purchase reads the dimension version valid at its
+    // event day. Because SCD2 intervals partition each key's
+    // timeline, "the interval containing d" IS "the last valid_from
+    // <= d" — an as-of join, not a range join: one sort-merge pass
+    // instead of an interval-overlap expansion. The matched
+    // valid_from then equi-joins back to the history for the
+    // payload. Null-match rows are filtered (probes precede no
+    // interval only off the history's support; pinned explicitly) ----
+    Query("j8_pit_lookup",
+      """WITH daily AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS day, MAX(event_type) AS etype
+        |  FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
+        |runs AS (
+        |  SELECT user_id, day, etype,
+        |         LAG(etype) OVER (PARTITION BY user_id ORDER BY day) AS prev
+        |  FROM daily),
+        |ch AS (
+        |  SELECT user_id, etype, day AS valid_from
+        |  FROM runs WHERE prev IS NULL OR prev <> etype),
+        |hist AS (
+        |  SELECT user_id, etype, valid_from,
+        |         LEAD(valid_from) OVER
+        |           (PARTITION BY user_id ORDER BY valid_from) AS valid_to
+        |  FROM ch),
+        |p AS (
+        |  SELECT event_id AS pid, user_id, CAST(ts AS DATE) AS d
+        |  FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL)
+        |SELECT p.pid, p.user_id, p.d, h.etype, h.valid_from
+        |FROM p JOIN hist h
+        |  ON h.user_id = p.user_id AND h.valid_from <= p.d
+        | AND (h.valid_to IS NULL OR p.d < h.valid_to)
+        |ORDER BY pid""".stripMargin)((s, d) => {
+      val e = ev(s, d).filter(col("user_id").isNotNull)
+      val daily = e
+        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
+        .agg(max("event_type").as("etype"))
+      val hist = graft.store.Changes.scd2(daily, "user_id", "day", "etype")
+      val probes = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), to_date(col("ts")).as("d"), col("event_id"))
+      val looked = graft.operators.AsOfJoin.leftAsOf(
+        probes,
+        hist.withColumn("hid",
+          datediff(col("valid_from"), lit("1970-01-01")).cast("long")),
+        "user_id", ltime = "d", lid = "event_id",
+        rtime = "valid_from", rid = "hid")
+        .filter(col("valid_from").isNotNull)
+      looked.join(hist, Seq("user_id", "valid_from"))
+        .select(col("event_id").as("pid"), col("user_id"), col("d"),
+          col("etype"), col("valid_from"))
+        .orderBy("pid")
+    }),
+
+    // ---- S15: MERGE upsert — apply a versioned changeset (updates,
+    // deletes, inserts; latest version per key wins) to a base
+    // snapshot WITHOUT shuffling the base: broadcast anti-join on
+    // touched keys + union of surviving upserts ----
+    Query("s15_merge_upsert",
+      """WITH changes AS (
+        |  SELECT c_custkey, c_name, c_nationkey,
+        |         c_acctbal + 1000.0 AS c_acctbal,
+        |         'MERGED' AS c_mktsegment, 'U' AS op, 1 AS version
+        |  FROM customer WHERE c_custkey % 7 = 0 AND c_custkey % 11 <> 0
+        |  UNION ALL
+        |  SELECT c_custkey, c_name, c_nationkey, c_acctbal + 2000.0,
+        |         'MERGED2', 'U', 2
+        |  FROM customer WHERE c_custkey % 14 = 0 AND c_custkey % 11 <> 0
+        |  UNION ALL
+        |  SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
+        |         'D', 1
+        |  FROM customer WHERE c_custkey % 11 = 0
+        |  UNION ALL
+        |  SELECT c_custkey + 100000, c_name, c_nationkey, 0.0, 'NEW', 'U', 1
+        |  FROM customer WHERE c_custkey % 13 = 0),
+        |latest AS (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY c_custkey
+        |             ORDER BY version DESC, op DESC) AS rn
+        |  FROM changes),
+        |l1 AS (SELECT * FROM latest WHERE rn = 1),
+        |merged AS (
+        |  SELECT b.c_custkey, b.c_name, b.c_nationkey, b.c_acctbal,
+        |         b.c_mktsegment
+        |  FROM customer b LEFT JOIN l1 ON b.c_custkey = l1.c_custkey
+        |  WHERE l1.c_custkey IS NULL
+        |  UNION ALL
+        |  SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        |  FROM l1 WHERE op = 'U')
+        |SELECT c_custkey, c_name, c_nationkey,
+        |       CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS acctbal,
+        |       c_mktsegment AS segment
+        |FROM merged ORDER BY c_custkey""".stripMargin)((s, d) => {
+      val base = Tables.customer(s, d)
+      val upd1 = base
+        .filter(col("c_custkey") % 7 === 0 && col("c_custkey") % 11 =!= 0)
+        .withColumn("c_acctbal", col("c_acctbal") + 1000.0)
+        .withColumn("c_mktsegment", lit("MERGED"))
+        .withColumn("op", lit("U")).withColumn("version", lit(1))
+      // a second, later version on a subset of the same keys — the
+      // latest-wins collapse is what's under test
+      val upd2 = base
+        .filter(col("c_custkey") % 14 === 0 && col("c_custkey") % 11 =!= 0)
+        .withColumn("c_acctbal", col("c_acctbal") + 2000.0)
+        .withColumn("c_mktsegment", lit("MERGED2"))
+        .withColumn("op", lit("U")).withColumn("version", lit(2))
+      val dels = base.filter(col("c_custkey") % 11 === 0)
+        .withColumn("op", lit("D")).withColumn("version", lit(1))
+      val ins = base.filter(col("c_custkey") % 13 === 0)
+        .withColumn("c_custkey", col("c_custkey") + 100000L)
+        .withColumn("c_acctbal", lit(0.0))
+        .withColumn("c_mktsegment", lit("NEW"))
+        .withColumn("op", lit("U")).withColumn("version", lit(1))
+      val changes = upd1.unionByName(upd2).unionByName(dels).unionByName(ins)
+      graft.store.Changes.mergeUpsert(base, changes, Seq("c_custkey"))
+        .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
+          col("c_acctbal").cast("decimal(18,2)").cast("double").as("acctbal"),
+          col("c_mktsegment").as("segment"))
+        .orderBy("c_custkey")
+    }),
+
+    // ---- ST1 (executed): batch-stream parity — the daily count runs
+    // THROUGH Structured Streaming (file source → incremental
+    // aggregate → memory sink, Trigger.AvailableNow) and the sink's
+    // table must hash-match the batch SQL oracle. Streaming semantics
+    // as a driver-gated fact, not a spec-only claim ----
+    Query("st1_stream_daily",
+      """SELECT CAST(ts AS DATE) AS date, COUNT(*) AS n
+        |FROM events GROUP BY 1 ORDER BY date""".stripMargin)((s, d) =>
+      graft.streaming.Streaming.availableNowDaily(s, s"$d/events.parquet")
+        .orderBy("date")),
+
+    // ---- ST3 (executed): watermarked windowed aggregate in APPEND
+    // mode — 6h tumbling windows, 1h watermark; emits only finalized
+    // windows (win_end <= max(ts) - 1h), which the batch oracle
+    // reproduces deterministically. Gates watermark finalization ----
+    Query("st3_stream_window",
+      """WITH m AS (
+        |  SELECT CAST(FLOOR(epoch(MAX(ts))) AS BIGINT) AS mx FROM events),
+        |w AS (
+        |  SELECT (CAST(FLOOR(epoch(ts)) AS BIGINT) // 21600) * 21600 AS win_start,
+        |         event_type
+        |  FROM events)
+        |SELECT win_start, event_type, COUNT(*) AS n
+        |FROM w, m
+        |WHERE win_start + 21600 <= mx - 3600
+        |GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin)((s, d) =>
+      graft.streaming.Streaming.availableNowWindowed(s, s"$d/events.parquet")
+        .select(col("win_start").cast("long").as("win_start"),
+          col("event_type"), col("n"))
+        .orderBy("win_start", "event_type")),
+
+    // ---- ST4 (executed): the STREAMING Repeat filter — St5's
+    // flatMapGroupsWithState "last kept" state op run over the events
+    // backlog and aggregated to the batch f3_repeat_seq shape, so the
+    // same recursive-CTE oracle gates the streaming state semantics
+    // (ref Filter/Repeat.pm:39-102). Null user_ids excluded (string
+    // state key; the oracle's recursive equality join can't follow
+    // null keys) ----
+    // same sequential-suppression recursion as f3_repeat_seq, minus
+    // null user_ids / event_types (the streaming state key is a
+    // string; SQL's recursive equality join can't follow null keys,
+    // and concat_ws would silently drop a null component)
+    Query("st4_stream_repeat",
+      """WITH RECURSIVE ev AS (
+        |  SELECT user_id, event_type, CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec, event_id,
+        |         ROW_NUMBER() OVER (PARTITION BY user_id, event_type
+        |           ORDER BY CAST(FLOOR(epoch(ts)) AS BIGINT), event_id) AS rn
+        |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
+        |keep AS (
+        |  SELECT user_id, event_type, sec, rn, sec AS last_kept, TRUE AS kept
+        |  FROM ev WHERE rn = 1
+        |  UNION ALL
+        |  SELECT e.user_id, e.event_type, e.sec, e.rn,
+        |         CASE WHEN e.sec - k.last_kept > 3600 THEN e.sec ELSE k.last_kept END,
+        |         e.sec - k.last_kept > 3600
+        |  FROM ev e JOIN keep k ON e.user_id = k.user_id
+        |    AND e.event_type = k.event_type AND e.rn = k.rn + 1)
+        |SELECT user_id AS id, event_type AS value, COUNT(*) AS count
+        |FROM keep WHERE kept GROUP BY 1, 2 ORDER BY id, value""".stripMargin)((s, d) =>
+      graft.streaming.Streaming.availableNowRepeat(
+        s, s"$d/events.parquet", timeoutSec = 3600L)),
+
+    // ---- ST6 (executed): STREAMING NEAR-DUP — documents stream in,
+    // get MinHash-banded row-locally (pure projection, no stream-side
+    // shuffle) and LSH-join a static corpus index; candidates
+    // exact-verify in batch. Replaying the corpus as the backlog must
+    // reproduce the batch d2 pair set EXACTLY -> same oracle ----
+    // the streaming LSH path must reproduce the batch pair set
+    // exactly (same shingles, masks, band keys, verify) — same oracle
+    Query("st6_stream_neardup",
+      s"""WITH $minhashPairsCtes
+         |SELECT a, b FROM pairs ORDER BY a, b""".stripMargin)((s, d) =>
+      graft.streaming.Streaming.availableNowNearDup(
+        s, s"$d/documents.parquet").orderBy("a", "b")),
+
+    // ---- ST5 (executed): STREAM-STREAM interval join — purchases
+    // attributed to the same user's views within the preceding two
+    // hours through the engine's two-sided join state (watermarks
+    // bound both ends), batch-aggregated to per-user match counts
+    // and gated by the batch interval-join oracle ----
+    // matched pairs only: inner stream-stream rows emit independent
+    // of watermark finalization (single-batch asserted); outer-row
+    // emission is eviction mechanics, pinned by StreamingSpec instead
+    Query("st5_stream_join",
+      """SELECT p.user_id AS id, COUNT(*) AS pairs
+        |FROM events p JOIN events v
+        |  ON v.user_id = p.user_id
+        | AND v.ts BETWEEN p.ts - INTERVAL 7200 SECOND AND p.ts
+        |WHERE p.event_type = 'purchase' AND v.event_type = 'view'
+        |  AND p.user_id IS NOT NULL
+        |GROUP BY 1 ORDER BY id""".stripMargin)((s, d) =>
+      graft.streaming.Streaming.availableNowAttribution(
+        s, s"$d/events.parquet", maxLagSec = 7200L)),
+
+    // ---- ST2 (executed): streaming dedup state × aggregation state —
+    // per-day distinct users through dropDuplicates' cross-batch
+    // exactly-once-per-key state, converging to the batch distinct ----
+    Query("st2_stream_dedup",
+      """SELECT CAST(ts AS DATE) AS date, COUNT(DISTINCT user_id) AS users
+        |FROM events WHERE user_id IS NOT NULL
+        |GROUP BY 1 ORDER BY date""".stripMargin)((s, d) =>
+      graft.streaming.Streaming.availableNowDistinctUsers(
+          s, s"$d/events.parquet")
+        .orderBy("date")),
+
+    // ---- S16: snapshot diff — the change-data-feed between two
+    // table versions: full-outer join on the key classifies every row
+    // as Insert / Update / Delete / unchanged; per-class counts plus
+    // a key checksum make the feed itself auditable. The synthetic
+    // "next" version derives from the base by pure key arithmetic
+    // (deletes key%13=3, updates key%7=0, inserts key%17=5 re-keyed),
+    // so the oracle rebuilds both versions independently ----
+    Query("s16_snapshot_diff",
+      """WITH base AS (
+        |  SELECT c_custkey AS key,
+        |         CAST(c_acctbal AS DECIMAL(18,2)) AS obal FROM customer),
+        |nxt AS (
+        |  SELECT c_custkey AS key,
+        |         CAST(CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 1000.0
+        |              ELSE c_acctbal END AS DECIMAL(18,2)) AS nbal
+        |  FROM customer WHERE c_custkey % 13 <> 3
+        |  UNION ALL
+        |  SELECT c_custkey + (SELECT MAX(c_custkey) FROM customer),
+        |         CAST(c_acctbal AS DECIMAL(18,2))
+        |  FROM customer WHERE c_custkey % 17 = 5),
+        |j AS (
+        |  SELECT COALESCE(b.key, n.key) AS key, obal, nbal
+        |  FROM base b FULL OUTER JOIN nxt n ON b.key = n.key)
+        |SELECT CASE WHEN nbal IS NULL THEN 'D'
+        |            WHEN obal IS NULL THEN 'I'
+        |            WHEN obal <> nbal THEN 'U'
+        |            ELSE '=' END AS change_type,
+        |       COUNT(*) AS n_rows, CAST(SUM(key) AS BIGINT) AS key_sum
+        |FROM j GROUP BY 1 ORDER BY change_type""".stripMargin)((s, d) => {
+      val base = Tables.customer(s, d)
+      val mod = base.filter(col("c_custkey") % 13 =!= 3)
+        .withColumn("c_acctbal",
+          when(col("c_custkey") % 7 === 0, col("c_acctbal") + lit(1000.0))
+            .otherwise(col("c_acctbal")))
+      // synthesize inserts by re-keying past the table's key space:
+      // offset = broadcast MAX(c_custkey) (1-row agg), so shifted keys
+      // cannot collide with base keys at ANY scale factor (a constant
+      // offset silently reclassifies inserts once the table outgrows it)
+      val maxKey = base.agg(max("c_custkey").as("mk"))
+      val inserts = base.filter(col("c_custkey") % 17 === 5)
+        .crossJoin(broadcast(maxKey))
+        .withColumn("c_custkey", col("c_custkey") + col("mk"))
+        .drop("mk")
+      val next = mod.unionByName(inserts)
+      val o = base.select(col("c_custkey").as("key"),
+        col("c_acctbal").cast("decimal(18,2)").as("obal"))
+      val n = next.select(col("c_custkey").as("key"),
+        col("c_acctbal").cast("decimal(18,2)").as("nbal"))
+      o.join(n, Seq("key"), "full_outer")
+        .select(col("key"),
+          when(col("nbal").isNull, "D")
+            .when(col("obal").isNull, "I")
+            .when(col("obal") =!= col("nbal"), "U")
+            .otherwise("=").as("change_type"))
+        .groupBy("change_type")
+        .agg(count(lit(1)).as("n_rows"), sum("key").as("key_sum"))
+        .orderBy("change_type")
+    }),
+
+    // ---- A21: winsorized mean — robust location per group: clamp at
+    // the exact in-group [p10, p90], then an INTEGER mean (floor to
+    // millionths before summing, so the cross-engine compare never
+    // rides double summation order). Quantiles are a tiny per-group
+    // aggregate broadcast back; one scan + one broadcast join ----
+    Query("a21_winsorized",
+      """WITH q AS (
+        |  SELECT event_type, quantile_cont(value, 0.1) AS p10,
+        |         quantile_cont(value, 0.9) AS p90
+        |  FROM events GROUP BY 1),
+        |c AS (
+        |  SELECT e.event_type,
+        |         LEAST(GREATEST(e.value, q.p10), q.p90) AS clamped
+        |  FROM events e JOIN q USING (event_type))
+        |SELECT event_type, COUNT(*) AS n,
+        |       CAST(SUM(CAST(FLOOR(clamped * 1e6) AS BIGINT))
+        |            // COUNT(*) AS BIGINT) AS wmean_x1e6
+        |FROM c GROUP BY 1 ORDER BY event_type""".stripMargin)((s, d) => {
+      val e = ev(s, d)
+      val q = e.groupBy("event_type").agg(
+        expr("percentile(value, 0.1)").as("p10"),
+        expr("percentile(value, 0.9)").as("p90"))
+      e.join(broadcast(q), Seq("event_type"))
+        .withColumn("clamped",
+          least(greatest(col("value"), col("p10")), col("p90")))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(floor(col("clamped") * 1e6).cast("long")).as("sum_x1e6"))
+        .select(col("event_type"), col("n"),
+          expr("sum_x1e6 div n").as("wmean_x1e6"))
+        .orderBy("event_type")
+    }),
+
+    // ---- O4: collation-aware ordering (case-insensitive) + limit ----
+    Query("o4_collated_order",
+      """SELECT c_custkey, c_name FROM customer
+        |ORDER BY lower(c_name), c_custkey LIMIT 20""".stripMargin)((s, d) =>
+      Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_name"))
+        .orderBy(lower(col("c_name")), col("c_custkey"))
+        .limit(20)),
+
+    // ---- O4b: ICU collation-aware ORDER — the reference's
+    // utf8_unicode_ci semantics exactly (Handler.pm:801-807), via
+    // Spark 4's UNICODE_CI collation (ICU root, secondary strength:
+    // case folds, accents order linguistically). The decoration makes
+    // the collation DISCRIMINATING: 'Édition…'=='édition…' <
+    // 'Über…'=='über…' < 'zebra…' under ICU-CI, while bytewise
+    // lower() puts 'zebra' BEFORE both accented groups — a lower()
+    // approximation (o4's) hash-mismatches here by construction ----
+    // o4b: DuckDB's ICU 'en' locale carries no tailorings over the
+    // ICU root Spark's UNICODE_CI uses, and the NOCASE. prefix folds
+    // case the way CI strength does — so over this alphabet the two
+    // engines produce the identical linguistic order (a bytewise
+    // lower() oracle would NOT match: 'zebra' < 'édition' in UTF-8)
+    Query("o4b_icu_collation",
+      """SELECT c_custkey,
+        |  CASE c_custkey % 5 WHEN 0 THEN 'Édition '
+        |    WHEN 1 THEN 'édition ' WHEN 2 THEN 'Über '
+        |    WHEN 3 THEN 'über ' ELSE 'zebra ' END || c_name AS name
+        |FROM customer
+        |ORDER BY name COLLATE NOCASE.en, c_custkey LIMIT 50""".stripMargin)((s, d) => {
+      val deco = when(pmod(col("c_custkey"), lit(5)) === 0, lit("Édition "))
+        .when(pmod(col("c_custkey"), lit(5)) === 1, lit("édition "))
+        .when(pmod(col("c_custkey"), lit(5)) === 2, lit("Über "))
+        .when(pmod(col("c_custkey"), lit(5)) === 3, lit("über "))
+        .otherwise(lit("zebra "))
+      Tables.customer(s, d)
+        .select(col("c_custkey"), concat(deco, col("c_name")).as("name"))
+        .orderBy(collate(col("name"), "UNICODE_CI"), col("c_custkey"))
+        .limit(50)
+    }),
+
+    // ---- O5: data_min result filter on aggregated counts ----
+    Query("o5_data_min",
+      s"""WITH $factCte
+         |SELECT id, CAST(SUM(count) AS BIGINT) AS count FROM fact
+         |GROUP BY id HAVING SUM(count) >= 67
+         |ORDER BY count DESC, id""".stripMargin)((s, d) =>
+      fact(s, d).groupBy("id").agg(sum("count").as("count"))
+        .filter(col("count") >= 67)
+        .orderBy(col("count").desc, col("id"))),
+
+    // ---- C1: GeoIP range-join classification ----
+    Query("c1_geo_country",
+      """SELECT CASE WHEN (event_id % 256) <= 127
+        |    THEN (['US','DE','GB','FR','JP','CN','BR','IN'])[CAST((user_id % 223) % 8 AS INTEGER) + 1]
+        |    ELSE NULL END AS country,
+        |  COUNT(*) AS cnt
+        |FROM events GROUP BY 1 ORDER BY country""".stripMargin)((s, d) => {
+      import graft.classify.Geo
+      // deterministic synthetic IP per event from user_id/event_id
+      val e = ev(s, d).withColumn("requester_id",
+        concat_ws(".",
+          (col("user_id") % 223 + 1).cast("int"),
+          (col("event_id") % 256).cast("int"),
+          lit(0), lit(1)))
+      Geo.classify(e, Geo.demoRanges(s))
+        .groupBy("country").agg(count(lit(1)).as("cnt"))
+        // NULLS LAST pins the unmatched-range row to DuckDB's default
+        // null ordering — Spark's asc default is nulls-first
+        .orderBy(col("country").asc_nulls_last)
+    }),
+
+    // ---- A5: lifetime-totals MV substitution (no-date-bounds query) ----
+    Query("a5_lifetime_mv",
+      s"""WITH $factCte
+         |SELECT value, CAST(SUM(count) AS BIGINT) AS count
+         |FROM fact GROUP BY value ORDER BY value""".stripMargin)((s, d) => {
+      val f = fact(s, d)
+      val mv = f.groupBy("id", "value").agg(sum("count").as("count"))
+      QueryCompiler.compile(
+        Context(datatype = "events", fields = Seq("value"),
+          orderBy = Some("value"), orderDesc = false),
+        catalog(s, d).copy(lifetime = Map("events" -> mv)))
+    }),
+
+    // ---- H16: volume shipping between a nation pair (TPC-H Q7
+    // shape). Supplier and customer dims each shrink to ~2/25 via the
+    // nation filter and BROADCAST into the two fact scans; the only
+    // big-big step is lineitem ⋈ orders on the order key (one shuffle
+    // each side — and AQE converts even that to broadcast once the
+    // customer filter has shrunk orders). Revenue in integer
+    // hundredth-cents ----
+    Query("h16_volume_shipping",
+      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+        |  CAST(EXTRACT(year FROM l_shipdate) AS INTEGER) AS l_year,
+        |  CAST(SUM(CAST(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS rev_c
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation sn ON s_nationkey = sn.n_nationkey
+        |JOIN nation cn ON c_nationkey = cn.n_nationkey
+        |WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        |  AND ((sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
+        |    OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1'))
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)((s, d) => {
+      val n = Tables.nation(s, d)
+        .filter(col("n_name").isin("NATION_1", "NATION_2"))
+        .select(col("n_nationkey"), col("n_name"))
+      val sup = Tables.supplier(s, d)
+        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
+        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
+      val cust = Tables.customer(s, d)
+        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_custkey"), col("n_name").as("cust_nation"))
+      val ord = Tables.orders(s, d)
+        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+        .select(col("o_orderkey"), col("cust_nation"))
+      Tables.lineitem(s, d)
+        .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1995-01-01 00:00:00")) &&
+          col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
+        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+        .join(ord, col("l_orderkey") === col("o_orderkey"))
+        .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
+          (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
+        .groupBy(col("supp_nation"), col("cust_nation"),
+          year(col("l_shipdate")).as("l_year"))
+        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .cast("decimal(18,4)").multiply(10000).cast("long")).as("rev_c"))
+        .orderBy("supp_nation", "cust_nation", "l_year")
+    }),
+
+    // ---- H18: market share (TPC-H Q8 shape) — of the revenue that
+    // AMERICA-region customers spent on STANDARD parts each order
+    // year, the permille supplied by NATION_3. The part filter
+    // broadcasts into lineitem FIRST (the most selective prune);
+    // supplier flags arrive as a broadcast; the customer-region
+    // restriction broadcasts into orders; lineitem ⋈ orders is the
+    // one shuffle. The share divides integer money permille —
+    // engine-exact, no double division ----
+    Query("h18_market_share",
+      """WITH amer AS (
+        |  SELECT c_custkey FROM customer
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name = 'AMERICA'),
+        |l AS (
+        |  SELECT CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS o_year,
+        |    CAST(CAST(l_extendedprice * (1 - l_discount)
+        |      AS DECIMAL(18,4)) * 10000 AS BIGINT) AS rc,
+        |    CASE WHEN n_name = 'NATION_3' THEN 1 ELSE 0 END AS is_target
+        |  FROM lineitem
+        |  JOIN part ON l_partkey = p_partkey
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE p_type = 'STANDARD'
+        |    AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
+        |    AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |    AND o_custkey IN (SELECT c_custkey FROM amer)),
+        |g AS (
+        |  SELECT o_year,
+        |    CAST(SUM(CASE WHEN is_target = 1 THEN rc ELSE 0 END) AS BIGINT)
+        |      AS target_c,
+        |    CAST(SUM(rc) AS BIGINT) AS total_c
+        |  FROM l GROUP BY o_year)
+        |SELECT o_year, target_c, total_c,
+        |  CASE WHEN total_c = 0 THEN CAST(0 AS BIGINT)
+        |    ELSE CAST((1000 * target_c) // total_c AS BIGINT) END AS share_pm
+        |FROM g ORDER BY o_year""".stripMargin)((s, d) => {
+      val std = Tables.part(s, d).filter(col("p_type") === "STANDARD")
+        .select("p_partkey")
+      val nat = Tables.nation(s, d)
+      val supFlag = Tables.supplier(s, d)
+        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
+        .select(col("s_suppkey"),
+          (col("n_name") === "NATION_3").cast("int").as("is_target"))
+      val amer = Tables.customer(s, d)
+        .join(broadcast(nat
+            .join(broadcast(Tables.region(s, d).filter(col("r_name") === "AMERICA")),
+              col("n_regionkey") === col("r_regionkey"))
+            .select("n_nationkey")),
+          col("c_nationkey") === col("n_nationkey"))
+        .select("c_custkey")
+      val ord = Tables.orders(s, d)
+        .filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1995-01-01 00:00:00")) &&
+          col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
+        .join(broadcast(amer), col("o_custkey") === col("c_custkey"), "left_semi")
+        .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
+      Tables.lineitem(s, d)
+        .join(broadcast(std), col("l_partkey") === col("p_partkey"))
+        .join(broadcast(supFlag), col("l_suppkey") === col("s_suppkey"))
+        .join(ord, col("l_orderkey") === col("o_orderkey"))
+        .select(col("o_year"),
+          (col("l_extendedprice") * (lit(1) - col("l_discount")))
+            .cast("decimal(18,4)").multiply(10000).cast("long").as("rc"),
+          col("is_target"))
+        .groupBy("o_year")
+        .agg(sum(when(col("is_target") === 1, col("rc")).otherwise(0L)).as("target_c"),
+          sum("rc").as("total_c"))
+        .withColumn("share_pm",
+          when(col("total_c") === 0, lit(0L))
+            .otherwise(expr("CAST((1000 * target_c) DIV total_c AS BIGINT)")))
+        .orderBy("o_year")
+    }),
+
+    // ---- H19: nation profit contribution (TPC-H Q9 shape without a
+    // partsupp table — revenue for name-matched parts by supplier
+    // nation × order year). The '%bolt%' part list broadcasts into
+    // the lineitem scan; supplier→nation is a broadcast chain;
+    // lineitem ⋈ orders (for the order year) pays the one shuffle ----
+    Query("h19_nation_profit",
+      """SELECT n_name AS nation,
+        |  CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS o_year,
+        |  CAST(SUM(CAST(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS BIGINT) AS rev_c
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%bolt%'
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)((s, d) => {
+      val bolts = Tables.part(s, d).filter(col("p_name").contains("bolt"))
+        .select("p_partkey")
+      val sup = Tables.supplier(s, d)
+        .join(broadcast(Tables.nation(s, d)),
+          col("s_nationkey") === col("n_nationkey"))
+        .select(col("s_suppkey"), col("n_name").as("nation"))
+      val ord = Tables.orders(s, d)
+        .select(col("o_orderkey"), year(col("o_orderdate")).as("o_year"))
+      Tables.lineitem(s, d)
+        .join(broadcast(bolts), col("l_partkey") === col("p_partkey"))
+        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+        .join(ord, col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("nation"), col("o_year"))
+        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .cast("decimal(18,4)").multiply(10000).cast("long")).as("rev_c"))
+        .orderBy(col("nation"), col("o_year").desc)
+    }),
+
+    // ---- H21: waiting suppliers (TPC-H Q21 essence with the columns
+    // this schema has — "late" = shipped >90 days after the order
+    // date). A supplier gets a strike for an order when the order had
+    // OTHER suppliers and the supplier was the ONLY late one. The
+    // classic form is a semi- PLUS anti- self-join on lineitem; here
+    // the lineitem ⋈ orders shuffle lands partitioned by l_orderkey
+    // and the per-order conditional aggregate REUSES that
+    // partitioning (no second exchange — both distinct counts and the
+    // lone-late witness come from one pass), then the supplier dim
+    // broadcasts into the survivors ----
+    Query("h21_waiting_supplier",
+      """WITH po AS (
+        |  SELECT l_orderkey,
+        |    COUNT(DISTINCT l_suppkey) AS n_supp,
+        |    COUNT(DISTINCT CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
+        |      THEN l_suppkey END) AS n_late,
+        |    MAX(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
+        |      THEN l_suppkey END) AS late_supp
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  GROUP BY l_orderkey)
+        |SELECT s_suppkey AS suppkey, s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+        |FROM supplier JOIN po ON s_suppkey = late_supp
+        |WHERE s_nationkey < 5 AND n_supp > 1 AND n_late = 1
+        |GROUP BY 1, 2
+        |ORDER BY numwait DESC, suppkey LIMIT 20""".stripMargin)((s, d) => {
+      val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS")
+      // two stacked aggregates instead of multi-DISTINCT in one: a
+      // (order, supplier) rollup then a per-order fold. Both group
+      // keys contain l_orderkey, so BOTH reuse the join's hash
+      // partitioning (ClusteredDistribution accepts the subset) —
+      // zero extra exchanges and no 3x Expand from distinct-agg
+      // rewriting (measured 2.6 s -> 0.9 s at sf0.1)
+      val perSupp = Tables.lineitem(s, d)
+        .join(Tables.orders(s, d).select("o_orderkey", "o_orderdate"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy("l_orderkey", "l_suppkey")
+        .agg(max(late.cast("int")).as("is_late"))
+      val perOrder = perSupp.groupBy("l_orderkey")
+        .agg(count(lit(1)).as("n_supp"),
+          sum("is_late").as("n_late"),
+          max(when(col("is_late") === 1, col("l_suppkey"))).as("late_supp"))
+        .filter(col("n_supp") > 1 && col("n_late") === 1)
+      Tables.supplier(s, d).filter(col("s_nationkey") < 5)
+        .join(perOrder, col("s_suppkey") === col("late_supp"))
+        .groupBy(col("s_suppkey").as("suppkey"), col("s_name"))
+        .agg(count(lit(1)).as("numwait"))
+        .orderBy(col("numwait").desc, col("suppkey")).limit(20)
+    }),
+
+    // ---- T17: type-token ratio — lexical-diversity quality signal
+    // (low TTR ⇒ repetitive/templated text; complements t13's
+    // dup-token permille with a distinct-type view). Pure per-row
+    // codegen'd array expressions, zero shuffle ----
+    Query("t17_ttr",
+      """WITH t AS (
+        |  SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)
+        |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
+        |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_types,
+        |  CAST((1000 * len(list_distinct(toks))) // len(toks) AS BIGINT)
+        |    AS ttr_pm
+        |FROM t ORDER BY doc_id""".stripMargin)((s, d) => {
+      val toks = Text.tokens(col("text"))
+      Tables.documents(s, d)
+        .select(col("doc_id"),
+          size(toks).cast("long").as("n_tok"),
+          size(array_distinct(toks)).cast("long").as("n_types"))
+        .withColumn("ttr_pm", expr("CAST((1000 * n_types) DIV n_tok AS BIGINT)"))
+        .orderBy("doc_id")
+    }),
+
+    // ---- T18: per-source token-budget sampling — the source-mixing
+    // step of corpus assembly: each source contributes documents in a
+    // deterministic salted-hash order until its token budget fills.
+    // Per-source window, shard-parallel (no global ordering);
+    // rerun-stable like t8/t9 (md5 order, no rand()) ----
+    Query("t18_source_budget",
+      s"""WITH t AS (
+         |  SELECT source, doc_id,
+         |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tok,
+         |    ${hex60("source || '|' || CAST(doc_id AS VARCHAR)")} AS h
+         |  FROM documents),
+         |c AS (
+         |  SELECT source, doc_id, n_tok,
+         |    SUM(n_tok) OVER (PARTITION BY source ORDER BY h, doc_id
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         |  FROM t)
+         |SELECT source, doc_id, n_tok, CAST(cum AS BIGINT) AS cum
+         |FROM c WHERE cum <= 600 ORDER BY source, doc_id""".stripMargin)((s, d) => {
+      val docs = Tables.documents(s, d)
+        .select(col("source"), col("doc_id"),
+          Text.tokenCount(col("text")).cast("long").as("n_tok"),
+          Text.hash60(concat(col("source"), lit("|"),
+            col("doc_id").cast("string"))).as("h"))
+      val w = Window.partitionBy("source").orderBy("h", "doc_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+      docs.withColumn("cum", sum("n_tok").over(w))
+        .filter(col("cum") <= 600)
+        .select(col("source"), col("doc_id"), col("n_tok"), col("cum"))
+        .orderBy("source", "doc_id")
+    }),
+
+    // ---- T28: temperature-weighted source mixing — the multinomial
+    // data-mix op from LLM training recipes: sample each source
+    // proportionally to n_s^alpha (alpha = 0.5 here), flattening the
+    // head so small sources keep representation. Weights are
+    // integer-exact (floor(sqrt(n)) — IEEE sqrt is correctly rounded
+    // in both engines), quotas integer division against a broadcast
+    // 1-row total, and the per-source pick is the deterministic
+    // hash-rank prefix (no rand(): rerun-stable, engine-exact). The
+    // per-source row_number spreads across sources at scale; the
+    // corpus never collects ----
+    Query("t28_temperature_mix",
+      s"""WITH t AS (
+         |  SELECT source, doc_id,
+         |    CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tok,
+         |    ${hex60("source || '|' || CAST(doc_id AS VARCHAR)")} AS h
+         |  FROM documents),
+         |c AS (SELECT source, COUNT(*) AS n_docs,
+         |        CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT) AS w FROM t GROUP BY 1),
+         |tw AS (SELECT CAST(SUM(w) AS BIGINT) AS tot_w FROM c),
+         |q AS (SELECT source, n_docs, (200 * w) // tot_w AS target FROM c, tw),
+         |r AS (SELECT t.source, t.n_tok, q.n_docs, q.target,
+         |        ROW_NUMBER() OVER (PARTITION BY t.source
+         |          ORDER BY h, doc_id) AS rk
+         |      FROM t JOIN q USING (source))
+         |SELECT source, MAX(n_docs) AS n_docs, MAX(target) AS target,
+         |       COUNT(*) AS n_kept, CAST(SUM(n_tok) AS BIGINT) AS tok_kept
+         |FROM r WHERE rk <= target GROUP BY 1 ORDER BY source""".stripMargin)((s, d) => {
+      val docs = Tables.documents(s, d).select(col("source"), col("doc_id"),
+        Text.tokenCount(col("text")).cast("long").as("n_tok"),
+        Text.hash60(concat(col("source"), lit("|"),
+          col("doc_id").cast("string"))).as("h"))
+      val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
+        .withColumn("w", floor(sqrt(col("n_docs"))).cast("long"))
+      val tot = counts.agg(sum("w").as("tot_w"))
+      val quota = counts.crossJoin(broadcast(tot))
+        .withColumn("target", expr("(200 * w) div tot_w"))
+      val wnd = Window.partitionBy("source").orderBy("h", "doc_id")
+      docs.join(broadcast(quota.select("source", "target", "n_docs")), Seq("source"))
+        .withColumn("rk", row_number().over(wnd))
+        .filter(col("rk") <= col("target"))
+        .groupBy("source")
+        .agg(max("n_docs").as("n_docs"), max("target").as("target"),
+          count(lit(1)).as("n_kept"), sum("n_tok").as("tok_kept"))
+        .orderBy("source")
+    }),
+
+    // ---- T29: dedup-aware corpus accounting — the dataset-card
+    // numbers every training corpus publishes: per language, raw vs
+    // deduplicated doc and token mass and the duplicate-token share.
+    // Shape: ONE shuffle on (lang, digest) — the md5 digest is the
+    // dedup key (d1's convention), so full text never crosses the
+    // wire and the token count rides the digest row; the per-lang
+    // regroup is over the already-tiny unique-key frame. Integer
+    // percentage (DIV) keeps the row engine-exact ----
+    // d1's md5(lower(text)) dedup key; MIN(n) is deterministic (one
+    // key => one token count); integer percentage via //
+    Query("t29_dedup_accounting",
+      """WITH per AS (
+        |  SELECT lang, md5(lower(text)) AS key, COUNT(*) AS copies,
+        |         MIN(len(string_split(lower(text), ' '))) AS n
+        |  FROM documents GROUP BY 1, 2)
+        |SELECT lang,
+        |  CAST(SUM(copies) AS BIGINT) AS docs,
+        |  CAST(COUNT(*) AS BIGINT) AS uniq_docs,
+        |  CAST(SUM(n * copies) AS BIGINT) AS tokens,
+        |  CAST(SUM(n) AS BIGINT) AS uniq_tokens,
+        |  CAST(((SUM(n * copies) - SUM(n)) * 100) // SUM(n * copies)
+        |    AS BIGINT) AS dup_token_pct
+        |FROM per GROUP BY lang ORDER BY lang""".stripMargin)((s, d) => {
+      val t = Tables.documents(s, d).select(col("lang"),
+        md5(lower(col("text"))).as("key"),
+        Text.tokenCount(col("text")).cast("long").as("n"))
+      val per = t.groupBy("lang", "key")
+        .agg(count(lit(1)).as("copies"), min("n").as("n"))
+      per.groupBy("lang").agg(
+          sum("copies").as("docs"),
+          count(lit(1)).as("uniq_docs"),
+          sum(col("n") * col("copies")).as("tokens"),
+          sum("n").as("uniq_tokens"))
+        // n >= 1 for every doc (split('') = ['']), so tokens >= docs >= 1
+        .withColumn("dup_token_pct",
+          expr("((tokens - uniq_tokens) * 100) div tokens"))
+        .orderBy("lang")
+    }),
+
+    // ---- T30: train/val split leakage — near-duplicate pairs that
+    // STRADDLE the t8 split boundary (a val doc whose near-dup sits
+    // in train is evaluation leakage; the check every pipeline must
+    // run after splitting). Composes d2's banded-LSH pair set with
+    // t8's deterministic salted-hash split: the pair list is orders
+    // of magnitude smaller than the corpus, so it joins the narrow
+    // (id, split) projection on two ordinary hash joins — the corpus
+    // text never moves and nothing corpus-sized is broadcast ----
+    // d2's pair CTEs + t8's salted-hash split; a pair leaks when its
+    // endpoints land in different splits
+    Query("t30_split_leakage",
+      s"""WITH $minhashPairsCtes,
+         |sp AS (
+         |  SELECT doc_id,
+         |    CASE WHEN ${hex60("CAST(doc_id AS VARCHAR) || '|split-v1'")} % 100 < 90
+         |      THEN 'train' ELSE 'val' END AS split
+         |  FROM documents)
+         |SELECT p.a, p.b, sa.split AS split_a, sb.split AS split_b
+         |FROM pairs p
+         |JOIN sp sa ON sa.doc_id = p.a
+         |JOIN sp sb ON sb.doc_id = p.b
+         |WHERE sa.split <> sb.split
+         |ORDER BY a, b""".stripMargin)((s, d) => {
+      val docs = Tables.documents(s, d)
+      val pairs = Dedup.minhashNearDup(docs, num = 1, den = 2)
+      val sp = docs.select(col("doc_id"),
+        Text.splitAssign(col("doc_id"), "split-v1", 90, Some(s)).as("split"))
+      pairs
+        .join(sp.select(col("doc_id").as("a"), col("split").as("split_a")), "a")
+        .join(sp.select(col("doc_id").as("b"), col("split").as("split_b")), "b")
+        .filter(col("split_a") =!= col("split_b"))
+        .select("a", "b", "split_a", "split_b")
+        .orderBy("a", "b")
+    }),
+
+    // ---- V7: hybrid retrieval with reciprocal-rank fusion — the
+    // standard way training-data pipelines combine lexical and
+    // embedding retrieval. Both rankers end in TakeOrderedAndProject
+    // (top-k commutes before any join; the corpus never shuffles) and
+    // the RRF-60 scores are integer division — engine-exact ----
+    Query("v7_rrf_fusion",
+      """WITH mm AS (
+        |  SELECT vec_id, embedding,
+        |    CAST(list_min(embedding) AS DOUBLE) AS mn,
+        |    CAST(list_max(embedding) AS DOUBLE) AS mx
+        |  FROM embeddings),
+        |codes AS (
+        |  SELECT vec_id,
+        |    CASE WHEN mx = mn
+        |      THEN list_transform(embedding, x -> CAST(0 AS BIGINT))
+        |      ELSE list_transform(embedding, x ->
+        |        CAST(FLOOR(((CAST(x AS DOUBLE) - mn) * 255.0) / (mx - mn))
+        |          AS BIGINT))
+        |    END AS codes
+        |  FROM mm),
+        |q AS (SELECT codes AS q_codes FROM codes WHERE vec_id = 0),
+        |dots AS (
+        |  SELECT vec_id,
+        |    CAST(list_sum(list_transform(range(1, len(codes) + 1),
+        |      i -> codes[i] * q_codes[i])) AS BIGINT) AS dot
+        |  FROM codes, q WHERE vec_id <> 0),
+        |vec AS (
+        |  SELECT vec_id,
+        |    ROW_NUMBER() OVER (ORDER BY dot DESC, vec_id) AS vec_rank
+        |  FROM dots ORDER BY dot DESC, vec_id LIMIT 50),
+        |lex0 AS (
+        |  SELECT doc_id, len(list_filter(string_split(lower(text), ' '),
+        |    t -> t IN ('spark', 'vector'))) AS lex_score
+        |  FROM documents),
+        |lex AS (
+        |  SELECT doc_id,
+        |    ROW_NUMBER() OVER (ORDER BY lex_score DESC, doc_id) AS lex_rank
+        |  FROM lex0 WHERE lex_score > 0
+        |  ORDER BY lex_score DESC, doc_id LIMIT 50)
+        |SELECT COALESCE(doc_id, vec_id) AS doc_id,
+        |  CAST(COALESCE(100000 // (60 + lex_rank), 0)
+        |     + COALESCE(100000 // (60 + vec_rank), 0) AS BIGINT) AS rrf,
+        |  CAST(COALESCE(lex_rank, 0) AS INTEGER) AS lex_rank,
+        |  CAST(COALESCE(vec_rank, 0) AS INTEGER) AS vec_rank
+        |FROM lex FULL OUTER JOIN vec ON doc_id = vec_id
+        |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin)((s, d) =>
+      Similarity.hybridRrf(Tables.documents(s, d), Tables.embeddings(s, d),
+        queryTerms = Seq("spark", "vector"), queryVecId = 0L)),
+
+    // ---- O11: weighted systematic sampling — downsample so picks
+    // land proportionally to a weight (customer balance), with NO
+    // rand(): a row is picked when its weight interval [cum-w, cum)
+    // crosses a multiple of the stride. The inclusive prefix sum
+    // comes from [[graft.operators.GlobalRank.withPrefixSum]] (range
+    // exchange + per-partition offsets — every row-level stage
+    // parallel, unlike the naive one-task global window). Integer DIV
+    // so the crossing test is engine-exact; rerun-stable ----
+    Query("o11_weighted_sample",
+      """WITH c AS (
+        |  SELECT c_custkey,
+        |    GREATEST(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT), 0)
+        |      + 1 AS w
+        |  FROM customer),
+        |p AS (
+        |  SELECT c_custkey, w,
+        |    SUM(w) OVER (ORDER BY c_custkey
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM c)
+        |SELECT c_custkey, CAST(w AS BIGINT) AS w, CAST(cum AS BIGINT) AS cum
+        |FROM p WHERE cum // 5000000 > (cum - w) // 5000000
+        |ORDER BY c_custkey""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d)
+        .select(col("c_custkey"),
+          (greatest((col("c_acctbal").cast("decimal(18,2)") * 100)
+            .cast("long"), lit(0L)) + 1L).as("w"))
+      graft.operators.GlobalRank
+        .withPrefixSum(c, col("w"), Seq(col("c_custkey")), out = "cum")
+        .filter(expr("cum DIV 5000000 > (cum - w) DIV 5000000"))
+        .select(col("c_custkey"), col("w"), col("cum"))
+        .orderBy("c_custkey")
+    }),
+
+    // ---- A17: GROUPING SETS — the explicit-sets sibling of A11's
+    // ROLLUP and A15's CUBE (exactly the one-dimension marginals,
+    // no grand total, no cross terms). One shuffle; Spark expands
+    // sets map-side ----
+    Query("a17_grouping_sets",
+      s"""WITH $factCte,
+         |y AS (SELECT CAST(year(date) AS INTEGER) AS y, value, count FROM fact)
+         |SELECT COALESCE(y, -1) AS y, COALESCE(value, '_ALL_') AS value,
+         |       CAST(SUM(count) AS BIGINT) AS count
+         |FROM y GROUP BY GROUPING SETS ((y), (value))
+         |ORDER BY y, value""".stripMargin)((s, d) => {
+      val f = fact(s, d).withColumn("y", year(col("date")))
+      f.groupingSets(Seq(Seq(col("y")), Seq(col("value"))),
+          col("y"), col("value"))
+        .agg(sum("count").as("count"))
+        .select(coalesce(col("y"), lit(-1)).as("y"),
+          coalesce(col("value"), lit("_ALL_")).as("value"), col("count"))
+        .orderBy("y", "value")
+    }),
+
+    // ---- A18: per-group approx quantiles gated against exact —
+    // the a14 pattern for percentile sketches: emit the exact
+    // per-group p50/p90 (hash-compared) plus a deterministic
+    // within-5% flag for the approx_percentile sketch (asserted
+    // literally by the oracle). Integer money units; the exact p90
+    // is rank-based (no cross-engine float interpolation) ----
+    Query("a18_approx_quantiles",
+      """WITH base AS (
+        |  SELECT event_type,
+        |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS v
+        |  FROM events),
+        |med AS (
+        |  SELECT event_type, CAST(2 * quantile_cont(v, 0.5) AS BIGINT) AS p50_x2
+        |  FROM base GROUP BY event_type),
+        |r AS (
+        |  SELECT event_type, v,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY v) AS rn,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM base),
+        |p AS (
+        |  SELECT event_type, MAX(v) AS p90 FROM r
+        |  WHERE rn = CAST(FLOOR(0.9 * (n - 1)) AS BIGINT) + 1
+        |  GROUP BY event_type)
+        |SELECT event_type, p50_x2, p90, CAST(1 AS BIGINT) AS approx_ok
+        |FROM med JOIN p USING (event_type) ORDER BY event_type""".stripMargin)((s, d) => {
+      val base = ev(s, d).select(col("event_type"),
+        (col("value").cast("decimal(18,4)") * 10000).cast("long").as("v"))
+      val med = base.groupBy("event_type")
+        .agg((percentile(col("v"), lit(0.5)) * 2).cast("long").as("p50_x2"))
+      val wr = Window.partitionBy("event_type").orderBy("v")
+      val p90 = base.withColumn("rn", row_number().over(wr))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
+        .filter(col("rn") === floor(lit(0.9) * (col("n") - 1)).cast("long") + 1)
+        .groupBy("event_type").agg(max("v").as("p90"))
+      val approx = base.groupBy("event_type")
+        .agg(percentile_approx(col("v"), lit(0.5), lit(10000)).as("a50"),
+          percentile_approx(col("v"), lit(0.9), lit(10000)).as("a90"))
+      med.join(p90, "event_type").join(approx, "event_type")
+        .select(col("event_type"), col("p50_x2"), col("p90"),
+          when(col("p50_x2") === 0 || col("p90") === 0, lit(1L))
+            .otherwise(
+              (abs(col("a50") * 2 - col("p50_x2")) * 1000L <=
+                 lit(50L) * abs(col("p50_x2")) &&
+               abs(col("a90") - col("p90")) * 1000L <=
+                 lit(50L) * abs(col("p90"))).cast("long"))
+            .as("approx_ok"))
+        .orderBy("event_type")
+    }),
+
+    // ---- C13: semi-structured JSON extraction — the event `props`
+    // payload parsed ONCE per row with a TYPED schema (`from_json`
+    // is a codegen'd expression, no UDF and no schema inference
+    // pass), then bucketed and aggregated. The 100 TB shape for
+    // JSON event payloads: only the `props` column crosses the scan,
+    // the parsed struct never materializes beyond the projection ----
+    Query("c13_json_props",
+      """WITH j AS (
+        |  SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k, event_type
+        |  FROM events)
+        |SELECT CAST(k // 10 AS BIGINT) AS k_decade, event_type,
+        |  COUNT(*) AS cnt, CAST(SUM(k) AS BIGINT) AS k_sum
+        |FROM j GROUP BY 1, 2 ORDER BY k_decade, event_type""".stripMargin)((s, d) =>
+      ev(s, d).select(
+          from_json(col("props"),
+            org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
+            .getField("k").as("k"),
+          col("event_type"))
+        .groupBy(expr("CAST(k DIV 10 AS BIGINT)").as("k_decade"),
+          col("event_type"))
+        .agg(count(lit(1)).as("cnt"), sum("k").as("k_sum"))
+        .orderBy("k_decade", "event_type")),
+
+    // ---- Sets: ancestor closure (nation -> region hierarchy) ----
+    Query("set_closure",
+      """WITH asn AS (
+        |  SELECT n_name AS set_value, c_custkey AS id
+        |  FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |  UNION
+        |  SELECT r_name AS set_value, c_custkey AS id
+        |  FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |                JOIN region ON n_regionkey = r_regionkey)
+        |SELECT set_value, COUNT(*) AS cnt FROM asn
+        |GROUP BY 1 ORDER BY set_value""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d); val n = Tables.nation(s, d)
+      val r = Tables.region(s, d)
+      val asn = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+        .select(n("n_name").as("set_value"), c("c_custkey").as("id"))
+      val tree = n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+        .select(n("n_name").as("child"), r("r_name").as("parent"))
+      graft.sets.Sets.ancestorClosure(asn, tree)
+        .groupBy("set_value").agg(count(lit(1)).as("cnt"))
+        .orderBy("set_value")
+    }),
+
+    // ---- Sets: closure with non-depositable-ancestor whitelist (ref
+    // Sets.pm:94-97,471-479): regions model non-depositable parent
+    // subjects — they hold stats only when whitelisted; nations
+    // (leaves) are depositable and always survive ----
+    Query("set_closure_whitelist",
+      """WITH asn AS (
+        |  SELECT n_name AS set_value, c_custkey AS id
+        |  FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |  UNION
+        |  SELECT r_name AS set_value, c_custkey AS id
+        |  FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |                JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name IN ('ASIA', 'EUROPE'))
+        |SELECT set_value, COUNT(*) AS cnt FROM asn
+        |GROUP BY 1 ORDER BY set_value""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d); val n = Tables.nation(s, d)
+      val r = Tables.region(s, d)
+      val asn = c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+        .select(n("n_name").as("set_value"), c("c_custkey").as("id"))
+      val tree = n.join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+        .select(n("n_name").as("child"), r("r_name").as("parent"))
+      val dep = n.select(n("n_name").as("subjectid"), lit(true).as("depositable"))
+        .unionByName(r.select(r("r_name").as("subjectid"), lit(false).as("depositable")))
+      graft.sets.Sets.ancestorClosure(asn, tree,
+          depositable = Some(dep), whitelist = Set("ASIA", "EUROPE"))
+        .groupBy("set_value").agg(count(lit(1)).as("cnt"))
+        .orderBy("set_value")
+    }),
+
+    // ---- Compound creators set (ref Sets.pm:100-132,378-392):
+    // reference-shaped array<struct{name:{family,given}, id}> metadata
+    // synthesized deterministically from customer columns — author 1
+    // carries an id (key = lc(id), display = NameCased "family,
+    // given", comma dropped when given is empty), author 2 has no id
+    // and is dropped per the reference's use_ids rule. One explode +
+    // codegen projection; dim-sized output, no joins ----
+    Query("set_compound",
+      """WITH authors AS (
+        |  SELECT DISTINCT
+        |    lower('A' || CAST(c_custkey % 50 AS VARCHAR)) AS set_value,
+        |    c_custkey AS id,
+        |    'Cust' || CAST(c_custkey % 50 AS VARCHAR) ||
+        |      CASE WHEN c_custkey % 7 = 0 THEN ''
+        |           -- NameCase's Mac-prefix rule recapitalizes the stem
+        |           -- (machinery -> MacHinery), as the reference's nc() does
+        |           WHEN c_mktsegment = 'MACHINERY' THEN ', MacHinery'
+        |           ELSE ', ' || upper(substr(lower(c_mktsegment), 1, 1))
+        |                     || substr(lower(c_mktsegment), 2) END AS rendered
+        |  FROM customer)
+        |SELECT set_value, CAST(COUNT(*) AS BIGINT) AS n_items,
+        |       MAX(rendered) AS rendered
+        |FROM authors GROUP BY 1 ORDER BY set_value""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d)
+      val authorKey = (col("c_custkey") % 50).cast("string")
+      val meta = c.select(col("c_custkey").as("id"),
+        array(
+          struct(
+            struct(
+              concat(lit("cust"), authorKey).as("family"),
+              when(col("c_custkey") % 7 === 0, lit(""))
+                .otherwise(lower(col("c_mktsegment"))).as("given")).as("name"),
+            concat(lit("A"), authorKey).as("id")),
+          struct(
+            struct(lit("smith").as("family"), lit("anon").as("given")).as("name"),
+            lit(null).cast("string").as("id"))).as("creators"))
+      graft.sets.Sets.materializeCompound(meta,
+          graft.sets.Sets.CompoundSetDef("authors", "creators"))
+        .groupBy("set_value")
+        .agg(count(lit(1)).as("n_items"), max("rendered").as("rendered"))
+        .orderBy("set_value")
+    }),
+
+    // ---- Anonymized set WITH a blacklist (ref Sets.pm:341-360
+    // generate_key; blacklist applied in get_set_values at
+    // Sets.pm:303-307). INTENTIONAL DEVIATION, not parity: the
+    // reference tests the blacklist against the RAW value before
+    // normalise_set_values lowercases it — and for compound sets the
+    // raw value is a hashref, so the reference blacklist can never
+    // match a compound member at all. Graft instead matches against
+    // the lowercased extracted KEY, which (a) makes blacklisting
+    // usable for compound sets and (b) is case-insensitive where the
+    // reference is case-sensitive. Ordering parity is kept where it
+    // matters: the check runs PRE-anonymization — filtering after
+    // would compare blacklist entries against md5 digests, match
+    // nothing, and silently disable the blacklist. Keys a7/a13 must
+    // be gone and every surviving key a digest; an order regression
+    // shows up as two extra rows + hash mismatch ----
+    Query("set_anon_blacklist",
+      """WITH keys AS (
+        |  SELECT DISTINCT lower('A' || CAST(c_custkey % 50 AS VARCHAR)) AS k,
+        |         c_custkey AS id
+        |  FROM customer)
+        |SELECT md5(k) AS set_value, CAST(COUNT(*) AS BIGINT) AS n_items
+        |FROM keys WHERE k NOT IN ('a7', 'a13')
+        |GROUP BY 1 ORDER BY set_value""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d)
+      val k = (col("c_custkey") % 50).cast("string")
+      val meta = c.select(col("c_custkey").as("id"),
+        array(struct(
+          struct(concat(lit("cust"), k).as("family"),
+            lower(col("c_mktsegment")).as("given")).as("name"),
+          concat(lit("A"), k).as("id"))).as("creators"))
+      graft.sets.Sets.materializeCompound(meta,
+          graft.sets.Sets.CompoundSetDef("authors_anon", "creators",
+            anonymize = true, blacklist = Set("a7", "a13")))
+        .groupBy("set_value").agg(count(lit(1)).as("n_items"))
+        .orderBy("set_value")
+    }),
+
+    // ---- Rendering-variant dedup under a fact join (ref
+    // Handler.pm:490 value grouping; Sets.pm:378-392 key
+    // extraction): each item carries the SAME author key twice —
+    // once with a given name ("Cust3, Machinery") and once bare
+    // ("Cust3"), under ids "A3"/"a3" that lowercase to one key. The
+    // dim must keep ONE row per (set_value, id); a distinct over
+    // (v, id, rendered) keeps both rendering variants and the fact
+    // join then double-counts every order of that customer ----
+    Query("set_dedup_render",
+      """WITH dim AS (
+        |  SELECT DISTINCT
+        |    lower('A' || CAST(c_custkey % 50 AS VARCHAR)) AS set_value,
+        |    c_custkey AS id,
+        |    'Cust' || CAST(c_custkey % 50 AS VARCHAR) || ', ' ||
+        |      CASE WHEN c_mktsegment = 'MACHINERY' THEN 'MacHinery'
+        |           ELSE upper(substr(lower(c_mktsegment), 1, 1))
+        |                || substr(lower(c_mktsegment), 2) END AS rendered
+        |  FROM customer)
+        |SELECT set_value, COUNT(*) AS n_orders,
+        |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
+        |       MAX(rendered) AS rendered
+        |FROM orders JOIN dim ON o_custkey = id
+        |GROUP BY 1 ORDER BY set_value""".stripMargin)((s, d) => {
+      val c = Tables.customer(s, d); val o = Tables.orders(s, d)
+      val k = (col("c_custkey") % 50).cast("string")
+      val meta = c.select(col("c_custkey").as("id"),
+        array(
+          struct(
+            struct(concat(lit("cust"), k).as("family"),
+              lower(col("c_mktsegment")).as("given")).as("name"),
+            concat(lit("A"), k).as("id")),
+          struct(
+            struct(concat(lit("cust"), k).as("family"),
+              lit("").as("given")).as("name"),
+            concat(lit("a"), k).as("id"))).as("creators"))
+      val dim = graft.sets.Sets.materializeCompound(meta,
+        graft.sets.Sets.CompoundSetDef("authors", "creators"))
+      o.join(broadcast(dim), o("o_custkey") === dim("id"))
+        .groupBy("set_value")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double").as("total"),
+          max("rendered").as("rendered"))
+        .orderBy("set_value")
+    }),
+  )
+}

@@ -172,22 +172,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact token-set Jaccard join for a pair set: keeps pairs with
-    * jaccard >= num/den using integer cross-multiplication
-    * (den * inter >= num * union) — no float comparison anywhere. */
-  def verifyJaccard(pairs: DataFrame, docs: DataFrame, num: Int, den: Int,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val sets = docs.select(col(idCol).as("id"),
-      Text.tokenSet(col(textCol)).as("toks"))
-    pairs
-      .join(sets.select(col("id").as("a"), col("toks").as("ta")), "a")
-      .join(sets.select(col("id").as("b"), col("toks").as("tb")), "b")
-      .withColumn("inter", size(array_intersect(col("ta"), col("tb"))))
-      .withColumn("uni", size(col("ta")) + size(col("tb")) - col("inter"))
-      .filter(col("inter") * den >= col("uni") * num)
-      .select(col("a"), col("b"))
-  }
-
   /** Exact Jaccard verify on a feature table (id, h): intersections
     * are computed ONLY for the candidate pairs, via two joins and a
     * count — never materializing per-doc arrays. Integer threshold. */

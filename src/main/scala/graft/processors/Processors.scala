@@ -34,14 +34,6 @@ object Processors {
         col(valueCol).as("value"))
       .agg(count(lit(1)).as("count"))
 
-  /** F5 download/view split (ref `Access.pm:85`:
-    * `is_download = is_set(referent_docid)`). */
-  def downloadsViews(access: DataFrame): DataFrame =
-    dailyFact(
-      access.withColumn("value",
-        when(col("referent_docid").isNotNull, "downloads").otherwise("views")),
-      tsCol = "datestamp", idCol = "referent_id", valueCol = "value")
-
   /** S6 value truncation (ref `Handler.pm:682-690`: >767 bytes → 191
     * chars, the MySQL utf8mb4 index limit). */
   def truncateValue(df: DataFrame, col_ : String = "value"): DataFrame =
