@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder every main uses, so every tool plans and
-  * times the same thing (the reference runs every entry point from one
-  * config file, `cfg.d/z_irstats2.pl`).
+/** The one session factory every main and spec uses, so every tool
+  * plans and times the same thing (the reference runs every entry
+  * point from one config file, `cfg.d/z_irstats2.pl`).
   *
   * Cores come from `SPARK_GRAFT_CPUS`, else the host's processor
   * count; the master from `SPARK_GRAFT_MASTER`, else `local[cores]`.
   * The SQL confs are the ones the benchmark pins:
-  *  - GraftExtensions for the native expressions;
+  *  - GraftExtensions for the native expressions. They are part of
+  *    the engine, not an option: the library calls `hash60`,
+  *    `contains_any`, `cosine_sim`, `hyperplane_bucket` and
+  *    `nfc_normalize` directly, so a session built without them fails
+  *    at analysis with `UNRESOLVED_ROUTINE`;
   *  - AQE on, with shuffles STARTING at 8x cores so AQE coalesces them
   *    down to the advisory size. Coalescing is free, but AQE can never
   *    SPLIT an oversized non-skew-join partition: with a flat

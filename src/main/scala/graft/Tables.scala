@@ -13,21 +13,12 @@ object Tables {
   /** Some driver-generated parquet snapshots store event timestamps as
     * TIMESTAMP(NANOS), which Spark's vectorized parquet reader rejects;
     * newer snapshots store TIMESTAMP(MICROS), which reads natively.
-    * Handle both: enable nanosAsLong (harmless for micros files), then
-    * convert any column that actually materialized as a long back to a
-    * micros timestamp — second/day granularity is all the engine needs. */
-  /** Session-setup conf for driver parquet snapshots that carry
-    * TIMESTAMP(NANOS): idempotent (checks before setting), so library
-    * code can ensure it without mutating an already-configured
-    * session. Mains also set it declaratively at builder time. */
-  def ensureNanosCompat(s: SparkSession): Unit =
-    if (s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
+    * Handle both: [[GraftSession]] sets nanosAsLong (harmless for
+    * micros files), and this converts any column that actually
+    * materialized as a long back to a micros timestamp — second/day
+    * granularity is all the engine needs. */
   private def loadNanos(s: SparkSession, dir: String, name: String,
       tsCols: Seq[String]): DataFrame = {
-    ensureNanosCompat(s)
     val df0 = load(s, dir, name)
     tsCols.foldLeft(df0) { (df, c) =>
       df.schema(c).dataType match {

@@ -188,7 +188,7 @@ object Curation {
       materialize: Materialize = Materialize.LocalCkpt): DataFrame = {
     val cleanDocs = gated.filter(col("clean") === 1)
       .withColumn("h", Text.hash60(concat(col("source"), lit("|"),
-        col("doc_id").cast("string")), Some(gated.sparkSession)))
+        col("doc_id").cast("string"))))
     val counts = cleanDocs.groupBy("source").agg(count(lit(1)).as("n_clean"))
       .withColumn("w", floor(sqrt(col("n_clean"))).cast("long"))
     val tot = counts.agg(sum("w").as("tot_w"))

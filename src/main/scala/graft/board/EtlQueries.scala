@@ -72,11 +72,8 @@ private[graft] object EtlQueries {
         |  COUNT(*) AS cnt
         |FROM events WHERE event_type <> 'error'
         |GROUP BY 1 ORDER BY browser""".stripMargin)((s, d) => {
-      val e = ev(s, d).withColumn("ua", syntheticUa)
-      // thread the frame's own session for the native-path probe
-      // (Robots.scala: the mixed-session 'undefined function' trap)
-      e.filter(!graft.filters.Robots.isRobotUa(col("ua"),
-          graft.filters.Robots.defaultUaPatterns, Some(e.sparkSession)))
+      ev(s, d).withColumn("ua", syntheticUa)
+        .filter(!graft.filters.Robots.isRobotUa(col("ua")))
         .select(graft.classify.Classify.browser(col("ua")).as("browser"))
         .groupBy("browser").agg(count(lit(1)).as("cnt"))
         .orderBy("browser")
@@ -2842,7 +2839,7 @@ private[graft] object EtlQueries {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.minhashNearDup(docs, num = 1, den = 2)
       val sp = docs.select(col("doc_id"),
-        Text.splitAssign(col("doc_id"), "split-v1", 90, Some(s)).as("split"))
+        Text.splitAssign(col("doc_id"), "split-v1", 90).as("split"))
       pairs
         .join(sp.select(col("doc_id").as("a"), col("split").as("split_a")), "a")
         .join(sp.select(col("doc_id").as("b"), col("split").as("split_b")), "b")

@@ -834,7 +834,7 @@ private[graft] object PipelineQueries {
          |FROM documents GROUP BY 1, 2 ORDER BY lang, split""".stripMargin)((s, d) =>
       Tables.documents(s, d)
         .withColumn("split",
-          Text.splitAssign(col("doc_id"), "split-v1", 90, Some(s)))
+          Text.splitAssign(col("doc_id"), "split-v1", 90))
         .groupBy("lang", "split").agg(count(lit(1)).as("cnt"))
         .orderBy("lang", "split")),
 
@@ -850,7 +850,7 @@ private[graft] object PipelineQueries {
          |SELECT lang, rn, doc_id FROM r WHERE rn <= 20
          |ORDER BY lang, rn""".stripMargin)((s, d) => {
       val w = Window.partitionBy("lang")
-        .orderBy(Text.sampleRank(col("doc_id"), "sample-v1", Some(s)), col("doc_id"))
+        .orderBy(Text.sampleRank(col("doc_id"), "sample-v1"), col("doc_id"))
       Tables.documents(s, d)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 20)
@@ -1602,7 +1602,7 @@ private[graft] object PipelineQueries {
       val docs = Tables.documents(s, d)
       val decomposed = concat(col("text"),
         lit(" cafe\u0301 u\u0308ber"))  // combining acute / diaeresis
-      val norm = Text.nfcNormalize(docs, decomposed)
+      val norm = Text.nfcNormalize(decomposed)
       docs.select(col("doc_id"),
           length(decomposed).as("len_raw"), length(norm).as("len_nfc"),
           (norm =!= decomposed).as("changed"))

@@ -131,7 +131,7 @@ object Dedup {
     minhashSignaturesFrom(
       docs.select(col(idCol).as("id"),
         explode(Text.tokenSet(col(textCol))).as("tok"))
-        .select(col("id"), Text.hash60(col("tok"), Some(docs.sparkSession)).as("h")), k)
+        .select(col("id"), Text.hash60(col("tok")).as("h")), k)
 
   /** LSH band keys from the wide signature: band key = md5 of the
     * comma-joined band minima. Emits (id, band, bkey). */
@@ -226,7 +226,7 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     val toks = docs.select(col(idCol).as("id"),
       explode(Text.tokenSet(col(textCol))).as("tok"))
-      .withColumn("h", Text.hash60(col("tok"), Some(docs.sparkSession)))
+      .withColumn("h", Text.hash60(col("tok")))
     val bitSums = (0 until 60).map(j =>
       sum(shiftright(col("h"), j).bitwiseAND(1)).as(s"b$j"))
     val aggCols = count(lit(1)).as("n") +: bitSums
@@ -322,7 +322,7 @@ object Dedup {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
         org.apache.spark.sql.SparkSession]())
-  private def loopSession(sess: org.apache.spark.sql.SparkSession)
+  private[graft] def loopSession(sess: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession =
     loopSessions.synchronized {
       var c = loopSessions.get(sess)
@@ -330,9 +330,11 @@ object Dedup {
         c = sess.newSession()
         // newSession starts from the builder conf, not runtime-set
         // values: copy the parent's dynamic SQL conf so the loop plans
-        // under the same shuffle sizing / thresholds (static throw; skip)
+        // under the same shuffle sizing / thresholds (static and core
+        // keys are shared already, and setting them throws; skip)
         for ((k, v) <- sess.conf.getAll)
-          try c.conf.set(k, v) catch { case _: Throwable => () }
+          try c.conf.set(k, v)
+          catch { case _: org.apache.spark.sql.AnalysisException => () }
         c.conf.set("spark.sql.adaptive.enabled", "false")
         loopSessions.put(sess, c)
       }
@@ -357,11 +359,9 @@ object Dedup {
     // here at sf0.1: 0.95 s/round at 32 partitions vs 0.45 s at the
     // sized value. ~1M edges per partition, capped at the session
     // shuffle parallelism for genuinely large graphs.
-    val maxP = try docs.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
-    val p = math.max(1L, math.min(maxP.toLong, ecnt / 1000000L + 1)).toInt
     val sess = docs.sparkSession
+    val maxP = sess.conf.get("spark.sql.shuffle.partitions").toInt
+    val p = math.max(1L, math.min(maxP.toLong, ecnt / 1000000L + 1)).toInt
     // AQE re-plans every exchange as its own query-stage job — the
     // right trade on real data, pure scheduling latency on the loop's
     // already-sized p-partition rounds. Disable it for the LOOP ONLY
@@ -647,8 +647,7 @@ object Dedup {
       .withColumn("t2", lead("tok", 2).over(w))
       .filter(col("t2").isNotNull)
       .select(col("id"),
-        Text.hash60(concat_ws(" ", col("tok"), col("t1"), col("t2")),
-          Some(docs.sparkSession)).as("sh"))
+        Text.hash60(concat_ws(" ", col("tok"), col("t1"), col("t2"))).as("sh"))
     if (dedupe) hashes.distinct() else hashes
   }
 
@@ -666,7 +665,7 @@ object Dedup {
       .groupBy("id").agg(min("sh").as("fp"))
     val short = docs.filter(n < 3)
       .select(col(idCol).as("id"),
-        Text.hash60(lower(col(textCol)), Some(docs.sparkSession)).as("fp"))
+        Text.hash60(lower(col(textCol))).as("fp"))
     long.unionByName(short)
   }
 

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: both filters compile to a single predicate evaluated
   * inside the scan's whole-stage codegen:
-  *  - UA: the native `contains_any` Aho-Corasick expression when
-  *    [[graft.plans.GraftExtensions]] is installed (O(len) per row
-  *    regardless of list size — see [[isRobotUa]]); otherwise one
-  *    `rlike` alternation (compiled once per task, not per row);
+  *  - UA: the native `contains_any` Aho-Corasick expression (O(len)
+  *    per row regardless of list size — see [[isRobotUa]]); a list
+  *    with a non-ASCII or empty pattern compiles to one `rlike`
+  *    alternation instead (compiled once per task, not per row);
   *  - IP: prefix match against a literal alternation anchored at `^`
   *    (the anchor makes every non-zero start position fail in O(1),
   *    so the 404-prefix list measures ~1.2 µs/row worst-case —
@@ -92,38 +92,25 @@ object Robots {
     * An empty pattern list classifies nothing as a robot (a bare
     * `rlike("")` would match every row).
     *
-    * Scale path: with [[graft.plans.GraftExtensions]] installed this
-    * compiles to the native `contains_any` Aho-Corasick expression —
-    * O(len) per row regardless of list size. The regex-alternation
-    * fallback is semantically identical but O(len x patterns):
-    * measured 379 µs/row for a non-matching UA against the shipped
-    * ~1,200-entry list vs ~0.35 µs/row native (EtlSpec pins the
-    * two paths agree on every fixture). Non-ASCII patterns force the
-    * fallback (the automaton's alphabet is byte-wise ASCII).
-    *
-    * Pass the TARGET DataFrame's session when available (same rule as
-    * `Text.hash60`): the function-existence probe must consult the
-    * session that will ANALYZE the plan — in a mixed-session JVM a
-    * column built while a GraftExtensions session was active but
-    * analyzed by a plain session would otherwise fail with
-    * "undefined function contains_any". The no-session overload keeps
-    * the active-session heuristic for Column-only contexts. */
-  def isRobotUa(ua: Column, patterns: Seq[String],
-      session: Option[org.apache.spark.sql.SparkSession]): Column =
+    * Scale path: the native `contains_any` Aho-Corasick expression
+    * ([[graft.plans.GraftExtensions]], installed by
+    * [[graft.GraftSession]]) — O(len) per row regardless of list
+    * size. The regex alternation is semantically identical but
+    * O(len x patterns): measured 379 µs/row for a non-matching UA
+    * against the shipped ~1,200-entry list vs ~0.35 µs/row native
+    * (PipelineSpec pins the two agree on the robot fixtures). A list
+    * with a non-ASCII or empty pattern takes the regex (the
+    * automaton's alphabet is byte-wise ASCII). */
+  def isRobotUa(ua: Column, patterns: Seq[String] = defaultUaPatterns): Column =
     if (patterns.isEmpty) lit(false)
     else {
       val lowered = lower(ua)
-      val nativeOk = patterns.forall(p => p.nonEmpty && p.forall(_ < 128)) &&
-        session.orElse(org.apache.spark.sql.SparkSession.getActiveSession)
-          .exists(_.catalog.functionExists("contains_any"))
       val hit =
-        if (nativeOk) call_function("contains_any", lowered, lit(patterns.toArray))
+        if (patterns.forall(p => p.nonEmpty && p.forall(_ < 128)))
+          call_function("contains_any", lowered, lit(patterns.toArray))
         else lowered.rlike(patterns.map(quote).mkString("|"))
       coalesce(hit, lit(false))
     }
-
-  def isRobotUa(ua: Column, patterns: Seq[String] = defaultUaPatterns): Column =
-    isRobotUa(ua, patterns, None)
 
   /** True iff the IP starts with any robot prefix; empty list matches nothing. */
   def isRobotIp(ip: Column, prefixes: Seq[String] = defaultIpPrefixes): Column =
@@ -137,7 +124,6 @@ object Robots {
       ipCol: String = "requester_id",
       uaPatterns: Seq[String] = defaultUaPatterns,
       ipPrefixes: Seq[String] = defaultIpPrefixes): DataFrame =
-    // the target frame's OWN session picks the native-vs-regex path
-    events.filter(!isRobotUa(col(uaCol), uaPatterns, Some(events.sparkSession)) &&
+    events.filter(!isRobotUa(col(uaCol), uaPatterns) &&
       !isRobotIp(col(ipCol), ipPrefixes))
 }

@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * Design rules:
   *  - everything is a Catalyst `Column` expression (codegen'd,
-  *    whole-stage-compatible) — no Scala UDFs in the hot path;
+  *    whole-stage-compatible) — no Scala UDFs in the hot path; the
+  *    hot scalars (`hash60`, `nfc_normalize`) are the native
+  *    expressions [[graft.plans.GraftExtensions]] registers in every
+  *    [[graft.GraftSession]];
   *  - scores are INTEGER (permille / x100) so results are exactly
   *    reproducible across engines (no float rounding drift);
   *  - hashes are md5-derived 60-bit longs (`hash60`) so an external
@@ -19,22 +22,9 @@ object Text {
 
   /** Deterministic 60-bit positive hash: first 15 hex chars of md5.
     * 60 bits keeps the value positive in a signed 64-bit long in any
-    * engine. Uses the fused native [[graft.plans.Hash60]] when the
-    * engine extensions are registered (no hex-string round-trip);
-    * falls back to the composable chain — bit-identical either way.
-    *
-    * Pass the TARGET DataFrame's session when available: the function
-    * lookup must consult the session that will analyze the plan, and
-    * the thread's active session can be a different one (e.g. mixed
-    * sessions in one JVM). The no-session overload falls back to the
-    * active-session heuristic for Column-only contexts. */
-  def hash60(c: Column, session: Option[org.apache.spark.sql.SparkSession]): Column =
-    if (session.orElse(org.apache.spark.sql.SparkSession.getActiveSession)
-        .exists(_.catalog.functionExists("hash60")))
-      call_function("hash60", c)
-    else conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  def hash60(c: Column): Column = hash60(c, None)
+    * engine. Computed by the fused native [[graft.plans.Hash60]]
+    * expression (no hex-string round-trip). */
+  def hash60(c: Column): Column = call_function("hash60", c)
 
   /** Same hash computed driver-side (for deterministic literal seeds
     * shared with external oracles). */
@@ -165,17 +155,15 @@ object Text {
     * and partitionings (no rand()) — re-running the pipeline never
     * migrates a document across splits, and adding documents never
     * reshuffles existing ones (the property rand-based splits lack). */
-  def splitAssign(id: Column, salt: String, trainPct: Int,
-      session: Option[org.apache.spark.sql.SparkSession] = None): Column =
-    when(pmod(hash60(concat(id.cast("string"), lit("|" + salt)), session),
+  def splitAssign(id: Column, salt: String, trainPct: Int): Column =
+    when(pmod(hash60(concat(id.cast("string"), lit("|" + salt))),
       lit(100L)) < trainPct, "train").otherwise("val")
 
   /** Deterministic per-id sampling rank: order ids by their salted
     * hash (ties impossible modulo md5 collisions). Taking rank <= n
     * per stratum gives a reproducible stratified sample. */
-  def sampleRank(id: Column, salt: String,
-      session: Option[org.apache.spark.sql.SparkSession] = None): Column =
-    hash60(concat(id.cast("string"), lit("|" + salt)), session)
+  def sampleRank(id: Column, salt: String): Column =
+    hash60(concat(id.cast("string"), lit("|" + salt)))
 
   /** Marker-word lists for the n-gram/marker language-ID heuristic. */
   val langMarkers: Seq[(String, Seq[String])] = Seq(
@@ -403,19 +391,9 @@ object Text {
         expr("(-slp) div n_bigrams").as("nll_x1000"))
   }
 
-  /** Unicode NFC normalization of a column — the native codegen'd
-    * [[graft.plans.NfcNormalize]] expression when the graft
-    * extensions are installed, a JDK-Normalizer UDF fallback (same
-    * semantics, no codegen) otherwise. */
-  def nfcNormalize(df: org.apache.spark.sql.DataFrame, c: Column): Column =
-    if (df.sparkSession.catalog.functionExists("nfc_normalize"))
-      call_function("nfc_normalize", c)
-    else {
-      val f = udf((s: String) =>
-        if (s == null) null
-        else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
-      f(c)
-    }
+  /** Unicode NFC normalization of a column: the native codegen'd
+    * [[graft.plans.NfcNormalize]] expression. */
+  def nfcNormalize(c: Column): Column = call_function("nfc_normalize", c)
 
   /** DSIR-style importance scoring (Xie et al., "Data Selection for
     * Language Models via Importance Resampling", NeurIPS 2023): score
@@ -538,7 +516,6 @@ object Text {
   def winnowing(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, k: Int = 3, w: Int = 4): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val session = Some(df.sparkSession)
     // Grams are assembled CODEGEN'D from exploded tokens + lead
     // windows (the [[graft.dedup.Dedup.shingleHashes]] pattern), not
     // in a transform() lambda. Two earlier forms measured at sf0.1:
@@ -557,7 +534,7 @@ object Text {
       .select(col(idCol) +: col("pos") +: col("tok") +: leads: _*)
       .filter(col(s"__t${k - 1}").isNotNull)
       .select(col(idCol), col("pos"),
-        ((hash60(concat_ws(" ", gramParts: _*), session)
+        ((hash60(concat_ws(" ", gramParts: _*))
             % lit(8796093022208L)) * lit(1048576L)
           + (lit(1048575L) - col("pos"))).as("key"))
     val wSpec = Window.partitionBy(idCol).orderBy("pos").rowsBetween(0, w - 1)
@@ -589,13 +566,12 @@ object Text {
   def cdcChunks(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, mask: Int = 15): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val session = Some(df.sparkSession)
     val w = Window.partitionBy(idCol).orderBy("pos")
     df.select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
       .withColumn("__prev", lag("tok", 1).over(w))
       .withColumn("boundary",
         when(col("pos") > 0 &&
-            hash60(concat_ws(" ", col("__prev"), col("tok")), session)
+            hash60(concat_ws(" ", col("__prev"), col("tok")))
               % lit(mask + 1L) === 0L, 1L)
           .otherwise(0L))
       .withColumn("chunk_no",

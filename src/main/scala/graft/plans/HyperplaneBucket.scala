@@ -22,10 +22,10 @@ import graft.functions.Text
   * Semantics are bit-identical to the unrolled form: weights are the
   * md5-derived literals `(hash60("p|j") % 2001 - 1000) / 1000`,
   * accumulated in index order j = 0..n-1 (elements beyond a short
-  * vector contribute exactly 0.0, like the old coalesce terms);
-  * bit p set iff dot >= 0. Vectors LONGER than `maxDim` would
-  * silently truncate, so they throw instead (same fail-loud contract
-  * as the composable form's assert_true guard).
+  * vector contribute exactly 0.0, like the unrolled coalesce terms;
+  * PipelineSpec compares the two); bit p set iff dot >= 0. Vectors
+  * LONGER than `maxDim` would silently truncate, so they throw
+  * instead.
   */
 case class HyperplaneBucket(child: Expression, planes: Int, maxDim: Int)
     extends UnaryExpression {
@@ -89,8 +89,7 @@ case class HyperplaneBucket(child: Expression, planes: Int, maxDim: Int)
 }
 
 object HyperplaneBucket {
-  /** Shared weight derivation — also used by the composable fallback
-    * so both paths embed the same literals. */
+  /** Deterministic weight derivation, row-major [plane][dim]. */
   def weights(planes: Int, maxDim: Int): Array[Double] = {
     val out = new Array[Double](planes * maxDim)
     var p = 0

@@ -22,15 +22,15 @@ import graft.functions.Text
   */
 object Similarity {
 
-  /** Cosine similarity between two array<double> columns: ordered
-    * left-to-right summation (deterministic per engine). Zero-norm
-    * vectors yield NULL — cosine is undefined there, NULL sorts last
-    * in the rankers' desc ordering and fails every `>= threshold`
-    * filter, and it matches BOTH the native expression and DuckDB's
-    * double division (the oracle engine nulls 0/0; Spark's ANSI
-    * Divide would THROW instead, and the pre-guard raw division made
-    * the fallback path crash on padding vectors while the native path
-    * silently returned NaN, which sorts ABOVE everything). */
+  /** Cosine similarity between two array<double> columns, as
+    * composable column functions: ordered left-to-right summation
+    * (deterministic per engine). The operators run the native
+    * `cosine_sim` ([[cosineCol]]); this form is its reference.
+    * Zero-norm vectors yield NULL — cosine is undefined there, NULL
+    * sorts last in the rankers' desc ordering and fails every
+    * `>= threshold` filter, and it matches DuckDB's double division
+    * (the oracle engine nulls 0/0; Spark's ANSI Divide would THROW,
+    * and a NaN would sort ABOVE everything). */
   def cosine(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
     val na = aggregate(a, lit(0.0), (acc, x) => acc + x * x)
@@ -41,14 +41,11 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Cosine column: the native codegen'd `cosine_sim` expression when
-    * [[graft.plans.GraftExtensions]] is installed, else the HOF
-    * formulation. Bit-identical results (same index-ordered double
-    * accumulation). */
-  private def cosineCol(df: DataFrame, a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("cosine_sim"))
-      call_function("cosine_sim", a, b)
-    else cosine(a, b)
+  /** Cosine column: the native codegen'd `cosine_sim` expression,
+    * bit-identical to [[cosine]] (same index-ordered double
+    * accumulation; PipelineSpec compares the two). */
+  private def cosineCol(a: Column, b: Column): Column =
+    call_function("cosine_sim", a, b)
 
   /** Brute-force ANN: for each query vector, the top-k nearest
     * corpus vectors by cosine (excluding self), rank ties broken by
@@ -60,7 +57,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), cosineCol(corpus, col("qv"), col("nv")).as("cos"))
+      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -90,7 +87,7 @@ object Similarity {
       .select(col("id").as("a"), col("v").as("va"))
     val y = v.select(col("id").as("b"), col("v").as("vb"))
     x.join(y, col("a") < col("b"))
-      .filter(cosineCol(corpus, col("va"), col("vb")) >= threshold)
+      .filter(cosineCol(col("va"), col("vb")) >= threshold)
       .select(col("a"), col("b"))
   }
 
@@ -100,31 +97,13 @@ object Similarity {
     * Plane components are ROW-INDEPENDENT, so they are precomputed
     * driver-side ([[Text.hash60Literal]] is bit-identical to the
     * hash60 expression — bucket ids are unchanged). The per-row work
-    * is the native [[graft.plans.HyperplaneBucket]] expression when
-    * the extensions are installed — ONE Catalyst node with a fused
-    * codegen loop. The unrolled composable fallback is bit-identical
-    * but its planes x maxDim term tree (512 nodes at 8x64) costs
-    * ~0.5 s of analyzer/optimizer time per query, which dominated
-    * the v4 bench (data executes in microseconds at any dim); both
-    * paths fail loud on vectors longer than `maxDim` (the native
-    * expression throws, the fallback embeds an assert_true). */
-  private def bucketCol(df: DataFrame, vec: Column, planes: Int,
-      maxDim: Int): Column =
-    if (df.sparkSession.catalog.functionExists("hyperplane_bucket"))
-      call_function("hyperplane_bucket", vec, lit(planes), lit(maxDim))
-    else {
-      val w = graft.plans.HyperplaneBucket.weights(planes, maxDim)
-      val bits = (0 until planes).map { p =>
-        val dot = (0 until maxDim).map { j =>
-          coalesce(try_element_at(vec, lit(j + 1)) * lit(w(p * maxDim + j)),
-            lit(0.0))
-        }.reduce(_ + _)
-        when(dot >= 0, shiftleft(lit(1L), p)).otherwise(0L)
-      }
-      when(assert_true(size(vec) <= maxDim,
-        lit(s"hyperplaneBuckets: vector dim exceeds maxDim=$maxDim")).isNull,
-        bits.reduce(_ + _))
-    }
+    * is the native [[graft.plans.HyperplaneBucket]] expression — ONE
+    * Catalyst node with a fused codegen loop, where the unrolled
+    * composable form's planes x maxDim term tree (512 nodes at 8x64)
+    * cost ~0.5 s of analyzer/optimizer time per query. Vectors longer
+    * than `maxDim` fail loud (the expression throws). */
+  private def bucketCol(vec: Column, planes: Int, maxDim: Int): Column =
+    call_function("hyperplane_bucket", vec, lit(planes), lit(maxDim))
 
   /** (id, bucket) per corpus vector — see [[bucketCol]]. */
   def hyperplaneBuckets(corpus: DataFrame, planes: Int = 8,
@@ -132,7 +111,7 @@ object Similarity {
       maxDim: Int = 64): DataFrame = {
     val v = asDouble(col(vecCol))
     corpus.select(col(idCol).as("id"),
-      bucketCol(corpus, v, planes, maxDim).as("bucket"))
+      bucketCol(v, planes, maxDim).as("bucket"))
   }
 
   /** K-means training for IVF cells: deterministic id-stride init
@@ -161,7 +140,7 @@ object Similarity {
     (1 to iters).foreach { _ =>
       val assigned = v.crossJoin(broadcast(cents))
         .select(col("id"), col("v"), col("cid"),
-          cosineCol(corpus, col("v"), col("cv")).as("c"))
+          cosineCol(col("v"), col("cv")).as("c"))
         .withColumn("r", row_number().over(wAssign))
         .filter(col("r") === 1)
       cents = assigned.groupBy("cid").agg(vecMean(col("v")).as("cv"))
@@ -295,7 +274,7 @@ object Similarity {
     val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
     val assign = v.crossJoin(broadcast(cents))
       .select(col("id"), col("cid"),
-        cosineCol(corpus, col("v"), col("cv")).as("c"))
+        cosineCol(col("v"), col("cv")).as("c"))
       .withColumn("r", row_number().over(wAssign))
       .filter(col("r") === 1)
       .select(col("id").as("nid"), col("cid"))
@@ -307,7 +286,7 @@ object Similarity {
     val wProbe = Window.partitionBy("qid").orderBy(col("c").desc, col("cid").asc)
     val probes = q.crossJoin(broadcast(cents))
       .select(col("qid"), col("qv"), col("cid"),
-        cosineCol(corpus, col("qv"), col("cv")).as("c"))
+        cosineCol(col("qv"), col("cv")).as("c"))
       .withColumn("r", row_number().over(wProbe))
       .filter(col("r") <= nprobe)
       .select(col("qid"), col("qv"), col("cid"))
@@ -316,7 +295,7 @@ object Similarity {
       .filter(col("nid") =!= col("qid"))
       .join(corpus.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nv")), "nid")
       .select(col("qid"), col("nid"),
-        cosineCol(corpus, col("qv"), col("nv")).as("cos"))
+        cosineCol(col("qv"), col("nv")).as("cos"))
       // a vector can reach a query through only one cell (assignment is
       // rank-1 unique), so candidates are already distinct
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
@@ -360,7 +339,7 @@ object Similarity {
     val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
     val assigned = v.crossJoin(broadcast(cents))
       .select(col("id"), col("v"), col("cid"),
-        cosineCol(corpus, col("v"), col("cv")).as("c"))
+        cosineCol(col("v"), col("cv")).as("c"))
       .withColumn("r", row_number().over(wAssign))
       .filter(col("r") === 1)
       .select(col("id"), col("v"), col("cid"))
@@ -371,7 +350,7 @@ object Similarity {
     val x = assigned.alias("x"); val y = assigned.alias("y")
     val dropped = x.join(y, col("x.cid") === col("y.cid") &&
         col("x.id") < col("y.id"))
-      .filter(cosineCol(corpus, col("x.v"), col("y.v")) >= threshold)
+      .filter(cosineCol(col("x.v"), col("y.v")) >= threshold)
       .select(col("y.id").as("id")).distinct()
     corpus.select(col(idCol).as("id"))
       .join(dropped.withColumn("dropFlag", lit(1)), Seq("id"), "left")
@@ -393,16 +372,16 @@ object Similarity {
     // pure per-row function of the vector
     val v = asDouble(col(vecCol))
     val c = corpus.select(col(idCol).as("nid"), v.as("nv"),
-      bucketCol(corpus, v, planes, 64).as("bucket"))
+      bucketCol(v, planes, 64).as("bucket"))
     // query vectors come from the QUERIES frame itself (same contract
     // as annBruteForce: queries need not be corpus members) — the old
     // corpus-left_semi shape silently dropped out-of-corpus queries
     // and substituted corpus embeddings for same-id queries
     val q = queries.select(col(idCol).as("qid"), v.as("qv"),
-      bucketCol(corpus, v, planes, 64).as("bucket"))
+      bucketCol(v, planes, 64).as("bucket"))
     val scored = c.join(broadcast(q), "bucket")
       .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), cosineCol(corpus, col("qv"), col("nv")).as("cos"))
+      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("cos"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -753,7 +732,7 @@ object Similarity {
     val scored = corpus.select(col(idCol).as("id"), v.as("xv"))
       .crossJoin(broadcast(cents))
       .select(col("id"), col("cid"),
-        cosineCol(corpus, col("xv"), col("cv")).as("cos"))
+        cosineCol(col("xv"), col("cv")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
     val assign = scored.filter(col("rk") === 1).select(col("id"), col("cid"))
@@ -765,7 +744,7 @@ object Similarity {
     val probes = queries.select(col(idCol).as("qid"), v.as("qxv"))
       .crossJoin(broadcast(cents))
       .select(col("qid"), col("cid"),
-        cosineCol(corpus, col("qxv"), col("cv")).as("cos"))
+        cosineCol(col("qxv"), col("cv")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)))
       .filter(col("rk") <= nprobe).select(col("qid"), col("cid"))
@@ -828,7 +807,7 @@ object Similarity {
     val assign = matching.select(col(idCol).as("id"), v.as("xv"))
       .crossJoin(broadcast(centroids))
       .select(col("id"), col("cid"),
-        cosineCol(corpus, col("xv"), col("cv")).as("cos"))
+        cosineCol(col("xv"), col("cv")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
       .filter(col("rk") === 1).select(col("id"), col("cid"))
@@ -843,7 +822,7 @@ object Similarity {
     val probes = queries.select(col(idCol).as("qid"), v.as("qxv"))
       .crossJoin(broadcast(centroids))
       .select(col("qid"), col("cid"),
-        cosineCol(corpus, col("qxv"), col("cv")).as("cos"))
+        cosineCol(col("qxv"), col("cv")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)))
       .filter(col("rk") <= nprobe).select(col("qid"), col("cid"))
@@ -933,7 +912,7 @@ object Similarity {
       val assign = corpus.select(col(idCol).as("id"), v.as("xv"))
         .crossJoin(broadcast(cents))
         .select(col("id"), col("cid"),
-          cosineCol(corpus, col("xv"), col("cv")).as("cos"))
+          cosineCol(col("xv"), col("cv")).as("cos"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
         .filter(col("rk") === 1).select(col("id"), col("cid"))
@@ -1054,7 +1033,7 @@ object Similarity {
     val assign = newVectors.select(col(idCol).as("id"), v.as("xv"))
       .crossJoin(broadcast(cents))
       .select(col("id"), col("cid"),
-        cosineCol(newVectors, col("xv"), col("cv")).as("cos"))
+        cosineCol(col("xv"), col("cv")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
       .filter(col("rk") === 1).select(col("id"), col("cid"))
@@ -1158,7 +1137,7 @@ object Similarity {
     val probes = queries.select(col(idCol).as("qid"), v.as("qxv"))
       .crossJoin(broadcast(centroids))
       .select(col("qid"), col("cid"),
-        cosineCol(corpus, col("qxv"), col("cv")).as("cos"))
+        cosineCol(col("qxv"), col("cv")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)))
       .filter(col("rk") <= nprobe).select(col("qid"), col("cid"))

@@ -224,10 +224,8 @@ object Streaming {
 
   /** Shared stream-side events reader: schema snapshot, directory/file
     * path handling, and the same nanos/micros adaptation as
-    * `Tables.events` (conf ensured idempotently — session setup, not a
-    * per-query side effect). */
+    * `Tables.events`. */
   private def eventStream(s: SparkSession, eventsPath: String): DataFrame = {
-    graft.Tables.ensureNanosCompat(s)
     val schema = s.read.parquet(eventsPath).schema
     val raw = s.readStream.schema(schema).parquet(streamablePath(eventsPath))
     schema("ts").dataType match {
@@ -449,7 +447,7 @@ object Streaming {
         i => Text.hash60(concat_ws(" ",
           element_at(col("toks"), i + 1),
           element_at(col("toks"), i + 2),
-          element_at(col("toks"), i + 3)), Some(s))))
+          element_at(col("toks"), i + 3)))))
     val sigCols = Dedup.minhashMasks(k).zipWithIndex.map { case (m, i) =>
       array_min(transform(col("sh"), x => x.bitwiseXOR(lit(m)))).as(s"m$i")
     }

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Report
@@ -16,17 +14,7 @@ import graft.query.QueryCompiler.Catalog
 
 /** Specs for the API layer: report fan-out, exporters, geo range
   * join, context validation, MV substitution. */
-class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("api-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ApiSpec extends AnyFunSuite with SparkSpec {
 
   private def fact() = {
     val s = spark; import s.implicits._

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
@@ -12,18 +10,7 @@ import graft.operators.AsOfJoin
   * physical plan must actually be the custom operator with two
   * independent child exchanges (no unioned superset-schema shuffle).
   */
-class AsOfNativeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .appName("asof-native-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
 
   private def forAllSeeded[A](gen: Gen[A], n: Int)(body: A => Unit): Unit =
     (1 to n).foreach { i =>

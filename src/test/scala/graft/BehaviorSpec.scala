@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.series.Behavior
 
 /** Funnel step-ordering and cohort week-bucketing semantics. */
-class BehaviorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("behavior-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BehaviorSpec extends AnyFunSuite with SparkSpec {
 
   test("funnel honors step order per user") {
     val s = spark; import s.implicits._

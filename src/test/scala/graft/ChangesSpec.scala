@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.store.Changes
@@ -10,17 +8,7 @@ import graft.store.Changes
 /** Semantics of the SCD2 / merge-upsert warehouse maintenance ops
   * (the oracle gates the driver-table instantiations; these pin the
   * edge cases a tiny fixture can isolate). */
-class ChangesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("changes-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ChangesSpec extends AnyFunSuite with SparkSpec {
 
   private def d(s: String) = java.sql.Date.valueOf(s)
 

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Etl
@@ -13,17 +11,7 @@ import graft.processors.AccessProcessors._
 
 /** Full process_stats-equivalent run: TSV day files -> filters ->
   * processor fan-out -> partitioned fact tables -> checkpoint. */
-class EtlEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("etl-e2e")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EtlEndToEndSpec extends AnyFunSuite with SparkSpec {
 
   private def writeDay(dir: java.io.File, day: String, lines: Seq[String]): Unit = {
     val f = new java.io.File(dir, s"${day.take(4)}/$day.log.gz")

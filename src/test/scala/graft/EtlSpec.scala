@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.classify.{Classify, NameCase}
@@ -24,18 +22,8 @@ object EtlSpec {
   case class Creator(name: CreatorName, id: String)
 }
 
-class EtlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EtlSpec extends AnyFunSuite with SparkSpec {
   import EtlSpec.{Creator, CreatorName}
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("etl-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private lazy val logDir: String = {
     val dir = Files.createTempDirectory("access").toFile

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.FrequentItems
@@ -11,17 +9,7 @@ import graft.functions.FrequentItems
   * capacity-exceeds-dictionary regime (the oracle-gated one) and the
   * classic error bounds in the lossy regime, across real partitioned
   * aggregation (map-side partials + merge). */
-class FrequentItemsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("frequent-items-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FrequentItemsSpec extends AnyFunSuite with SparkSpec {
 
   /** Zipf-ish skewed corpus: term i repeated floor(1000/i) times. */
   private def corpus: Seq[String] =

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.JdbcImport
@@ -16,17 +14,9 @@ import graft.ingest.JdbcImport
   * `numPartitions` concurrent range scans, and (c) cover ids outside
   * [lowerBound, upperBound) via the unbounded first/last stride —
   * Spark's contract that the bounds only shape the stride, not filter. */
-class JdbcImportSpec extends AnyFunSuite with BeforeAndAfterAll {
+class JdbcImportSpec extends AnyFunSuite with SparkSpec {
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("jdbc-import-spec")
-    .getOrCreate()
 
   override def beforeAll(): Unit = {
     val conn = DriverManager.getConnection(url)
@@ -52,7 +42,7 @@ class JdbcImportSpec extends AnyFunSuite with BeforeAndAfterAll {
     // embedded Derby shutdown always throws SQLException by contract
     try DriverManager.getConnection("jdbc:derby:memory:graftdb;drop=true")
     catch { case _: java.sql.SQLException => () }
-    spark.stop()
+    super.afterAll()
   }
 
   test("S4: partitioned id-range read returns every row exactly once") {

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
@@ -13,18 +12,7 @@ import graft.similarity.Similarity
 /** Unit specs for the training-data pipeline operators, on tiny
   * hand-computed fixtures (the DuckDB oracle gate covers the driver
   * tables; these pin the semantics with known answers). */
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .appName("pipeline-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineSpec extends AnyFunSuite with SparkSpec {
 
   private def docs(rows: (Long, String)*) = {
     val s = spark; import s.implicits._
@@ -229,6 +217,48 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head().isNullAt(0))
     assert(zdf.select(Similarity.cosine(col("a"), col("b")))
       .head().isNullAt(0))
+  }
+
+  /** The composable form `hyperplane_bucket` replaced: planes x maxDim
+    * unrolled `try_element_at` terms over the same weights. */
+  private def unrolledBucket(vec: Column, planes: Int, maxDim: Int): Column = {
+    val w = graft.plans.HyperplaneBucket.weights(planes, maxDim)
+    val bits = (0 until planes).map { p =>
+      val dot = (0 until maxDim).map { j =>
+        coalesce(try_element_at(vec, lit(j + 1)) * lit(w(p * maxDim + j)),
+          lit(0.0))
+      }.reduce(_ + _)
+      when(dot >= 0, shiftleft(lit(1L), p)).otherwise(0L)
+    }
+    when(assert_true(size(vec) <= maxDim,
+      lit(s"hyperplaneBuckets: vector dim exceeds maxDim=$maxDim")).isNull,
+      bits.reduce(_ + _))
+  }
+
+  test("native hyperplane_bucket matches the unrolled composable form bit-for-bit") {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(11)
+    // float vectors cast to double by the operator, short ones (down
+    // to empty), all-zero ones, and full maxDim ones
+    val vecs = Seq(Array.empty[Float], Array.fill(64)(0.0f), Array(0.0f, 0.0f)) ++
+      (1 to 40).map(_ => Array.fill(1 + rnd.nextInt(64))(rnd.nextGaussian().toFloat))
+    val e = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val native = Similarity.hyperplaneBuckets(e, planes = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val unrolled = e.select(col("vec_id"),
+        unrolledBucket(col("embedding").cast("array<double>"), 8, 64))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(native.size == vecs.size)
+    assert(native == unrolled)
+    // a vector longer than maxDim still fails loudly
+    val err = intercept[Exception] {
+      Similarity.hyperplaneBuckets(Seq((0L, Array.fill(5)(1.0f)))
+        .toDF("vec_id", "embedding"), planes = 8, maxDim = 4).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("exceeds maxDim=4")), err.toString)
   }
 
   test("multimodal decode: real UTF-8 text decoder reports line box") {
@@ -494,6 +524,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!s.catalog.listTables("global_temp").collect()
       .exists(_.name.startsWith("graft_cc_")),
       "leaked graft_cc_* global temp views")
+  }
+
+  test("nearDupClusters' loop session carries the parent's runtime SQL conf") {
+    // a fresh parent, so the per-parent child is built from this conf
+    val parent = spark.newSession()
+    parent.conf.set("spark.sql.autoBroadcastJoinThreshold", "123456")
+    val child = Dedup.loopSession(parent)
+    assert(child ne parent)
+    assert(child.conf.get("spark.sql.autoBroadcastJoinThreshold") == "123456")
+    assert(child.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(parent.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(Dedup.loopSession(parent) eq child)
   }
 
   test("nearDupClusters converges on a chain longer than maxIters (path halving)") {
@@ -1252,10 +1294,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = docs((1L, "cafe\u0301"), (2L, "plain"))  // decomposed e + U+0301
     // the native expression is registered in this session's extensions
     assert(spark.catalog.functionExists("nfc_normalize"))
-    val out = d.select(Text.nfcNormalize(d, col("text")).as("n"))
+    val out = d.select(Text.nfcNormalize(col("text")).as("n"))
       .orderBy("doc_id").collect().map(_.getString(0))
     assert(out(0) == "caf\u00e9")  // composed
     assert(out(1) == "plain")
+  }
+
+  test("native nfc_normalize matches java.text.Normalizer NFC (seeded)") {
+    val s = spark; import s.implicits._
+    val rnd = new scala.util.Random(5)
+    // ASCII, precomposed and decomposed Latin, combining marks in
+    // non-canonical order, Hangul syllables and conjoining jamo
+    val alphabet = Seq("a", "e", "Z", " ", "\u00e9", "\u00c5", "\u0301", "\u0308",
+      "\u0327", "\u0323", "\u030a", "\uac00", "\ud55c", "\u1100", "\u1161",
+      "\u11a8", "\u212b", "\u1e9b")
+    val strs = Seq(None, Some(""), Some("plain ascii")) ++ (1 to 200).map(_ =>
+      Some((1 to rnd.nextInt(12)).map(_ => alphabet(rnd.nextInt(alphabet.size))).mkString))
+    val got = strs.toDF("s").select(Text.nfcNormalize(col("s")))
+      .collect().map(r => Option(r.getString(0))).toSeq
+    val want = strs.map(_.map(java.text.Normalizer.normalize(_,
+      java.text.Normalizer.Form.NFC)))
+    assert(got == want)
   }
 
   test("AhoCorasick differential: agrees with naive substring search (seeded)") {

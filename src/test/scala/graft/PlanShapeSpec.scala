@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards for SparkEntry queries whose VALUE
@@ -12,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tables with the driver-table schemas (specs never read the
   * driver's /root/testdata).
   */
-class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .appName("plan-shape-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlanShapeSpec extends AnyFunSuite with SparkSpec {
 
   /** Minimal star-schema fixture matching TESTDATA.md layouts. */
   lazy val dir: String = {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
@@ -13,17 +11,7 @@ import graft.series.Series
 /** Property tests for the invariants SURVEY.md §5 calls out:
   * densification length, count conservation under regroup and
   * date-range partitioning, repeat-filter idempotence. */
-class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("property-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PropertySpec extends AnyFunSuite with SparkSpec {
 
   /** Drive a Gen by fixed seeds (no scalatest-scalacheck bridge in
     * the offline dependency set). */

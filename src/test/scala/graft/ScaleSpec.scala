@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.series.Series
@@ -12,20 +10,7 @@ import graft.store.Bucketing
 
 /** Scale-lever specs: bucketed shuffle-free joins, salted skew joins,
   * bounded densification. */
-class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private val warehouse = Files.createTempDirectory("wh").toString
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .appName("scale-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ScaleSpec extends AnyFunSuite with SparkSpec {
 
   test("fact-store scans prune partitions, push filters, and prune columns") {
     val s = spark; import s.implicits._
@@ -60,8 +45,11 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val facts = (1 to 1000).map(i => (i.toLong % 50, s"v$i", i.toLong))
       .toDF("id", "value", "count")
     val dims = (0L until 50L).map(i => (i, s"set${i % 5}")).toDF("id", "set_value")
-    Bucketing.writeBucketed(facts, "b_facts", "id", buckets = 8)
-    Bucketing.writeBucketed(dims, "b_dims", "id", buckets = 8)
+    val dir = Files.createTempDirectory("bucketed")
+    Bucketing.writeBucketed(facts, "b_facts", "id", buckets = 8,
+      path = Some(dir.resolve("b_facts").toString))
+    Bucketing.writeBucketed(dims, "b_dims", "id", buckets = 8,
+      path = Some(dir.resolve("b_dims").toString))
     // Force the sort-merge path: broadcast would win on this tiny dim
     // and hide the bucketing effect under a BroadcastExchange.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -5,27 +5,32 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint for the one-session-source rule: every main gets its
-  * session from [[GraftSession]], so the tools cannot drift apart in
-  * what they plan and time, and no process-global knob can switch an
-  * operator or a conf behind the caller's back.
+/** Source lint for the one-session-source rule: every main and spec
+  * gets its session from [[GraftSession]], so the tools and the specs
+  * cannot drift apart in what they plan and time, and no
+  * process-global knob can switch an operator or a conf behind the
+  * caller's back.
   *
   *  1. no file under `src/main/scala` except `GraftSession.scala`
-  *     calls `SparkSession.builder`;
+  *     calls `SparkSession.builder`, and no file under
+  *     `src/test/scala` does (specs use [[SparkSpec]]);
   *  2. main sources read only the allowed environment variables —
   *     cores, master, and the path and label variables — and no
   *     system property at all;
-  *  3. none names a removed knob.
+  *  3. none names a removed knob;
+  *  4. library code neither probes the catalog for the native
+  *     functions nor sets the parquet nanos conf: both are decided
+  *     once, in the session.
   */
 class SessionLintSpec extends AnyFunSuite {
 
-  private val root = Paths.get("src/main/scala")
-
-  private def sources: Seq[(Path, String)] =
-    Files.walk(root).iterator().asScala
+  private def sources(root: String): Seq[(Path, String)] =
+    Files.walk(Paths.get(root)).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
       .toSeq
+
+  private def sources: Seq[(Path, String)] = sources("src/main/scala")
 
   private val allowedEnv = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_OUT",
@@ -44,6 +49,24 @@ class SessionLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"SparkSession.builder outside GraftSession: ${offenders.mkString(", ")}")
+  }
+
+  test("specs build no SparkSession of their own") {
+    val offenders = sources("src/test/scala").collect {
+      case (p, src) if src.contains("SparkSession.builder") &&
+          p.getFileName.toString != "SessionLintSpec.scala" => p.toString
+    }
+    assert(offenders.isEmpty,
+      s"SparkSession.builder in specs: ${offenders.mkString(", ")}")
+  }
+
+  test("library code neither probes for native functions nor patches the session") {
+    val offenders = sources.collect {
+      case (p, src) if src.contains("functionExists") => s"$p probes functionExists"
+      case (p, src) if src.contains("spark.sql.legacy.parquet.nanosAsLong") &&
+          p.getFileName.toString != "GraftSession.scala" => s"$p sets nanosAsLong"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("main sources read only the allowed environment, no system properties") {

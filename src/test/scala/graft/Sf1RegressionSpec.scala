@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
@@ -27,17 +26,7 @@ import graft.similarity.Similarity
   *     the uncapped form demonstrably exceeds it — i.e. the 100 TB
   *     skew guard is load-bearing, not decorative.
   */
-class Sf1RegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("sf1-regression-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Sf1RegressionSpec extends AnyFunSuite with SparkSpec {
 
   /** Deterministic synthetic 64-dim corpus; ids sparse and offset
     * (every id divisible by the 43 stride, so the sample filter keeps

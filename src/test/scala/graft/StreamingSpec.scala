@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streaming
@@ -10,17 +9,7 @@ import graft.streaming.Streaming.{Keyed, Kept}
 
 /** Structured-Streaming specs (SURVEY.md §2.9): sessionized repeat
   * filtering with state, via MemoryStream micro-batches. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("St5: streaming repeat filter keeps state across micro-batches") {
     implicit val s: SparkSession = spark
