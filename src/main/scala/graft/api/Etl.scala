@@ -1,7 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.filters.{Repeat, Robots}
 import graft.ingest.AccessLog
@@ -14,14 +17,26 @@ import graft.store.FactStore
   * processor fan-out → per-datatype fact tables → checkpoint.
   *
   * Scale posture:
-  *  - the raw events are read ONCE and persisted post-filter; every
-  *    processor aggregates from that shared pass (the reference's
-  *    single-pass fan-out, `Access.pm:259-351`);
+  *  - the raw events are read ONCE; the deduped events, the filtered
+  *    events and each processor's fact are materialized once as eager
+  *    serialized local checkpoints, and every later step reads those
+  *    (the reference's single-pass fan-out, `Access.pm:259-351`);
+  *  - a checkpoint, not `persist`: each of the three ends in a shuffle,
+  *    and AQE may coalesce a CACHED plan's output partitions only when
+  *    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
+  *    true (the sessions leave it false). A persisted frame keeps all
+  *    `initialPartitionNum` (8 x cores) partitions and every stage over
+  *    it runs that many tasks; a checkpoint is taken from the finished
+  *    AQE plan and keeps the coalesced count — on a one-day nightly
+  *    run, a few partitions instead of `initialPartitionNum`;
+  *  - the checkpoint blocks are released when the run returns OR
+  *    throws, so a failed run pins no executor memory;
   *  - each datatype writes its own date-partitioned parquet table via
   *    dynamic partition overwrite, so reruns of a window are
   *    idempotent (`--from-date` semantics, St3);
   *  - the checkpoint records the newest fully-ingested day file;
-  *    the next run prunes older files at listing time.
+  *    the next run lists only the day files after it
+  *    ([[graft.ingest.AccessLog.read]] prunes at listing time).
   */
 object Etl {
 
@@ -62,42 +77,70 @@ object Etl {
     try body finally spark.sparkContext.setJobDescription(null)
   }
 
+  private val runSeq = new AtomicLong()
+
   /** One batch run; returns (datatype -> rows written). */
   def run(spark: SparkSession, cfg: Config): Map[String, Long] = {
+    val run = s"Etl.run #${runSeq.incrementAndGet()}"
+    try runPhases(spark, cfg, run)
+    finally release(spark, _.startsWith(s"$run "))
+  }
+
+  /** Materialize a frame several later steps read (see "Scale
+    * posture") as an eager serialized local checkpoint, in phase
+    * `name`. Its RDD is created under the call site `<run> <name>`:
+    * that is how [[release]] finds it — also when the eager job
+    * failed, since Spark persists the RDD before the job runs and
+    * never hands it back. */
+  private def materialize(spark: SparkSession, run: String, name: String)(
+      df: => DataFrame): DataFrame = phase(spark, name) {
+    spark.sparkContext.setCallSite(s"$run $name")
+    try df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    finally spark.sparkContext.clearCallSite()
+  }
+
+  /** Free (blocking) the checkpoints whose call site satisfies `site`. */
+  private def release(spark: SparkSession, site: String => Boolean): Unit =
+    GraftBridge.locallyCheckpointed(spark.sparkContext, site)
+      .foreach(_.unpersist(blocking = true))
+
+  private def runPhases(spark: SparkSession, cfg: Config,
+      run: String): Map[String, Long] = {
     val from = cfg.fromDate.orElse(
       FactStore.loadCheckpoint(cfg.checkpointDir, "access")
         .flatMap(graft.model.DateUtils.parseDate)
         .map(_.plusDays(1)))
 
-    val raw = AccessLog.dedupLines(AccessLog.read(spark, cfg.logGlob, from))
-      // St1 day watermark: a file dated today may still be growing —
-      // skipping it (not checkpointing past it) is what makes the
-      // checkpoint safe to advance.
-      .filter(col("file_date") < lit(java.sql.Date.valueOf(cfg.today)))
-      // Partition-safety clamp: facts are partitioned by EVENT date but
-      // pruning is by FILE date; a late event spilling into a day
-      // before `from` would otherwise make dynamic partition overwrite
-      // replace that complete partition with just the spillover rows.
-      .filter(from.map(d => to_date(col("ts")) >= lit(java.sql.Date.valueOf(d)))
-        .getOrElse(lit(true)))
-    val rawPersisted = raw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val filtered = Repeat.sequential(
-      Robots.filterRobots(rawPersisted, uaPatterns = cfg.uaPatterns,
-          ipPrefixes = cfg.ipPrefixes)
-        // the reference never counts hits without an item id
-        // ("return unless defined $epid")
-        .filter(col("referent_id").isNotNull)
-        .withColumn("sec", unix_timestamp(col("ts")))
-        .withColumn("key_doc", coalesce(col("referent_docid"), lit(-1)))
-        .withColumn("tie", monotonically_increasing_id()),
-      keyCols = Seq("requester_id", "referent_id", "key_doc"),
-      secCol = "sec", timeout = cfg.repeatTimeoutSec, tieBreakCol = "tie")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val raw = materialize(spark, run, "ingest") {
+      AccessLog.dedupLines(AccessLog.read(spark, cfg.logGlob, from))
+        // St1 day watermark: a file dated today may still be growing —
+        // skipping it (not checkpointing past it) is what makes the
+        // checkpoint safe to advance.
+        .filter(col("file_date") < lit(java.sql.Date.valueOf(cfg.today)))
+        // Partition-safety clamp: facts are partitioned by EVENT date but
+        // pruning is by FILE date; a late event spilling into a day
+        // before `from` would otherwise make dynamic partition overwrite
+        // replace that complete partition with just the spillover rows.
+        .filter(from.map(d => to_date(col("ts")) >= lit(java.sql.Date.valueOf(d)))
+          .getOrElse(lit(true)))
+    }
+    val filtered = materialize(spark, run, "filter") {
+      Repeat.sequential(
+        Robots.filterRobots(raw, uaPatterns = cfg.uaPatterns,
+            ipPrefixes = cfg.ipPrefixes)
+          // the reference never counts hits without an item id
+          // ("return unless defined $epid")
+          .filter(col("referent_id").isNotNull)
+          .withColumn("sec", unix_timestamp(col("ts")))
+          .withColumn("key_doc", coalesce(col("referent_docid"), lit(-1)))
+          .withColumn("tie", monotonically_increasing_id()),
+        keyCols = Seq("requester_id", "referent_id", "key_doc"),
+        secCol = "sec", timeout = cfg.repeatTimeoutSec, tieBreakCol = "tie")
+    }
 
     val written = cfg.processors.flatMap { p =>
-      val fact = p.process(filtered)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dts = p.provides.mkString("/")
+      val fact = materialize(spark, run, s"fact $dts")(p.process(filtered))
       // A multi-datatype processor (downloads/views) tags rows by
       // datatype in `value`; each datatype gets its OWN fact table —
       // the reference stores them as separate datasets too, and mixing
@@ -107,7 +150,7 @@ object Etl {
         else p.provides.map(dt => dt -> fact.filter(col("value") === dt))
       // ONE driver job per PROCESSOR (not per datatype): the day-level
       // (datatype, day, count) rows for every provided datatype come
-      // back in a single pass over the persisted fact — rows = #days x
+      // back in a single pass over the materialized fact — rows = #days x
       // #datatypes, still driver-tiny, but a multi-datatype processor
       // no longer pays one sequential job per datatype.
       // date_format, not cast: the keep set is compared against
@@ -117,7 +160,7 @@ object Etl {
       // the diff-delete below would wipe the partitions just written
       val dtCol =
         if (p.provides.size == 1) lit(p.provides.head) else col("value")
-      val perDayByDt = phase(spark, s"day-counts ${p.provides.mkString("/")}") {
+      val perDayByDt = phase(spark, s"day-counts $dts") {
         fact
           .groupBy(dtCol.as("dt"),
             date_format(col("date"), "yyyy-MM-dd").as("d"))
@@ -151,7 +194,7 @@ object Etl {
         }
         dt -> n
       }
-      fact.unpersist()
+      release(spark, _ == s"$run fact $dts")
       counts
     }.toMap
 
@@ -171,12 +214,10 @@ object Etl {
     // PRE-filter scan: a closed day whose hits are all robots must
     // still advance the watermark or it would be re-ingested forever.
     val maxDay = phase(spark, "checkpoint watermark") {
-      rawPersisted.agg(max(col("file_date"))).head().getDate(0)
+      raw.agg(max(col("file_date"))).head().getDate(0)
     }
     if (maxDay != null)
       FactStore.saveCheckpoint(cfg.checkpointDir, "access", maxDay.toString)
-    filtered.unpersist()
-    rawPersisted.unpersist()
     // new facts invalidate every pre-rendered dashboard payload
     if (written.valuesIterator.sum > 0)
       cfg.reportCacheDir.foreach(ReportCache.clear)

@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.AccessEvent
 
@@ -12,31 +13,50 @@ import graft.model.AccessEvent
   *  - the glob scan parallelizes per file; gzip is non-splittable, so
   *    one task per day file — matching the reference's one-file-per-day
   *    layout, and the natural parallelism unit for backfills;
-  *  - date pruning happens at file-listing time via `pathGlobFilter`
-  *    or the derived `file_date` column — files before `fromDate`
-  *    are never opened;
+  *  - date pruning happens at file-listing time: the driver expands the
+  *    glob and keeps only the files whose path date is on or after
+  *    `fromDate`, so older files are never opened. (A filter on the
+  *    `file_date` column could not do this: it is derived from
+  *    `input_file_name()`, which exists only once a file is read — a
+  *    nightly run would decompress the whole history to keep one day);
   *  - parsing is schema-on-read CSV with `mode=DROPMALFORMED`
   *    (the reference's silent-drop semantics) — no post-hoc regex UDF.
   */
 object AccessLog {
 
-  /** Read day-file TSVs under `root` (layout `root/YYYY/` day files,
-    * gz or plain). `fromDate` prunes whole files by the date embedded
-    * in the filename before any I/O. */
+  /** The day's date in a day file's path: the first `YYYY-MM-DD` of
+    * the full path, so both `YYYY/YYYY-MM-DD.log.gz` files and
+    * `day=YYYY-MM-DD/` directories date their files. */
+  private val PathDate = "(\\d{4}-\\d{2}-\\d{2})"
+
+  /** Read day-file TSVs matched by the glob `root` (layout `root/YYYY/`
+    * day files, gz or plain), expanded on the driver. `fromDate` drops
+    * whole files dated before it while listing, before any I/O; a file
+    * without a date in its path is dropped too. No file left after that
+    * gives an empty frame of the same columns. */
   def read(spark: SparkSession, root: String,
       fromDate: Option[java.time.LocalDate] = None): DataFrame = {
-    val raw = spark.read
+    val glob = new Path(root)
+    val matched = Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
+      .globStatus(glob)).toSeq.flatten.map(_.getPath.toString)
+    val files = matched.filter(p => fromDate.forall { d =>
+      PathDate.r.findFirstIn(p).flatMap(s =>
+        scala.util.Try(java.time.LocalDate.parse(s)).toOption)
+        .exists(!_.isBefore(d))
+    })
+    val reader = spark.read
       .option("sep", "\t")
       .option("mode", "DROPMALFORMED")
       .schema(AccessEvent.schema)
-      .csv(root)
+    val lines =
+      // a glob that matches nothing stays Spark's PATH_NOT_FOUND error
+      if (matched.isEmpty) reader.csv(root)
+      else if (files.isEmpty)
+        spark.createDataFrame(java.util.List.of[Row](), AccessEvent.schema)
+      else reader.csv(files: _*)
+    lines
       .withColumn("file_date",
-        to_date(regexp_extract(input_file_name(), "(\\d{4}-\\d{2}-\\d{2})", 1)))
-    val pruned = fromDate match {
-      case Some(d) => raw.filter(col("file_date") >= lit(java.sql.Date.valueOf(d)))
-      case None => raw
-    }
-    pruned
+        to_date(regexp_extract(input_file_name(), PathDate, 1)))
       .withColumn("ts", try_to_timestamp(col("datestamp"), lit("yyyy-MM-dd'T'HH:mm:ssX")))
       .filter(col("ts").isNotNull) // F4 null-year guard (ref Access.pm:63-67)
   }

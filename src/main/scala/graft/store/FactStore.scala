@@ -70,9 +70,7 @@ object FactStore {
       keep: Set[String] = Set.empty): Unit = {
     val root = new java.io.File(path)
     if (!root.isDirectory) return
-    val parts = Option(root.listFiles).toSeq.flatten
-      .filter(d => d.isDirectory && d.getName.startsWith("date="))
-    parts.filter { d =>
+    partitionDirs(root).filter { d =>
       val day = d.getName.stripPrefix("date=")
       !keep.contains(day) && (from match {
         case None => true
@@ -81,10 +79,18 @@ object FactStore {
             .toOption.exists(!_.isBefore(f))
       })
     }.foreach(rm)
-    val anyLeft = Option(root.listFiles).toSeq.flatten
-      .exists(d => d.isDirectory && d.getName.startsWith("date="))
-    if (!anyLeft) rm(root)
+    if (partitionDirs(root).isEmpty) rm(root)
   }
+
+  /** The days a fact table holds, read from its `date=YYYY-MM-DD`
+    * partition directory names — a listing, no Spark job. */
+  def partitionDays(path: String): Seq[java.time.LocalDate] =
+    partitionDirs(new java.io.File(path)).flatMap(d => scala.util.Try(
+      java.time.LocalDate.parse(d.getName.stripPrefix("date="))).toOption)
+
+  private def partitionDirs(root: java.io.File): Seq[java.io.File] =
+    Option(root.listFiles).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("date="))
 
   /** Read a fact table; date-range filters prune partitions. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *
   *   cost per refresh = O(|MV| + |new days|)   — not O(|history|)
   *
-  * The delta read is `fact.filter(date > watermark)` over the
+  * The delta's days come from the table's `date=` partition listing
+  * (no job; an up-to-date view returns before touching Spark). The
+  * delta read is `fact.filter(date > watermark)` over the
   * date-partitioned table, so partition pruning skips all already
   * merged days at listing time; the merge itself is a groupBy over
   * (current MV ∪ delta), both small relative to the fact history.
@@ -80,16 +82,17 @@ object LifetimeMv {
     val cur = committed.filter { case (_, wm) =>
       rewrittenFrom.forall(_.isAfter(java.time.LocalDate.parse(wm)))
     }
+    // the delta's days are the partition dirs past the watermark: a
+    // listing, so an already-fresh view costs no Spark job at all
+    val newDays = FactStore.partitionDays(factDir).filter(d =>
+      cur.forall { case (_, wm) => d.isAfter(java.time.LocalDate.parse(wm)) })
+    if (newDays.isEmpty) return 0L
     val fact = FactStore.read(spark, factDir)
     val delta = cur match {
       case Some((_, wm)) =>
         fact.filter(col("date") > lit(java.sql.Date.valueOf(wm)))
       case None => fact
     }
-    val bounds = delta.agg(max(col("date")).as("mx"),
-      count_distinct(col("date")).as("days")).head()
-    if (bounds.isNullAt(0)) return 0L
-    val (newMax, days) = (bounds.getDate(0), bounds.getLong(1))
 
     val deltaAgg = delta.groupBy("id", "value").agg(sum("count").as("count"))
     val merged = cur.map { case (v, _) =>
@@ -100,7 +103,7 @@ object LifetimeMv {
     val nextV = committed.map(_._1 + 1).getOrElse(1L)
     merged.write.mode("overwrite").parquet(s"$mvDir/v$nextV")
     // the pointer flip is the commit point
-    FactStore.saveCheckpoint(mvDir, PointerKey, s"$nextV|$newMax")
+    FactStore.saveCheckpoint(mvDir, PointerKey, s"$nextV|${newDays.max}")
     // GC every version dir except the one just committed AND its
     // predecessor: read() hands out LAZY frames, so a reader obtained
     // before this refresh still resolves files from the previous
@@ -114,7 +117,7 @@ object LifetimeMv {
         scala.util.Try(f.getName.stripPrefix("v").toLong)
           .toOption.exists(!keep.contains(_)))
       .foreach(deleteRec)
-    days
+    newDays.size.toLong
   }
 
   private def deleteRec(f: java.io.File): Unit = {

@@ -3,11 +3,19 @@ package graft
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
+import scala.collection.mutable
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Etl
 import graft.classify.Geo
+import graft.ingest.AccessLog
 import graft.processors.AccessProcessors._
+import graft.processors.MetricProcessor
 
 /** Full process_stats-equivalent run: TSV day files -> filters ->
   * processor fan-out -> partitioned fact tables -> checkpoint. */
@@ -121,5 +129,115 @@ class EtlEndToEndSpec extends AnyFunSuite with SparkSpec {
       .groupBy("id", "value")
       .agg(org.apache.spark.sql.functions.sum("count").as("count"))
     assert(totals(mv) == totals(full))
+  }
+
+  /** Two closed days of the fixture above, and a config over them. */
+  private def twoDays(): Etl.Config = {
+    val logs = Files.createTempDirectory("etl-logs").toFile
+    writeDay(logs, "2024-03-01", Seq(
+      "2024-03-01T10:00:00Z\t1.5.0.1\tMozilla/5.0 Chrome/99\thttps://www.google.com/search?q=dark+matter\tsvc\t12\t7",
+      "2024-03-01T11:00:00Z\t2.5.0.1\tMozilla/5.0 Firefox/115\t\tsvc\t12\t",
+      "2024-03-01T12:00:00Z\t5.6.7.8\tGooglebot/2.1\thttps://x.com\tsvc\t12\t7"))
+    writeDay(logs, "2024-03-02", Seq(
+      "2024-03-02T09:00:00Z\t1.5.0.1\tOpera/9.80\t123\tsvc\t99\t8"))
+    Etl.Config(
+      logGlob = logs.getAbsolutePath + "/*/*.log.gz",
+      factRoot = Files.createTempDirectory("etl-facts").toString,
+      checkpointDir = Files.createTempDirectory("etl-ckpt").toString,
+      processors = Seq(DownloadsViews, Browsers),
+      today = java.time.LocalDate.of(2024, 3, 4))
+  }
+
+  private def cacheManagerEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  test("Etl.run releases its intermediates when it throws and when it returns") {
+    val cfg = twoDays()
+    // fails inside the job that materializes its fact, after the
+    // ingest and filter intermediates exist
+    object Exploding extends MetricProcessor {
+      val provides = Seq("boom")
+      def process(events: DataFrame): DataFrame =
+        events.select(F.to_date(F.col("ts")).as("date"),
+          F.col("referent_id").as("id"),
+          F.raise_error(F.lit("processor failed")).cast("string").as("value"),
+          F.lit(1L).as("count"))
+    }
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(cacheManagerEmpty)
+    val e = intercept[Exception](
+      Etl.run(spark, cfg.copy(processors = DownloadsViews +: Seq(Exploding))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("processor failed")))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      sc.getPersistentRDDs.values.mkString("; "))
+    assert(cacheManagerEmpty)
+
+    assert(Etl.run(spark, cfg)("downloads") == 2L)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      sc.getPersistentRDDs.values.mkString("; "))
+    assert(cacheManagerEmpty)
+  }
+
+  test("Etl.run: every job labeled, no stage after the first shuffle at initialPartitionNum tasks") {
+    val initial = spark.conf
+      .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+    val jobs = mutable.ArrayBuffer.empty[String]
+    // (tasks, wrote shuffle output, partition counts of stored RDDs)
+    val stages = mutable.ArrayBuffer.empty[(Int, Boolean, Seq[Int])]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
+        jobs += Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.synchronized {
+          val i = s.stageInfo
+          stages += ((i.numTasks,
+            i.taskMetrics.shuffleWriteMetrics.recordsWritten > 0,
+            i.rddInfos.filter(_.storageLevel.isValid).map(_.numPartitions)))
+        }
+    }
+    val cfg = twoDays()
+    val written = SpecBus.listening(spark.sparkContext, listener)(Etl.run(spark, cfg))
+    assert(written("downloads") == 2L)
+
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.startsWith("etl: ")), jobs.mkString("; "))
+    // the three shared intermediates (ingest, filter, fact) are stored
+    // with AQE's coalesced partition count, not the initial one
+    val stored = stages.flatMap(_._3)
+    assert(stored.size >= 3 && stored.forall(_ < initial),
+      s"stored partition counts $stored, initialPartitionNum $initial")
+    val firstShuffle = stages.indexWhere(_._2)
+    assert(firstShuffle >= 0)
+    val after = stages.drop(firstShuffle + 1).map(_._1)
+    assert(after.nonEmpty && after.forall(_ < initial),
+      s"task counts after the first shuffle $after, initialPartitionNum $initial")
+  }
+
+  test("day files dated before the checkpoint are never opened") {
+    val cfg = twoDays()
+    assert(Etl.run(spark, cfg)("downloads") == 2L)
+    val logs = new java.io.File(cfg.logGlob).getParentFile.getParentFile
+    // day 1 is behind the checkpoint (2024-03-02); a corrupt (non-gzip)
+    // file in its place fails any run that opens it
+    val corrupt = new java.io.File(logs, "2024/2024-03-01.log.gz")
+    Files.write(corrupt.toPath, "not gzip".getBytes("UTF-8"))
+    writeDay(logs, "2024-03-03", Seq(
+      "2024-03-03T09:00:00Z\t3.5.0.1\tMozilla/5.0 Chrome/99\t\tsvc\t12\t9"))
+    assert(Etl.run(spark, cfg)("downloads") == 1L)
+    assert(graft.store.FactStore.loadCheckpoint(cfg.checkpointDir, "access")
+      .contains("2024-03-03"))
+
+    val from = Some(java.time.LocalDate.of(2024, 3, 2))
+    val read = AccessLog.read(spark, cfg.logGlob, from)
+    assert(read.inputFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).sorted
+      .toSeq == Seq("2024-03-02.log.gz", "2024-03-03.log.gz"))
+    // nothing left after pruning: an empty frame of the same columns
+    val none = AccessLog.read(spark, cfg.logGlob, Some(java.time.LocalDate.of(2024, 4, 1)))
+    assert(none.columns.toSeq == read.columns.toSeq && none.count() == 0L)
   }
 }

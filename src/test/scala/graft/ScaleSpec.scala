@@ -179,6 +179,27 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     assert(totals(LifetimeMv.read(spark, mvDir).get) == totals(full2))
   }
 
+  test("lifetime MV update with no new partition starts no Spark job") {
+    val s = spark; import s.implicits._
+    import graft.store.{FactStore, LifetimeMv}
+    val root = Files.createTempDirectory("mv-fresh").toString
+    val factDir = s"$root/fact"
+    val mvDir = s"$root/mv"
+    FactStore.append(Seq((java.sql.Date.valueOf("2024-01-01"), 1L, "dl", 3L))
+      .toDF("date", "id", "value", "count"), factDir)
+    assert(LifetimeMv.update(spark, mvDir, factDir) == 1L)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val merged = org.apache.spark.SpecBus.listening(spark.sparkContext, listener)(
+      LifetimeMv.update(spark, mvDir, factDir))
+    assert(merged == 0L)
+    assert(jobs.get == 0)
+  }
+
   test("salted aggregation equals direct groupBy on a hot-key table") {
     val s = spark; import s.implicits._
     // one key holds 90% of rows — the aggregation-skew pathology
