@@ -154,21 +154,20 @@ object Bench {
     // sink. Shared by the main 3-run protocol and the end-of-suite
     // noise retries so both measure exactly the same thing.
     def runOnce(name: String): Double = {
-      // Drop cached frames from prior queries first: the dedup /
-      // similarity operators persist() intermediates and a suite-long
-      // session otherwise accumulates every query's cache — by the
-      // 60th query the executor heap is mostly stale cache and GC
-      // drag inflates the tail of the suite (measured: the d-family,
-      // benched last, ran 3x slower in a shared session than alone).
+      // Drop what prior queries left first: a query's returned frame
+      // reads the checkpoints its operators materialized
+      // (graft.store.Materialize: the caller owns them), and the
+      // harness is that caller. A suite-long session otherwise
+      // accumulates every query's blocks — by the 60th query the
+      // executor heap is mostly stale blocks and GC drag inflates the
+      // tail of the suite (measured: the d-family, benched last, ran
+      // 3x slower in a shared session than alone; at 30x data a 2.7x
+      // slowdown on g1 and the difference between fitting in heap and
+      // OOM). clearCache drops SQL-cached frames but NOT checkpoint
+      // blocks, hence the RDD unpersists too. Prior runs' blocks are
+      // dead (each run rebuilds its plans from scratch), so dropping
+      // every persistent RDD between runs is safe.
       spark.catalog.clearCache()
-      // clearCache drops SQL-cached frames but NOT localCheckpoint
-      // RDD blocks (graph/closure/BPE queries checkpoint per
-      // iteration): those linger in storage memory until the
-      // ContextCleaner's next GC pass and starve execution memory —
-      // measured at 30x data as a 2.7x slowdown on g1 and the
-      // difference between fitting in heap and OOM. Prior runs'
-      // blocks are dead (each run rebuilds its plans from scratch),
-      // so dropping every persistent RDD between runs is safe.
       // BLOCKING: the async form returns before the BlockManager
       // frees anything, so at 30x the next run's first big sort
       // races the cleaner for the same heap — the stage-754 OOM

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.store.Materialize
 
 /** The LLM-curation pipeline as a public API surface — the
   * training-data composition the kp1/kp2 keystones exercise:
@@ -22,54 +23,6 @@ import graft.functions.Text
   * the shuffle cannot skew however duplicated the corpus is.
   */
 object Curation {
-
-  /** How [[curate]] / [[assemble]] pin their multiply-consumed
-    * intermediate frames (the narrow gated rows; the per-source
-    * quota). The MATH is identical either way — only the
-    * fault-tolerance of the materialization differs:
-    *
-    *  - [[Materialize.LocalCkpt]] (default): `localCheckpoint` —
-    *    executor-resident blocks, zero extra I/O, ideal for the
-    *    in-JVM board and single-node runs. NOT replayable: on a real
-    *    cluster a lost executor loses its blocks and fails the job
-    *    (no lineage to recompute from), so a 1000-executor
-    *    corpus-assembly run should not use it.
-    *  - [[Materialize.Files]]: write the frame to parquet under the
-    *    given path and read it back — the kp4-sink shape. A lost
-    *    executor re-reads its split from the filesystem like any
-    *    scan; the gated rows are 8 thin columns, so the write is a
-    *    tiny fraction of the corpus pass it pins. This is the
-    *    production setting.
-    *
-    * PipelineSpec pins kp3's report byte-equal through both paths
-    * and the assemble tail's plan shape identical above the leaves. */
-  sealed trait Materialize
-  object Materialize {
-    case object LocalCkpt extends Materialize
-    final case class Files(path: String) extends Materialize
-  }
-
-  /** Pin a multiply-consumed frame per the [[Materialize]] mode.
-    * Files mode reads back with the frame's own schema so the
-    * downstream plan is independent of what parquet inferred.
-    *
-    * Each Files pin lands in a UNIQUE subdirectory
-    * (`<path>/<sub>-<seq>`): a second `curate()` pointed at the same
-    * Files root must not clobber the parquet a still-lazy frame from
-    * an earlier call reads — overwrite mode would delete those files
-    * under the first report. The caller owns sweeping the root when
-    * all reports derived from it have been collected. */
-  private val pinSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def pin(df: DataFrame, mode: Materialize, sub: String): DataFrame =
-    mode match {
-      case Materialize.LocalCkpt =>
-        df.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      case Materialize.Files(path) =>
-        val p = s"$path/$sub-${pinSeq.incrementAndGet()}"
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.schema(df.schema).parquet(p)
-    }
 
   /** Scan-side projection: (source, doc_id, lang_pred, n_tok, keep,
     * key). `keep` folds through when/otherwise so an empty text's
@@ -140,38 +93,41 @@ object Curation {
     * joins broadcast; the per-source hash-rank window spreads across
     * sources. Every stage keeps the individually-pinned operator's
     * plan shape — composition adds joins, never new scans of wide
-    * columns. */
+    * columns.
+    *
+    * `materialize` pins the gated rows and the quota; `Files` is the
+    * production setting, and PipelineSpec pins the report byte-equal
+    * through both modes. The report reads the pins: the caller owns
+    * them ([[Materialize]]). */
   def curate(docs: DataFrame, benchmark: DataFrame, gramN: Int = 8,
       totalTarget: Int = 200,
-      materialize: Materialize = Materialize.LocalCkpt): DataFrame = {
-    import graft.dedup.Dedup
-    def scrub(df: DataFrame): DataFrame = scrubText(df)
-    val cand = scrub(docs)
-    // stage 2+3: score on the SCRUBBED text; canon among survivors
-    val w = Window.partitionBy("key", "keep").orderBy("doc_id")
-    val flagged = scored(cand).withColumn("canon",
-      (col("keep") === 1 && row_number().over(w) === 1).cast("int"))
-    // stage 4: candidates sharing any scrubbed n-gram with the
-    // benchmark are contaminated — only clean CANONS enter the mix
-    val dirty = Dedup.contamination(scrub(benchmark), cand, gramN)
-      .select(col("doc_id"), lit(1).as("__dirty"))
-    // The gated frame feeds THREE consumers (per-source accounting,
-    // quota weights, the sampled prefix) and Catalyst has no common-
-    // subexpression materialization — without a checkpoint each
-    // consumer re-runs the scrub + scoring + gram pipelines (the
-    // whole corpus read three times over). Pin the NARROW row
-    // instead: 8 thin columns, one per doc, text long gone — the
-    // corpus-assembly pass pays its heavy stages exactly once.
-    // Materialization primitive per [[Materialize]]: localCheckpoint
-    // (SER storage, module convention) in-JVM, parquet for the
-    // fault-tolerant cluster path.
-    val gated = pin(flagged.join(dirty, Seq("doc_id"), "left")
-        .withColumn("clean",
-          (col("canon") === 1 && col("__dirty").isNull).cast("int"))
-        .drop("__dirty"),
-      materialize, "gated")
-    assemble(gated, totalTarget, materialize)
-  }
+      materialize: Materialize.Mode = Materialize.Checkpoint): DataFrame =
+    Materialize.scope(docs.sparkSession, "Curation.curate") { m =>
+      import graft.dedup.Dedup
+      def scrub(df: DataFrame): DataFrame = scrubText(df)
+      val cand = scrub(docs)
+      // stage 2+3: score on the SCRUBBED text; canon among survivors
+      val w = Window.partitionBy("key", "keep").orderBy("doc_id")
+      val flagged = scored(cand).withColumn("canon",
+        (col("keep") === 1 && row_number().over(w) === 1).cast("int"))
+      // stage 4: candidates sharing any scrubbed n-gram with the
+      // benchmark are contaminated — only clean CANONS enter the mix
+      val dirty = Dedup.contamination(scrub(benchmark), cand, gramN)
+        .select(col("doc_id"), lit(1).as("__dirty"))
+      // The gated frame feeds THREE consumers (per-source accounting,
+      // quota weights, the sampled prefix) and Catalyst has no common-
+      // subexpression materialization — without a checkpoint each
+      // consumer re-runs the scrub + scoring + gram pipelines (the
+      // whole corpus read three times over). Pin the NARROW row
+      // instead: 8 thin columns, one per doc, text long gone — the
+      // corpus-assembly pass pays its heavy stages exactly once.
+      val gated = m("gated", materialize)(
+        flagged.join(dirty, Seq("doc_id"), "left")
+          .withColumn("clean",
+            (col("canon") === 1 && col("__dirty").isNull).cast("int"))
+          .drop("__dirty"))
+      assemble(gated, totalTarget, materialize)
+    }
 
   /** The mix + report tail over a gated frame (scored columns +
     * `canon` + `clean`): t28's temperature mix (alpha = 0.5) over the
@@ -183,44 +139,45 @@ object Curation {
     * sink) — the sampling rule and the report columns cannot drift
     * between the two paths. Callers pass an already-materialized
     * `gated` (checkpoint or files); this tail adds only bounded
-    * aggregates and broadcast joins. */
+    * aggregates and broadcast joins. The report reads the quota pin:
+    * the caller owns it. */
   def assemble(gated: DataFrame, totalTarget: Int = 200,
-      materialize: Materialize = Materialize.LocalCkpt): DataFrame = {
-    val cleanDocs = gated.filter(col("clean") === 1)
-      .withColumn("h", Text.hash60(concat(col("source"), lit("|"),
-        col("doc_id").cast("string"))))
-    val counts = cleanDocs.groupBy("source").agg(count(lit(1)).as("n_clean"))
-      .withColumn("w", floor(sqrt(col("n_clean"))).cast("long"))
-    val tot = counts.agg(sum("w").as("tot_w"))
-    // quota is ONE ROW PER SOURCE and feeds two consumers (the
-    // sampled prefix and the final report join) — materialize it so
-    // the 1-row total's nested-loop attach and the clean-count
-    // aggregate run once, not once per consumer (same [[Materialize]]
-    // primitive as the gated frame: the Files path keeps the whole
-    // assembly replayable on executor loss)
-    val quota = pin(counts.crossJoin(broadcast(tot))
-        .withColumn("target", expr(s"($totalTarget * w) div tot_w"))
-        .select("source", "target"),
-      materialize, "quota")
-    val wnd = Window.partitionBy("source").orderBy("h", "doc_id")
-    val sampled = cleanDocs.join(broadcast(quota), Seq("source"))
-      .withColumn("rk", row_number().over(wnd))
-      .filter(col("rk") <= col("target"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_sampled"), sum("n_tok").as("tok_sampled"))
-    gated.groupBy("source")
-      .agg(count(lit(1)).as("docs_in"),
-        sum("keep").cast("long").as("docs_quality"),
-        sum("canon").cast("long").as("docs_kept"),
-        sum("clean").cast("long").as("docs_clean"))
-      .join(quota, Seq("source"), "left")
-      .join(sampled, Seq("source"), "left")
-      .select(col("source"), col("docs_in"), col("docs_quality"),
-        col("docs_kept"), col("docs_clean"),
-        coalesce(col("target"), lit(0L)).as("target"),
-        coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
-        coalesce(col("tok_sampled"), lit(0L)).as("tok_sampled"))
-  }
+      materialize: Materialize.Mode = Materialize.Checkpoint): DataFrame =
+    Materialize.scope(gated.sparkSession, "Curation.assemble") { m =>
+      val cleanDocs = gated.filter(col("clean") === 1)
+        .withColumn("h", Text.hash60(concat(col("source"), lit("|"),
+          col("doc_id").cast("string"))))
+      val counts = cleanDocs.groupBy("source").agg(count(lit(1)).as("n_clean"))
+        .withColumn("w", floor(sqrt(col("n_clean"))).cast("long"))
+      val tot = counts.agg(sum("w").as("tot_w"))
+      // quota is ONE ROW PER SOURCE and feeds two consumers (the
+      // sampled prefix and the final report join) — materialize it so
+      // the 1-row total's nested-loop attach and the clean-count
+      // aggregate run once, not once per consumer (same mode as the
+      // gated frame: the Files path keeps the whole assembly replayable
+      // on executor loss)
+      val quota = m("quota", materialize)(counts.crossJoin(broadcast(tot))
+          .withColumn("target", expr(s"($totalTarget * w) div tot_w"))
+          .select("source", "target"))
+      val wnd = Window.partitionBy("source").orderBy("h", "doc_id")
+      val sampled = cleanDocs.join(broadcast(quota), Seq("source"))
+        .withColumn("rk", row_number().over(wnd))
+        .filter(col("rk") <= col("target"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_sampled"), sum("n_tok").as("tok_sampled"))
+      gated.groupBy("source")
+        .agg(count(lit(1)).as("docs_in"),
+          sum("keep").cast("long").as("docs_quality"),
+          sum("canon").cast("long").as("docs_kept"),
+          sum("clean").cast("long").as("docs_clean"))
+        .join(quota, Seq("source"), "left")
+        .join(sampled, Seq("source"), "left")
+        .select(col("source"), col("docs_in"), col("docs_quality"),
+          col("docs_kept"), col("docs_clean"),
+          coalesce(col("target"), lit(0L)).as("target"),
+          coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
+          coalesce(col("tok_sampled"), lit(0L)).as("tok_sampled"))
+    }
 
   /** Scrub helper shared with the continuous gating replay. */
   private[graft] def scrubText(df: DataFrame): DataFrame =
@@ -293,14 +250,17 @@ object Curation {
     * repeat view is O(read). */
   def curateCached(cacheDir: String, docs: DataFrame, benchmark: DataFrame,
       gramN: Int = 8, totalTarget: Int = 200,
-      materialize: Materialize = Materialize.LocalCkpt): String =
+      materialize: Materialize.Mode = Materialize.Checkpoint): String =
     ReportCache.getOrCompute(cacheDir,
       cacheParams("curate", docs, Map(
         "benchmark" -> corpusKey(benchmark),
         "gram_n" -> gramN.toString,
         "total_target" -> totalTarget.toString)))(
-      graft.export.Export.toJson(
-        curate(docs, benchmark, gramN, totalTarget, materialize)
-          .orderBy("source"),
-        context = Map("report" -> "curation", "view" -> "curate")))
+      // the payload is rendered: nothing the assembly pinned is needed
+      Materialize.scope(docs.sparkSession, "Curation.curateCached") { _ =>
+        graft.export.Export.toJson(
+          curate(docs, benchmark, gramN, totalTarget, materialize)
+            .orderBy("source"),
+          context = Map("report" -> "curation", "view" -> "curate"))
+      })
 }

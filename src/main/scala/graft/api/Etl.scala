@@ -1,15 +1,12 @@
 package graft.api
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.filters.{Repeat, Robots}
 import graft.ingest.AccessLog
 import graft.processors.MetricProcessor
-import graft.store.FactStore
+import graft.store.{FactStore, Materialize}
 
 /** Batch ETL orchestration — the `process_stats` entry point
   * (SURVEY.md §3 entry 3; ref `bin/stats/process_stats:24-159`):
@@ -18,19 +15,11 @@ import graft.store.FactStore
   *
   * Scale posture:
   *  - the raw events are read ONCE; the deduped events, the filtered
-  *    events and each processor's fact are materialized once as eager
-  *    serialized local checkpoints, and every later step reads those
-  *    (the reference's single-pass fan-out, `Access.pm:259-351`);
-  *  - a checkpoint, not `persist`: each of the three ends in a shuffle,
-  *    and AQE may coalesce a CACHED plan's output partitions only when
-  *    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is
-  *    true (the sessions leave it false). A persisted frame keeps all
-  *    `initialPartitionNum` (8 x cores) partitions and every stage over
-  *    it runs that many tasks; a checkpoint is taken from the finished
-  *    AQE plan and keeps the coalesced count — on a one-day nightly
-  *    run, a few partitions instead of `initialPartitionNum`;
-  *  - the checkpoint blocks are released when the run returns OR
-  *    throws, so a failed run pins no executor memory;
+  *    events and each processor's fact are materialized once with
+  *    [[graft.store.Materialize]], and every later step reads those
+  *    (the reference's single-pass fan-out, `Access.pm:259-351`); they
+  *    are released when the run returns OR throws, so a failed run
+  *    pins no executor memory;
   *  - each datatype writes its own date-partitioned parquet table via
   *    dynamic partition overwrite, so reruns of a window are
   *    idempotent (`--from-date` semantics, St3);
@@ -77,41 +66,21 @@ object Etl {
     try body finally spark.sparkContext.setJobDescription(null)
   }
 
-  private val runSeq = new AtomicLong()
-
   /** One batch run; returns (datatype -> rows written). */
-  def run(spark: SparkSession, cfg: Config): Map[String, Long] = {
-    val run = s"Etl.run #${runSeq.incrementAndGet()}"
-    try runPhases(spark, cfg, run)
-    finally release(spark, _.startsWith(s"$run "))
-  }
-
-  /** Materialize a frame several later steps read (see "Scale
-    * posture") as an eager serialized local checkpoint, in phase
-    * `name`. Its RDD is created under the call site `<run> <name>`:
-    * that is how [[release]] finds it — also when the eager job
-    * failed, since Spark persists the RDD before the job runs and
-    * never hands it back. */
-  private def materialize(spark: SparkSession, run: String, name: String)(
-      df: => DataFrame): DataFrame = phase(spark, name) {
-    spark.sparkContext.setCallSite(s"$run $name")
-    try df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    finally spark.sparkContext.clearCallSite()
-  }
-
-  /** Free (blocking) the checkpoints whose call site satisfies `site`. */
-  private def release(spark: SparkSession, site: String => Boolean): Unit =
-    GraftBridge.locallyCheckpointed(spark.sparkContext, site)
-      .foreach(_.unpersist(blocking = true))
+  def run(spark: SparkSession, cfg: Config): Map[String, Long] =
+    Materialize.scope(spark, "Etl.run")(runPhases(spark, cfg, _))
 
   private def runPhases(spark: SparkSession, cfg: Config,
-      run: String): Map[String, Long] = {
+      m: Materialize.Scope): Map[String, Long] = {
+    // a frame several later steps read, materialized in phase `name`
+    def pin(name: String)(df: => DataFrame): DataFrame =
+      phase(spark, name)(m(name)(df))
     val from = cfg.fromDate.orElse(
       FactStore.loadCheckpoint(cfg.checkpointDir, "access")
         .flatMap(graft.model.DateUtils.parseDate)
         .map(_.plusDays(1)))
 
-    val raw = materialize(spark, run, "ingest") {
+    val raw = pin("ingest") {
       AccessLog.dedupLines(AccessLog.read(spark, cfg.logGlob, from))
         // St1 day watermark: a file dated today may still be growing —
         // skipping it (not checkpointing past it) is what makes the
@@ -124,7 +93,7 @@ object Etl {
         .filter(from.map(d => to_date(col("ts")) >= lit(java.sql.Date.valueOf(d)))
           .getOrElse(lit(true)))
     }
-    val filtered = materialize(spark, run, "filter") {
+    val filtered = pin("filter") {
       Repeat.sequential(
         Robots.filterRobots(raw, uaPatterns = cfg.uaPatterns,
             ipPrefixes = cfg.ipPrefixes)
@@ -140,7 +109,7 @@ object Etl {
 
     val written = cfg.processors.flatMap { p =>
       val dts = p.provides.mkString("/")
-      val fact = materialize(spark, run, s"fact $dts")(p.process(filtered))
+      val fact = pin(s"fact $dts")(p.process(filtered))
       // A multi-datatype processor (downloads/views) tags rows by
       // datatype in `value`; each datatype gets its OWN fact table —
       // the reference stores them as separate datasets too, and mixing
@@ -194,7 +163,7 @@ object Etl {
         }
         dt -> n
       }
-      release(spark, _ == s"$run fact $dts")
+      m.release(fact)
       counts
     }.toMap
 

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.store.Materialize
 
 /** Deduplication operators for the training-data pipeline: exact,
   * MinHash+LSH, SimHash, and n-gram-Jaccard near-dup.
@@ -20,25 +21,17 @@ import graft.functions.Text
   *    is bounded by posting-list sizes, not n^2);
   *  - every verify step re-checks candidates with exact integer
   *    arithmetic (a*inter >= b*union), so LSH recall/precision issues
-  *    only ever ADD candidate pairs to verify, never wrong results.
+  *    only ever ADD candidate pairs to verify, never wrong results;
+  *  - the bounded pair OUTPUT of the near-dup ops is materialized
+  *    before it is returned and the op's feature table freed: the
+  *    caller owns the pairs ([[Materialize]]). Without it every caller
+  *    action re-shingles both self-join sides (round-10 A/B,
+  *    COVERAGE.md checkpoint-trade table).
   *
   * All hashes are md5-derived ([[Text.hash60]]) — deterministic and
   * reproducible in any SQL engine, unlike JVM murmur variants.
   */
 object Dedup {
-
-  /** Materialize a bounded pair-table OUTPUT of d2/d3/d4/d11
-    * (minhash/simhash/jaccard/containment): each op unpersists its
-    * internal feature cache before returning, so the output is eagerly
-    * `localCheckpoint`ed SERIALIZED while the cache is still hot — the
-    * 30x heap insurance from round 9. The round-10 A/B (COVERAGE.md
-    * checkpoint-trade table) settled the alternatives: a deserialized
-    * checkpoint pays the same materialization at 5-10x the block
-    * footprint (the class that OOM'd two 30x steps), no checkpoint
-    * makes every caller action re-shingle both self-join sides, and
-    * the 30x gates were pinned under this form. */
-  private def ckptPairs(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Shared skew guard: drop rows whose group (by `cols`) exceeds
     * `cap` members. The sizing window rides the same shuffle the
@@ -203,20 +196,15 @@ object Dedup {
       k: Int = 16, rowsPerBand: Int = 4,
       maxBucketSize: Option[Int] = None): DataFrame = {
     // The feature table feeds both the signature build and the verify
-    // join — persist it so the shingle pipeline runs once, not twice.
-    // The pair OUTPUT is bounded by construction (LSH buckets + the
-    // verify filter), so it is materialized eagerly (localCheckpoint)
-    // and the feature cache released before returning: a long-lived
-    // driver running many dedup passes otherwise accumulates every
-    // pass's shingle cache for the life of the session.
-    val features = shingleHashes(docs)
-      .select(col("id"), col("sh").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = lshCandidates(
-      lshBands(minhashSignaturesFrom(features, k), rowsPerBand), maxBucketSize)
-    val out = ckptPairs(verifyJaccardOn(cands, features, num, den))
-    features.unpersist()
-    out
+    // join — materialized so the shingle pipeline runs once, not twice,
+    // and freed on return.
+    Materialize.scope(docs.sparkSession, "Dedup.minhashNearDup") { m =>
+      val features = m("features")(
+        shingleHashes(docs).select(col("id"), col("sh").as("h")))
+      val cands = lshCandidates(
+        lshBands(minhashSignaturesFrom(features, k), rowsPerBand), maxBucketSize)
+      m("pairs")(verifyJaccardOn(cands, features, num, den))
+    }
   }
 
   /** 60-bit SimHash per doc, computed as 60 conditional sums in one
@@ -249,32 +237,24 @@ object Dedup {
     * (recall trade, None = exact blocking). */
   def simhashNearDup(docs: DataFrame, maxDist: Int = 3,
       maxBlockSize: Option[Int] = None): DataFrame = {
-    // One row per doc — persist so the token explode + 60-sum agg
-    // runs once instead of once per self-join side; the bounded pair
-    // output checkpoints eagerly so the cache is released before
-    // returning (no per-call cache accumulation in long sessions).
-    val sh = simhash(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allBlocks = sh.select(col("id"), col("simhash"),
-      explode(array((0 until 4).map(q =>
-        struct(lit(q).as("q"),
-          shiftright(col("simhash"), q * 15).bitwiseAND(0x7FFF).as("bk"))): _*)).as("blk"))
-      .select(col("id"), col("simhash"), col("blk.q"), col("blk.bk"))
-    val blocks = capGroupSize(allBlocks, Seq("q", "bk"), maxBlockSize)
-    val x = blocks.as("x"); val y = blocks.as("y")
-    val out = x.join(y, col("x.q") === col("y.q") && col("x.bk") === col("y.bk") &&
-        col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-    // SERIALIZED (default policy): on a clone-dense corpus the pair
-    // table itself is large (every k-clone family emits C(k,2) rows);
-    // deserialized checkpoint rows cost 5-10x their serialized size
-    // and OOM'd the 8g bench heap at the 30x step
-    val ck = ckptPairs(out)
-    sh.unpersist()
-    ck
+    // One row per doc — materialized so the token explode + 60-sum agg
+    // runs once instead of once per self-join side, and freed on return.
+    Materialize.scope(docs.sparkSession, "Dedup.simhashNearDup") { m =>
+      val sh = m("simhash")(simhash(docs))
+      val allBlocks = sh.select(col("id"), col("simhash"),
+        explode(array((0 until 4).map(q =>
+          struct(lit(q).as("q"),
+            shiftright(col("simhash"), q * 15).bitwiseAND(0x7FFF).as("bk"))): _*)).as("blk"))
+        .select(col("id"), col("simhash"), col("blk.q"), col("blk.bk"))
+      val blocks = capGroupSize(allBlocks, Seq("q", "bk"), maxBlockSize)
+      val x = blocks.as("x"); val y = blocks.as("y")
+      m("pairs")(x.join(y, col("x.q") === col("y.q") && col("x.bk") === col("y.bk") &&
+          col("x.id") < col("y.id"))
+        .select(col("x.id").as("a"), col("y.id").as("b"),
+          bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= maxDist))
+    }
   }
 
   /** Connected components over a near-dup pair list: every document
@@ -302,7 +282,8 @@ object Dedup {
     * non-increasing (the union includes each vertex's own label), so
     * the global label sum strictly decreases until fixpoint — one
     * tiny agg over the round's already-checkpointed blocks decides
-    * termination. Bounded by `maxIters`. */
+    * termination. Bounded by `maxIters`. The returned assignment reads
+    * the final labels: the caller owns them ([[Materialize]]). */
   /** Lazily-created PER-PARENT-SESSION child session for the
     * clustering loop (AQE off). Building a fresh `newSession()` per
     * call was measured at ~0.25-0.3 s fixed cost at sf0.1 (a fresh
@@ -342,16 +323,19 @@ object Dedup {
     }
 
   def nearDupClusters(pairs: DataFrame, docs: DataFrame,
-      idCol: String = "doc_id", maxIters: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val raw = pairs.select(col("a").as("x"), col("b").as("y"))
-      .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ecnt = raw.count()
-    if (ecnt == 0) {
-      raw.unpersist()
-      return docs.select(col(idCol), col(idCol).as("cluster"))
+      idCol: String = "doc_id", maxIters: Int = 20): DataFrame =
+    Materialize.scope(docs.sparkSession, "Dedup.nearDupClusters") { m =>
+      val raw = m("edges")(pairs.select(col("a").as("x"), col("b").as("y"))
+        .unionByName(pairs.select(col("b").as("x"), col("a").as("y"))))
+      val ecnt = raw.count()
+      if (ecnt == 0) docs.select(col(idCol), col(idCol).as("cluster"))
+      else propagate(m, raw, ecnt, docs, idCol, maxIters)
     }
+
+  /** [[nearDupClusters]]'s label loop over the materialized edge list
+    * `raw` (`ecnt` > 0 rows), in `m`'s scope. */
+  private def propagate(m: Materialize.Scope, raw: DataFrame, ecnt: Long,
+      docs: DataFrame, idCol: String, maxIters: Int): DataFrame = {
     // Loop parallelism sized to the GRAPH, not the session default:
     // the pair graph after LSH is orders of magnitude smaller than the
     // corpus, and running a 500-vertex round across 32 (or a cluster's
@@ -383,28 +367,22 @@ object Dedup {
     // try begins BEFORE view registration and the eager edge/label
     // checkpoints: those jobs run real corpus-scale work, and a
     // failure there must not leak the global temp view (app-lifetime
-    // scope) or the raw persist — the finally below covers them all.
+    // scope) — the finally below covers them all.
     try {
-    raw.createOrReplaceGlobalTempView(rawView)
-    // Pre-partition edges by source ONCE and localCheckpoint (eager):
-    // the checkpointed LogicalRDD keeps HashPartitioning(x, p) — when
-    // labels outgrow broadcast and the message join goes sort-merge,
-    // edges never re-shuffle — AND it truncates the pair-generation
-    // lineage (a full LSH pipeline), so every round's plan sees a leaf
-    // table instead of re-analyzing that pipeline's plan tree. The
-    // re-analysis was measured at sf0.1 as the dominant per-round cost
-    // of the loop, dwarfing its actual 256-edge data movement.
-    // edge and label tables are corpus-scale (one row per pair /
-    // per doc): store SERIALIZED with disk spill — the deserialized
-    // default is 5-10x larger and is what turns a tight heap into an
-    // OOM at 30x data (see Graph.pageRank's edge table, same class)
-    val edges = child.table(s"$gtDb.$rawView")
-      .repartition(p, col("x")).localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var labels = edges.select(col("x").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    raw.unpersist()
+      raw.createOrReplaceGlobalTempView(rawView)
+      // Pre-partition edges by source ONCE: the checkpointed LogicalRDD
+      // keeps HashPartitioning(x, p) — when labels outgrow broadcast and
+      // the message join goes sort-merge, edges never re-shuffle — AND
+      // it truncates the pair-generation lineage (a full LSH pipeline),
+      // so every round's plan sees a leaf table instead of re-analyzing
+      // that pipeline's plan tree. The re-analysis was measured at sf0.1
+      // as the dominant per-round cost of the loop, dwarfing its actual
+      // 256-edge data movement.
+      val edges = m("partitioned edges")(
+        child.table(s"$gtDb.$rawView").repartition(p, col("x")))
+      m.release(raw)
+      var labels = m("labels")(edges.select(col("x").as("id")).distinct()
+        .withColumn("label", col("id")))
       var prevSum: Option[java.math.BigDecimal] = None
       var converged = false
       var i = 0
@@ -425,16 +403,18 @@ object Dedup {
               .select(col("l1.id").as("id"), col("l2.label").as("label"))
             msgs.unionByName(jump)
           }
-        val next = labels.unionByName(delivered)
+        // each round's labels are materialized, which also truncates
+        // the lineage, and the superseded round is freed
+        val next = m("labels")(labels.unionByName(delivered)
           .repartition(p, col("id"))
-          .groupBy("id").agg(min("label").as("label"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .groupBy("id").agg(min("label").as("label")))
+        m.release(labels)
+        labels = next
         // Convergence costs no join: per-vertex labels are monotonically
         // non-increasing (each vertex's own label rides the union), so
-        // the global sum strictly decreases until fixpoint. This ONE
-        // action both populates next's cache and returns the sum;
+        // the global sum strictly decreases until fixpoint.
         // decimal(38,0) is exact at any vertex count (no Long overflow).
-        val sumNow = Option(next
+        val sumNow = Option(labels
           .agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
         // compareTo, not equals: BigDecimal.equals is scale-sensitive
         converged = (prevSum, sumNow) match {
@@ -442,34 +422,14 @@ object Dedup {
           case (a, b) => a == b
         }
         prevSum = sumNow
-        val finished = converged || i + 1 >= maxIters
-        if (i % 5 == 4 && !finished) {
-          // periodic lineage truncation (extra job, 1 round in 5)
-          val ck = next.localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          next.unpersist(); labels.unpersist()
-          labels = ck
-        } else {
-          labels.unpersist()
-          labels = next
-        }
         i += 1
       }
-      // Release the loop's cached tables before returning: callers
-      // hold only the returned PLAN, so the final round's
-      // MEMORY_AND_DISK persist (and the edge checkpoint) otherwise
-      // live for the whole session — one leaked corpus-scale cache per
-      // call. The eager SER checkpoint materializes the labels first,
-      // making the unpersists safe (the module's standard
-      // checkpoint-then-unpersist pattern). The checkpointed labels
-      // cross back to the PARENT session through the second global
-      // temp view, so the returned plan (and the corpus join below)
-      // is planned under the caller's conf — AQE on.
-      labels.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        .createOrReplaceGlobalTempView(outView)
-      labels.unpersist()
-      edges.unpersist()
+      m.release(edges)
+      // The final labels cross back to the PARENT session through the
+      // second global temp view, so the returned plan (and the corpus
+      // join below) is planned under the caller's conf — AQE on. The
+      // returned frame reads them: the caller owns that checkpoint.
+      labels.createOrReplaceGlobalTempView(outView)
       val finalLabels = sess.table(s"$gtDb.$outView")
       // isolated docs: their own cluster; the paired-vertex label table
       // is tiny relative to the corpus, so AQE broadcasts it and the
@@ -482,10 +442,9 @@ object Dedup {
       // analysis is eager, so the returned frame holds the RESOLVED
       // checkpoint plan — the views are only needed until here.
       // dropGlobalTempView is a silent no-op for a never-created view
-      // (early failure paths); unpersist is idempotent on raw.
+      // (early failure paths).
       sess.catalog.dropGlobalTempView(rawView)
       sess.catalog.dropGlobalTempView(outView)
-      raw.unpersist()
     }
   }
 
@@ -538,12 +497,14 @@ object Dedup {
       idCol: String = "doc_id", tablePath: Option[String] = None): DataFrame = {
     val params = s"""{"num":$num,"den":$den,"k":$k,""" +
       s""""rowsPerBand":$rowsPerBand,"idCol":"$idCol"}"""
-    def build(dir: String): String = {
-      nearDupClusters(
-          minhashNearDup(docs, num, den, k, rowsPerBand), docs, idCol)
-        .write.mode("overwrite").parquet(dir)
-      dir
-    }
+    // the pairs and labels the chain hands back are freed once written
+    def build(dir: String): String =
+      Materialize.scope(docs.sparkSession, "Dedup.clustersTable") { _ =>
+        nearDupClusters(
+            minhashNearDup(docs, num, den, k, rowsPerBand), docs, idCol)
+          .write.mode("overwrite").parquet(dir)
+        dir
+      }
     val path = tablePath match {
       case Some(p) =>
         // Hadoop FS, not java.io.File: the durable path may be on any
@@ -599,7 +560,10 @@ object Dedup {
                 "never built; point tablePath elsewhere or drop the " +
                 "directory explicitly")
           fs.create(claim, true).close()
-          build(p)
+          // a build that throws wrote no table this writer must finish:
+          // a claim left behind would disable the guard above for good
+          try build(p)
+          catch { case e: Throwable => fs.delete(claim, false); throw e }
           val out = fs.create(sidecar, true)
           try out.write(params.getBytes("UTF-8")) finally out.close()
           fs.delete(claim, false)
@@ -862,23 +826,20 @@ object Dedup {
     val capped =
       capGroupSize(shingleHashes(docs, textCol, idCol), Seq("sh"), maxPostingList)
     val sizes = capped.groupBy("id").agg(count(lit(1)).as("nsh"))
-    // persisted: both self-join sides consume the same shingle
-    // pipeline; the bounded pair output checkpoints eagerly so the
-    // cache is released before returning
-    val shingles = capped.join(sizes, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val x = shingles.as("x"); val y = shingles.as("y")
-    val out = x.join(y, col("x.sh") === col("y.sh") && col("x.id") < col("y.id") &&
-        col("x.nsh") * den >= col("y.nsh") * num &&
-        col("y.nsh") * den >= col("x.nsh") * num)
-      .groupBy(col("x.id").as("a"), col("y.id").as("b"))
-      .agg(count(lit(1)).as("inter"),
-        first(col("x.nsh")).as("na"), first(col("y.nsh")).as("nb"))
-      .filter(col("inter") * den >= (col("na") + col("nb") - col("inter")) * num)
-      .select(col("a"), col("b"))
-    val ck = ckptPairs(out)
-    shingles.unpersist()
-    ck
+    // materialized: both self-join sides consume the same shingle
+    // pipeline; freed on return
+    Materialize.scope(docs.sparkSession, "Dedup.ngramJaccardNearDup") { m =>
+      val shingles = m("shingles")(capped.join(sizes, "id"))
+      val x = shingles.as("x"); val y = shingles.as("y")
+      m("pairs")(x.join(y, col("x.sh") === col("y.sh") && col("x.id") < col("y.id") &&
+          col("x.nsh") * den >= col("y.nsh") * num &&
+          col("y.nsh") * den >= col("x.nsh") * num)
+        .groupBy(col("x.id").as("a"), col("y.id").as("b"))
+        .agg(count(lit(1)).as("inter"),
+          first(col("x.nsh")).as("na"), first(col("y.nsh")).as("nb"))
+        .filter(col("inter") * den >= (col("na") + col("nb") - col("inter")) * num)
+        .select(col("a"), col("b")))
+    }
   }
 
   /** Asymmetric containment near-dup: pairs where the SMALLER
@@ -901,21 +862,18 @@ object Dedup {
     val capped =
       capGroupSize(shingleHashes(docs, textCol, idCol), Seq("sh"), maxPostingList)
     val sizes = capped.groupBy("id").agg(count(lit(1)).as("nsh"))
-    // same cache lifecycle as [[ngramJaccardNearDup]]: persist feeds
-    // both self-join sides once, eager-checkpoint the bounded pairs,
-    // release the cache before returning
-    val shingles = capped.join(sizes, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val x = shingles.as("x"); val y = shingles.as("y")
-    val out = x.join(y, col("x.sh") === col("y.sh") && col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("a"), col("y.id").as("b"))
-      .agg(count(lit(1)).as("inter"),
-        first(col("x.nsh")).as("na"), first(col("y.nsh")).as("nb"))
-      .select(col("a"), col("b"),
-        expr("(1000 * inter) div least(na, nb)").as("cont_pm"))
-      .filter(col("cont_pm") >= thresholdPm)
-    val ck = ckptPairs(out)
-    shingles.unpersist()
-    ck
+    // same lifecycle as [[ngramJaccardNearDup]]: the shingles feed
+    // both self-join sides once and are freed on return
+    Materialize.scope(docs.sparkSession, "Dedup.containmentPairs") { m =>
+      val shingles = m("shingles")(capped.join(sizes, "id"))
+      val x = shingles.as("x"); val y = shingles.as("y")
+      m("pairs")(x.join(y, col("x.sh") === col("y.sh") && col("x.id") < col("y.id"))
+        .groupBy(col("x.id").as("a"), col("y.id").as("b"))
+        .agg(count(lit(1)).as("inter"),
+          first(col("x.nsh")).as("na"), first(col("y.nsh")).as("nb"))
+        .select(col("a"), col("b"),
+          expr("(1000 * inter) div least(na, nb)").as("cont_pm"))
+        .filter(col("cont_pm") >= thresholdPm))
+    }
   }
 }

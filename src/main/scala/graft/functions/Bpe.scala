@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.Materialize
+
 /** Byte-pair-encoding merge training (Sennrich, Haddow & Birch,
   * "Neural Machine Translation of Rare Words with Subword Units",
   * ACL 2016) — the tokenizer-training half of an LLM data pipeline.
@@ -33,7 +35,7 @@ object Bpe {
     * PipelineSpec invariant guard. INVARIANT (do not relax): the ONLY
     * data that crosses the executor→driver boundary during training is
     * the single rank-1 merge pair per round — the pair-count table and
-    * the vocab stay distributed (localCheckpoint, never collect). A
+    * the vocab stay distributed (materialized, never collect). A
     * future edit that collects the counts table breaks BPE at corpus
     * scale; the spec pins this counter to exactly `rounds` rows. */
   private[graft] val driverCollectedRows = new java.util.concurrent.atomic.AtomicLong(0)
@@ -61,53 +63,47 @@ object Bpe {
   /** Train `rounds` BPE merges over the corpus, reporting the top-K
     * pair table of every round: (round, rank, pair, cnt), rank 1 =
     * the merge applied before the next round. Ties pin to the
-    * lexicographically smaller pair. */
+    * lexicographically smaller pair. The caller owns the per-round
+    * tables the result reads ([[Materialize]]). */
   def train(docs: DataFrame, textCol: String = "text", rounds: Int = 2,
-      topK: Int = 8): DataFrame = {
-    // the ONLY corpus-sized stage: word frequencies
-    var vocab = docs
-      .select(explode(Text.tokens(col(textCol))).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(charRepr(col("w")).as("repr"), col("freq"))
-      // serialized: the vocab is corpus-vocabulary-scale and lives
-      // across every training round — deserialized rows are 5-10x
-      // the footprint and OOM a 30x data step
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // post-limit topK rows only, but keep a non-foldable constant key
-    // so WindowExec doesn't warn on every training round (the warning
-    // noise would mask real single-partition regressions in the bench)
-    val wRank = Window
-      .partitionBy(graft.operators.GlobalRank.onePartitionKey(col("cnt")))
-      .orderBy(col("cnt").desc, col("pair").asc)
-    val roundTables = (1 to rounds).map { r =>
-      val ranked = vocab
-        .select(col("freq"), explode(pairsOf(col("repr"))).as("pair"))
-        .groupBy("pair").agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("pair").asc).limit(topK)
-        .select(lit(r).as("round"), row_number().over(wRank).as("rank"),
-          col("pair"), col("cnt"))
-        // pin: next round mutates vocab under it (topK rows, but SER
-        // uniformly — CheckpointStorageLintSpec)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      // the argmax collect: exactly ONE row per round (see
-      // driverCollectedRows invariant above)
-      val bestRows = ranked.filter(col("rank") === 1).select("pair").collect()
-      driverCollectedRows.addAndGet(bestRows.length.toLong)
-      val best = bestRows.headOption.map(_.getString(0))
-      best.foreach { p =>
-        val merged = p.replace(" ", "")
-        val padded = concat(lit(" "), col("repr"), lit(" "))
-        val appliedPad = (1 to 3).foldLeft(padded)((c, _) => mergeOnce(c, p, merged))
-        vocab = vocab
-          .select(trim(appliedPad).as("repr"), col("freq"))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      topK: Int = 8): DataFrame =
+    Materialize.scope(docs.sparkSession, "Bpe.train") { m =>
+      // the ONLY corpus-sized stage: word frequencies
+      // the vocab is corpus-vocabulary-scale and lives across every
+      // training round; each round's vocab is freed on return
+      var vocab = m("vocab")(docs
+        .select(explode(Text.tokens(col(textCol))).as("w"))
+        .filter(length(col("w")) > 0)
+        .groupBy("w").agg(count(lit(1)).as("freq"))
+        .select(charRepr(col("w")).as("repr"), col("freq")))
+      // post-limit topK rows only, but keep a non-foldable constant key
+      // so WindowExec doesn't warn on every training round (the warning
+      // noise would mask real single-partition regressions in the bench)
+      val wRank = Window
+        .partitionBy(graft.operators.GlobalRank.onePartitionKey(col("cnt")))
+        .orderBy(col("cnt").desc, col("pair").asc)
+      val roundTables = (1 to rounds).map { r =>
+        // pinned: the next round mutates vocab under it; the returned
+        // table reads it, so the caller owns it
+        val ranked = m("ranked")(vocab
+          .select(col("freq"), explode(pairsOf(col("repr"))).as("pair"))
+          .groupBy("pair").agg(sum("freq").as("cnt"))
+          .orderBy(col("cnt").desc, col("pair").asc).limit(topK)
+          .select(lit(r).as("round"), row_number().over(wRank).as("rank"),
+            col("pair"), col("cnt")))
+        // the argmax collect: exactly ONE row per round (see
+        // driverCollectedRows invariant above)
+        val bestRows = ranked.filter(col("rank") === 1).select("pair").collect()
+        driverCollectedRows.addAndGet(bestRows.length.toLong)
+        val best = bestRows.headOption.map(_.getString(0))
+        best.foreach { p =>
+          val merged = p.replace(" ", "")
+          val padded = concat(lit(" "), col("repr"), lit(" "))
+          val appliedPad = (1 to 3).foldLeft(padded)((c, _) => mergeOnce(c, p, merged))
+          vocab = m("vocab")(vocab.select(trim(appliedPad).as("repr"), col("freq")))
+        }
+        ranked
       }
-      ranked
+      roundTables.reduce(_ unionByName _).orderBy("round", "rank")
     }
-    roundTables.reduce(_ unionByName _).orderBy("round", "rank")
-  }
 }

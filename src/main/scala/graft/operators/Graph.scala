@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.store.Materialize
+
 /** Iterative graph analytics over edge DataFrames — the weighted
   * companion to [[graft.dedup.Dedup.nearDupClusters]]'s min-label
   * propagation (connected components): PageRank scores node
@@ -20,9 +22,10 @@ import org.apache.spark.sql.functions._
   * Scale posture: the edge list (with degree attached) is built ONCE
   * and checkpointed; each iteration is one join on the edge key and
   * one map-side-combining sum — the standard scalable PageRank shape
-  * (no driver-side adjacency, no per-node loops). `localCheckpoint`
-  * truncates the per-iteration lineage so plan analysis stays O(1)
-  * in the iteration count.
+  * (no driver-side adjacency, no per-node loops). Materializing
+  * ([[Materialize]]) truncates the per-iteration lineage so plan
+  * analysis stays O(1) in the iteration count. The returned frames
+  * read the materialized tables, so the caller owns them.
   */
 object Graph {
 
@@ -37,52 +40,44 @@ object Graph {
     * (850·n·10⁶ < 2⁶³). Under ANSI an overflow THROWS rather than
     * wrapping; graphs beyond that scale need the rank scale dropped
     * to ×10³ (exactness trade documented here, not silently made). */
-  def pageRank(pairs: DataFrame, iters: Int = 2): DataFrame = {
-    val und = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-    // ADJACENCY form (round-18 rework, guide §2.4/§3): the old edge
-    // table was (src, dst, deg) — m rows — and every iteration paid a
-    // sort-merge join of those m rows against the n-row rank table
-    // (two sorts of corpus-scale input per iteration). Grouping the
-    // out-neighborhoods once into (src, deg, ds: array<dst>) makes
-    // the per-iteration join NODE-sized on both sides (n vs n, the
-    // rank table is already partitioned by node from the previous
-    // groupBy); contributions then fan out map-side via explode —
-    // the only per-iteration shuffle left is the groupBy(dst) partial
-    // sum the algorithm fundamentally requires. deg = size(ds): one
-    // aggregate builds both. Stored SERIALIZED with disk spill: the
-    // adjacency table is the one corpus-sized structure here, and
-    // the default deserialized row cache is 5-10x its on-disk size —
-    // at 30x data that is the difference between fitting and OOM,
-    // while the per-iteration deserialization cost is noise against
-    // the join it feeds. Eager: it feeds every iteration, and the
-    // rank table below is now lazy.
-    val adjd = und.groupBy("src")
-      .agg(count(lit(1)).as("deg"), collect_list(col("dst")).as("ds"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var ranks = adjd.select(col("src").as("node"), lit(1000000L).as("pr"))
-    (1 to iters).foreach { i =>
-      ranks = adjd.join(ranks, adjd("src") === ranks("node"))
-        // contrib(u) = pr(u) div deg(u), identical per out-edge, so
-        // compute it ONCE per node and explode it over the
-        // out-neighborhood — map-side fan-out, no m-row join
-        .select(explode(col("ds")).as("dst"), expr("pr div deg").as("c"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum("c").as("sc"))
-        .select(col("node"), expr("150000 + (850 * sc) div 1000").as("pr"))
-      // Per-iteration eager checkpoints forced one synchronous job
-      // per iteration (3 jobs for the benched 2-iteration call) where
-      // a lazy chain pipelines into the caller's single action. Rank
-      // lineage still cannot grow unboundedly for long loops: cut it
-      // every 4 iterations (node-sized, serialized like the adjacency
-      // table) so plan analysis stays O(1) in the iteration count.
-      if (i % 4 == 0 && i < iters)
-        ranks = ranks.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+  def pageRank(pairs: DataFrame, iters: Int = 2): DataFrame =
+    Materialize.scope(pairs.sparkSession, "Graph.pageRank") { m =>
+      val und = pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+      // ADJACENCY form (round-18 rework, guide §2.4/§3): the old edge
+      // table was (src, dst, deg) — m rows — and every iteration paid a
+      // sort-merge join of those m rows against the n-row rank table
+      // (two sorts of corpus-scale input per iteration). Grouping the
+      // out-neighborhoods once into (src, deg, ds: array<dst>) makes
+      // the per-iteration join NODE-sized on both sides (n vs n, the
+      // rank table is already partitioned by node from the previous
+      // groupBy); contributions then fan out map-side via explode —
+      // the only per-iteration shuffle left is the groupBy(dst) partial
+      // sum the algorithm fundamentally requires. deg = size(ds): one
+      // aggregate builds both. Materialized: it feeds every iteration,
+      // and the rank table below is lazy.
+      val adjd = m("adjacency")(und.groupBy("src")
+        .agg(count(lit(1)).as("deg"), collect_list(col("dst")).as("ds")))
+      var ranks = adjd.select(col("src").as("node"), lit(1000000L).as("pr"))
+      (1 to iters).foreach { i =>
+        ranks = adjd.join(ranks, adjd("src") === ranks("node"))
+          // contrib(u) = pr(u) div deg(u), identical per out-edge, so
+          // compute it ONCE per node and explode it over the
+          // out-neighborhood — map-side fan-out, no m-row join
+          .select(explode(col("ds")).as("dst"), expr("pr div deg").as("c"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum("c").as("sc"))
+          .select(col("node"), expr("150000 + (850 * sc) div 1000").as("pr"))
+        // Per-iteration eager checkpoints forced one synchronous job
+        // per iteration (3 jobs for the benched 2-iteration call) where
+        // a lazy chain pipelines into the caller's single action. Rank
+        // lineage still cannot grow unboundedly for long loops: cut it
+        // every 4 iterations (node-sized, serialized like the adjacency
+        // table) so plan analysis stays O(1) in the iteration count.
+        if (i % 4 == 0 && i < iters) ranks = m("ranks")(ranks)
+      }
+      ranks
     }
-    ranks
-  }
 
   /** Per-node triangle participation counts over an undirected pair
     * set (a, b), a < b, distinct. Degree-ordered orientation (the
@@ -94,40 +89,39 @@ object Graph {
     * deg² wedges undirected) — stays O(m^1.5) total regardless of
     * degree skew. Three hash joins on node keys, no cartesian.
     * Returns (node, n_tri). */
-  def triangleCounts(pairs: DataFrame): DataFrame = {
-    val und = pairs.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select(col("u").as("x"), col("deg").as("du")),
-        col("u") === col("x")).drop("x")
-      .join(deg.select(col("u").as("y"), col("deg").as("dv")),
-        col("v") === col("y")).drop("y")
-    // keep the edge only in its low-endpoint orientation.
-    // Checkpointed SERIALIZED: the oriented edge set feeds THREE
-    // plan branches (both wedge sides and the closing probe), and
-    // without materialization Catalyst rebuilds the union + two
-    // degree joins for each — at 30x data that is six extra
-    // corpus-sized sorts and the heap churn that OOM'd the suite
-    // bench. One m-sized serialized table, built once, is the
-    // iteration-invariant-edges pattern from pageRank above.
-    val oriented = withDeg.filter(
-      col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
-      .select(col("u"), col("v"), col("dv"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // wedges (v, w) at each source u, ordered by the SAME (deg, id)
-    // key so the closing edge is exactly the oriented v -> w
-    val wedges = oriented.as("e1")
-      .join(oriented.as("e2"), col("e1.u") === col("e2.u") &&
-        (col("e1.dv") < col("e2.dv") ||
-          (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v"))))
-      .select(col("e1.u").as("tu"), col("e1.v").as("tv"), col("e2.v").as("tw"))
-    val tris = wedges.join(oriented.select(col("u").as("tv"), col("v").as("tw")),
-      Seq("tv", "tw"))
-    tris.select(explode(array(col("tu"), col("tv"), col("tw"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-  }
+  def triangleCounts(pairs: DataFrame): DataFrame =
+    Materialize.scope(pairs.sparkSession, "Graph.triangleCounts") { m =>
+      val und = pairs.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
+      val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
+      val withDeg = und
+        .join(deg.select(col("u").as("x"), col("deg").as("du")),
+          col("u") === col("x")).drop("x")
+        .join(deg.select(col("u").as("y"), col("deg").as("dv")),
+          col("v") === col("y")).drop("y")
+      // keep the edge only in its low-endpoint orientation.
+      // Materialized: the oriented edge set feeds THREE
+      // plan branches (both wedge sides and the closing probe), and
+      // without materialization Catalyst rebuilds the union + two
+      // degree joins for each — at 30x data that is six extra
+      // corpus-sized sorts and the heap churn that OOM'd the suite
+      // bench. One m-sized serialized table, built once, is the
+      // iteration-invariant-edges pattern from pageRank above.
+      val oriented = m("oriented edges")(withDeg.filter(
+        col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
+        .select(col("u"), col("v"), col("dv")))
+      // wedges (v, w) at each source u, ordered by the SAME (deg, id)
+      // key so the closing edge is exactly the oriented v -> w
+      val wedges = oriented.as("e1")
+        .join(oriented.as("e2"), col("e1.u") === col("e2.u") &&
+          (col("e1.dv") < col("e2.dv") ||
+            (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v"))))
+        .select(col("e1.u").as("tu"), col("e1.v").as("tv"), col("e2.v").as("tw"))
+      val tris = wedges.join(oriented.select(col("u").as("tv"), col("v").as("tw")),
+        Seq("tv", "tw"))
+      tris.select(explode(array(col("tu"), col("tv"), col("tw"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_tri"))
+    }
 
   /** [[triangleCounts]] by adjacency-set intersection (the edge-
     * iterator form of Chiba-Nishizeki / Latapy's compact-forward):
@@ -144,37 +138,37 @@ object Graph {
     * difference between heap-resident and spilling at a 30x step.
     * Returns (node, n_tri) — exactly [[triangleCounts]]'s result
     * (equality property-tested in GraphSpec). */
-  def triangleCountsAdj(pairs: DataFrame): DataFrame = {
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val und = pairs.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select(col("u").as("x"), col("deg").as("du")),
-        col("u") === col("x")).drop("x")
-      .join(deg.select(col("u").as("y"), col("deg").as("dv")),
-        col("v") === col("y")).drop("y")
-    val oriented = withDeg.filter(
-      col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
-      .select(col("u"), col("v"))
-      .localCheckpoint(true, ser) // feeds adj build + both edge joins
-    val adj = oriented.groupBy("u")
-      .agg(sort_array(collect_list(col("v"))).as("ns"))
-      .localCheckpoint(true, ser) // feeds both sides of the edge join
-    val closed = oriented
-      .join(adj, Seq("u"))
-      .withColumnRenamed("ns", "nsu")
-      .join(adj.select(col("u").as("v"), col("ns").as("nsv")), Seq("v"))
-      .select(col("u"), col("v"),
-        array_intersect(col("nsu"), col("nsv")).as("ws"))
-      .filter(size(col("ws")) > 0)
-    // u and v each participate in every triangle this edge closes;
-    // each w in exactly one per membership
-    val uv = closed.select(
-      explode(array(col("u"), col("v"))).as("node"),
-      size(col("ws")).cast("long").as("c"))
-    val wc = closed.select(explode(col("ws")).as("node"), lit(1L).as("c"))
-    uv.unionByName(wc)
-      .groupBy("node").agg(sum("c").as("n_tri"))
-  }
+  def triangleCountsAdj(pairs: DataFrame): DataFrame =
+    Materialize.scope(pairs.sparkSession, "Graph.triangleCountsAdj") { m =>
+      val und = pairs.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
+      val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
+      val withDeg = und
+        .join(deg.select(col("u").as("x"), col("deg").as("du")),
+          col("u") === col("x")).drop("x")
+        .join(deg.select(col("u").as("y"), col("deg").as("dv")),
+          col("v") === col("y")).drop("y")
+      // feeds adj build + both edge joins
+      val oriented = m("oriented edges")(withDeg.filter(
+        col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
+        .select(col("u"), col("v")))
+      // feeds both sides of the edge join
+      val adj = m("adjacency")(oriented.groupBy("u")
+        .agg(sort_array(collect_list(col("v"))).as("ns")))
+      val closed = oriented
+        .join(adj, Seq("u"))
+        .withColumnRenamed("ns", "nsu")
+        .join(adj.select(col("u").as("v"), col("ns").as("nsv")), Seq("v"))
+        .select(col("u"), col("v"),
+          array_intersect(col("nsu"), col("nsv")).as("ws"))
+        .filter(size(col("ws")) > 0)
+      // u and v each participate in every triangle this edge closes;
+      // each w in exactly one per membership
+      val uv = closed.select(
+        explode(array(col("u"), col("v"))).as("node"),
+        size(col("ws")).cast("long").as("c"))
+      val wc = closed.select(explode(col("ws")).as("node"), lit(1L).as("c"))
+      uv.unionByName(wc)
+        .groupBy("node").agg(sum("c").as("n_tri"))
+    }
 }

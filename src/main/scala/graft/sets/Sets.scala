@@ -3,6 +3,7 @@ package graft.sets
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.classify.{Classify, NameCase}
+import graft.store.Materialize
 
 /** Dimension ("set") materialization (SURVEY.md §1.1, §2.10; ref
   * `Sets.pm:34-164,222-336`): turn repository metadata into
@@ -135,50 +136,51 @@ object Sets {
     * `next unless defined $s`. With no `depositable` dim the closure
     * is unfiltered (legacy behavior).
     *
-    * Each round `localCheckpoint`s the accumulator (same treatment as
+    * Each round materializes the accumulator (same treatment as
     * `Graph.pageRank`) so the final plan depth is O(1) in `maxDepth`
     * instead of stacking `maxDepth` unions/excepts of lineage —
-    * guarded by PlanShapeSpec ("ancestorClosure plan depth"). */
+    * guarded by PlanShapeSpec ("ancestorClosure plan depth"). The
+    * superseded rounds are freed on return; the returned closure reads
+    * the last accumulator, which the caller owns
+    * ([[graft.store.Materialize]]). */
   def ancestorClosure(assignments: DataFrame, tree: DataFrame,
       maxDepth: Int = 12,
       depositable: Option[DataFrame] = None,
-      whitelist: Set[String] = Set.empty): DataFrame = {
-    // assignments: (set_value, id); tree: (child, parent)
-    val t = broadcast(tree.select(col("child"), col("parent")).distinct())
-    // serialized: the accumulator is assignment-scale (one row per
-    // item x ancestor) and survives the whole loop — see
-    // CheckpointStorageLintSpec for the OOM class this avoids
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    var acc = assignments.select("set_value", "id").distinct()
-      .localCheckpoint(true, ser)
-    var frontier = acc
-    var depth = 0
-    var growing = true
-    while (growing && depth < maxDepth) {
-      val parents = frontier
-        .join(t, frontier("set_value") === t("child"))
-        .select(col("parent").as("set_value"), col("id"))
-        .distinct()
-      val added = parents.except(acc).localCheckpoint(true, ser)
-      if (added.isEmpty) growing = false
-      else {
-        acc = acc.unionByName(added).distinct().localCheckpoint(true, ser)
-        frontier = added
+      whitelist: Set[String] = Set.empty): DataFrame =
+    Materialize.scope(assignments.sparkSession, "Sets.ancestorClosure") { m =>
+      // assignments: (set_value, id); tree: (child, parent)
+      val t = broadcast(tree.select(col("child"), col("parent")).distinct())
+      // the accumulator is assignment-scale (one row per item x
+      // ancestor) and survives the whole loop
+      var acc = m("acc")(assignments.select("set_value", "id").distinct())
+      var frontier = acc
+      var depth = 0
+      var growing = true
+      while (growing && depth < maxDepth) {
+        val parents = frontier
+          .join(t, frontier("set_value") === t("child"))
+          .select(col("parent").as("set_value"), col("id"))
+          .distinct()
+        val added = m("added")(parents.except(acc))
+        if (added.isEmpty) growing = false
+        else {
+          acc = m("acc")(acc.unionByName(added).distinct())
+          frontier = added
+        }
+        depth += 1
       }
-      depth += 1
+      depositable.fold(acc) { dep =>
+        val d = broadcast(dep
+          .select(col("subjectid"), col("depositable").cast("boolean").as("depositable"))
+          .distinct())
+        val whitelisted =
+          if (whitelist.nonEmpty) col("subjectid").isin(whitelist.toSeq: _*)
+          else lit(false)
+        acc.join(d, acc("set_value") === d("subjectid"), "left")
+          .filter(coalesce(col("depositable") || whitelisted, lit(false)))
+          .select(acc("set_value"), acc("id"))
+      }
     }
-    depositable.fold(acc) { dep =>
-      val d = broadcast(dep
-        .select(col("subjectid"), col("depositable").cast("boolean").as("depositable"))
-        .distinct())
-      val whitelisted =
-        if (whitelist.nonEmpty) col("subjectid").isin(whitelist.toSeq: _*)
-        else lit(false)
-      acc.join(d, acc("set_value") === d("subjectid"), "left")
-        .filter(coalesce(col("depositable") || whitelisted, lit(false)))
-        .select(acc("set_value"), acc("id"))
-    }
-  }
 
   /** Grouping bridge (ref `Handler.pm:942-977`): pre-joined pairs of
     * set membership x grouping membership per item, so "top G within

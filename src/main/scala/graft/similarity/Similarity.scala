@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.store.Materialize
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -121,34 +122,34 @@ object Similarity {
     * each cell's mean with the [[VectorMean]] custom aggregate
     * (map-side partial buffers; vectors never shuffle). Returns
     * (cid, cv) centroids ready to pass into an IVF search.
-    * Empty cells drop out (standard Lloyd behavior). */
+    * Empty cells drop out (standard Lloyd behavior). The caller owns
+    * the materialized centroids ([[Materialize]]). */
   def kmeansCentroids(corpus: DataFrame, stride: Int = 43, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxCentroids: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val vecMean = udaf(VectorMean)
-    val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    // rank-based cap on the stride init, same guard as pqCodebook /
-    // ivf cells: an UNCAPPED n/stride init makes every Lloyd pass
-    // O(n^2/stride) (233k broadcast centroids on a 10M corpus) —
-    // binding only above stride*maxCentroids (~176k) vectors, so
-    // every tested scale is byte-identical
-    var cents = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
-      .orderBy(col(idCol)).limit(maxCentroids)
-      .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-    val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
-    (1 to iters).foreach { _ =>
-      val assigned = v.crossJoin(broadcast(cents))
-        .select(col("id"), col("v"), col("cid"),
-          cosineCol(col("v"), col("cv")).as("c"))
-        .withColumn("r", row_number().over(wAssign))
-        .filter(col("r") === 1)
-      cents = assigned.groupBy("cid").agg(vecMean(col("v")).as("cv"))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      maxCentroids: Int = 4096): DataFrame =
+    Materialize.scope(corpus.sparkSession, "Similarity.kmeansCentroids") { m =>
+      import org.apache.spark.sql.expressions.Window
+      val vecMean = udaf(VectorMean)
+      val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      // rank-based cap on the stride init, same guard as pqCodebook /
+      // ivf cells: an UNCAPPED n/stride init makes every Lloyd pass
+      // O(n^2/stride) (233k broadcast centroids on a 10M corpus) —
+      // binding only above stride*maxCentroids (~176k) vectors, so
+      // every tested scale is byte-identical
+      var cents = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
+        .orderBy(col(idCol)).limit(maxCentroids)
+        .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
+      val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
+      (1 to iters).foreach { _ =>
+        val assigned = v.crossJoin(broadcast(cents))
+          .select(col("id"), col("v"), col("cid"),
+            cosineCol(col("v"), col("cv")).as("c"))
+          .withColumn("r", row_number().over(wAssign))
+          .filter(col("r") === 1)
+        cents = m("centroids")(assigned.groupBy("cid").agg(vecMean(col("v")).as("cv")))
+      }
+      cents
     }
-    cents
-  }
 
   /** [[annIvf]] against TRAINED cells: k-means centroids replace the
     * id-stride sample, everything else identical. */
@@ -578,46 +579,47 @@ object Similarity {
     *    holds < 2^41 members at the 2^22 quantized magnitude).
     * Empty codewords drop out (standard Lloyd). The member re-explode
     * shuffles (m, cw, pos, x) rows — the same volume as reading the
-    * vectors once per iteration; `iters` is small by design. */
+    * vectors once per iteration; `iters` is small by design. The
+    * caller owns the materialized codebook ([[Materialize]]). */
   def pqCodebookTrained(corpus: DataFrame, m: Int = 4, subDim: Int = 16,
       stride: Int = 31, k: Int = 16, iters: Int = 1,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qsub = corpus.select(col(idCol).as("id"),
-      posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "qv")))
-    var cb = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
-      .orderBy(col(idCol)).limit(k)
-      .select(col(idCol).as("cw"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "cv")))
-      .select(col("m"), col("cw"), col("cv"))
-    (1 to iters).foreach { _ =>
-      // assignment: one pass of the quantized corpus against the
-      // BROADCAST packed codebook — per-row [[argminCw]] (identical
-      // deterministic (d, cw) ties), no group aggregate, qv rides
-      // along in the same projection
-      val assigned = qsub.join(broadcast(packCodebook(cb)), "m")
-        .select(col("id"), col("m"), col("qv"),
-          argminCw(col("qv"), col("cbs"), sqDistLong).as("best"))
-      // update: element-wise integer floor-mean per codeword —
-      // map-side-combining long sums, then the tiny (m·k·subDim)
-      // position table reassembles into arrays
-      val sums = assigned
-        .select(col("m"), col("best.cw").as("cw"),
-          posexplode(col("qv")).as(Seq("pos", "x")))
-        .groupBy("m", "cw", "pos")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-      cb = sums
-        .groupBy("m", "cw")
-        .agg(sort_array(collect_list(
-          struct(col("pos"), expr("sx div n").as("v")))).as("pv"))
-        .select(col("m"), col("cw"),
-          transform(col("pv"), p => p.getField("v")).as("cv"))
-        // truncate the per-iteration lineage (the codebook is m·k
-        // rows; re-analyzing a growing plan tree would dominate)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    Materialize.scope(corpus.sparkSession, "Similarity.pqCodebookTrained") { pin =>
+      val qsub = corpus.select(col(idCol).as("id"),
+        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "qv")))
+      var cb = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
+        .orderBy(col(idCol)).limit(k)
+        .select(col(idCol).as("cw"),
+          posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "cv")))
+        .select(col("m"), col("cw"), col("cv"))
+      (1 to iters).foreach { _ =>
+        // assignment: one pass of the quantized corpus against the
+        // BROADCAST packed codebook — per-row [[argminCw]] (identical
+        // deterministic (d, cw) ties), no group aggregate, qv rides
+        // along in the same projection
+        val assigned = qsub.join(broadcast(packCodebook(cb)), "m")
+          .select(col("id"), col("m"), col("qv"),
+            argminCw(col("qv"), col("cbs"), sqDistLong).as("best"))
+        // update: element-wise integer floor-mean per codeword —
+        // map-side-combining long sums, then the tiny (m·k·subDim)
+        // position table reassembles into arrays
+        val sums = assigned
+          .select(col("m"), col("best.cw").as("cw"),
+            posexplode(col("qv")).as(Seq("pos", "x")))
+          .groupBy("m", "cw", "pos")
+          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+        // materialized to truncate the per-iteration lineage (the
+        // codebook is m·k rows; re-analyzing a growing plan tree would
+        // dominate)
+        cb = pin("codebook")(sums
+          .groupBy("m", "cw")
+          .agg(sort_array(collect_list(
+            struct(col("pos"), expr("sx div n").as("v")))).as("pv"))
+          .select(col("m"), col("cw"),
+            transform(col("pv"), p => p.getField("v")).as("cv")))
+      }
+      cb
     }
-    cb
-  }
 
   /** [[annPqAdc]] against a TRAINED codebook: identical ADC dataflow
     * (codes scanned, per-query distance tables broadcast), with

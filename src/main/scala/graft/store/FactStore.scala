@@ -150,18 +150,17 @@ object FactStore {
     // byte-identical, not just row-set-identical
     val ordered = df.repartition(col("date"))
       .sortWithinPartitions("date", "id", "value")
-    // materialize (serialized, disk-spillable) before overwriting the
-    // same path — Spark rejects writes whose input scan reads the
-    // output location otherwise. At warehouse scale compact to a new
-    // root and swap instead; the in-place form is for the day-window
-    // a backfill just touched, which fits executor storage.
-    val snap = ordered.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    snap.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", targetRows.toLong)
-      .partitionBy("date").parquet(path)
-    snap.unpersist()
+    // materialize before overwriting the same path — Spark rejects
+    // writes whose input scan reads the output location otherwise —
+    // and free the snapshot once written. At warehouse scale compact
+    // to a new root and swap instead; the in-place form is for the
+    // day-window a backfill just touched, which fits executor storage.
+    Materialize.scope(spark, "FactStore.compact") { m =>
+      m("snapshot")(ordered).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", targetRows.toLong)
+        .partitionBy("date").parquet(path)
+    }
     read(spark, path).groupBy("date")
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n_rows"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.AccessEvent
+import graft.store.Materialize
 
 /** Structured-Streaming ingest (SURVEY.md §2.9): the streaming analog
   * of the batch daily-fact pipeline.
@@ -418,59 +419,57 @@ object Streaming {
     *
     * Docs under 3 tokens carry no shingles and are excluded on both
     * sides (the batch window form drops them via its lead-null
-    * filter). */
+    * filter). The caller owns the materialized pairs ([[Materialize]]). */
   def availableNowNearDup(s: SparkSession, docsPath: String,
       k: Int = 16, rowsPerBand: Int = 4,
       num: Int = 1, den: Int = 2): DataFrame = {
     import graft.dedup.Dedup
     import graft.functions.Text
     val batchDocs = s.read.parquet(docsPath)
-    // static index: the batch band table + the exact-verify features
-    val features = Dedup.shingleHashes(batchDocs)
-      .select(col("id"), col("sh").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val index = Dedup.lshBands(Dedup.minhashSignaturesFrom(features, k),
-        rowsPerBand)
-      .select(col("id").as("b"), col("band"), col("bkey"))
-    // stream side: row-local 3-gram shingle hashes -> k masked minima
-    // tokens computed ONCE per row: the old filter-then-project form
-    // ran the tokenizer split twice per document (once in the filter,
-    // once in the projection) — measured 1.15 -> 0.70 s cold on the
-    // batch-equivalent projection (round 18). Same row set: docs
-    // under 3 tokens carry no shingles either way.
-    val stream = s.readStream.schema(batchDocs.schema)
-      .parquet(streamablePath(docsPath))
-      .withColumn("toks", Text.tokens(col("text")))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("sh", transform(
-        sequence(lit(0), size(col("toks")) - 3),
-        i => Text.hash60(concat_ws(" ",
-          element_at(col("toks"), i + 1),
-          element_at(col("toks"), i + 2),
-          element_at(col("toks"), i + 3)))))
-    val sigCols = Dedup.minhashMasks(k).zipWithIndex.map { case (m, i) =>
-      array_min(transform(col("sh"), x => x.bitwiseXOR(lit(m)))).as(s"m$i")
+    Materialize.scope(s, "Streaming.availableNowNearDup") { m =>
+      // static index: the batch band table + the exact-verify features
+      val features = m("features")(Dedup.shingleHashes(batchDocs)
+        .select(col("id"), col("sh").as("h")))
+      val index = Dedup.lshBands(Dedup.minhashSignaturesFrom(features, k),
+          rowsPerBand)
+        .select(col("id").as("b"), col("band"), col("bkey"))
+      // stream side: row-local 3-gram shingle hashes -> k masked minima
+      // tokens computed ONCE per row: the old filter-then-project form
+      // ran the tokenizer split twice per document (once in the filter,
+      // once in the projection) — measured 1.15 -> 0.70 s cold on the
+      // batch-equivalent projection (round 18). Same row set: docs
+      // under 3 tokens carry no shingles either way.
+      val stream = s.readStream.schema(batchDocs.schema)
+        .parquet(streamablePath(docsPath))
+        .withColumn("toks", Text.tokens(col("text")))
+        .filter(size(col("toks")) >= 3)
+        .withColumn("sh", transform(
+          sequence(lit(0), size(col("toks")) - 3),
+          i => Text.hash60(concat_ws(" ",
+            element_at(col("toks"), i + 1),
+            element_at(col("toks"), i + 2),
+            element_at(col("toks"), i + 3)))))
+      val sigCols = Dedup.minhashMasks(k).zipWithIndex.map { case (m, i) =>
+        array_min(transform(col("sh"), x => x.bitwiseXOR(lit(m)))).as(s"m$i")
+      }
+      val streamBands = Dedup.lshBands(
+        stream.select(col("doc_id").as("id") +: sigCols: _*), rowsPerBand)
+      // every unordered pair (a < b) surfaces once with the stream row
+      // as the smaller id (the stream replays every id)
+      val cands = streamBands.select(col("id").as("a"), col("band"), col("bkey"))
+        .join(index, Seq("band", "bkey"))
+        .filter(col("a") < col("b"))
+        .select("a", "b")
+      // candidate pairs land in a PARQUET sink, not the driver-memory
+      // sink: the LSH candidate set grows with corpus density (d3's
+      // batch form emitted ~2.2M pairs at the 30x step and driver
+      // materialization OOM'd the harness there) — the file sink keeps
+      // the pair stream distributed end-to-end, and the follow-on batch
+      // verify reads it back as an ordinary scan
+      val sunk = runToParquet(cands, "st6_parity")
+      // the verified pairs escape to the caller; the features are freed
+      m("pairs")(Dedup.verifyJaccardOn(sunk.distinct(), features, num, den))
     }
-    val streamBands = Dedup.lshBands(
-      stream.select(col("doc_id").as("id") +: sigCols: _*), rowsPerBand)
-    // every unordered pair (a < b) surfaces once with the stream row
-    // as the smaller id (the stream replays every id)
-    val cands = streamBands.select(col("id").as("a"), col("band"), col("bkey"))
-      .join(index, Seq("band", "bkey"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-    // candidate pairs land in a PARQUET sink, not the driver-memory
-    // sink: the LSH candidate set grows with corpus density (d3's
-    // batch form emitted ~2.2M pairs at the 30x step and driver
-    // materialization OOM'd the harness there) — the file sink keeps
-    // the pair stream distributed end-to-end, and the follow-on batch
-    // verify reads it back as an ordinary scan
-    val sunk = runToParquet(cands, "st6_parity")
-    val out = Dedup.verifyJaccardOn(sunk.distinct(), features, num, den)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    features.unpersist()
-    out
   }
 
   /** KP2: the LLM-curation keystone as a CONTINUOUS pipeline —
@@ -487,73 +486,67 @@ object Streaming {
     * the corpus — and in production lives bucketed on `key`
     * (Bucketing.writeBucketed) so each micro-batch joins co-located. */
   def availableNowCuration(s: SparkSession, docsPath: String,
-      indexPath: Option[String] = None): DataFrame = {
-    import graft.api.Curation.scored
-    val batchDocs = s.read.parquet(docsPath)
-    // the canonical-owner index defaults to the stream's own corpus
-    // (the replay-parity form kp2 gates); production passes the
-    // last SNAPSHOT as indexPath and keeps streaming past it — docs
-    // with keys the snapshot never saw take the novel-key election
-    // path below
-    // snapshot-mode (indexPath defined) consumes the owner index
-    // TWICE — the per-batch stream-static join and the novel-dup
-    // audit below — and each consumer otherwise re-scores the whole
-    // index snapshot. Persist the narrow (key, owner_id) rows for
-    // the query's duration; replay-parity mode (one consumer) keeps
-    // the plain lazy frame.
-    val owners0 = scored(indexPath.fold(batchDocs)(s.read.parquet(_)))
-      .filter(col("keep") === 1)
-      .groupBy("key").agg(min("doc_id").as("owner_id"))
-    val owners = if (indexPath.isDefined)
-      owners0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else owners0
-    val stream = s.readStream.schema(batchDocs.schema)
-      .parquet(streamablePath(docsPath))
-    // left join keeps every stream doc in docs_in. Canon election:
-    // a surviving doc whose key HAS an owner is canonical only if it
-    // IS the owner; a surviving doc with a NOVEL key (no owner in the
-    // static index — content the batch snapshot never saw) elects
-    // ITSELF, so new material is counted kept rather than silently
-    // dropped. Within-backlog duplicates of the same novel key each
-    // self-elect — exact-once for novel keys needs cross-batch state
-    // (dropDuplicates on key), a trade documented rather than paid:
-    // the index refresh cycle re-canonicalizes them. Rejected docs
-    // (keep = 0) land in the otherwise-0 branch regardless of owner.
-    val flagged = scored(stream)
-      .join(owners, Seq("key"), "left")
-      .withColumn("canon",
-        when(col("keep") === 1 &&
-            (col("owner_id").isNull || col("doc_id") === col("owner_id")),
-          1).otherwise(0))
-    // try/finally spans BOTH consumers (the streaming run and the
-    // novel-dup audit below): if either throws, the snapshot-mode
-    // persist must still be released or the cached owner RDD leaks
-    // for the session's lifetime (round-17 advisory).
-    try {
-    val out = runToMemory(graft.api.Curation.accounting(flagged), "kp2_curation")
-    // Snapshot-mode observability (the self-elect overcount is silent
-    // at runtime otherwise): ONE bounded batch aggregate over the
-    // already-scanned backlog counts how many kept docs were
-    // within-backlog duplicates of the same novel key — the exact
-    // inflation of docs_kept vs batch semantics. Logged, not failed:
-    // the trade is documented (the index refresh re-canonicalizes);
-    // [[availableNowCurationExactOnce]] is the bounded-variant path.
-    indexPath.foreach { _ =>
-      val novelDups = scored(s.read.parquet(docsPath))
+      indexPath: Option[String] = None): DataFrame =
+    Materialize.scope(s, "Streaming.availableNowCuration") { m =>
+      import graft.api.Curation.scored
+      val batchDocs = s.read.parquet(docsPath)
+      // the canonical-owner index defaults to the stream's own corpus
+      // (the replay-parity form kp2 gates); production passes the
+      // last SNAPSHOT as indexPath and keeps streaming past it — docs
+      // with keys the snapshot never saw take the novel-key election
+      // path below
+      // snapshot-mode (indexPath defined) consumes the owner index
+      // TWICE — the per-batch stream-static join and the novel-dup
+      // audit below — and each consumer otherwise re-scores the whole
+      // index snapshot. Materialize the narrow (key, owner_id) rows
+      // for the query's duration (freed when the call returns or
+      // throws); replay-parity mode (one consumer) keeps the plain
+      // lazy frame.
+      val owners0 = scored(indexPath.fold(batchDocs)(s.read.parquet(_)))
         .filter(col("keep") === 1)
-        .join(owners.select("key"), Seq("key"), "left_anti")
-        .groupBy("key").agg(count(lit(1)).as("copies"))
-        .agg(coalesce(sum(col("copies") - 1), lit(0L))).head().getLong(0)
-      if (novelDups > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"availableNowCuration: $novelDups within-backlog duplicate(s) " +
-            "of novel content keys self-elected canonical — docs_kept / " +
-            "tok_kept overcount them vs batch semantics until the next " +
-            "index refresh (use availableNowCurationExactOnce to bound this)")
+        .groupBy("key").agg(min("doc_id").as("owner_id"))
+      val owners = if (indexPath.isDefined) m("owners")(owners0) else owners0
+      val stream = s.readStream.schema(batchDocs.schema)
+        .parquet(streamablePath(docsPath))
+      // left join keeps every stream doc in docs_in. Canon election:
+      // a surviving doc whose key HAS an owner is canonical only if it
+      // IS the owner; a surviving doc with a NOVEL key (no owner in the
+      // static index — content the batch snapshot never saw) elects
+      // ITSELF, so new material is counted kept rather than silently
+      // dropped. Within-backlog duplicates of the same novel key each
+      // self-elect — exact-once for novel keys needs cross-batch state
+      // (dropDuplicates on key), a trade documented rather than paid:
+      // the index refresh cycle re-canonicalizes them. Rejected docs
+      // (keep = 0) land in the otherwise-0 branch regardless of owner.
+      val flagged = scored(stream)
+        .join(owners, Seq("key"), "left")
+        .withColumn("canon",
+          when(col("keep") === 1 &&
+              (col("owner_id").isNull || col("doc_id") === col("owner_id")),
+            1).otherwise(0))
+      val out = runToMemory(graft.api.Curation.accounting(flagged), "kp2_curation")
+      // Snapshot-mode observability (the self-elect overcount is silent
+      // at runtime otherwise): ONE bounded batch aggregate over the
+      // already-scanned backlog counts how many kept docs were
+      // within-backlog duplicates of the same novel key — the exact
+      // inflation of docs_kept vs batch semantics. Logged, not failed:
+      // the trade is documented (the index refresh re-canonicalizes);
+      // [[availableNowCurationExactOnce]] is the bounded-variant path.
+      indexPath.foreach { _ =>
+        val novelDups = scored(s.read.parquet(docsPath))
+          .filter(col("keep") === 1)
+          .join(owners.select("key"), Seq("key"), "left_anti")
+          .groupBy("key").agg(count(lit(1)).as("copies"))
+          .agg(coalesce(sum(col("copies") - 1), lit(0L))).head().getLong(0)
+        if (novelDups > 0)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"availableNowCuration: $novelDups within-backlog duplicate(s) " +
+              "of novel content keys self-elected canonical — docs_kept / " +
+              "tok_kept overcount them vs batch semantics until the next " +
+              "index refresh (use availableNowCurationExactOnce to bound this)")
+      }
+      out
     }
-    out
-    } finally { if (indexPath.isDefined) { owners.unpersist(); () } }
-  }
 
   /** KP2b: [[availableNowCuration]] with EXACT-ONCE novel-key
     * election — the stateful variant of the documented self-elect
@@ -693,7 +686,9 @@ object Streaming {
         // the backlog slice per batch; guide §1.2 step 1 — don't
         // recompute what you already hold). Narrow rows (text is
         // gone after scored()), serialized level, released before
-        // the batch returns.
+        // the batch returns. Not graft.store.Materialize: no shuffle for
+        // AQE to coalesce, and its extra eager job per batch measured
+        // slower (warm 1.83 -> 1.92 s, 6 of 8 sf0.1 pairs, 4 cores).
         val batch = batch0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
         try {
@@ -821,15 +816,14 @@ object Streaming {
       .option("checkpointLocation", new java.io.File(dir, "ckpt").getAbsolutePath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val bs = batch.sparkSession
-        // PERSIST the scrubbed batch: it feeds the gram-digest
+        // MATERIALIZE the scrubbed batch: it feeds the gram-digest
         // contamination branch AND the scored/canon projection, and
         // without a pin each consumer re-reads the micro-batch's
         // source files and re-runs the PII scrub regexes (measured:
         // 2 full scrub passes per batch). Bounded by the micro-batch
-        // size, serialized, released before the batch returns.
-        val scrubbed = Curation.scrubText(batch).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        try {
+        // size, released before the batch returns.
+        Materialize.scope(bs, "kp4 batch") { m =>
+          val scrubbed = m("scrubbed batch")(Curation.scrubText(batch))
           val owners = bs.read.schema(ownersSchema).parquet(ownersDir)
           val grams = bs.read.schema(gramsSchema).parquet(gramsDir)
           // raw gramDigests, NOT slidingGramHashes: the contamination
@@ -856,8 +850,7 @@ object Streaming {
             .drop("__dirty")
             .write.mode("overwrite")
             .parquet(new java.io.File(sinkDir, s"batch=$batchId").getAbsolutePath)
-        } finally { scrubbed.unpersist(); () }
-        ()
+        }
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Minimal bridge into the `private[sql]` surface the engine needs:
   * turning a custom [[LogicalPlan]] node (graft.plans.AsOfJoinPlan)
@@ -29,4 +30,9 @@ object GraftBridge {
     sc.getPersistentRDDs.values.filter(r =>
       r.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]) &&
         createdAt(r.getCreationSite))
+
+  /** Ids of the RDDs a frame's plan reads as leaves — for a checkpoint,
+    * the persisted RDD itself. */
+  def rddsRead(df: Dataset[_]): Set[Int] =
+    analyzed(df).collectWithSubqueries { case r: LogicalRDD => r.rdd.id }.toSet
 }

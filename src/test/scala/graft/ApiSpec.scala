@@ -433,7 +433,7 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
     val (cand, benchmark) = curateFixture()
     val ckpt = Curation.curate(cand, benchmark)
     val files = Curation.curate(cand, benchmark,
-      materialize = Curation.Materialize.Files(
+      materialize = graft.store.Materialize.Files(
         Files.createTempDirectory("kp3files").toString))
     // byte-equal report through either materialization primitive
     val a = ckpt.orderBy("source").collect().map(_.toSeq).toSeq
@@ -516,12 +516,12 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
     val (cand, benchmark) = curateFixture()
     val root = Files.createTempDirectory("kp3reuse").toString
     val first = Curation.curate(cand, benchmark,
-      materialize = Curation.Materialize.Files(root))
+      materialize = graft.store.Materialize.Files(root))
     val expected = Curation.curate(cand, benchmark) // ckpt reference
       .orderBy("source").collect().map(_.toSeq).toSeq
     // second call over the same root BEFORE the first is collected
     val second = Curation.curate(cand, benchmark,
-      materialize = Curation.Materialize.Files(root))
+      materialize = graft.store.Materialize.Files(root))
     assert(second.orderBy("source").collect().map(_.toSeq).toSeq == expected)
     // the first call's report must still be collectable and correct
     assert(first.orderBy("source").collect().map(_.toSeq).toSeq == expected,

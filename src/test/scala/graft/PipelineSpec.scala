@@ -656,6 +656,30 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       == built, "matching-params call no longer serves the table")
   }
 
+  test("clustersTable: a build that throws drops its claim marker") {
+    val s = spark
+    val docs = Tables.documents(s, "/root/testdata/sf0.001")
+    val path = java.nio.file.Files.createTempDirectory("clusters_claim")
+      .toString + "/clusters"
+    // the build fails analysis (no text column) after the claim exists
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Dedup.clustersTable(docs.drop("text"), tablePath = Some(path))
+    }
+    val tableDir = new java.io.File(path)
+    assert(!new java.io.File(tableDir.getParentFile,
+      s".${tableDir.getName}._graft_building").exists(),
+      "a failed build left its claim marker behind")
+    // an unrelated committed dataset lands at the path: the guard must
+    // still refuse to overwrite it
+    s.range(3).write.parquet(path)
+    val foreign = tableDir.list().toSet
+    intercept[IllegalStateException] {
+      Dedup.clustersTable(docs, tablePath = Some(path))
+    }
+    assert(tableDir.list().toSet == foreign,
+      "the foreign committed dataset was overwritten")
+  }
+
   test("persisted IVF-PQ index: equals v17, durable path is the authority") {
     val s = spark
     val e = Tables.embeddings(s, "/root/testdata/sf0.001")
