@@ -172,7 +172,8 @@ object Bench {
       // frees anything, so at 30x the next run's first big sort
       // races the cleaner for the same heap — the stage-754 OOM
       // cascade in the first 30x regen. Untimed (before t0).
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(org.apache.spark.sql.GraftBridge.unpersist)
       val t0 = System.nanoTime()
       // Materialize through the NOOP SINK (full distributed
       // execution of the plan, rows consumed where they are

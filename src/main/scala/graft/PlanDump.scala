@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicReference
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -80,7 +81,7 @@ object PlanDump {
       epoch += 1
       val ep = epoch
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      spark.sparkContext.getPersistentRDDs.values.foreach(GraftBridge.unpersist)
       val out = new java.io.File(outDir, s"${name}_$tag.txt")
       val w = new java.io.PrintWriter(out, "UTF-8")
       try {

@@ -1,6 +1,8 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.store.Materialize
@@ -20,6 +22,28 @@ import graft.store.Materialize
   *    buckets); cosine floats stay internal so cross-engine float
   *    noise can't flip a verified result (thresholds sit in measured
   *    gaps of the data distribution).
+  *
+  * The vector-index entry points are compositions of one private
+  * kernel per IVFADC step (Jégou et al., "Product Quantization for
+  * Nearest Neighbor Search", TPAMI 2011): [[strideSample]] seeds every
+  * index structure, [[nearestCells]] assigns vectors to cells and picks
+  * each query's probes, [[codes]] / [[pqEncode]] quantize,
+  * [[distanceTable]] and [[adc]] score, [[topK]] ranks.
+  *
+  * PQ distances live in one of two exact integer spaces, never mixed
+  * within a search:
+  *  - stride codebooks ([[pqCodebook]], cv: array<double>) encode and
+  *    search with [[sqDistInt]], the floored 1e6-scaled square of
+  *    DuckDB's `list_distance`;
+  *  - trained codebooks ([[pqCodebookTrained]], cv: array<long> over
+  *    [[quantSubs]]) with [[sqDistLong]], plain long arithmetic.
+  * The long-space encoders take each subvector's argmin inside the
+  * projection against a packed codebook ([[argminCw]]). [[pqEncode]]
+  * keeps the exploded-join + `min` groupBy form: [[sqDistInt]]'s casts,
+  * sqrt and floor per codeword inside the interpreted transform
+  * measured SLOWER than the SortAggregate that rewrite removes (v8
+  * 1.06 s -> 1.60/1.74 s in two fresh JVMs; v9 1.16 -> 2.15 s), while
+  * plain long zip_with arithmetic is cheap interpreted.
   */
 object Similarity {
 
@@ -48,21 +72,73 @@ object Similarity {
   private def cosineCol(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
 
+  /** (key, v): the ids of `df` under `key`, its vectors as array<double>. */
+  private def vectors(df: DataFrame, key: String, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(idCol).as(key), asDouble(col(vecCol)).as("v"))
+
+  /** The first `cap` rows of `corpus` (by id) whose id is a multiple of
+    * `stride`: the deterministic seed of every index structure here —
+    * IVF cells, k-means init, PQ codebooks. The cap is RANK-based (a
+    * distributed top-k, not an id-value bound), so it yields exactly
+    * `cap` rows on sparse or offset id spaces too, and binds only above
+    * stride x cap rows. It keeps each structure's size independent of
+    * the corpus: an uncapped every-Nth sample grows with the corpus and
+    * turns the assignment or encode pass against it O(n²/stride) —
+    * measured on the sf0.1 -> sf1 rehearsal, a 1.6 s PQ encode became
+    * 46 s, and a 10M corpus would broadcast 233k k-means centroids.
+    * `cap = Int.MaxValue` is the uncapped sample, without the sort. */
+  private def strideSample(corpus: DataFrame, stride: Int, cap: Int,
+      idCol: String): DataFrame = {
+    val sampled = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
+    if (cap == Int.MaxValue) sampled
+    else sampled.orderBy(col(idCol)).limit(cap)
+  }
+
+  /** Each row of `vecs` — (key, v: array<double>, carried columns...)
+    * — with its `n` nearest cells of `cents` (cid, cv) by cosine, ties
+    * to the lower cid: `vecs`' columns plus `cid`, at most `n` rows per
+    * key. One codegen'd pass against the BROADCAST centroid set (the
+    * corpus never shuffles to index). The rank filter triggers Spark's
+    * WindowGroupLimit rewrite, which runs a PARTIAL per-partition top-n
+    * BELOW the exchange, so the |vecs| x |cents| candidate rows collapse
+    * to ~n per key before shuffling — measured faster than the min_by
+    * hash aggregate (array-key hashing costs more than the group-limit's
+    * streaming comparison) and, where `v` rides along, than a thin
+    * assignment followed by a rejoin. */
+  private def nearestCells(vecs: DataFrame, cents: DataFrame,
+      n: Int): DataFrame = {
+    val carried = vecs.columns.toSeq.map(col)
+    vecs.crossJoin(broadcast(cents))
+      .select(carried :+ col("cid") :+
+        cosineCol(col("v"), col("cv")).as("_cos"): _*)
+      .withColumn("_rk", row_number().over(Window.partitionBy(vecs.columns.head)
+        .orderBy(col("_cos").desc, col("cid").asc)))
+      .filter(col("_rk") <= n)
+      .select(carried :+ col("cid"): _*)
+  }
+
+  /** The `k` best neighbours per query of `scored` (qid, nid, ...) in
+    * `score` order, ties to the lower neighbour id: (query_id, rank,
+    * neighbor), the integer output of every ANN entry point. The rank
+    * filter is WindowGroupLimit-eligible, as in [[nearestCells]]. */
+  private def topK(scored: DataFrame, score: Column, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(score, col("nid").asc)))
+      .filter(col("rank") <= k)
+      .select(col("qid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+
   /** Brute-force ANN: for each query vector, the top-k nearest
     * corpus vectors by cosine (excluding self), rank ties broken by
     * neighbor id. Output: (query_id, rank, neighbor) — integers. */
   def annBruteForce(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nv"))
     val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-    val scored = c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("cos")),
+      col("cos").desc, k)
   }
 
   /** Cosine near-dup: all pairs (a < b) with cosine >= threshold —
@@ -77,7 +153,7 @@ object Similarity {
   def cosineNearDup(corpus: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxRows: Long = 20000L): DataFrame = {
-    val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+    val v = vectors(corpus, "id", idCol, vecCol)
     val guard = v.agg(count(lit(1)).as("_n"))
       .filter(assert_true(col("_n") <= maxRows,
         lit(s"cosineNearDup is all-pairs O(n^2); input exceeds " +
@@ -115,38 +191,24 @@ object Similarity {
       bucketCol(v, planes, maxDim).as("bucket"))
   }
 
-  /** K-means training for IVF cells: deterministic id-stride init
-    * (the same seeding [[annIvf]] uses untrained), then `iters`
+  /** K-means training for IVF cells: the [[ivfCentroids]] stride init
+    * (capped at `maxCentroids`, see [[strideSample]]), then `iters`
     * Lloyd steps — assign every vector to its nearest centroid
-    * (broadcast centroids, one codegen'd corpus pass) and recompute
-    * each cell's mean with the [[VectorMean]] custom aggregate
-    * (map-side partial buffers; vectors never shuffle). Returns
-    * (cid, cv) centroids ready to pass into an IVF search.
-    * Empty cells drop out (standard Lloyd behavior). The caller owns
-    * the materialized centroids ([[Materialize]]). */
+    * ([[nearestCells]]) and recompute each cell's mean with the
+    * [[VectorMean]] custom aggregate (map-side partial buffers; vectors
+    * never shuffle). Returns (cid, cv) centroids ready to pass into an
+    * IVF search. Empty cells drop out (standard Lloyd behavior). The
+    * caller owns the materialized centroids ([[Materialize]]). */
   def kmeansCentroids(corpus: DataFrame, stride: Int = 43, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxCentroids: Int = 4096): DataFrame =
     Materialize.scope(corpus.sparkSession, "Similarity.kmeansCentroids") { m =>
-      import org.apache.spark.sql.expressions.Window
       val vecMean = udaf(VectorMean)
-      val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      // rank-based cap on the stride init, same guard as pqCodebook /
-      // ivf cells: an UNCAPPED n/stride init makes every Lloyd pass
-      // O(n^2/stride) (233k broadcast centroids on a 10M corpus) —
-      // binding only above stride*maxCentroids (~176k) vectors, so
-      // every tested scale is byte-identical
-      var cents = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
-        .orderBy(col(idCol)).limit(maxCentroids)
-        .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-      val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
+      val v = vectors(corpus, "id", idCol, vecCol)
+      var cents = ivfCentroids(corpus, stride, maxCentroids, idCol, vecCol)
       (1 to iters).foreach { _ =>
-        val assigned = v.crossJoin(broadcast(cents))
-          .select(col("id"), col("v"), col("cid"),
-            cosineCol(col("v"), col("cv")).as("c"))
-          .withColumn("r", row_number().over(wAssign))
-          .filter(col("r") === 1)
-        cents = m("centroids")(assigned.groupBy("cid").agg(vecMean(col("v")).as("cv")))
+        cents = m("centroids")(nearestCells(v, cents, 1)
+          .groupBy("cid").agg(vecMean(col("v")).as("cv")))
       }
       cents
     }
@@ -169,24 +231,17 @@ object Similarity {
     *    scored candidate set is |corpus| * nprobe / #cells in
     *    expectation instead of |corpus| per query.
     * Same output contract as [[annBruteForce]]; recall < 1 by
-    * construction (the standard IVF trade-off, tuned via nprobe). */
+    * construction (the standard IVF trade-off, tuned via nprobe).
+    * `maxCells` caps the centroid set independently of corpus size
+    * ([[strideSample]]); the default Int.MaxValue keeps the
+    * oracle-gated uncapped stride semantics. */
   def annIvf(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       nprobe: Int = 2, centroidStride: Int = 43,
       maxCells: Int = Int.MaxValue, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    // maxCells caps the centroid set independently of corpus size —
-    // without it the stride sample grows the cell count with the
-    // corpus and the assignment pass goes O(n²/stride) (the same
-    // quadratic the sf1 rehearsal caught in the PQ codebook; see
-    // [[pqCodebook]] and the capped-everything [[annIvfPq]]). The cap
-    // is RANK-based (first maxCells sampled ids via a distributed
-    // top-k, not an id-value bound), so it yields exactly maxCells
-    // centroids on sparse or offset id spaces too. Default
-    // Int.MaxValue preserves the oracle-gated stride semantics.
+      vecCol: String = "embedding"): DataFrame =
     annIvfWith(corpus, queries,
       ivfCentroids(corpus, centroidStride, maxCells, idCol, vecCol),
       k, nprobe, idCol, vecCol)
-  }
 
   /** [[annIvf]] with a metadata predicate pushed INTO the cell-blocked
     * search — the production shape of filtered vector search: ONE
@@ -245,74 +300,44 @@ object Similarity {
         transform(col("cv"),
           q => (q - lit(1L << 21)).cast("double") / lit(1000000.0)).as("cv"))
 
-  /** The IVF centroid sample [[annIvf]] indexes with, exposed so the
+  /** The IVF centroid sample [[annIvf]] indexes with — the
+    * [[strideSample]] of the corpus as (cid, cv) — exposed so the
     * size-independence invariant (exactly `maxCells` centroids no
     * matter how large — or how sparse/offset-keyed — the corpus is)
     * is testable without running a search; Sf1RegressionSpec gates
     * it in `sbt test`. */
   def ivfCentroids(corpus: DataFrame, centroidStride: Int = 43,
       maxCells: Int = Int.MaxValue, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val sampled = corpus.filter(pmod(col(idCol), lit(centroidStride)) === 0)
+      vecCol: String = "embedding"): DataFrame =
+    strideSample(corpus, centroidStride, maxCells, idCol)
       .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-    if (maxCells == Int.MaxValue) sampled
-    else sampled.orderBy("cid").limit(maxCells)
-  }
 
-  /** Shared IVF search over an explicit (cid, cv) centroid set. */
+  /** Shared IVF search over an explicit (cid, cv) centroid set: each
+    * corpus vector's rank-1 cell is its posting list; each query's
+    * probes come from its OWN vector (queries need not be corpus
+    * members) and broadcast, with the vector, into the cell join, so
+    * only the probed cells' posting lists are scored. A vector reaches
+    * a query through one cell only (assignment is rank-1 unique), so
+    * candidates are already distinct. */
   private def annIvfWith(corpus: DataFrame, queries: DataFrame,
       cents: DataFrame, k: Int, nprobe: Int, idCol: String,
       vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // index build: one codegen'd pass of corpus x broadcast centroids,
-    // rank-1 cell per vector. The rank<=1 filter triggers Spark's
-    // WindowGroupLimit rewrite, which runs a PARTIAL per-partition
-    // top-1 BELOW the exchange — so the n x k candidate rows collapse
-    // to ~n before shuffling (measured faster than the equivalent
-    // min_by hash aggregate, whose array-key hashing costs more than
-    // the group-limit's streaming comparison)
-    val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
-    val assign = v.crossJoin(broadcast(cents))
-      .select(col("id"), col("cid"),
-        cosineCol(col("v"), col("cv")).as("c"))
-      .withColumn("r", row_number().over(wAssign))
-      .filter(col("r") === 1)
-      .select(col("id").as("nid"), col("cid"))
-    // probe lists: the QUERY set's own vectors against the same
-    // centroids (queries need not be corpus members); both sides of
-    // this product are small, and the probe table — (qid, cid, qv) x
-    // nprobe — is what broadcasts into the cell join
-    val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("c").desc, col("cid").asc)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qv"), col("cid"),
-        cosineCol(col("qv"), col("cv")).as("c"))
-      .withColumn("r", row_number().over(wProbe))
-      .filter(col("r") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    // search: only the probed cells' posting lists are scored
-    val cands = assign.join(broadcast(probes), "cid")
-      .filter(col("nid") =!= col("qid"))
-      .join(corpus.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nv")), "nid")
-      .select(col("qid"), col("nid"),
-        cosineCol(col("qv"), col("nv")).as("cos"))
-      // a vector can reach a query through only one cell (assignment is
-      // rank-1 unique), so candidates are already distinct
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+    val probes = nearestCells(vectors(queries, "qid", idCol, vecCol), cents, nprobe)
+    topK(nearestCells(vectors(corpus, "id", idCol, vecCol), cents, 1)
+        .select(col("id"), col("cid"))
+        .join(broadcast(probes), "cid")
+        .filter(col("id") =!= col("qid"))
+        .join(corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("nv")), "id")
+        .select(col("qid"), col("id").as("nid"), cosineCol(col("v"), col("nv")).as("cos")),
+      col("cos").desc, k)
   }
 
   /** Semantic (embedding-space) dedup: the scale path of
     * [[cosineNearDup]]. All-pairs cosine is O(n²) and unshardable;
     * blocking by IVF cell makes it O(Σ cell²) with every stage
     * shuffle-partitioned by cell:
-    *  1. assign each vector to its nearest centroid (one codegen'd
-    *     pass against the BROADCAST centroid set — same index build as
-    *     [[annIvf]]; only thin (id, cid, cos) rows cross the rank-1
-    *     window shuffle, vectors rejoin by id afterwards);
+    *  1. assign each vector to its nearest centroid ([[nearestCells]]
+    *     against the capped stride sample; the vector rides along);
     *  2. self-join WITHIN cells only (shuffle on cid; the cell cap is
     *     the skew guard the LSH/simhash paths use);
     *  3. a vector is dropped iff some SMALLER-id vector in its cell is
@@ -324,26 +349,8 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, threshold: Double,
       centroidStride: Int = 43, idCol: String = "vec_id",
       vecCol: String = "embedding", maxCentroids: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // rank-based centroid cap (see kmeansCentroids): bounds the
-    // assignment crossJoin at maxCentroids*n; not binding below
-    // stride*maxCentroids vectors
-    val cents = corpus.filter(pmod(col(idCol), lit(centroidStride)) === 0)
-      .orderBy(col(idCol)).limit(maxCentroids)
-      .select(col(idCol).as("cid"), asDouble(col(vecCol)).as("cv"))
-    val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    // rank-1 assignment via window + rank<=1: Spark's WindowGroupLimit
-    // rewrite runs a partial per-partition top-1 BELOW the exchange,
-    // so carrying the vector through the window costs ~n rows on the
-    // shuffle, not n x k (measured faster than both the min_by hash
-    // aggregate — array-key hashing — and a thin-assign-then-rejoin)
-    val wAssign = Window.partitionBy("id").orderBy(col("c").desc, col("cid").asc)
-    val assigned = v.crossJoin(broadcast(cents))
-      .select(col("id"), col("v"), col("cid"),
-        cosineCol(col("v"), col("cv")).as("c"))
-      .withColumn("r", row_number().over(wAssign))
-      .filter(col("r") === 1)
-      .select(col("id"), col("v"), col("cid"))
+    val assigned = nearestCells(vectors(corpus, "id", idCol, vecCol),
+      ivfCentroids(corpus, centroidStride, maxCentroids, idCol, vecCol), 1)
     // self-join via aliases of the SAME frame: both sides shuffle the
     // identical (cid, id, v) subplan, so the assignment pass and its
     // exchange are computed once and reused (ReusedExchange), not
@@ -366,7 +373,6 @@ object Similarity {
   def annLsh(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       planes: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // bucket is computed IN the corpus/query projections — no
     // (corpus ⋈ own-buckets) self-joins: the old shape scanned the
     // corpus four times and shuffled it twice for a column that's a
@@ -380,13 +386,10 @@ object Similarity {
     // and substituted corpus embeddings for same-id queries
     val q = queries.select(col(idCol).as("qid"), v.as("qv"),
       bucketCol(v, planes, 64).as("bucket"))
-    val scored = c.join(broadcast(q), "bucket")
+    topK(c.join(broadcast(q), "bucket")
       .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+      .select(col("qid"), col("nid"), cosineCol(col("qv"), col("nv")).as("cos")),
+      col("cos").desc, k)
   }
 
   /** Int8 scalar quantization: per-vector affine map of each element
@@ -414,6 +417,10 @@ object Similarity {
     floor(lit(1000000.0) * d * d).cast("long")
   }
 
+  /** The `m` `subDim`-wide subvectors of a vector, as array<double>. */
+  private def doubleSubs(vec: Column, m: Int, subDim: Int): Column =
+    array((0 until m).map(i => slice(asDouble(vec), 1 + subDim * i, subDim)): _*)
+
   /** Product-quantization codebooks: the `dim`-wide vector space is
     * split into `m` orthogonal `dim/m`-wide subspaces, and each
     * subspace gets its own codeword set — a deterministic id-stride
@@ -422,30 +429,21 @@ object Similarity {
     * the index/search dataflow is identical).
     *
     * The codebook is CAPPED at `k` codewords per subspace regardless
-    * of corpus size — the defining PQ property (k=256 in production,
-    * one byte per code). An uncapped stride sample grows the codebook
-    * with the corpus and makes encoding O(n²/stride); measured on the
-    * sf0.1→sf1 rehearsal that turned a 1.6 s encode into 46 s, while
-    * the fixed-k codebook keeps it linear. Output:
+    * of corpus size ([[strideSample]]) — the defining PQ property
+    * (k=256 in production, one byte per code). Output:
     * (m, cw, cv: array<double>) — m·k rows, always broadcast. */
   def pqCodebook(corpus: DataFrame, m: Int = 4, subDim: Int = 16,
       stride: Int = 31, k: Int = 16, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val subs = array((0 until m).map(i =>
-      slice(asDouble(col(vecCol)), 1 + subDim * i, subDim)): _*)
-    // rank-based cap: the first k sampled ids (distributed top-k, not
-    // an id-value bound) — exactly k codewords even when ids are
-    // sparse or offset; on dense-from-0 ids this equals the old
-    // `id < stride*k` bound
-    corpus.filter(pmod(col(idCol), lit(stride)) === 0)
-      .orderBy(col(idCol)).limit(k)
-      .select(col(idCol).as("cw"), posexplode(subs).as(Seq("m", "cv")))
+      vecCol: String = "embedding"): DataFrame =
+    strideSample(corpus, stride, k, idCol)
+      .select(col(idCol).as("cw"),
+        posexplode(doubleSubs(col(vecCol), m, subDim)).as(Seq("m", "cv")))
       .select(col("m"), col("cw"), col("cv"))
-  }
 
   /** PQ encode: each corpus vector becomes `m` small integer codes —
     * per subspace, the id of its nearest codeword (squared-L2 argmin,
-    * ties to the lower codeword id, one `min_by` hash aggregate).
+    * ties to the lower codeword id, one `min` aggregate — the groupBy
+    * form, see the object doc for why it stays).
     *
     * THIS is the 100 TB ANN index: an encoded vector is m longs
     * (m bytes in production) instead of dim floats — a 64-dim float
@@ -455,24 +453,48 @@ object Similarity {
     * map-side — the corpus never shuffles its raw vectors. */
   def pqEncode(corpus: DataFrame, codebook: DataFrame, m: Int = 4,
       subDim: Int = 16, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val subs = array((0 until m).map(i =>
-      slice(asDouble(col(vecCol)), 1 + subDim * i, subDim)): _*)
-    // NOT rewritten to the packed-codebook [[argminCw]] form the
-    // integer-space encoders use (round-18): this encode's distance
-    // is [[sqDistInt]] — double casts + sqrt + floor per codeword —
-    // and evaluating that chain inside the nested interpreted
-    // transform measured SLOWER than the SortAggregate it would
-    // remove (v8 1.06 s → 1.60/1.74 s in two fresh JVMs; v9 1.16 →
-    // 2.15 s). The long-space sites won from the same rewrite
-    // because plain zip_with long arithmetic is cheap interpreted.
-    corpus.select(col(idCol).as("id"), posexplode(subs).as(Seq("m", "sv")))
+      vecCol: String = "embedding"): DataFrame =
+    corpus.select(col(idCol).as("id"),
+        posexplode(doubleSubs(col(vecCol), m, subDim)).as(Seq("m", "sv")))
       .join(broadcast(codebook), "m")
       .select(col("id"), col("m"),
         struct(sqDistInt(col("sv"), col("cv")).as("d"), col("cw")).as("dc"))
       .groupBy("id", "m")
       .agg(min(col("dc")).as("best"))
       .select(col("id"), col("m"), col("best.cw").as("code"))
+
+  /** Per-query ADC distance table (qid, m, cw, d): the distance `dist`
+    * from each query's subvectors `subs` (a column of `queries`) to
+    * every codeword of `codebook` (m, cw, cv) — |q| x m x k rows,
+    * kilobytes, built against the broadcast codebook. */
+  private def distanceTable(queries: DataFrame, idCol: String, subs: Column,
+      codebook: DataFrame, dist: (Column, Column) => Column): DataFrame =
+    queries.select(col(idCol).as("qid"), posexplode(subs).as(Seq("m", "qv")))
+      .join(broadcast(codebook), "m")
+      .select(col("qid"), col("m"), col("cw"), dist(col("qv"), col("cv")).as("d"))
+
+  /** Asymmetric distance (qid, nid, adc) of PQ-coded `entries` (id, m,
+    * code, and cid when probed): the SUM over subspaces of the
+    * [[distanceTable]] entry each code points at — one scan of the
+    * codes against the BROADCAST table, combining map-side per
+    * (query, neighbor). With `probes` (qid, cid), an entry scores only
+    * for the queries that probe its cell (the IVFADC search), else for
+    * every query. A query never scores itself. */
+  private def adc(entries: DataFrame, dtable: DataFrame,
+      probes: Option[DataFrame]): DataFrame = {
+    val scored = probes match {
+      case Some(p) =>
+        val probed = entries
+          .join(broadcast(p.withColumnRenamed("qid", "pqid")), "cid")
+          .filter(col("id") =!= col("pqid"))
+        probed.join(broadcast(dtable), probed("m") === dtable("m") &&
+          probed("code") === dtable("cw") && probed("pqid") === dtable("qid"))
+      case None =>
+        entries.join(broadcast(dtable),
+            entries("m") === dtable("m") && entries("code") === dtable("cw"))
+          .filter(col("id") =!= col("qid"))
+    }
+    scored.groupBy(col("qid"), col("id").as("nid")).agg(sum("d").as("adc"))
   }
 
   /** ANN via PQ + asymmetric distance computation (ADC): queries stay
@@ -480,39 +502,23 @@ object Similarity {
     * its squared L2 to every codeword in every subspace — and a
     * corpus vector's approximate distance is the SUM over subspaces
     * of the table entry its code points at (the standard IVF-ADC
-    * search kernel, cf. Jégou et al., "Product Quantization for
-    * Nearest Neighbor Search", TPAMI 2011).
+    * search kernel).
     *
-    * Scale posture: the distance table is |q| * m * |codebook| rows —
-    * kilobytes — and BROADCASTS into the code-table scan, so search
-    * is one pass over the compressed codes with a map-side-combining
-    * (query, neighbor) sum; raw vectors are touched only for the
-    * queries. Distances are integers ([[sqDistInt]]) so the
-    * cross-subspace sum is engine-exact. Output like
+    * Scale posture: the distance table BROADCASTS into the code-table
+    * scan, so search is one pass over the compressed codes with a
+    * map-side-combining (query, neighbor) sum; raw vectors are touched
+    * only for the queries. Distances are integers ([[sqDistInt]]) so
+    * the cross-subspace sum is engine-exact. Output like
     * [[annBruteForce]]: (query_id, rank, neighbor); recall < 1 by
     * construction (quantization error, tuned via m x codebook size). */
   def annPqAdc(corpus: DataFrame, queries: DataFrame, k: Int = 5,
       m: Int = 4, subDim: Int = 16, stride: Int = 31, codebookK: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cb = pqCodebook(corpus, m, subDim, stride, codebookK, idCol, vecCol)
-    val codes = pqEncode(corpus, cb, m, subDim, idCol, vecCol)
-    val subs = array((0 until m).map(i =>
-      slice(asDouble(col(vecCol)), 1 + subDim * i, subDim)): _*)
-    val dtable = queries
-      .select(col(idCol).as("qid"), posexplode(subs).as(Seq("m", "qv")))
-      .join(broadcast(cb), "m")
-      .select(col("qid"), col("m"), col("cw"),
-        sqDistInt(col("qv"), col("cv")).as("d"))
-    val adc = codes.join(broadcast(dtable),
-        codes("m") === dtable("m") && codes("code") === dtable("cw"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy(col("qid"), col("id").as("nid"))
-      .agg(sum("d").as("adc"))
-    val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("nid").asc)
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+    topK(adc(pqEncode(corpus, cb, m, subDim, idCol, vecCol),
+        distanceTable(queries, idCol, doubleSubs(col(vecCol), m, subDim), cb, sqDistInt),
+        None),
+      col("adc").asc, k)
   }
 
   /** Integer-quantized per-subspace views of a vector: each of the
@@ -562,6 +568,48 @@ object Similarity {
     array_min(transform(cbs, c =>
       struct(dist(sv, c.getField("cv")).as("d"), c.getField("cw").as("cw"))))
 
+  /** Each row's [[quantSubs]] subvectors (id, m, sv) with `best`, the
+    * nearest codeword (d, cw) of the integer-space `codebook` (m, cw,
+    * cv: array<long>) by [[sqDistLong]], ties to the lower cw — one pass
+    * against the BROADCAST packed codebook, no group aggregate. */
+  private def nearestCodewords(vecs: DataFrame, codebook: DataFrame, m: Int,
+      subDim: Int, idCol: String, vecCol: String): DataFrame =
+    vecs.select(col(idCol).as("id"),
+        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "sv")))
+      .join(broadcast(packCodebook(codebook)), "m")
+      .select(col("id"), col("m"), col("sv"),
+        argminCw(col("sv"), col("cbs"), sqDistLong).as("best"))
+
+  /** Integer-space PQ codes (id, m, code) of `vecs`. */
+  private def codes(vecs: DataFrame, codebook: DataFrame, m: Int,
+      subDim: Int, idCol: String, vecCol: String): DataFrame =
+    nearestCodewords(vecs, codebook, m, subDim, idCol, vecCol)
+      .select(col("id"), col("m"), col("best.cw").as("code"))
+
+  /** IVF-PQ posting entries (id, m, code, cid): the PQ codes `coded`
+    * of `vecs`, each with its vector's rank-1 cell among `cents`. Both
+    * are per-vector functions, so they commute with any row predicate
+    * on `vecs`. */
+  private def postings(coded: DataFrame, vecs: DataFrame, cents: DataFrame,
+      idCol: String, vecCol: String): DataFrame =
+    coded.join(nearestCells(vectors(vecs, "id", idCol, vecCol), cents, 1)
+      .select(col("id"), col("cid")), "id")
+
+  /** IVFADC search over posting `entries` (id, m, code, cid): each
+    * query picks its `nprobe` nearest `cents` by its OWN vector
+    * (queries need not be corpus members) and ADC-scores only the
+    * probed cells' entries with its distance table over `codebook`;
+    * `subs` and `dist` are the codebook's distance space. */
+  private def ivfPqSearch(entries: DataFrame, queries: DataFrame,
+      cents: DataFrame, codebook: DataFrame, subs: Column,
+      dist: (Column, Column) => Column, k: Int, nprobe: Int, idCol: String,
+      vecCol: String): DataFrame = {
+    val probes = nearestCells(vectors(queries, "qid", idCol, vecCol), cents, nprobe)
+      .select(col("qid"), col("cid"))
+    topK(adc(entries, distanceTable(queries, idCol, subs, codebook, dist),
+      Some(probes)), col("adc").asc, k)
+  }
+
   /** TRAINED PQ codebooks: per-subspace k-means (Lloyd) over the
     * integer-quantized subvectors, replacing [[pqCodebook]]'s raw
     * stride sample with centroids that actually fit the data — same
@@ -571,9 +619,9 @@ object Similarity {
     * Every training step is ENGINE-EXACT integer arithmetic, so the
     * whole training loop is oracle-checkable (floating-point k-means
     * is not: a mean's summation order perturbs centroids):
-    *  - init = the first `k` stride-sampled ids (rank-based cap);
+    *  - init = the first `k` stride-sampled ids ([[strideSample]]);
     *  - assign = integer squared-L2 argmin, ties to the lower
-    *    codeword id;
+    *    codeword id ([[nearestCodewords]]);
     *  - update = element-wise integer floor-mean of the members
     *    (sums of non-negative longs; overflow-safe while a cluster
     *    holds < 2^41 members at the 2^22 quantized magnitude).
@@ -585,27 +633,17 @@ object Similarity {
       stride: Int = 31, k: Int = 16, iters: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     Materialize.scope(corpus.sparkSession, "Similarity.pqCodebookTrained") { pin =>
-      val qsub = corpus.select(col(idCol).as("id"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "qv")))
-      var cb = corpus.filter(pmod(col(idCol), lit(stride)) === 0)
-        .orderBy(col(idCol)).limit(k)
+      var cb = strideSample(corpus, stride, k, idCol)
         .select(col(idCol).as("cw"),
           posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "cv")))
         .select(col("m"), col("cw"), col("cv"))
       (1 to iters).foreach { _ =>
-        // assignment: one pass of the quantized corpus against the
-        // BROADCAST packed codebook — per-row [[argminCw]] (identical
-        // deterministic (d, cw) ties), no group aggregate, qv rides
-        // along in the same projection
-        val assigned = qsub.join(broadcast(packCodebook(cb)), "m")
-          .select(col("id"), col("m"), col("qv"),
-            argminCw(col("qv"), col("cbs"), sqDistLong).as("best"))
         // update: element-wise integer floor-mean per codeword —
         // map-side-combining long sums, then the tiny (m·k·subDim)
         // position table reassembles into arrays
-        val sums = assigned
+        val sums = nearestCodewords(corpus, cb, m, subDim, idCol, vecCol)
           .select(col("m"), col("best.cw").as("cw"),
-            posexplode(col("qv")).as(Seq("pos", "x")))
+            posexplode(col("sv")).as(Seq("pos", "x")))
           .groupBy("m", "cw", "pos")
           .agg(sum("x").as("sx"), count(lit(1)).as("n"))
         // materialized to truncate the per-iteration lineage (the
@@ -629,29 +667,12 @@ object Similarity {
       m: Int = 4, subDim: Int = 16, stride: Int = 31, codebookK: Int = 16,
       iters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cb = pqCodebookTrained(
       corpus, m, subDim, stride, codebookK, iters, idCol, vecCol)
-    val qsub = corpus.select(col(idCol).as("id"),
-      posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "sv")))
-    val codes = qsub.join(broadcast(packCodebook(cb)), "m")
-      .select(col("id"), col("m"),
-        argminCw(col("sv"), col("cbs"), sqDistLong).as("best"))
-      .select(col("id"), col("m"), col("best.cw").as("code"))
-    val dtable = queries.select(col(idCol).as("qid"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "qv")))
-      .join(broadcast(cb), "m")
-      .select(col("qid"), col("m"), col("cw"),
-        sqDistLong(col("qv"), col("cv")).as("d"))
-    val adc = codes.join(broadcast(dtable),
-        codes("m") === dtable("m") && codes("code") === dtable("cw"))
-      .filter(col("id") =!= col("qid"))
-      .groupBy(col("qid"), col("id").as("nid"))
-      .agg(sum("d").as("adc"))
-    val w = Window.partitionBy("qid").orderBy(col("adc").asc, col("nid").asc)
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+    topK(adc(codes(corpus, cb, m, subDim, idCol, vecCol),
+        distanceTable(queries, idCol, quantSubs(col(vecCol), m, subDim), cb, sqDistLong),
+        None),
+      col("adc").asc, k)
   }
 
   /** Full-vector k-means clustering in exact integer space — the
@@ -675,13 +696,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cb = pqCodebookTrained(corpus, m = 1, subDim = dim, stride, k,
       iters, idCol, vecCol)
-    corpus.select(col(idCol).as("id"),
-        posexplode(quantSubs(col(vecCol), 1, dim)).as(Seq("m", "qv")))
-      .join(broadcast(packCodebook(cb)), "m")
-      .select(col("id"),
-        argminCw(col("qv"), col("cbs"), sqDistLong).as("best"))
-      .select(col("id"), col("best.cw").as("cluster"),
-        col("best.d").as("dist"))
+    nearestCodewords(corpus, cb, 1, dim, idCol, vecCol)
+      .select(col("id"), col("best.cw").as("cluster"), col("best.d").as("dist"))
   }
 
   /** Cluster-stratified diversity selection: the medoid (member
@@ -710,9 +726,7 @@ object Similarity {
     * raw vectors touched for nothing but the query itself.
     *
     * Both size knobs are capped independently of corpus size (cells
-    * and codebook k) — the [[pqCodebook]] rehearsal lesson: any
-    * index structure sampled "every Nth vector" silently goes
-    * quadratic as the corpus grows. Distances are exact integers
+    * and codebook k, [[strideSample]]). Distances are exact integers
     * ([[sqDistInt]]), ranks deterministic. Output like
     * [[annBruteForce]]; recall trades off via nprobe x quantization
     * error (coarser than [[annIvf]]'s exact in-cell cosine — that is
@@ -721,58 +735,13 @@ object Similarity {
       nprobe: Int = 2, cellStride: Int = 43, cells: Int = 32,
       m: Int = 4, subDim: Int = 16, cbStride: Int = 31, cbK: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = asDouble(col(vecCol))
-    // rank-based cell cap, same rationale as [[pqCodebook]]'s k cap
-    val cents = corpus
-      .filter(pmod(col(idCol), lit(cellStride)) === 0)
-      .orderBy(col(idCol)).limit(cells)
-      .select(col(idCol).as("cid"), v.as("cv"))
-    // one codegen'd pass: every vector scored against the broadcast
-    // centroids; rk=1 rows are the cell assignment, rk<=nprobe rows of
-    // the query subset are the probe list
-    val scored = corpus.select(col(idCol).as("id"), v.as("xv"))
-      .crossJoin(broadcast(cents))
-      .select(col("id"), col("cid"),
-        cosineCol(col("xv"), col("cv")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
-    val assign = scored.filter(col("rk") === 1).select(col("id"), col("cid"))
-    // probe list from the QUERY vectors themselves (one extra tiny
-    // broadcast pass) — reusing the corpus `scored` rows silently
-    // dropped out-of-corpus queries, unlike annPqAdc/annIvfWith; for
-    // corpus-member queries the vectors are identical so the probe
-    // set (and every oracle-gated result) is unchanged
-    val probes = queries.select(col(idCol).as("qid"), v.as("qxv"))
-      .crossJoin(broadcast(cents))
-      .select(col("qid"), col("cid"),
-        cosineCol(col("qxv"), col("cv")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rk") <= nprobe).select(col("qid"), col("cid"))
+    val cents = ivfCentroids(corpus, cellStride, cells, idCol, vecCol)
     val cb = pqCodebook(corpus, m, subDim, cbStride, cbK, idCol, vecCol)
-    val codes = pqEncode(corpus, cb, m, subDim, idCol, vecCol)
-      .join(assign, "id")
-    val subs = array((0 until m).map(i =>
-      slice(asDouble(col(vecCol)), 1 + subDim * i, subDim)): _*)
-    val dtable = queries
-      .select(col(idCol).as("qid"), posexplode(subs).as(Seq("m", "qv")))
-      .join(broadcast(cb), "m")
-      .select(col("qid"), col("m"), col("cw"),
-        sqDistInt(col("qv"), col("cv")).as("d"))
-    val probed = codes
-      .join(broadcast(probes.withColumnRenamed("qid", "pqid")), "cid")
-      .filter(col("id") =!= col("pqid"))
-    val adc = probed.join(broadcast(dtable),
-        probed("m") === dtable("m") && probed("code") === dtable("cw") &&
-          probed("pqid") === dtable("qid"))
-      .select(col("pqid"), col("id").as("nid"), col("d"))
-      .groupBy("pqid", "nid")
-      .agg(sum("d").as("adc"))
-    adc.withColumn("rank", row_number().over(
-        Window.partitionBy("pqid").orderBy(col("adc").asc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("pqid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+    ivfPqSearch(
+      postings(pqEncode(corpus, cb, m, subDim, idCol, vecCol), corpus, cents,
+        idCol, vecCol),
+      queries, cents, cb, doubleSubs(col(vecCol), m, subDim), sqDistInt,
+      k, nprobe, idCol, vecCol)
   }
 
   /** Filtered IVF-PQ search against EXPLICIT trained artifacts — the
@@ -800,53 +769,12 @@ object Similarity {
       pred: Column, centroids: DataFrame, codebook: DataFrame,
       k: Int = 5, nprobe: Int = 2, m: Int = 4, subDim: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val matching = corpus.filter(pred)
-    val v = asDouble(col(vecCol))
-    // posting lists from the FILTERED corpus: one codegen'd pass per
-    // build against the broadcast trained artifacts; the pred is a
-    // scan-side pushed filter on both
-    val assign = matching.select(col(idCol).as("id"), v.as("xv"))
-      .crossJoin(broadcast(centroids))
-      .select(col("id"), col("cid"),
-        cosineCol(col("xv"), col("cv")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rk") === 1).select(col("id"), col("cid"))
-    val codes = matching.select(col(idCol).as("id"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "sv")))
-      .join(broadcast(packCodebook(codebook)), "m")
-      .select(col("id"), col("m"),
-        argminCw(col("sv"), col("cbs"), sqDistLong).as("best"))
-      .select(col("id"), col("m"), col("best.cw").as("code"))
-      .join(assign, "id")
-    // probes + ADC tables from the QUERY vectors (tiny, broadcast)
-    val probes = queries.select(col(idCol).as("qid"), v.as("qxv"))
-      .crossJoin(broadcast(centroids))
-      .select(col("qid"), col("cid"),
-        cosineCol(col("qxv"), col("cv")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rk") <= nprobe).select(col("qid"), col("cid"))
-    val dtable = queries.select(col(idCol).as("qid"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "qv")))
-      .join(broadcast(codebook), "m")
-      .select(col("qid"), col("m"), col("cw"),
-        sqDistLong(col("qv"), col("cv")).as("d"))
-    // search: only the probed cells' FILTERED posting entries score
-    val probed = codes
-      .join(broadcast(probes.withColumnRenamed("qid", "pqid")), "cid")
-      .filter(col("id") =!= col("pqid"))
-    val adc = probed.join(broadcast(dtable),
-        probed("m") === dtable("m") && probed("code") === dtable("cw") &&
-          probed("pqid") === dtable("qid"))
-      .select(col("pqid"), col("id").as("nid"), col("d"))
-      .groupBy("pqid", "nid")
-      .agg(sum("d").as("adc"))
-    adc.withColumn("rank", row_number().over(
-        Window.partitionBy("pqid").orderBy(col("adc").asc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("pqid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+    ivfPqSearch(
+      postings(codes(matching, codebook, m, subDim, idCol, vecCol), matching,
+        centroids, idCol, vecCol),
+      queries, centroids, codebook, quantSubs(col(vecCol), m, subDim),
+      sqDistLong, k, nprobe, idCol, vecCol)
   }
 
   /** In-JVM emulation of a durable index location for
@@ -856,6 +784,29 @@ object Similarity {
     * every later call in the JVM serves the files. */
   private val ivfPqIndexCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  private val paramsFile = "_graft_params.json"
+  private val indexMarker = "_GRAFT_INDEX_SUCCESS"
+
+  /** An index directory and the Hadoop filesystem it lives on. */
+  private def indexRoot(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val root = new Path(path)
+    (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
+  }
+
+  /** The params sidecar of the index at `root`, verbatim. */
+  private def readParams(fs: FileSystem, root: Path): String = {
+    val in = fs.open(new Path(root, paramsFile))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** Commit the index at `root`: the params sidecar, then the
+    * whole-index marker. */
+  private def commitIndex(fs: FileSystem, root: Path, params: String): Unit = {
+    val out = fs.create(new Path(root, paramsFile), true)
+    try out.write(params.getBytes("UTF-8")) finally out.close()
+    fs.create(new Path(root, indexMarker), true).close()
+  }
 
   /** PERSISTED IVF-PQ index — the deployment shape of [[annIvfPq]]:
     * a production corpus generation trains the index ONCE (coarse
@@ -888,73 +839,52 @@ object Similarity {
     *
     * Returns (centroids, codebook, postings) — always read FROM THE
     * FILES, so readers keep column pruning and every consumer sees
-    * the same committed bytes. */
+    * the same committed bytes. The training checkpoints are freed once
+    * the tables are written, also when the build throws. */
   def ivfPqIndexTable(corpus: DataFrame, dim: Int = 64, cells: Int = 8,
       cellStride: Int = 31, cellIters: Int = 1, m: Int = 4,
       subDim: Int = 16, cbStride: Int = 31, cbK: Int = 16,
       cbIters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding",
       indexPath: Option[String] = None): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val params = s"""{"dim":$dim,"cells":$cells,"cellStride":$cellStride,""" +
       s""""cellIters":$cellIters,"m":$m,"subDim":$subDim,""" +
       s""""cbStride":$cbStride,"cbK":$cbK,"cbIters":$cbIters,""" +
       s""""idCol":"$idCol","vecCol":"$vecCol"}"""
-    def build(dir: String): Unit = {
-      val cents = trainedIvfCentroids(
-        corpus, dim, cellStride, cells, cellIters, idCol, vecCol)
-      val cb = pqCodebookTrained(
-        corpus, m, subDim, cbStride, cbK, cbIters, idCol, vecCol)
-      // posting lists from the FULL corpus: one broadcast-centroid
-      // assignment pass + one broadcast-codebook encode pass — the
-      // same per-vector functions the filtered search (v17) applies
-      // post-filter, so a predicate semi-join over these postings is
-      // bit-identical to rebuilding them from the filtered corpus
-      val v = asDouble(col(vecCol))
-      val assign = corpus.select(col(idCol).as("id"), v.as("xv"))
-        .crossJoin(broadcast(cents))
-        .select(col("id"), col("cid"),
-          cosineCol(col("xv"), col("cv")).as("cos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
-        .filter(col("rk") === 1).select(col("id"), col("cid"))
-      val postings = corpus.select(col(idCol).as("id"),
-          posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "sv")))
-        .join(broadcast(packCodebook(cb)), "m")
-        .select(col("id"), col("m"),
-          argminCw(col("sv"), col("cbs"), sqDistLong).as("best"))
-        .select(col("id"), col("m"), col("best.cw").as("code"))
-        .join(assign, "id")
-      cents.write.mode("overwrite").parquet(s"$dir/centroids")
-      cb.write.mode("overwrite").parquet(s"$dir/codebook")
-      postings.write.mode("overwrite").parquet(s"$dir/postings")
-    }
     val spark = corpus.sparkSession
+    def build(dir: String): Unit =
+      Materialize.scope(spark, "Similarity.ivfPqIndexTable") { _ =>
+        val cents = trainedIvfCentroids(
+          corpus, dim, cellStride, cells, cellIters, idCol, vecCol)
+        val cb = pqCodebookTrained(
+          corpus, m, subDim, cbStride, cbK, cbIters, idCol, vecCol)
+        cents.write.mode("overwrite").parquet(s"$dir/centroids")
+        cb.write.mode("overwrite").parquet(s"$dir/codebook")
+        // posting lists from the FULL corpus: the per-vector functions
+        // the filtered search (v17) applies post-filter, so a predicate
+        // semi-join over these postings is bit-identical to rebuilding
+        // them from the filtered corpus
+        postings(codes(corpus, cb, m, subDim, idCol, vecCol), corpus, cents,
+            idCol, vecCol)
+          .write.mode("overwrite").parquet(s"$dir/postings")
+      }
     val path = indexPath match {
       case Some(p) =>
-        val conf = spark.sessionState.newHadoopConf()
-        val marker = new org.apache.hadoop.fs.Path(p, "_GRAFT_INDEX_SUCCESS")
-        val sidecar = new org.apache.hadoop.fs.Path(p, "_graft_params.json")
-        val fs = marker.getFileSystem(conf)
-        if (fs.exists(marker)) {
-          if (fs.exists(sidecar)) {
-            val in = fs.open(sidecar)
-            val existing = try scala.io.Source.fromInputStream(in, "UTF-8")
-              .mkString.trim finally in.close()
+        val (fs, root) = indexRoot(spark, p)
+        if (fs.exists(new Path(root, indexMarker))) {
+          if (fs.exists(new Path(root, paramsFile))) {
+            val existing = readParams(fs, root).trim
             require(existing == params,
               s"ivfPqIndexTable at $p was committed with params $existing " +
                 s"but was requested with $params — one indexPath keys ONE " +
                 "parameter set; use a different path or drop the directory " +
                 "to retrain")
           }
-          p
         } else {
           build(p)
-          val out = fs.create(sidecar, true)
-          try out.write(params.getBytes("UTF-8")) finally out.close()
-          fs.create(marker, true).close()
-          p
+          commitIndex(fs, root, params)
         }
+        p
       case None =>
         val sh = corpus.queryExecution.analyzed.canonicalized.semanticHash()
         ivfPqIndexCache.computeIfAbsent(
@@ -976,17 +906,13 @@ object Similarity {
     * [[ivfPqIndexAppend]] has landed since training. An uncommitted
     * delta (crashed appender — no `_SUCCESS`) is invisible to
     * readers and harmlessly overwritten by a later append. */
-  private def readPostings(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    val committed = fs.globStatus(
-        new org.apache.hadoop.fs.Path(root, "postings*"))
+  private def readPostings(spark: SparkSession, indexPath: String): DataFrame = {
+    val (fs, root) = indexRoot(spark, indexPath)
+    val committed = fs.globStatus(new Path(root, "postings*"))
       .map(_.getPath)
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
       .map(_.toString).sorted
-    spark.read.parquet(committed: _*)
+    spark.read.parquet(committed.toIndexedSeq: _*)
   }
 
   /** Incremental growth of a committed [[ivfPqIndexTable]] — the
@@ -1009,53 +935,31 @@ object Similarity {
     * trade; retrain per major generation, append within one. */
   def ivfPqIndexAppend(newVectors: DataFrame, indexPath: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val spark = newVectors.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(conf)
-    require(fs.exists(
-        new org.apache.hadoop.fs.Path(root, "_GRAFT_INDEX_SUCCESS")),
+    val (fs, root) = indexRoot(spark, indexPath)
+    require(fs.exists(new Path(root, indexMarker)),
       s"ivfPqIndexAppend: no committed index at $indexPath — train with " +
         "ivfPqIndexTable first")
     // the sidecar's m/subDim are the encode geometry; the append must
     // quantize exactly as the base build did
-    val sidecar = new org.apache.hadoop.fs.Path(root, "_graft_params.json")
-    val in = fs.open(sidecar)
-    val params = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .mkString finally in.close()
+    val params = readParams(fs, root)
     def intField(name: String): Int =
       s""""$name":(\\d+)""".r.findFirstMatchIn(params).map(_.group(1).toInt)
         .getOrElse(throw new IllegalArgumentException(
           s"ivfPqIndexAppend: params sidecar at $indexPath lacks $name"))
     val m = intField("m"); val subDim = intField("subDim")
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-    val cb = spark.read.parquet(s"$indexPath/codebook")
-    val v = asDouble(col(vecCol))
-    val assign = newVectors.select(col(idCol).as("id"), v.as("xv"))
-      .crossJoin(broadcast(cents))
-      .select(col("id"), col("cid"),
-        cosineCol(col("xv"), col("cv")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id").orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rk") === 1).select(col("id"), col("cid"))
-    val delta = newVectors.select(col(idCol).as("id"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "sv")))
-      .join(broadcast(packCodebook(cb)), "m")
-      .select(col("id"), col("m"),
-        argminCw(col("sv"), col("cbs"), sqDistLong).as("best"))
-      .select(col("id"), col("m"), col("best.cw").as("code"))
-      .join(assign, "id")
+    val delta = postings(
+      codes(newVectors, spark.read.parquet(s"$indexPath/codebook"), m, subDim,
+        idCol, vecCol),
+      newVectors, spark.read.parquet(s"$indexPath/centroids"), idCol, vecCol)
     // next = max over COMMITTED deltas only: a torn delta (crashed
     // appender, no _SUCCESS) must not reserve its number forever —
     // skipping uncommitted dirs makes the next append OVERWRITE the
     // torn directory forward, matching the readPostings doc ("a
     // markerless delta is harmlessly overwritten by a later append")
     // instead of accumulating dead dirs compaction never folds away.
-    val next = 1 + fs.globStatus(
-        new org.apache.hadoop.fs.Path(root, "postings_delta_*"))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+    val next = 1 + fs.globStatus(new Path(root, "postings_delta_*"))
+      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
       .map(_.getPath.getName.stripPrefix("postings_delta_"))
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .foldLeft(0)(math.max)
@@ -1074,17 +978,13 @@ object Similarity {
     * generation's marker lands (the same publish-then-flip any
     * curated table rewrite uses). Geometry is untouched, so searches
     * against the compacted index are bit-identical. */
-  def ivfPqIndexCompact(spark: org.apache.spark.sql.SparkSession,
+  def ivfPqIndexCompact(spark: SparkSession,
       indexPath: String, targetPath: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val src = new org.apache.hadoop.fs.Path(indexPath)
-    val dst = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = src.getFileSystem(conf)
-    require(fs.exists(
-        new org.apache.hadoop.fs.Path(src, "_GRAFT_INDEX_SUCCESS")),
+    val (fs, src) = indexRoot(spark, indexPath)
+    val dst = new Path(targetPath)
+    require(fs.exists(new Path(src, indexMarker)),
       s"ivfPqIndexCompact: no committed index at $indexPath")
-    require(!fs.exists(
-        new org.apache.hadoop.fs.Path(dst, "_GRAFT_INDEX_SUCCESS")),
+    require(!fs.exists(new Path(dst, indexMarker)),
       s"ivfPqIndexCompact: $targetPath already holds a committed index " +
         "— compaction publishes a NEW generation, it never overwrites one")
     spark.read.parquet(s"$indexPath/centroids")
@@ -1093,26 +993,17 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$targetPath/codebook")
     readPostings(spark, indexPath)
       .write.mode("overwrite").parquet(s"$targetPath/postings")
-    val in = fs.open(new org.apache.hadoop.fs.Path(src, "_graft_params.json"))
-    val params = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .mkString finally in.close()
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(dst, "_graft_params.json"), true)
-    try out.write(params.getBytes("UTF-8")) finally out.close()
-    fs.create(
-      new org.apache.hadoop.fs.Path(dst, "_GRAFT_INDEX_SUCCESS"), true).close()
+    commitIndex(fs, dst, readParams(fs, src))
   }
 
   /** Filtered IVF-PQ search SERVED FROM THE PERSISTED INDEX — v17's
-    * semantics against [[ivfPqIndexTable]]'s files: probes and ADC
-    * tables come from the query vectors against the broadcast trained
-    * artifacts exactly as in [[annIvfPqFilteredTrained]], but the
-    * posting lists are the committed full-corpus tables restricted to
-    * the predicate by an id SEMI-JOIN — no re-encode per predicate.
-    * Cell assignment and PQ encode are per-vector functions, so
-    * semi-joining the persisted postings to the filtered id set is
-    * bit-identical to rebuilding them from the filtered corpus (the
-    * v17 oracle gates both paths on that equality).
+    * search ([[annIvfPqFilteredTrained]]) against [[ivfPqIndexTable]]'s
+    * files: the posting lists are the committed full-corpus tables
+    * restricted to the predicate by an id SEMI-JOIN — no re-encode per
+    * predicate. Cell assignment and PQ encode are per-vector
+    * functions, so semi-joining the persisted postings to the filtered
+    * id set is bit-identical to rebuilding them from the filtered
+    * corpus (the v17 oracle gates both paths on that equality).
     *
     * Scale posture: the predicate reaches the corpus parquet scan as
     * a pushed filter (plan-pinned) and only (id) rows cross into the
@@ -1126,41 +1017,13 @@ object Similarity {
       cbIters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding",
       indexPath: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (centroids, codebook, postings) = ivfPqIndexTable(corpus, dim,
+    val (centroids, codebook, committed) = ivfPqIndexTable(corpus, dim,
       cells, cellStride, cellIters, m, subDim, cbStride, cbK, cbIters,
       idCol, vecCol, indexPath)
-    val v = asDouble(col(vecCol))
-    // predicate placement: a semi-join of the NARROW persisted
-    // postings against the filtered id set — the filter pushes to the
-    // corpus scan, the postings never rebuild
     val matching = corpus.filter(pred).select(col(idCol).as("id"))
-    val entries = postings.join(matching, Seq("id"), "left_semi")
-    val probes = queries.select(col(idCol).as("qid"), v.as("qxv"))
-      .crossJoin(broadcast(centroids))
-      .select(col("qid"), col("cid"),
-        cosineCol(col("qxv"), col("cv")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("cos").desc, col("cid").asc)))
-      .filter(col("rk") <= nprobe).select(col("qid"), col("cid"))
-    val dtable = queries.select(col(idCol).as("qid"),
-        posexplode(quantSubs(col(vecCol), m, subDim)).as(Seq("m", "qv")))
-      .join(broadcast(codebook), "m")
-      .select(col("qid"), col("m"), col("cw"),
-        sqDistLong(col("qv"), col("cv")).as("d"))
-    val probed = entries
-      .join(broadcast(probes.withColumnRenamed("qid", "pqid")), "cid")
-      .filter(col("id") =!= col("pqid"))
-    val adc = probed.join(broadcast(dtable),
-        probed("m") === dtable("m") && probed("code") === dtable("cw") &&
-          probed("pqid") === dtable("qid"))
-      .select(col("pqid"), col("id").as("nid"), col("d"))
-      .groupBy("pqid", "nid")
-      .agg(sum("d").as("adc"))
-    adc.withColumn("rank", row_number().over(
-        Window.partitionBy("pqid").orderBy(col("adc").asc, col("nid").asc)))
-      .filter(col("rank") <= k)
-      .select(col("pqid").as("query_id"), col("rank"), col("nid").as("neighbor"))
+    ivfPqSearch(committed.join(matching, Seq("id"), "left_semi"),
+      queries, centroids, codebook, quantSubs(col(vecCol), m, subDim),
+      sqDistLong, k, nprobe, idCol, vecCol)
   }
 
   /** Hybrid retrieval with reciprocal-rank fusion (RRF).
@@ -1184,7 +1047,6 @@ object Similarity {
       queryVecId: Long, k: Int = 50, topK: Int = 10,
       idCol: String = "doc_id", textCol: String = "text",
       vecIdCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val terms = array(queryTerms.map(lit): _*)
     val lexScore = size(filter(Text.tokens(col(textCol)),
       t => array_contains(terms, t))).cast("long")

@@ -74,7 +74,7 @@ object Materialize {
     def release(df: Dataset[_]): Unit = free(GraftBridge.rddsRead(df))
 
     private[Materialize] def free(ids: Int => Boolean): Unit =
-      owned.filter(r => ids(r.id)).foreach(_.unpersist(blocking = true))
+      owned.filter(r => ids(r.id)).foreach(GraftBridge.unpersist)
 
     private[Materialize] def owned: Seq[RDD[_]] = synchronized {
       val sc = spark.sparkContext

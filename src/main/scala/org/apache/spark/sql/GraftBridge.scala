@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Minimal bridge into the `private[sql]` surface the engine needs:
   * turning a custom [[LogicalPlan]] node (graft.plans.AsOfJoinPlan)
   * into a DataFrame so the planner can reach the custom strategy, and
-  * finding the local checkpoints a caller created. Lives in
+  * finding and freeing the local checkpoints a caller created. Lives in
   * `org.apache.spark.sql` for access scope only — the standard pattern
   * for open-source Spark extension libraries.
   */
@@ -28,8 +28,20 @@ object GraftBridge {
   def locallyCheckpointed(sc: SparkContext,
       createdAt: String => Boolean): Iterable[RDD[_]] =
     sc.getPersistentRDDs.values.filter(r =>
-      r.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]) &&
-        createdAt(r.getCreationSite))
+      isLocalCheckpoint(r) && createdAt(r.getCreationSite))
+
+  /** Free a persisted RDD's blocks, blocking until they are gone. A
+    * local checkpoint goes through `SparkContext.unpersistRDD`:
+    * `RDD.unpersist` would first log a WARN that its lineage cannot be
+    * recomputed, and the callers free only what nothing reads again.
+    * Any other RDD goes through `RDD.unpersist`, which also clears its
+    * storage level. */
+  def unpersist(rdd: RDD[_]): Unit =
+    if (isLocalCheckpoint(rdd)) rdd.context.unpersistRDD(rdd.id, blocking = true)
+    else rdd.unpersist(blocking = true): Unit
+
+  private def isLocalCheckpoint(r: RDD[_]): Boolean =
+    r.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
 
   /** Ids of the RDDs a frame's plan reads as leaves — for a checkpoint,
     * the persisted RDD itself. */

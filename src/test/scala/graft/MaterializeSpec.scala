@@ -6,11 +6,16 @@ import scala.collection.mutable
 
 import org.apache.spark.SpecBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.{DataFrame, GraftBridge, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.sets.Sets
+import graft.similarity.Similarity
 import graft.store.{FactStore, Materialize}
 import graft.streaming.Streaming
 
@@ -78,6 +83,89 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
     }
     assert(files.count() == 4L && files.inputFiles.forall(_.contains(root)))
     assert((persistent -- before).isEmpty)
+  }
+
+  test("freeing a local checkpoint logs no lineage WARN and drops it from the persistent RDDs") {
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("rdd-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val rddLoggers = LogManager.getLogger("org.apache.spark.rdd").asInstanceOf[CoreLogger]
+    rddLoggers.addAppender(capture)
+    var freed = Set.empty[Int]
+    try Materialize.scope(spark, "warn-free") { m =>
+      val df = m("freed")(spark.range(10).toDF("id"))
+      freed = GraftBridge.rddsRead(df)
+      assert(df.count() == 10L)
+    } finally {
+      rddLoggers.removeAppender(capture)
+      capture.stop()
+    }
+    assert(freed.nonEmpty && (freed & persistent).isEmpty)
+    assert(logged.isEmpty, logged)
+  }
+
+  /** 40 four-dim vectors in a fresh parquet table: a new corpus plan, so
+    * the in-JVM index cache never serves another test's index. */
+  private def vectorTable(): DataFrame = {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("ivfpq_release").toString + "/vectors"
+    (0L until 40L).map(i => (i, Array(math.sin(i.toDouble).toFloat,
+        math.cos(i.toDouble).toFloat, (i % 7).toFloat / 7, (i % 3).toFloat / 3)))
+      .toDF("vec_id", "embedding").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def ivfPqIndex(path: Option[String]) =
+    Similarity.ivfPqIndexTable(vectorTable(), dim = 4, cells = 2, cellStride = 3,
+      m = 2, subDim = 2, cbStride = 3, cbK = 4, indexPath = path)
+
+  test("Similarity.ivfPqIndexTable frees its training checkpoints (temp-dir index)") {
+    val before = persistent
+    val (centroids, codebook, postings) = ivfPqIndex(None)
+    for (table <- Seq(centroids, codebook, postings)) onlyReturned(before, table)
+    assert(postings.count() == 80L)
+  }
+
+  test("Similarity.ivfPqIndexTable frees its training checkpoints (indexPath)") {
+    val dir = Files.createTempDirectory("ivfpq_release_path").toString + "/index"
+    val before = persistent
+    val (centroids, codebook, postings) = ivfPqIndex(Some(dir))
+    for (table <- Seq(centroids, codebook, postings)) onlyReturned(before, table)
+    assert(postings.count() == 80L)
+  }
+
+  test("Similarity.ivfPqIndexTable frees its training checkpoints when the build throws") {
+    // the index path sits under a regular file: training runs, the
+    // first table write cannot create its directory
+    val file = Files.createTempFile("ivfpq_release", ".file").toString
+    releasedOnThrow(ivfPqIndex(Some(s"$file/index")))
+  }
+
+  test("vector family: a board row leaves only the checkpoints its result reads") {
+    val sf = "/root/testdata/sf0.001"
+    val rows = Seq("d9_semantic_dedup", "v1_ann_bruteforce", "v4_ann_lsh",
+      "v5_ann_ivf", "v8_pq_adc", "v9_ivf_pq", "v10_pq_trained",
+      "v11_kmeans_cluster", "v12_diversity_medoid", "v13_knn_classify",
+      "v15_recall_eval", "v16_filtered_ann", "v16b_filtered_ivf",
+      "v16c_trained_filtered_ivf", "v17_filtered_ivf_pq", "v18_persisted_ivf_pq")
+    val strays = rows.flatMap { name =>
+      // the enclosing scope is the caller: it adopts and frees what
+      // the row's result reads once the row is checked
+      Materialize.scope(spark, s"sweep $name") { _ =>
+        val before = persistent
+        val out = SparkEntry.queries(name)(spark, sf)
+        // also looked at before the write: Spark's ContextCleaner frees
+        // a leaked RDD once a driver GC finds it unreachable
+        val built = persistent
+        out.write.mode("overwrite").format("noop").save()
+        val stray = (built ++ persistent) -- before -- GraftBridge.rddsRead(out)
+        if (stray.isEmpty) None
+        else Some(s"$name: ${stray.toSeq.sorted.mkString(",")}")
+      }
+    }
+    assert(strays.isEmpty, strays.mkString("; "))
   }
 
   test("FactStore.compact releases its snapshot when it throws and when it returns") {

@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [name,name,...]
 
 Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB with a
 view per parquet table in <sfDir>, loads the Spark result parquet from
 <verifyOutDir>/<name>/, sorts columns by name, sorts rows, and compares
-values exactly (with a tiny report of first diffs).
+values exactly (with a tiny report of first diffs). With the optional
+third argument (comma-separated query names, as passed to `Verify`) only
+those queries are checked; a listed name without Spark output still fails.
 """
 import sys, os, json, glob, math
 import duckdb
@@ -25,13 +27,19 @@ def frame_to_rows(cols, rows):
     out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
     return sorted(cols), sorted(out)
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=None):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if names is not None:
+        unknown = sorted(set(names) - set(oracles))
+        if unknown:
+            print(f"FAIL unknown query names: {unknown}")
+            return 1
+        oracles = {n: oracles[n] for n in names}
     n_ok = n_bad = 0
     for name, sql in sorted(oracles.items()):
         spark_dir = f"{out_dir}/{name}"
@@ -73,4 +81,7 @@ def main(sf_dir, out_dir):
     return 1 if n_bad else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    if len(sys.argv) not in (3, 4):
+        sys.exit(__doc__)
+    names = [n for n in sys.argv[3].split(",") if n] if len(sys.argv) == 4 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], names))
