@@ -1,10 +1,11 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -24,6 +25,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * micro-batch's progress JSON (the engine's own durationMs breakdown:
   * addBatch / getBatch / commitOffsets / stateOperators). The session
   * is [[GraftSession]]'s, so the dumped shapes are the benched shapes.
+  * Every file ends with a `jobs=N tasks=M` line: the Spark jobs started
+  * and tasks ended from the start of the query's construction (an
+  * eager operator such as `Sets.ancestorClosure` runs its jobs there)
+  * to the noop write's return, counted by a listener read only after
+  * the bus is drained on both ends.
   *
   * Both captures come from async listener buses, so each carries a
   * tag fixed when its work STARTED, and a dump keeps only captures of
@@ -75,8 +81,16 @@ object PlanDump {
           .foreach(ep => progress.add((ep.intValue, e.progress.json)))
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
+    val jobs = new AtomicLong()
+    val tasks = new AtomicLong()
+    val countListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
     spark.listenerManager.register(planListener)
     spark.streams.addListener(streamListener)
+    sc.addSparkListener(countListener)
     for (name <- names; fn <- qs.get(name)) {
       epoch += 1
       val ep = epoch
@@ -85,11 +99,15 @@ object PlanDump {
       val out = new java.io.File(outDir, s"${name}_$tag.txt")
       val w = new java.io.PrintWriter(out, "UTF-8")
       try {
+        GraftBridge.drainListenerBus(sc)
+        jobs.set(0); tasks.set(0)
         val df = fn(spark, sfDir)
         w.println(s"==== $name ($tag) — explain formatted (pre-execution) ====")
         w.println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
         val floor = spark.range(0).queryExecution.id
         df.write.mode("overwrite").format("noop").save()
+        GraftBridge.drainListenerBus(sc)
+        val counted = s"jobs=${jobs.get} tasks=${tasks.get}"
         // the listener bus is async; wait briefly for the callback
         val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
         while (executed.get._1 <= floor && System.nanoTime() < deadline)
@@ -107,12 +125,15 @@ object PlanDump {
             batches.foreach(w.println)
           }
         }
+        w.println(s"==== $name ($tag) — Spark jobs and tasks, construction through the noop write ====")
+        w.println(counted)
       } catch { case e: Throwable =>
         w.println(s"[plandump] $name failed: ${e}")
       } finally w.close()
       progress.removeIf(_._1 <= ep): Unit
       println(s"[plandump] wrote $out")
     }
+    sc.removeSparkListener(countListener)
     spark.streams.removeListener(streamListener)
     spark.listenerManager.unregister(planListener)
     spark.stop()

@@ -28,12 +28,19 @@ object Series {
       to: Option[java.time.LocalDate] = None): DataFrame = {
     // Bounds come from the REQUESTED range when given (the reference
     // densifies over the context's from..to, `Utils.pm:135-215`),
-    // falling back to the data extent.
-    val bounds = series.agg(
-      from.map(d => lit(java.sql.Date.valueOf(d)))
-        .getOrElse(min(col(dateCol))).as("lo"),
-      to.map(d => lit(java.sql.Date.valueOf(d)))
-        .getOrElse(max(col(dateCol))).as("hi"))
+    // falling back to the data extent. With both given the calendar
+    // reads nothing of the series: a one-row, one-slice relation, so
+    // the series is planned once and the calendar side stays
+    // SinglePartition (a downstream regroup or window needs no
+    // exchange).
+    val day = (d: java.time.LocalDate) => lit(java.sql.Date.valueOf(d))
+    val bounds = (from, to) match {
+      case (Some(f), Some(t)) =>
+        series.sparkSession.range(0, 1, 1, 1).select(day(f).as("lo"), day(t).as("hi"))
+      case _ =>
+        series.agg(from.map(day).getOrElse(min(col(dateCol))).as("lo"),
+          to.map(day).getOrElse(max(col(dateCol))).as("hi"))
+    }
     // guard: sequence(lo, hi) THROWS when lo > hi (inverted explicit
     // range, or a requested `from` beyond the data extent with no
     // `to`) and when the series is EMPTY with defaulted bounds

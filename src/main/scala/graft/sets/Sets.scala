@@ -1,7 +1,11 @@
 package graft.sets
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import graft.classify.{Classify, NameCase}
 import graft.store.Materialize
 
@@ -14,8 +18,11 @@ import graft.store.Materialize
   * Scale posture: set tables are small relative to facts (one row per
   * item x value). They are built once per ETL run with explode +
   * joins, then BROADCAST at query time (QueryCompiler J1/J2). The
-  * ancestor closure is an iterative self-join bounded by tree depth —
-  * each iteration is a broadcast join against the (tiny) subject tree.
+  * ancestor closure walks the subject tree on the driver — the tree is
+  * one row per subject (a taxonomy, thousands of rows, not items), the
+  * size a broadcast join already collects to the driver — and joins
+  * the resulting (subject, ancestors) table to the assignments once,
+  * broadcast. No Spark job decides when the walk ends.
   */
 object Sets {
 
@@ -124,8 +131,8 @@ object Sets {
 
   /** Subject ancestor closure (ref `Sets.pm:402-424,461-485`): an
     * item tagged with a subject also counts toward every ancestor.
-    * `tree` is (child, parent); iterated to `maxDepth` (tree height),
-    * stopping early when a pass adds nothing.
+    * `tree` is (child, parent); ancestors up to `maxDepth` steps above
+    * a subject count (the tree height bounds the walk).
     *
     * Depositability filter (ref `Sets.pm:471-479`): when `depositable`
     * is supplied — (subjectid, depositable) — a non-depositable
@@ -136,51 +143,66 @@ object Sets {
     * `next unless defined $s`. With no `depositable` dim the closure
     * is unfiltered (legacy behavior).
     *
-    * Each round materializes the accumulator (same treatment as
-    * `Graph.pageRank`) so the final plan depth is O(1) in `maxDepth`
-    * instead of stacking `maxDepth` unions/excepts of lineage —
-    * guarded by PlanShapeSpec ("ancestorClosure plan depth"). The
-    * superseded rounds are freed on return; the returned closure reads
-    * the last accumulator, which the caller owns
-    * ([[graft.store.Materialize]]). */
+    * The tree is read once (one scan, cast to the type of
+    * `set_value`, deduplicated on the driver) and walked there
+    * breadth-first per subject, as the reference walks each subject's
+    * ancestors: a null child matches nothing, a null parent counts as
+    * an ancestor but has none of its own, and a cycle ends at the
+    * visited set. The (subject, ancestors) table then joins the
+    * assignments in one broadcast join, so the Spark jobs do not grow
+    * with the tree's depth. The closure is materialized once; the
+    * returned frame reads that one checkpoint, which the caller owns
+    * ([[graft.store.Materialize]]), so its plan depth is O(1) —
+    * guarded by PlanShapeSpec ("ancestorClosure plan depth"). */
   def ancestorClosure(assignments: DataFrame, tree: DataFrame,
       maxDepth: Int = 12,
       depositable: Option[DataFrame] = None,
       whitelist: Set[String] = Set.empty): DataFrame =
     Materialize.scope(assignments.sparkSession, "Sets.ancestorClosure") { m =>
       // assignments: (set_value, id); tree: (child, parent)
-      val t = broadcast(tree.select(col("child"), col("parent")).distinct())
-      // the accumulator is assignment-scale (one row per item x
-      // ancestor) and survives the whole loop
-      var acc = m("acc")(assignments.select("set_value", "id").distinct())
-      var frontier = acc
-      var depth = 0
-      var growing = true
-      while (growing && depth < maxDepth) {
-        val parents = frontier
-          .join(t, frontier("set_value") === t("child"))
-          .select(col("parent").as("set_value"), col("id"))
-          .distinct()
-        val added = m("added")(parents.except(acc))
-        if (added.isEmpty) growing = false
-        else {
-          acc = m("acc")(acc.unionByName(added).distinct())
-          frontier = added
-        }
-        depth += 1
-      }
-      depositable.fold(acc) { dep =>
+      val asn = assignments.select(col("set_value"), col("id"))
+      val t = asn.schema("set_value").dataType
+      val edges = tree.select(col("child").cast(t), col("parent").cast(t))
+        .collect().map(r => r.get(0) -> r.get(1)).distinct.toSeq
+      val up = assignments.sparkSession.createDataFrame(
+        ancestorsWithin(edges, maxDepth).asJava,
+        StructType(Seq(StructField("subject", t), StructField("ancestors", ArrayType(t)))))
+      // every subject's ancestors list starts with the subject itself;
+      // one absent from the tree (or null) keeps just its own row
+      val closure = m("closure")(asn
+        .join(broadcast(up), asn("set_value") === up("subject"), "left")
+        .select(explode(coalesce(up("ancestors"), array(asn("set_value")))).as("set_value"),
+          asn("id"))
+        .distinct())
+      depositable.fold(closure) { dep =>
         val d = broadcast(dep
           .select(col("subjectid"), col("depositable").cast("boolean").as("depositable"))
           .distinct())
         val whitelisted =
           if (whitelist.nonEmpty) col("subjectid").isin(whitelist.toSeq: _*)
           else lit(false)
-        acc.join(d, acc("set_value") === d("subjectid"), "left")
+        closure.join(d, closure("set_value") === d("subjectid"), "left")
           .filter(coalesce(col("depositable") || whitelisted, lit(false)))
-          .select(acc("set_value"), acc("id"))
+          .select(closure("set_value"), closure("id"))
       }
     }
+
+  /** One row per subject that has a parent: (subject, the subject
+    * followed by every ancestor within `maxDepth` steps), breadth-first
+    * over the deduplicated (child, parent) edges. */
+  private def ancestorsWithin(edges: Seq[(Any, Any)], maxDepth: Int): Seq[Row] = {
+    val parents = edges.filter(_._1 != null).groupMap(_._1)(_._2)
+    parents.keys.toSeq.map { subject =>
+      val seen = mutable.LinkedHashSet[Any](subject)
+      var frontier = Seq(subject)
+      var depth = 0
+      while (frontier.nonEmpty && depth < maxDepth) {
+        frontier = for (c <- frontier; p <- parents.getOrElse(c, Nil) if seen.add(p)) yield p
+        depth += 1
+      }
+      Row(subject, seen.toSeq)
+    }
+  }
 
   /** Grouping bridge (ref `Handler.pm:942-977`): pre-joined pairs of
     * set membership x grouping membership per item, so "top G within

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import graft.model.FactRow
+
 /** Fact-table storage (SURVEY.md §2.1 S6/S7, §2.9 St2/St3):
   * date-partitioned parquet per datatype, idempotent backfill, and a
   * tiny checkpoint file for incremental runs.
@@ -92,9 +94,12 @@ object FactStore {
     Option(root.listFiles).toSeq.flatten
       .filter(d => d.isDirectory && d.getName.startsWith("date="))
 
-  /** Read a fact table; date-range filters prune partitions. */
+  /** Read a fact table; date-range filters prune partitions. The
+    * store fixes the schema ([[graft.model.FactRow.schema]]: every
+    * processor writes (date, id long, value string, count long)), so
+    * it is passed and opening a table runs no schema-inference job. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(FactRow.schema).parquet(path)
 
   /** St2 checkpoint: last fully-processed position (e.g. day or id),
     * stored as a one-line file — the analog of the reference's

@@ -2,6 +2,9 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.model.FactRow
 
 /** Incremental maintenance of the lifetime-totals materialized view
   * (SURVEY §2.4 A5). The reference RECOMPUTES per-eprint cumulative
@@ -44,12 +47,19 @@ object LifetimeMv {
       }
     }
 
+  /** The view's columns: the fact schema without `date`, as the
+    * merge writes them. */
+  private val Schema = StructType(FactRow.schema.filterNot(_.name == "date"))
+
   /** Current MV contents: (id, value, count) lifetime totals.
-    * Empty-schema-safe only after the first successful update. */
+    * Empty-schema-safe only after the first successful update. The
+    * view's schema is passed, so opening it runs no schema-inference
+    * job. */
   def read(spark: SparkSession, mvDir: String): Option[DataFrame] =
-    pointer(mvDir).map { case (v, _) =>
-      spark.read.parquet(s"$mvDir/v$v")
-    }
+    pointer(mvDir).map { case (v, _) => version(spark, mvDir, v) }
+
+  private def version(spark: SparkSession, mvDir: String, v: Long): DataFrame =
+    spark.read.schema(Schema).parquet(s"$mvDir/v$v")
 
   /** Merge fact days newer than the stored watermark into the view.
     * Returns the number of day-partitions merged (0 = already fresh).
@@ -96,7 +106,7 @@ object LifetimeMv {
 
     val deltaAgg = delta.groupBy("id", "value").agg(sum("count").as("count"))
     val merged = cur.map { case (v, _) =>
-      spark.read.parquet(s"$mvDir/v$v").unionByName(deltaAgg)
+      version(spark, mvDir, v).unionByName(deltaAgg)
         .groupBy("id", "value").agg(sum("count").as("count"))
     }.getOrElse(deltaAgg)
 

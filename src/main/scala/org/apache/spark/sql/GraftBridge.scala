@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Minimal bridge into the `private[sql]` surface the engine needs:
   * turning a custom [[LogicalPlan]] node (graft.plans.AsOfJoinPlan)
   * into a DataFrame so the planner can reach the custom strategy, and
-  * finding and freeing the local checkpoints a caller created. Lives in
+  * finding and freeing the local checkpoints a caller created, and
+  * draining the listener bus before reading a listener. Lives in
   * `org.apache.spark.sql` for access scope only — the standard pattern
   * for open-source Spark extension libraries.
   */
@@ -39,6 +40,12 @@ object GraftBridge {
   def unpersist(rdd: RDD[_]): Unit =
     if (isLocalCheckpoint(rdd)) rdd.context.unpersistRDD(rdd.id, blocking = true)
     else rdd.unpersist(blocking = true): Unit
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`LiveListenerBus.waitUntilEmpty` is package-private): a
+    * listener's counters read after this include every job that ran
+    * before the call. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   private def isLocalCheckpoint(r: RDD[_]): Boolean =
     r.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])

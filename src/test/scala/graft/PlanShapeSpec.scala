@@ -934,4 +934,45 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(p.toLowerCase.contains("dynamicpruning"),
       s"dynamic partition pruning did not plant its subquery filter:\n$p")
   }
+
+  test("densify with both bounds plans the series once; regroup and cumulative add no exchange") {
+    // The requested range fixes the calendar: deriving it from the
+    // series would scan the fact (and build its broadcasts) a second
+    // time for two constants. A one-slice calendar also stays
+    // SinglePartition through the join, so the regroup aggregate and
+    // the cumulative window above it need no shuffle.
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.functions.{col, sum}
+    import graft.series.Series
+    import graft.store.FactStore
+    val d = Files.createTempDirectory("densifyspec").toString
+    FactStore.append((0 until 60).map(i =>
+        (java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i % 40L)),
+          i.toLong % 7, "downloads", 1L + i % 3))
+      .toDF("date", "id", "value", "count"), d)
+    val from = java.time.LocalDate.of(2024, 1, 10)
+    val to = java.time.LocalDate.of(2024, 3, 5)
+    val series = FactStore.read(spark, d)
+      .filter(col("date").between(java.sql.Date.valueOf(from), java.sql.Date.valueOf(to)))
+      .groupBy(col("date").as("d")).agg(sum("count").as("cnt"))
+    val out = Series.cumulative(Series.regroup(
+      Series.densify(series, from = Some(from), to = Some(to)), "month"))
+    assert(out.collect().map(_.getLong(1)).sum ==
+      series.collect().map(_.getLong(1)).sum)
+    val whole = out.queryExecution.executedPlan.toString
+    assert(whole.contains("isFinalPlan=true"), s"not the AQE-final plan:\n$whole")
+    val p = whole.split("== Initial Plan ==").head
+    assert(p.sliding("FileScan".length).count(_ == "FileScan") == 1,
+      s"the series is scanned more than once:\n$p")
+    // the plan prints root first: every line between the cumulative
+    // window and the calendar join is an operator on the path from one
+    // to the other
+    val lines = p.linesIterator.toSeq
+    val window = lines.indexWhere(_.contains("Window"))
+    val join = lines.indexWhere(_.contains("Join"), window)
+    assert(window >= 0 && join > window, s"window or join missing:\n$p")
+    assert(!lines.slice(window, join).exists(l =>
+        l.contains("Exchange") || l.contains("ShuffleQueryStage") || l.contains("AQEShuffleRead")),
+      s"a shuffle sits between the calendar join and cumulative(regroup(...)):\n$p")
+  }
 }

@@ -7,6 +7,7 @@ import org.scalacheck.Gen
 import graft.filters.Repeat
 import graft.functions.Text
 import graft.series.Series
+import graft.sets.Sets
 
 /** Property tests for the invariants SURVEY.md §5 calls out:
   * densification length, count conservation under regroup and
@@ -706,5 +707,99 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       assert(out.map(_.getLong(1)).sum == rows.length,
         "docs_in across sources != corpus size")
     }
+  }
+
+  /** The semi-naive closure loop `Sets.ancestorClosure` ran before it
+    * walked the tree on the driver, kept as the oracle: one broadcast
+    * join per round over the frontier, stopping when a round adds
+    * nothing. Collected inside its scope, so every round is freed. */
+  private def semiNaiveClosure(assignments: org.apache.spark.sql.DataFrame,
+      tree: org.apache.spark.sql.DataFrame, maxDepth: Int,
+      depositable: Option[org.apache.spark.sql.DataFrame],
+      whitelist: Set[String]): Set[(String, Long)] =
+    graft.store.Materialize.scope(spark, "PropertySpec.semiNaiveClosure") { m =>
+      val t = broadcast(tree.select(col("child"), col("parent")).distinct())
+      var acc = m("acc")(assignments.select("set_value", "id").distinct())
+      var frontier = acc
+      var depth = 0
+      var growing = true
+      while (growing && depth < maxDepth) {
+        val parents = frontier
+          .join(t, frontier("set_value") === t("child"))
+          .select(col("parent").as("set_value"), col("id"))
+          .distinct()
+        val added = m("added")(parents.except(acc))
+        if (added.isEmpty) growing = false
+        else {
+          acc = m("acc")(acc.unionByName(added).distinct())
+          frontier = added
+        }
+        depth += 1
+      }
+      val out = depositable.fold(acc) { dep =>
+        val d = broadcast(dep
+          .select(col("subjectid"), col("depositable").cast("boolean").as("depositable"))
+          .distinct())
+        val whitelisted =
+          if (whitelist.nonEmpty) col("subjectid").isin(whitelist.toSeq: _*)
+          else lit(false)
+        acc.join(d, acc("set_value") === d("subjectid"), "left")
+          .filter(coalesce(col("depositable") || whitelisted, lit(false)))
+          .select(acc("set_value"), acc("id"))
+      }
+      out.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    }
+
+  private final case class ClosureCase(
+      edges: List[(Option[String], Option[String])],
+      assignments: List[(Option[String], Long)],
+      maxDepth: Int,
+      depositable: Option[Map[String, Boolean]],
+      whitelist: Set[String])
+
+  /** Subjects s0..s9 form the tree; s10 and s11 are assigned but never
+    * in it. A chain s0 -> s1 -> ... up to 8 long (longer than most
+    * depths drawn), random extra edges (multi-parent DAGs, cycles,
+    * self-loops), a null parent or child now and then. */
+  private val closureGen: Gen[ClosureCase] = {
+    val subject = Gen.choose(0, 9).map(i => s"s$i")
+    val edge = for {
+      c <- Gen.frequency(12 -> subject.map(Option(_)), 1 -> Gen.const(None))
+      p <- Gen.frequency(10 -> subject.map(Option(_)), 2 -> Gen.const(None))
+    } yield (c, p)
+    for {
+      chain <- Gen.choose(0, 8)
+      nExtra <- Gen.choose(0, 8)
+      extra <- Gen.listOfN(nExtra, edge)
+      nAsn <- Gen.choose(1, 12)
+      asn <- Gen.listOfN(nAsn, for {
+        v <- Gen.frequency(10 -> Gen.choose(0, 11).map(i => Option(s"s$i")),
+          1 -> Gen.const(None))
+        id <- Gen.choose(1L, 5L)
+      } yield (v, id))
+      maxDepth <- Gen.oneOf(0, 1, 2, 3, 12)
+      dep <- Gen.option(Gen.mapOf(Gen.zip(subject, Gen.oneOf(true, false))))
+      white <- Gen.someOf((0 to 9).map(i => s"s$i"))
+    } yield ClosureCase(
+      (0 until chain).map(i => (Option(s"s$i"), Option(s"s${i + 1}"))).toList ++ extra,
+      asn, maxDepth, dep, white.toSet)
+  }
+
+  test("ancestorClosure == the semi-naive join loop on random trees") {
+    val sp = spark; import sp.implicits._
+    var filtered = 0
+    forAllSeeded(closureGen, n = 16) { c =>
+      val tree = c.edges.toDF("child", "parent")
+      val asn = c.assignments.toDF("set_value", "id")
+      val dep = c.depositable.map(_.toSeq.toDF("subjectid", "depositable"))
+      if (dep.nonEmpty) filtered += 1
+      val want = semiNaiveClosure(asn, tree, c.maxDepth, dep, c.whitelist)
+      val got = graft.store.Materialize.scope(spark, "PropertySpec.ancestorClosure") { _ =>
+        Sets.ancestorClosure(asn, tree, c.maxDepth, dep, c.whitelist)
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      }
+      assert(got == want, s"closure diverged from the semi-naive loop for $c")
+    }
+    assert(filtered > 0, "no case exercised the depositable filter")
   }
 }

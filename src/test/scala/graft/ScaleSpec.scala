@@ -12,6 +12,25 @@ import graft.store.Bucketing
   * bounded densification. */
 class ScaleSpec extends AnyFunSuite with SparkSpec {
 
+  /** The single-partition reference window of the GlobalRank specs,
+    * keyed by a constant that is not constant-foldable (a `lit` key
+    * folds back to an empty spec and Spark logs "No Partition Defined"
+    * on every run), the way `Series` keys its series windows. */
+  private def onePartition =
+    org.apache.spark.sql.expressions.Window.partitionBy(pmod(col("id"), lit(1)))
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.SpecBus.listening(spark.sparkContext, listener)(body)
+    jobs.get
+  }
+
   test("fact-store scans prune partitions, push filters, and prune columns") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("prune").toString
@@ -200,6 +219,41 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     assert(jobs.get == 0)
   }
 
+  test("opening a fact table or the lifetime MV starts no Spark job") {
+    val s = spark; import s.implicits._
+    import graft.store.{FactStore, LifetimeMv}
+    val root = Files.createTempDirectory("store-open").toString
+    val factDir = s"$root/fact"
+    val mvDir = s"$root/mv"
+    FactStore.append(Seq((java.sql.Date.valueOf("2024-01-01"), 1L, "dl", 3L),
+        (java.sql.Date.valueOf("2024-01-02"), 2L, "dl", 4L))
+      .toDF("date", "id", "value", "count"), factDir)
+    assert(LifetimeMv.update(spark, mvDir, factDir) == 2L)
+    var fact, mv: org.apache.spark.sql.DataFrame = null
+    // the store fixes both schemas: nothing is inferred from the files
+    assert(jobsOf {
+      fact = FactStore.read(spark, factDir)
+      mv = LifetimeMv.read(spark, mvDir).get
+    } == 0)
+    assert(fact.schema.fieldNames.toSeq == Seq("id", "value", "count", "date"))
+    assert(mv.schema.fieldNames.toSeq == Seq("id", "value", "count"))
+    assert(fact.select("date", "id", "value", "count").as[(java.sql.Date, Long, String, Long)]
+      .collect().map(_._4).sum == 7L)
+    assert(mv.as[(Long, String, Long)].collect().toSet == Set((1L, "dl", 3L), (2L, "dl", 4L)))
+  }
+
+  test("Sets.ancestorClosure's Spark jobs do not grow with the tree's depth") {
+    // one scan of the tree and one materialized broadcast join, however
+    // deep the tree: at most 6 jobs
+    val s = spark; import s.implicits._
+    val asn = Seq(("c", 1L)).toDF("set_value", "id")
+    val tree = Seq(("c", "b"), ("b", "a")).toDF("child", "parent")
+    var closure: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf { closure = graft.sets.Sets.ancestorClosure(asn, tree) }
+    assert(jobs <= 6, s"ancestorClosure ran $jobs Spark jobs on a 3-level tree")
+    assert(closure.as[(String, Long)].collect().toSet == Set(("c", 1L), ("b", 1L), ("a", 1L)))
+  }
+
   test("salted aggregation equals direct groupBy on a hot-key table") {
     val s = spark; import s.implicits._
     // one key holds 90% of rows — the aggregation-skew pathology
@@ -271,7 +325,6 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
 
   test("GlobalRank matches the single-partition window rank and ntile") {
     val s = spark; import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.GlobalRank
     // 103 rows (not divisible by 4), duplicate sort values (ties
     // broken by id), spread over many range partitions
@@ -282,7 +335,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
         GlobalRank.withRowNumber(df, order, "rn", partitions = 8),
         4, order, "q", partitions = 8)
       .select("id", "rn", "q")
-    val w = Window.orderBy(order: _*)
+    val w = onePartition.orderBy(order: _*)
     val viaWindow = df
       .withColumn("rn", row_number().over(w))
       .withColumn("q", ntile(4).over(w))
@@ -327,7 +380,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
         .select("id", "rn")
       val persist = GlobalRank.withRowNumberPersist(df, order, "rn", partitions = 8)
         .select("id", "rn")
-      val window = df.withColumn("rn", row_number().over(Window.orderBy(order: _*)))
+      val window = df.withColumn("rn", row_number().over(onePartition.orderBy(order: _*)))
         .select("id", "rn")
       assert(pinned.except(window).isEmpty && window.except(pinned).isEmpty,
         s"pinned rank diverged for order $order")
@@ -336,7 +389,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     }
     // prefix sum + ntile, both strategies, one mixed order
     val order = Seq(col("v").desc_nulls_last, col("id"))
-    val wSum = df.withColumn("cum", sum("id").over(Window.orderBy(order: _*)
+    val wSum = df.withColumn("cum", sum("id").over(onePartition.orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, 0))).select("id", "cum")
     for ((nm, got) <- Seq(
         "pinned" -> GlobalRank.withPrefixSumPinned(df, col("id"), order, "cum", 8),
@@ -344,7 +397,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
       assert(got.select("id", "cum").except(wSum).isEmpty &&
         wSum.except(got.select("id", "cum")).isEmpty,
         s"$nm prefix sum diverged")
-    val wNt = df.withColumn("q", ntile(7).over(Window.orderBy(order: _*)))
+    val wNt = df.withColumn("q", ntile(7).over(onePartition.orderBy(order: _*)))
       .select("id", "q")
     for ((nm, got) <- Seq(
         "pinned" -> GlobalRank.withNtilePinned(df, 7, order, "q", 8),
@@ -366,7 +419,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
         partitions = 8)
       .select("id", "cum")
     val viaWindow = df.withColumn("cum", sum("w").over(
-        Window.orderBy("id")
+        onePartition.orderBy("id")
           .rowsBetween(Window.unboundedPreceding, 0)))
       .select("id", "cum")
     assert(viaOp.except(viaWindow).isEmpty && viaWindow.except(viaOp).isEmpty)
