@@ -23,6 +23,14 @@ import graft.store.Materialize
   * size a broadcast join already collects to the driver — and joins
   * the resulting (subject, ancestors) table to the assignments once,
   * broadcast. No Spark job decides when the walk ends.
+  *
+  * Every builder ([[materialize]], [[materializeCompound]],
+  * [[ancestorClosure]]) returns a materialized dim: the frame reads one
+  * eager checkpoint, which the caller owns — it goes to the caller's
+  * [[graft.store.Materialize.scope]] if one is open, else the caller
+  * frees it (or drops every reference and lets Spark's ContextCleaner
+  * free it). Later reads, caches and broadcasts scan the checkpoint
+  * instead of re-running the explode and the dedup shuffle.
   */
 object Sets {
 
@@ -77,9 +85,10 @@ object Sets {
     * row per (item, author-key), the rendered display carried along
     * so [[renderedValues]]-style lookups need no re-derivation.
     * Same scale posture as [[materialize]]: dimension-sized output,
-    * one explode + codegen'd projection, no joins. */
+    * one explode + codegen'd projection, no joins; returned as one
+    * caller-owned checkpoint, like every builder here. */
   def materializeCompound(meta: DataFrame, d: CompoundSetDef,
-      idCol: String = "id"): DataFrame = {
+      idCol: String = "id"): DataFrame = dim(meta, "Sets.materializeCompound") {
     val ex = meta.select(col(idCol).as("id"), explode(col(d.source)).as("c"))
     val nameStruct = col("c").getField(d.nameField)
     val display = NameCase.displayName(
@@ -112,8 +121,10 @@ object Sets {
       .agg(max(col("rendered")).as("rendered"))
   }
 
-  /** Materialize one set dim: (set_value, id). */
-  def materialize(meta: DataFrame, d: SetDef, idCol: String = "id"): DataFrame = {
+  /** Materialize one set dim: (set_value, id), as one caller-owned
+    * checkpoint. */
+  def materialize(meta: DataFrame, d: SetDef,
+      idCol: String = "id"): DataFrame = dim(meta, "Sets.materialize") {
     val exploded =
       if (d.multiple) meta.select(col(idCol).as("id"), explode(col(d.source)).as("v"))
       else meta.select(col(idCol).as("id"), col(d.source).as("v"))
@@ -128,6 +139,15 @@ object Sets {
       else listed
     anon.select(col("v").as("set_value"), col("id")).distinct()
   }
+
+  /** The built dim as one eager checkpoint that the returned frame
+    * reads and the caller owns ([[graft.store.Materialize]]). The
+    * checkpoint is taken from the AQE-final plan, so it keeps the
+    * coalesced partition count: a caller that caches it and counts
+    * runs a few tasks, where a cached shuffle plan keeps
+    * `initialPartitionNum` (8 x cores) partitions. */
+  private def dim(meta: DataFrame, label: String)(build: => DataFrame): DataFrame =
+    Materialize.scope(meta.sparkSession, label)(m => m("dim")(build))
 
   /** Subject ancestor closure (ref `Sets.pm:402-424,461-485`): an
     * item tagged with a subject also counts toward every ancestor.

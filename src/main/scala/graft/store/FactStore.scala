@@ -1,7 +1,11 @@
 package graft.store
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.model.FactRow
@@ -19,7 +23,9 @@ import graft.model.FactRow
   *    overwrite: only the recomputed day partitions are replaced,
   *    atomically per partition — the idempotent-backfill pattern;
   *  - the checkpoint is driver-side metadata (a few bytes), never a
-  *    Spark job.
+  *    Spark job;
+  *  - opening a table ([[read]]) lists the store's own day dirs on the
+  *    driver and starts no Spark job at any day count.
   */
 object FactStore {
 
@@ -94,12 +100,65 @@ object FactStore {
     Option(root.listFiles).toSeq.flatten
       .filter(d => d.isDirectory && d.getName.startsWith("date="))
 
-  /** Read a fact table; date-range filters prune partitions. The
-    * store fixes the schema ([[graft.model.FactRow.schema]]: every
-    * processor writes (date, id long, value string, count long)), so
-    * it is passed and opening a table runs no schema-inference job. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(FactRow.schema).parquet(path)
+  /** Read a fact table; date-range filters prune partitions.
+    *
+    * Opening a table starts no Spark job at any day count. The store
+    * fixes the schema ([[graft.model.FactRow.schema]]: every processor
+    * writes (date, id long, value string, count long)), so nothing is
+    * inferred from the files, and it lists its own `date=YYYY-MM-DD`
+    * layout on the driver, the listing `partitionDays` and
+    * `clearPartitionsFrom` already use. Spark's own discovery lists
+    * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) partition directories with a distributed job, one task per
+    * day: 60 tasks to open a 60-day table. This store is POSIX-local
+    * (it already does its directory surgery with `java.io.File`), so a
+    * serial listing is a few hundred `stat`s on the driver, far below
+    * one job's launch cost. Spark gets the listing through a
+    * [[org.apache.spark.sql.execution.datasources.FileStatusCache]] of
+    * an `InMemoryFileIndex` and plans partition values, pruning and
+    * the column order `(id, value, count, date)` as for
+    * `spark.read.schema(FactRow.schema).parquet(path)`. A refresh of
+    * the index (`refreshByPath`, a write to a cached table's path)
+    * drops the listing and lists through Spark again. A path that is
+    * not a local directory reads through `spark.read`, which fails on
+    * a missing table as before. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new java.io.File(path).getAbsoluteFile
+    if (!root.isDirectory) return spark.read.schema(FactRow.schema).parquet(path)
+    // every path qualified as Spark's own listing qualifies it (file:///...)
+    val fs = new Path(root.getPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def qualified(f: java.io.File) = fs.makeQualified(new Path(f.getPath))
+    val rootPath = qualified(root)
+    val block = fs.getDefaultBlockSize(rootPath)
+    val files = partitionDirs(root).flatMap(dataFiles).map(f =>
+      new FileStatus(f.length, false, 1, block, f.lastModified, qualified(f))).toArray
+    val (partition, data) = FactRow.schema.partition(_.name == "date")
+    val index = new InMemoryFileIndex(spark, Seq(rootPath), Map("path" -> path),
+      Some(FactRow.schema), new Listed(rootPath, files))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, StructType(partition),
+      StructType(data), None, new ParquetFileFormat, Map("path" -> path))(spark))
+  }
+
+  /** The data files of a day directory: those Spark would read there.
+    * Like Spark's listing it skips names starting with `_` or `.`
+    * (`_SUCCESS`, `.crc` checksums, `_temporary`) and files still being
+    * copied in (`._COPYING_`); a subdirectory is not part of the layout. */
+  private def dataFiles(day: java.io.File): Seq[java.io.File] =
+    Option(day.listFiles).toSeq.flatten.filter { f =>
+      val n = f.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+    }
+
+  /** A file-status cache that answers the first listing of `root` with
+    * the store's own listing and forgets it on invalidation, so a
+    * refreshed index lists the directory again. */
+  private final class Listed(root: Path, files: Array[FileStatus]) extends FileStatusCache {
+    @volatile private var listing = Option(files)
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      listing.filter(_ => path == root)
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = listing = None
+  }
 
   /** St2 checkpoint: last fully-processed position (e.g. day or id),
     * stored as a one-line file — the analog of the reference's

@@ -228,6 +228,73 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
       depositable = Some(Seq("a").toDF("subjectid"))))
   }
 
+  /** Repository metadata: multi-valued divisions, a type, and compound
+    * creators whose ids lowercase to 12 author keys. A local relation,
+    * not `spark.range`: a range's partitioning on `id` satisfies the
+    * dims' dedup on (set_value, id), which then plans no shuffle. */
+  private def meta: DataFrame = {
+    val s = spark; import s.implicits._
+    (1L to 200L).toDF("id").select(F.col("id"),
+      F.array(F.concat(F.lit("div"), (F.col("id") % 12).cast("string")),
+        F.concat(F.lit("div"), (F.col("id") % 5).cast("string"))).as("divisions"),
+      F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).as("type"),
+      F.array(F.struct(
+        F.struct(F.lit("smith").as("family"), F.lit("j").as("given")).as("name"),
+        F.concat(F.lit("A"), (F.col("id") % 12).cast("string")).as("id"))).as("creators"))
+  }
+
+  /** One dim per builder over `from`. */
+  private def setDims(from: DataFrame): Seq[(String, () => DataFrame)] = Seq(
+    "materialize(multiple)" ->
+      (() => Sets.materialize(from, Sets.SetDef("divisions", "divisions", multiple = true))),
+    "materialize" -> (() => Sets.materialize(from, Sets.SetDef("type", "type"))),
+    "materializeCompound" ->
+      (() => Sets.materializeCompound(from, Sets.CompoundSetDef("authors", "creators"))))
+
+  test("Sets.materialize and materializeCompound return one checkpoint; a throw leaves nothing") {
+    for ((name, build) <- setDims(meta)) {
+      val before = persistent
+      val dim = build()
+      onlyReturned(before, dim)
+      assert((persistent -- before).size == 1, s"$name does not read exactly one checkpoint")
+      assert(dim.count() > 0L, name)
+      GraftBridge.unpersist(spark.sparkContext.getPersistentRDDs((persistent -- before).head))
+    }
+    // the metadata fails inside the dim's eager job
+    val bad = F.raise_error(F.lit("bad metadata"))
+    releasedOnThrow(Sets.materialize(meta.withColumn("type", bad.cast("string")),
+      Sets.SetDef("type", "type")))
+    releasedOnThrow(Sets.materializeCompound(meta.withColumn("creators",
+        bad.cast("array<struct<name:struct<family:string,given:string>,id:string>>")),
+      Sets.CompoundSetDef("authors", "creators")))
+  }
+
+  test("set dims: a caller that caches and counts a dim runs no stage at initialPartitionNum tasks") {
+    val initial = spark.conf
+      .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+    // the metadata cached too, as a dashboard set-up caches it
+    val cachedMeta = meta.cache()
+    for ((name, build) <- setDims(cachedMeta)) {
+      val tasks = mutable.ArrayBuffer.empty[Int]
+      val listener = new SparkListener {
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          tasks.synchronized(tasks += e.stageInfo.numTasks)
+      }
+      // the enclosing scope is the caller: it adopts and frees the dim
+      Materialize.scope(spark, s"cache $name") { _ =>
+        val dim = SpecBus.listening(spark.sparkContext, listener) {
+          val d = build().cache()
+          assert(d.count() > 0L, name)
+          d
+        }
+        dim.unpersist(blocking = true)
+      }
+      assert(tasks.nonEmpty && !tasks.contains(initial),
+        s"$name: stage task counts $tasks, initialPartitionNum $initial")
+    }
+    cachedMeta.unpersist(blocking = true)
+  }
+
   test("Streaming.availableNowCuration snapshot mode releases its owner index") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("kp2_release").toString

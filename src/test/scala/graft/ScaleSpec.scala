@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -240,6 +242,45 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     assert(fact.select("date", "id", "value", "count").as[(java.sql.Date, Long, String, Long)]
       .collect().map(_._4).sum == 7L)
     assert(mv.as[(Long, String, Long)].collect().toSet == Set((1L, "dl", 3L), (2L, "dl", 4L)))
+  }
+
+  test("opening a fact table above Spark's parallel-listing threshold starts no Spark job") {
+    val s = spark; import s.implicits._
+    import graft.store.FactStore
+    val dir = Files.createTempDirectory("store-open-40").toString + "/fact"
+    val start = java.time.LocalDate.parse("2024-01-01")
+    FactStore.append((0 until 40).flatMap { d =>
+        val day = java.sql.Date.valueOf(start.plusDays(d.toLong))
+        (1L to 3L).map(i => (day, i, s"v$i", 10L * d + i))
+      }.toDF("date", "id", "value", "count"), dir)
+    // Spark lists this many partition directories with a distributed job
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt < 40)
+    val names = {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator.asScala.map(_.getFileName.toString).toSeq finally walk.close()
+    }
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    var fact: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { fact = FactStore.read(spark, dir) } == 0)
+    val ref = spark.read.schema(graft.model.FactRow.schema).parquet(dir)
+    assert(fact.schema == ref.schema)
+    assert(fact.schema.fieldNames.toSeq == Seq("id", "value", "count", "date"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, String, Long, java.sql.Date)].collect().map(_.toString).sorted.toSeq
+    assert(rows(fact) == rows(ref) && rows(fact).size == 120)
+    // a 7-day window prunes to the same files: 7 days, one file each
+    val week = col("date").between(java.sql.Date.valueOf("2024-01-10"),
+      java.sql.Date.valueOf("2024-01-16"))
+    def scanned(df: org.apache.spark.sql.DataFrame): (Long, Seq[String]) = {
+      val q = df.filter(week).select(input_file_name())
+      val files = q.collect().map(_.getString(0)).distinct.sorted.toSeq
+      val scan = q.queryExecution.executedPlan.collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.get
+      (scan.metrics("numFiles").value, files)
+    }
+    assert(scanned(fact) == scanned(ref))
+    assert(scanned(fact)._1 == 7L)
   }
 
   test("Sets.ancestorClosure's Spark jobs do not grow with the tree's depth") {
