@@ -1,6 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import graft.model.Context
 
@@ -19,12 +22,27 @@ import graft.model.Context
   * Scale notes (100 TB posture):
   *  - the fact table is date-partitioned, so the F8 date-range predicate
   *    prunes partitions before any I/O;
-  *  - dim tables (sets) are small relative to facts — they are broadcast
-  *    (`broadcast()` hint) so the fact side never shuffles for the join;
+  *  - dim tables (sets) are small relative to facts — on the parallel
+  *    path they are broadcast (`broadcast()` hint) so the fact side
+  *    never shuffles for the join;
   *  - the aggregation is a hash aggregate with map-side partial
   *    aggregation; Catalyst handles the partial/final split;
   *  - LIMIT after ORDER BY compiles to `TakeOrderedAndProject` — top-N
-  *    without a global sort.
+  *    without a global sort;
+  *  - a small input runs as one partition. When the files the query
+  *    scans after date pruning hold at most
+  *    `spark.sql.files.openCostInBytes` bytes (4 MiB by default), the
+  *    source is read with `coalesce(1)`: Spark prices opening one more
+  *    file at that many bytes of scan, so a second task cannot pay for
+  *    itself. The partial and final aggregate, the ordering, the limit
+  *    and the view steps above them (`Series.regroup`/`cumulative`,
+  *    `KeyFigures`) then see `SinglePartition` and plan no exchange,
+  *    and the first set dim joins in the same task by hash (see
+  *    `dimSide`): most requests run as one job of one task. The byte
+  *    count comes from the source relation's file index on the
+  *    driver, with the date predicates as partition filters, so
+  *    sizing starts no Spark job; a source that is not a file
+  *    relation (a computed fact frame) keeps the parallel plan.
   */
 object QueryCompiler {
 
@@ -76,8 +94,28 @@ object QueryCompiler {
     }
     // F7 datafilter (ref Handler.pm:296-301): constant column pruned from SELECT
     ctx.datafilter.foreach(v => df = df.filter(col("value") === v))
+    // a small stored input runs as one partition (Scale notes above)
+    val single = scanBytes(df).exists(_ <= df.sparkSession.sessionState.conf.filesOpenCostInBytes)
+    if (single) df = df.coalesce(1)
     // F6 archive-only semi-join (ref Handler.pm:356-360)
     cat.liveFilter.foreach(live => df = df.join(broadcast(live), Seq("id"), "left_semi"))
+
+    // A dim joins a single-partition fact as one partition too, hashed
+    // in the same task: no broadcast job, no exchange. Membership there
+    // is an inner join on the distinct ids, not a left_semi: the
+    // optimizer pushes a left_semi below the fact's coalesce, where the
+    // fact is multi-partition again and the hash join needs exchanges.
+    // Only the first dim join can be hashed so: Spark keeps a hash
+    // join's inputs unshuffled only when each reports SinglePartition
+    // with an estimated size under `spark.sql.maxSinglePartitionBytes`,
+    // and a join's output reports neither (a partitioning collection,
+    // sized as the product of its inputs). A second dim join
+    // (grouping) stays broadcast.
+    def dimSide(d: DataFrame): DataFrame =
+      if (single) d.coalesce(1).hint("shuffle_hash") else broadcast(d)
+    def members(ids: DataFrame): DataFrame =
+      if (single) df.join(ids.coalesce(1).distinct().hint("shuffle_hash"), Seq("id"))
+      else df.join(broadcast(ids), Seq("id"), "left_semi")
 
     // J1/J2: set / grouping joins (ref Handler.pm:439-536, 575-648)
     val groupCols: Seq[String] = ctx.setName match {
@@ -93,7 +131,7 @@ object QueryCompiler {
               throw new IllegalArgumentException(s"unknown grouping $g"))
             var d = dim.df
             ctx.setValue.foreach(v => d = d.filter(col(dim.valueCol) === v))
-            df = df.join(broadcast(d.select(col(dim.idCol).as("id"))), Seq("id"), "left_semi")
+            df = members(d.select(col(dim.idCol).as("id")))
             df = df.join(broadcast(gdim.df.select(col(gdim.idCol).as("id"),
               col(gdim.valueCol).as("grouping_value"))), Seq("id"))
             Seq("grouping_value")
@@ -106,10 +144,10 @@ object QueryCompiler {
               // the join is pure MEMBERSHIP — left_semi, like F6. An
               // inner join would re-expose duplicate-pair inflation
               // and carry a dead column through the aggregate.
-              df = df.join(broadcast(d.select("id")), Seq("id"), "left_semi")
+              df = members(d.select("id"))
               ctx.fields
             } else {
-              df = df.join(broadcast(d), Seq("id"))
+              df = df.join(dimSide(d), Seq("id"))
               Seq("set_value")
             }
         }
@@ -141,5 +179,27 @@ object QueryCompiler {
     ctx.offset.foreach(o => out = out.offset(o))
     ctx.limit.foreach(n => out = out.limit(n))
     out
+  }
+
+  /** The bytes of the files a scan of `df` reads after partition
+    * pruning, when `df` is filters over a file relation; None
+    * otherwise. The relation's file index answers on the driver
+    * (`FactStore.read` and `LifetimeMv.read` frames carry their file
+    * lengths), so no Spark job runs. Only filters over the relation's
+    * own partition columns prune; the rest can only shrink the scan,
+    * so the count is an upper bound. */
+  private def scanBytes(df: DataFrame): Option[Long] = {
+    def walk(p: LogicalPlan, conds: Seq[Expression]): Option[Long] = p match {
+      case Filter(c, child) => walk(child, c +: conds)
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation =>
+          val parts = AttributeSet(l.output.filter(a => fs.partitionSchema.fieldNames.contains(a.name)))
+          val pruning = conds.filter(c => c.references.nonEmpty && c.references.subsetOf(parts))
+          Some(fs.location.listFiles(pruning, Nil).iterator.flatMap(_.files).map(_.getLen).sum)
+        case _ => None
+      }
+      case _ => None
+    }
+    walk(df.queryExecution.analyzed, Nil)
   }
 }

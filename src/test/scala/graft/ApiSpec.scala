@@ -146,6 +146,38 @@ class ApiSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("cache warm over a stored catalog runs one job per item, payloads equal the parallel plan's") {
+    import graft.api.ReportCache
+    import graft.store.{FactStore, LifetimeMv}
+    import graft.views.FrontPage
+    val s = spark; import s.implicits._
+    val today = java.time.LocalDate.of(2024, 6, 15)
+    val dir = Files.createTempDirectory("warmstored").toString
+    FactStore.append((0 until 600).map(i =>
+        (java.sql.Date.valueOf(today.minusDays(1L + i % 400)), i % 17L, "downloads", 1L + i % 5))
+      .toDF("date", "id", "value", "count"), s"$dir/facts")
+    LifetimeMv.update(spark, s"$dir/mv", s"$dir/facts")
+    val cat = Catalog(facts = Map("downloads" -> FactStore.read(spark, s"$dir/facts")),
+      lifetime = Map("downloads" -> LifetimeMv.read(spark, s"$dir/mv").get))
+    val specs = Seq(FrontPage.spec(), Report.Spec("summary", Context(datatype = "downloads"), Seq(
+      Report.Item("top", _.copy(fields = Seq("id"), range = Some("6m"), limit = Some(10))),
+      Report.Item("graph", _.copy(fields = Seq("date"), range = Some("6m"))),
+      Report.Item("all_time", _.copy(fields = Seq("id"), limit = Some(1))))))
+    def warm(cache: String) = specs.map(spec => ReportCache.warm(cache, spec, cat, today))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val single = org.apache.spark.SpecBus.listening(spark.sparkContext, listener)(warm(s"$dir/cache1"))
+    val items = specs.map(_.items.size).sum
+    assert(items == 5 && jobs.get == items, s"${jobs.get} jobs for $items items")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    val parallel = try warm(s"$dir/cache2") finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert(single == parallel)
+    assert(single.head(FrontPage.DownloadsAll).contains("\"count\": "))
+  }
+
   test("report cache: key is param-order invariant, value sensitive") {
     import graft.api.ReportCache
     val a = ReportCache.key(Map("datatype" -> "downloads", "view" -> "table"))

@@ -975,4 +975,95 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
         l.contains("Exchange") || l.contains("ShuffleQueryStage") || l.contains("AQEShuffleRead")),
       s"a shuffle sits between the calendar join and cumulative(regroup(...)):\n$p")
   }
+
+  test("compiled queries over a small stored input plan no exchange and run as one job") {
+    // A stored table whose pruned scan is at most openCostInBytes is
+    // read as one partition: aggregate, ordering, limit and the first
+    // set join above it need no exchange and no broadcast. Lowering
+    // the threshold below the table's bytes must bring back the
+    // parallel plan with the same rows.
+    val s = spark; import s.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    import graft.model.Context
+    import graft.query.QueryCompiler
+    import graft.query.QueryCompiler.{Catalog, SetDim}
+    import graft.series.Series
+    import graft.store.{FactStore, LifetimeMv}
+    val d = Files.createTempDirectory("singlepart").toString
+    val d0 = java.time.LocalDate.of(2024, 3, 1)
+    FactStore.append((0 until 200).map(i =>
+        (java.sql.Date.valueOf(d0.plusDays(i % 20L)), i % 13L, Seq("US", "DE", "FR")(i % 3), 1L + i % 4))
+      .toDF("date", "id", "value", "count"), s"$d/facts")
+    LifetimeMv.update(spark, s"$d/mv", s"$d/facts")
+    val cat = Catalog(
+      facts = Map("downloads" -> FactStore.read(spark, s"$d/facts")),
+      sets = Map(
+        "division" -> SetDim((0L until 13L).map(i => (i, s"d${i % 3}")).toDF("id", "set_value")),
+        "author" -> SetDim(((0L until 13L).map(i => (i, s"a${i % 4}")) ++
+          Seq(2L -> "a9", 5L -> "a9")).toDF("id", "set_value"))),
+      lifetime = Map("downloads" -> LifetimeMv.read(spark, s"$d/mv").get))
+    val (from, to) = (Some(d0.plusDays(2)), Some(d0.plusDays(15)))
+    val base = Context(datatype = "downloads", from = from, to = to)
+    val kinds = Seq(
+      "top_items" -> base.copy(fields = Seq("id"), limit = Some(5)),
+      "by_id" -> base.copy(fields = Seq("id"), orderBy = Some("id"), orderDesc = false,
+        offset = Some(2), limit = Some(5)),
+      "top_values" -> base.copy(fields = Seq("value"), limit = Some(2)),
+      "series" -> base.copy(fields = Seq("date")),
+      "eprint" -> base.copy(setName = Some("eprint"), setValue = Some("4"), fields = Seq("value")),
+      "mv_total" -> Context(datatype = "downloads", setName = Some("eprint"), setValue = Some("4")),
+      "set_value" -> base.copy(setName = Some("division"), setValue = Some("d1"), fields = Seq("id")),
+      "set_top" -> base.copy(setName = Some("author"), limit = Some(3)),
+      "grouping" -> base.copy(setName = Some("division"), setValue = Some("d2"),
+        grouping = Some("author")))
+    def densified(q: org.apache.spark.sql.DataFrame) =
+      Series.cumulative(Series.regroup(Series.densify(
+        q.select(col("date").as("d"), col("count").as("cnt")), from = from, to = to), "month"))
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+      }
+      org.apache.spark.SpecBus.listening(spark.sparkContext, listener)(body)
+      n.get
+    }
+    def finalPlan(q: org.apache.spark.sql.DataFrame) = {
+      val p = q.queryExecution.executedPlan.toString
+      assert(p.contains("isFinalPlan=true"), s"not the AQE-final plan:\n$p")
+      p.split("== Initial Plan ==").head
+    }
+    def shuffles(p: String) = p.linesIterator.exists(l =>
+      l.contains("ShuffleQueryStage") || (l.contains("Exchange") && !l.contains("BroadcastExchange")))
+    val single = kinds.map { case (kind, ctx) =>
+      val q = QueryCompiler.compile(ctx, cat)
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val n = jobs { rows = q.collect() }
+      val p = finalPlan(q)
+      // the grouping dim, a second dim join, stays broadcast
+      val broadcasts = if (kind == "grouping") 1 else 0
+      assert(!shuffles(p), s"$kind: a shuffle between the scan and the result:\n$p")
+      assert(p.sliding("BroadcastExchange".length).count(_ == "BroadcastExchange") == broadcasts,
+        s"$kind: expected $broadcasts broadcasts:\n$p")
+      assert(n == 1 + broadcasts, s"$kind ran $n jobs:\n$p")
+      assert(rows.nonEmpty, kind)
+      kind -> rows.toSeq
+    }.toMap
+    val seriesCtx = kinds.toMap.apply("series")
+    val series = densified(QueryCompiler.compile(seriesCtx, cat))
+    val seriesRows = series.collect().toSeq
+    assert(!shuffles(finalPlan(series)), s"densify/regroup/cumulative shuffled:\n${finalPlan(series)}")
+
+    // below the table's bytes: today's parallel plan, equal rows
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try {
+      kinds.foreach { case (kind, ctx) =>
+        val q = QueryCompiler.compile(ctx, cat)
+        assert(q.collect().toSeq == single(kind), kind)
+        val p = finalPlan(q)
+        assert(shuffles(p), s"$kind: the parallel plan lost its exchange:\n$p")
+      }
+      assert(densified(QueryCompiler.compile(seriesCtx, cat)).collect().toSeq == seriesRows)
+    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
 }

@@ -669,6 +669,53 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     assert(cases >= 100, s"generator produced only $cases cases")
   }
 
+  test("QueryCompiler over stored files == the interpreter, on the single-partition and parallel paths") {
+    // the fixture written through FactStore and LifetimeMv: a file
+    // relation, so a compile whose pruned scan is at most
+    // openCostInBytes reads it as one partition; with the threshold
+    // below the table's bytes the same contexts plan in parallel
+    val s = spark; import s.implicits._
+    import graft.store.{FactStore, LifetimeMv}
+    val dir = java.nio.file.Files.createTempDirectory("compilerfiles").toString
+    FactStore.append(diffFact.map(r => (java.sql.Date.valueOf(r.date), r.id, r.value, r.count))
+      .toDF("date", "id", "value", "count"), s"$dir/facts")
+    LifetimeMv.update(spark, s"$dir/mv", s"$dir/facts")
+    val cat = diffCat.copy(
+      facts = Map("downloads" -> FactStore.read(spark, s"$dir/facts")),
+      lifetime = Map("downloads" -> LifetimeMv.read(spark, s"$dir/mv").get))
+    def check(single: Boolean): Unit = {
+      var cases = 0
+      forAllSeeded(ctxGen, n = 130) { ctx =>
+        cases += 1
+        val dims = dimsOf(ctx)
+        val q = QueryCompiler.compile(ctx, cat)
+        val got = q.collect().toSeq.map { r =>
+          val key: Seq[Any] = dims.map { n =>
+            r.get(r.fieldIndex(n)) match {
+              case d: java.sql.Date => d.toLocalDate
+              case x => x
+            }
+          }
+          key -> r.getAs[Long]("count")
+        }
+        val onePart = q.queryExecution.analyzed.exists {
+          case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r.numPartitions == 1 && !r.shuffle
+          case _ => false
+        }
+        // an inverted window prunes every file: 0 bytes is one partition on either path
+        val empty = ctx.from.zip(ctx.to).exists { case (f, t) => f.isAfter(t) }
+        assert(onePart == (single || empty), s"single=$single: one partition $onePart for $ctx")
+        val want = naiveEval(ctx)
+        assert(got == want, s"single=$single: compiler diverged from interpreter for $ctx\n got: $got\nwant: $want")
+      }
+      assert(cases >= 100, s"generator produced only $cases cases")
+    }
+    check(single = true)
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try check(single = false)
+    finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
+
   test("curate: funnel monotonicity and quota bounds on random corpora") {
     val sp = spark; import sp.implicits._
     def good(tag: String) =
