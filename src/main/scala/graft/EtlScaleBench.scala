@@ -72,8 +72,8 @@ object EtlScaleBench {
     def runEtl(label: String, logDir: String, suffix: String): (Long, Double) = {
       val factRoot = s"$work/facts_$label$suffix"
       val ckptDir = s"$work/ckpt_$label$suffix"
-      deleteRec(new java.io.File(factRoot))
-      deleteRec(new java.io.File(ckptDir))
+      graft.store.TempSweep.rm(new java.io.File(factRoot))
+      graft.store.TempSweep.rm(new java.io.File(ckptDir))
       jobDur.clear(); jobSecs.clear()
       val t0 = System.nanoTime()
       val written = Etl.run(spark, Etl.Config(
@@ -174,17 +174,12 @@ object EtlScaleBench {
       date_format(col("day"), "yyyy-MM-dd").as("day"),
       concat_ws("\t", col("datestamp"), ip, ua, ref, lit("svc"),
         item.cast("string"), docid).as("value"))
-    deleteRec(new java.io.File(outDir))
+    graft.store.TempSweep.rm(new java.io.File(outDir))
     // one task per day -> ONE gzip part per day dir (the reference's
     // one-file-per-day layout; gzip is the non-splittable unit)
     lines.repartition(col("day"))
       .write.partitionBy("day").option("compression", "gzip")
       .mode("overwrite").text(outDir)
     lines.count()
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    if (f.exists) { f.delete(); () }
   }
 }

@@ -782,10 +782,8 @@ private[graft] object CoreQueries {
         |FROM x WHERE prev IS NULL OR sec - prev > 3600
         |GROUP BY 1, 2 ORDER BY id, value""".stripMargin)((s, d) => {
       val e = ev(s, d).withColumn("sec", unix_timestamp(col("ts")))
-      val w = Window.partitionBy("user_id", "event_type")
-        .orderBy(col("sec"), col("event_id"))
-      e.withColumn("prev", lag("sec", 1).over(w))
-        .filter(col("prev").isNull || col("sec") - col("prev") > 3600)
+      graft.filters.Repeat.lagApprox(e, Seq("user_id", "event_type"), "sec",
+          timeout = 3600L, tieBreakCol = "event_id")
         .groupBy(col("user_id").as("id"), col("event_type").as("value"))
         .agg(count(lit(1)).as("count"))
         .orderBy("id", "value")

@@ -62,6 +62,39 @@ private[graft] object EtlQueries {
       .otherwise("partner.example.com/docs")
   }
 
+  private val asOfOracleSql: String =
+    """WITH v AS (
+      |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS vsec,
+      |         MAX(event_id) AS vid
+      |  FROM events WHERE event_type = 'view'
+      |    AND user_id IS NOT NULL GROUP BY 1, 2),
+      |p AS (
+      |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS psec,
+      |         event_id AS pid
+      |  FROM events WHERE event_type = 'purchase'
+      |    AND user_id IS NOT NULL)
+      |SELECT p.pid, v.vid, p.psec - v.vsec AS lag_sec
+      |FROM p ASOF LEFT JOIN v
+      |  ON p.user_id = v.user_id AND p.psec >= v.vsec
+      |ORDER BY pid""".stripMargin
+
+  private def asOfAttribution(s: SparkSession, d: String): DataFrame = {
+    // null user_ids are dropped: AsOfJoin keys compare null-safely
+    // (nulls group together) while the SQL ASOF oracle uses equality
+    // (nulls never match) — only the non-null universe agrees.
+    val e = ev(s, d).filter(col("user_id").isNotNull)
+      .withColumn("sec", unix_timestamp(col("ts")))
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("sec"), col("event_id"))
+    val views = e.filter(col("event_type") === "view")
+      .select(col("user_id"), col("sec").as("vsec"), col("event_id").as("vid"))
+    graft.operators.AsOfJoin.leftAsOf(purchases, views, "user_id",
+        ltime = "sec", lid = "event_id", rtime = "vsec", rid = "vid")
+      .select(col("event_id").as("pid"), col("vid"),
+        (col("sec") - col("vsec")).as("lag_sec"))
+      .orderBy("pid")
+  }
+
   val all: Seq[Query] = Seq(
 
     // ---- C2 + F1: browser classification after robot filtering ----
@@ -382,38 +415,9 @@ private[graft] object EtlQueries {
 
     // ---- X1: as-of join — attribute each purchase to the most
     // recent prior view by the same user (DuckDB oracles it with a
-    // native ASOF LEFT JOIN; Spark lacks the operator, composed here
-    // from union + last-ignoring-nulls window) ----
-    Query("x1_asof_attribution",
-      """WITH v AS (
-        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS vsec,
-        |         MAX(event_id) AS vid
-        |  FROM events WHERE event_type = 'view'
-        |    AND user_id IS NOT NULL GROUP BY 1, 2),
-        |p AS (
-        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS psec,
-        |         event_id AS pid
-        |  FROM events WHERE event_type = 'purchase'
-        |    AND user_id IS NOT NULL)
-        |SELECT p.pid, v.vid, p.psec - v.vsec AS lag_sec
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.psec >= v.vsec
-        |ORDER BY pid""".stripMargin)((s, d) => {
-      // null user_ids are dropped: AsOfJoin keys compare null-safely
-      // (nulls group together) while the SQL ASOF oracle uses equality
-      // (nulls never match) — only the non-null universe agrees.
-      val e = ev(s, d).filter(col("user_id").isNotNull)
-        .withColumn("sec", unix_timestamp(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("sec"), col("event_id"))
-      val views = e.filter(col("event_type") === "view")
-        .select(col("user_id"), col("sec").as("vsec"), col("event_id").as("vid"))
-      graft.operators.AsOfJoin.leftAsOf(purchases, views, "user_id",
-          ltime = "sec", lid = "event_id", rtime = "vsec", rid = "vid")
-        .select(col("event_id").as("pid"), col("vid"),
-          (col("sec") - col("vsec")).as("lag_sec"))
-        .orderBy("pid")
-    }),
+    // native ASOF LEFT JOIN; Spark lacks the operator, so AsOfJoin
+    // plans its own sort-merge AsOfJoinExec) ----
+    Query("x1_asof_attribution", asOfOracleSql)(asOfAttribution),
 
     // ---- X5: multi-touch LINEAR attribution — x1's last-touch model
     // generalized: every in-window view splits the purchase's credit
@@ -446,36 +450,9 @@ private[graft] object EtlQueries {
         userCol = "user_id", typeCol = "event_type",
         touchType = "view", convType = "purchase")),
 
-    // same join through the whole-operator Catalyst stack
-    // (AsOfJoinPlan -> AsOfJoinStrategy -> sort-merge AsOfJoinExec)
-    Query("x2_asof_native",
-      """WITH v AS (
-        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS vsec,
-        |         MAX(event_id) AS vid
-        |  FROM events WHERE event_type = 'view'
-        |    AND user_id IS NOT NULL GROUP BY 1, 2),
-        |p AS (
-        |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS psec,
-        |         event_id AS pid
-        |  FROM events WHERE event_type = 'purchase'
-        |    AND user_id IS NOT NULL)
-        |SELECT p.pid, v.vid, p.psec - v.vsec AS lag_sec
-        |FROM p ASOF LEFT JOIN v
-        |  ON p.user_id = v.user_id AND p.psec >= v.vsec
-        |ORDER BY pid""".stripMargin)((s, d) => {
-      // same null-key rationale as x1
-      val e = ev(s, d).filter(col("user_id").isNotNull)
-        .withColumn("sec", unix_timestamp(col("ts")))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("sec"), col("event_id"))
-      val views = e.filter(col("event_type") === "view")
-        .select(col("user_id"), col("sec").as("vsec"), col("event_id").as("vid"))
-      graft.operators.AsOfJoin.leftAsOfNative(s, purchases, views, "user_id",
-          ltime = "sec", lid = "event_id", rtime = "vsec", rid = "vid")
-        .select(col("event_id").as("pid"), col("vid"),
-          (col("sec") - col("vsec")).as("lag_sec"))
-        .orderBy("pid")
-    }),
+    // x1 under a second name, kept so its committed bench pins stay
+    // comparable
+    Query("x2_asof_native", asOfOracleSql)(asOfAttribution),
 
     // ---- X3: generic point-in-interval range join. Raw range
     // predicates compile to BroadcastNestedLoopJoin in Spark (O(n·m));

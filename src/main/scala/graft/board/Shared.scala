@@ -25,22 +25,14 @@ private[graft] object Shared {
     * under the 3-run cold/warm bench protocol a per-invocation
     * createTempDirectory would otherwise rewrite the fixture 3× per
     * round, the timed "query" would be dominated by write I/O, and
-    * /tmp would accumulate orphan dirs across rounds. A shutdown hook
-    * removes each dir at JVM exit. */
+    * /tmp would accumulate orphan dirs across rounds.
+    * [[graft.store.TempSweep]] removes each dir at JVM exit. */
   private val fixtureCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   def fixtureDir(tag: String, sfDir: String)
       (build: String => Unit): String =
     fixtureCache.computeIfAbsent(s"$tag|$sfDir", { _ =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_$tag").toString
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(new java.io.File(dir))
-      }
+      val dir = graft.store.TempSweep.tempDir(s"graft_$tag").toString
       build(dir)
       dir
     })

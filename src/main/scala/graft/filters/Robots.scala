@@ -48,15 +48,7 @@ object Robots {
     val f = new java.io.File(path)
     require(f.length >= minBytes,
       s"robots list $path smaller than sanity floor ($minBytes bytes)")
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    val patterns =
-      try src.getLines().map(_.trim)
-        .filter(l => l.nonEmpty && !l.startsWith("#")).toList
-      finally src.close()
-    // An empty list would otherwise compile to rlike("") below — a
-    // match-everything predicate that silently drops ALL traffic.
-    require(patterns.nonEmpty, s"robots list $path contains no patterns")
-    patterns
+    parsePatterns(scala.io.Source.fromFile(f, "UTF-8"), s"list $path")
   }
 
   /** Load a pattern list from the bundled classpath resources — the
@@ -66,12 +58,19 @@ object Robots {
   def loadResourcePatterns(resource: String): Seq[String] = {
     val in = getClass.getClassLoader.getResourceAsStream(resource)
     require(in != null, s"robots resource $resource not on classpath")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+    parsePatterns(scala.io.Source.fromInputStream(in, "UTF-8"),
+      s"resource $resource")
+  }
+
+  /** Non-blank, non-`#` lines, trimmed; closes `src`. An empty list
+    * would otherwise compile to rlike("") below — a match-everything
+    * predicate that silently drops ALL traffic — so it fails. */
+  private def parsePatterns(src: scala.io.Source, what: String): Seq[String] = {
     val patterns =
       try src.getLines().map(_.trim)
         .filter(l => l.nonEmpty && !l.startsWith("#")).toList
       finally src.close()
-    require(patterns.nonEmpty, s"robots resource $resource contains no patterns")
+    require(patterns.nonEmpty, s"robots $what contains no patterns")
     patterns
   }
 

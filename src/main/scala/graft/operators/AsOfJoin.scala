@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** As-of join: for every left row, attach the most recent right row
@@ -10,65 +9,35 @@ import org.apache.spark.sql.functions._
   * / snapshot-alignment join — "which view led to this purchase",
   * "which config revision was live for this hit").
   *
-  * Spark's DataFrame API has no as-of join. Per the escalation ladder
-  * (SURVEY.md §7.3) this COMPOSES built-ins instead of dropping to a
-  * custom SparkPlan, because the semantics are exactly expressible:
-  * union both sides tagged, one window pass per key ordered by
-  * (time, side), and `last(_, ignoreNulls = true)` carries the latest
-  * right payload forward into each left row.
+  * Spark's DataFrame API has no as-of join, so this runs the whole-
+  * operator Catalyst stack ([[graft.plans.AsOfJoinPlan]] →
+  * [[graft.plans.AsOfJoinExec]], planned via the injected
+  * [[graft.plans.AsOfJoinStrategy]]). Each side shuffles
+  * independently on its own key and the merge is a one-pass zip of
+  * the sorted partitions — no range-condition nested-loop join (the
+  * naive left.join(right, lt >= rt) + max() formulation is quadratic
+  * per key). It is preferred over a union + last-ignoring-nulls
+  * window composition, which gives the same result but measured
+  * slower warm at sf0.1 and sf1.
   *
-  * Scale posture: ONE shuffle (the window partition by key) — the
-  * same shuffle a sort-merge as-of implementation would pay; no
-  * range-condition nested-loop join (the naive left.join(right,
-  * lt >= rt) + max() formulation is quadratic per key). Right rows
-  * are pre-deduped to one per (key, time) so the pick is
-  * deterministic in any engine (ties at the same time resolve to the
-  * MAX payload id, matching e.g. DuckDB's ASOF against a deduped
-  * build side).
+  * Right rows are pre-deduped to one per (key, time) with MAX(id), so
+  * the pick is deterministic in any engine (ties at the same time
+  * resolve to the max payload id, matching e.g. DuckDB's ASOF against
+  * a deduped build side). Keys compare null-safely: null keys group
+  * together, so callers that want SQL equality filter them first.
+  * Both sides are re-aliased to fresh attributes before the node is
+  * built (self-join safety: the custom node is invisible to
+  * DeduplicateRelations).
   *
-  * Inputs: `left(key, ltime, lid)`, `right(key, rtime, rid)` — all
-  * numeric/long columns. Output: (key, lid, ltime, rid, rtime) with
-  * null rid/rtime when no right row precedes the left row.
+  * Inputs: `left(key, ltime, lid)`, `right(key, rtime, rid)`, with
+  * equal key types and equal time types on both sides. Output: (key,
+  * lid, ltime, rid, rtime) with null rid/rtime when no right row
+  * precedes the left row.
   */
 object AsOfJoin {
 
   def leftAsOf(left: DataFrame, right: DataFrame, key: String,
       ltime: String, lid: String, rtime: String, rid: String): DataFrame = {
-    // one right row per (key, time): deterministic pick on time ties
-    val r1 = right.groupBy(col(key), col(rtime).as("__t"))
-      .agg(max(col(rid)).as("__rid"))
-      .select(col(key), col("__t"), lit(0).as("__side"),
-        col("__rid"), lit(null).cast("long").as("__lid"))
-    val l1 = left.select(col(key), col(ltime).as("__t"),
-      lit(1).as("__side"), lit(null).cast("long").as("__rid"),
-      col(lid).as("__lid"))
-    // at equal time the right row sorts first (__side 0 < 1), so a
-    // right row AT the left row's time is visible to it (<= semantics)
-    val w = Window.partitionBy(key).orderBy(col("__t"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    r1.unionByName(l1)
-      .withColumn("__last_rid", last(col("__rid"), ignoreNulls = true).over(w))
-      .withColumn("__last_rt",
-        last(when(col("__side") === 0, col("__t")), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(col(key), col("__lid").as(lid), col("__t").as(ltime),
-        col("__last_rid").as(rid), col("__last_rt").as(rtime))
-  }
-
-  /** Same semantics and output shape as [[leftAsOf]], executed by the
-    * whole-operator Catalyst stack ([[graft.plans.AsOfJoinPlan]] →
-    * [[graft.plans.AsOfJoinExec]], planned via the injected
-    * [[graft.plans.AsOfJoinStrategy]]). Each side shuffles
-    * independently on its own key (no unioned superset-schema
-    * exchange) and the merge is a one-pass zip of the sorted
-    * partitions. Right rows are pre-deduped to one per (key, time)
-    * with MAX(id), identical to [[leftAsOf]], so ties are
-    * deterministic. Both sides are re-aliased to fresh attributes
-    * before the node is built (self-join safety: the custom node is
-    * invisible to DeduplicateRelations).
-    */
-  def leftAsOfNative(spark: SparkSession, left: DataFrame, right: DataFrame,
-      key: String, ltime: String, lid: String, rtime: String, rid: String): DataFrame = {
     val l = left.select(col(key).as("__lk"), col(ltime).as("__lt"),
       col(lid).as("__lid"))
     val r = right.groupBy(col(key).as("__rk"), col(rtime).as("__rt"))
@@ -86,7 +55,7 @@ object AsOfJoin {
     val plan = graft.plans.AsOfJoinPlan(lp, rp,
       Seq(attr(lp, "__lk")), Seq(attr(rp, "__rk")),
       attr(lp, "__lt"), attr(rp, "__rt"))
-    GraftBridge.ofRows(spark, plan)
+    GraftBridge.ofRows(left.sparkSession, plan)
       .select(col("__lk").as(key), col("__lid").as(lid),
         col("__lt").as(ltime), col("__rid").as(rid), col("__rt").as(rtime))
   }

@@ -82,64 +82,22 @@ object Graph {
   /** Per-node triangle participation counts over an undirected pair
     * set (a, b), a < b, distinct. Degree-ordered orientation (the
     * Cohen / Suri-Vassilvitskii MapReduce form): direct each edge
-    * from its lower-(degree, id) endpoint, enumerate wedges at the
-    * source, close them against the oriented edge set. Orientation
-    * bounds every node's out-degree by O(√m), so wedge fan-out —
-    * the quadratic hazard on skewed graphs (one celebrity node =
-    * deg² wedges undirected) — stays O(m^1.5) total regardless of
-    * degree skew. Three hash joins on node keys, no cartesian.
-    * Returns (node, n_tri). */
+    * from its lower-(degree, id) endpoint, which bounds every node's
+    * out-degree by O(√m), so one celebrity node cannot fan out into
+    * deg² work. Triangles close by adjacency-set intersection (the
+    * edge-iterator form of Chiba-Nishizeki / Latapy's compact-
+    * forward): each node's oriented out-neighborhood is packed once
+    * into a sorted array and every oriented edge (u, v) closes its
+    * triangles locally via `array_intersect(adj(u), adj(v))` — the
+    * only triangle-dependent row set materialized is the
+    * O(#triangles) exploded members. The Σ outdeg² volume moves as
+    * packed arrays inside m rows, not as one row per wedge feeding a
+    * shuffle-join build side (the wedge self-join form this replaced
+    * measured 1.4-2.0x slower at every benched scale). Equi-joins on
+    * node keys only, no cartesian. Returns (node, n_tri);
+    * PropertySpec checks it against brute-force enumeration. */
   def triangleCounts(pairs: DataFrame): DataFrame =
     Materialize.scope(pairs.sparkSession, "Graph.triangleCounts") { m =>
-      val und = pairs.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
-      val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-      val withDeg = und
-        .join(deg.select(col("u").as("x"), col("deg").as("du")),
-          col("u") === col("x")).drop("x")
-        .join(deg.select(col("u").as("y"), col("deg").as("dv")),
-          col("v") === col("y")).drop("y")
-      // keep the edge only in its low-endpoint orientation.
-      // Materialized: the oriented edge set feeds THREE
-      // plan branches (both wedge sides and the closing probe), and
-      // without materialization Catalyst rebuilds the union + two
-      // degree joins for each — at 30x data that is six extra
-      // corpus-sized sorts and the heap churn that OOM'd the suite
-      // bench. One m-sized serialized table, built once, is the
-      // iteration-invariant-edges pattern from pageRank above.
-      val oriented = m("oriented edges")(withDeg.filter(
-        col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")))
-        .select(col("u"), col("v"), col("dv")))
-      // wedges (v, w) at each source u, ordered by the SAME (deg, id)
-      // key so the closing edge is exactly the oriented v -> w
-      val wedges = oriented.as("e1")
-        .join(oriented.as("e2"), col("e1.u") === col("e2.u") &&
-          (col("e1.dv") < col("e2.dv") ||
-            (col("e1.dv") === col("e2.dv") && col("e1.v") < col("e2.v"))))
-        .select(col("e1.u").as("tu"), col("e1.v").as("tv"), col("e2.v").as("tw"))
-      val tris = wedges.join(oriented.select(col("u").as("tv"), col("v").as("tw")),
-        Seq("tv", "tw"))
-      tris.select(explode(array(col("tu"), col("tv"), col("tw"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    }
-
-  /** [[triangleCounts]] by adjacency-set intersection (the edge-
-    * iterator form of Chiba-Nishizeki / Latapy's compact-forward):
-    * same degree-ordered orientation, but instead of ENUMERATING
-    * every wedge as a row and shuffling O(m^1.5) of them into the
-    * closing join, each node's oriented out-neighborhood is packed
-    * once into a sorted array (≤ O(√m) entries under orientation)
-    * and every oriented edge (u, v) closes its triangles locally via
-    * `array_intersect(adj(u), adj(v))` — the only triangle-dependent
-    * row set materialized is the O(#triangles) exploded members.
-    * The shuffled byte volume is the same Σ outdeg² bound, but it
-    * moves as packed arrays inside m rows (no per-wedge row
-    * overhead, no m^1.5-row hash-join build side), which is the
-    * difference between heap-resident and spilling at a 30x step.
-    * Returns (node, n_tri) — exactly [[triangleCounts]]'s result
-    * (equality property-tested in GraphSpec). */
-  def triangleCountsAdj(pairs: DataFrame): DataFrame =
-    Materialize.scope(pairs.sparkSession, "Graph.triangleCountsAdj") { m =>
       val und = pairs.select(col("a").as("u"), col("b").as("v"))
         .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
       val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * ([[AsOfJoinStrategy]], injected by [[GraftExtensions]]), and a
   * physical sort-merge operator ([[AsOfJoinExec]]).
   *
-  * Semantics (left as-of join, the reference-side composition lives
-  * in `graft.operators.AsOfJoin.leftAsOf`): every left row gets the
+  * Semantics (left as-of join, called through
+  * `graft.operators.AsOfJoin.leftAsOf`): every left row gets the
   * LATEST right row with equal key and right.time <= left.time, or
   * nulls when none precedes it. Keys compare null-safely (null keys
   * group together, like Spark's `<=>`); callers that want SQL

@@ -3,6 +3,7 @@ package graft.processors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.classify.{Classify, Geo}
+import graft.ingest.AccessLog
 import graft.processors.Processors.dailyFact
 
 /** Concrete metric processors over the parsed access-event stream
@@ -20,9 +21,7 @@ object AccessProcessors {
   object DownloadsViews extends MetricProcessor {
     val provides = Seq("downloads", "views")
     def process(events: DataFrame): DataFrame =
-      dailyFact(
-        events.withColumn("value",
-          when(col("referent_docid").isNotNull, "downloads").otherwise("views")),
+      dailyFact(AccessLog.withDownloadFlag(events),
         tsCol = "ts", idCol = "referent_id", valueCol = "value")
   }
 

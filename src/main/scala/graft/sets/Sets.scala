@@ -3,7 +3,7 @@ package graft.sets
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import graft.classify.{Classify, NameCase}
@@ -12,8 +12,8 @@ import graft.store.Materialize
 /** Dimension ("set") materialization (SURVEY.md §1.1, §2.10; ref
   * `Sets.pm:34-164,222-336`): turn repository metadata into
   * (set_value, id) dimension tables, with multi-value explosion,
-  * name normalization, optional anonymization, blacklisting, subject
-  * ancestor closure, and grouping bridge tables.
+  * name normalization, optional anonymization, blacklisting and
+  * subject ancestor closure.
   *
   * Scale posture: set tables are small relative to facts (one row per
   * item x value). They are built once per ETL run with explode +
@@ -83,7 +83,7 @@ object Sets {
 
   /** Materialize a compound set dim: (set_value, id, rendered) — one
     * row per (item, author-key), the rendered display carried along
-    * so [[renderedValues]]-style lookups need no re-derivation.
+    * so [[setFinder]] lookups need no re-derivation.
     * Same scale posture as [[materialize]]: dimension-sized output,
     * one explode + codegen'd projection, no joins; returned as one
     * caller-owned checkpoint, like every builder here. */
@@ -222,22 +222,6 @@ object Sets {
       }
       Row(subject, seen.toSeq)
     }
-  }
-
-  /** Grouping bridge (ref `Handler.pm:942-977`): pre-joined pairs of
-    * set membership x grouping membership per item, so "top G within
-    * set S=v" is one join at query time. */
-  def groupingBridge(setDim: DataFrame, groupingDim: DataFrame): DataFrame =
-    setDim.select(col("set_value"), col("id"))
-      .join(groupingDim.select(col("set_value").as("grouping_value"), col("id")), "id")
-      .select("set_value", "id", "grouping_value")
-
-  /** Rendered display values (ref `Handler.pm:980-1006`): set_value ->
-    * display string; identity unless a render map is supplied. */
-  def renderedValues(setDim: DataFrame,
-      render: Option[Column => Column] = None): DataFrame = {
-    val v = col("set_value")
-    setDim.select(v, render.map(f => f(v)).getOrElse(v).as("rendered")).distinct()
   }
 
   /** Set-finder lookup (ref `Handler.pm:778-821`): the rendered set

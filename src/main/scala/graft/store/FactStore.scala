@@ -86,8 +86,8 @@ object FactStore {
           scala.util.Try(java.time.LocalDate.parse(day))
             .toOption.exists(!_.isBefore(f))
       })
-    }.foreach(rm)
-    if (partitionDirs(root).isEmpty) rm(root)
+    }.foreach(TempSweep.rm)
+    if (partitionDirs(root).isEmpty) TempSweep.rm(root)
   }
 
   /** The days a fact table holds, read from its `date=YYYY-MM-DD`
@@ -189,11 +189,6 @@ object FactStore {
     else None
   }
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).toSeq.flatten.foreach(rm)
-    f.delete(): Unit
-  }
-
   /** Execute the compaction the o15 query plans: rewrite the
     * partitioned fact table so every day partition holds files of at
     * most `targetRows` rows, collapsing the many small files that
@@ -236,6 +231,6 @@ object FactStore {
     * tables, so uninstall is a recursive delete. */
   def uninstall(factRoot: String): Unit = {
     val root = new java.io.File(factRoot)
-    if (root.isDirectory) rm(root)
+    if (root.isDirectory) TempSweep.rm(root)
   }
 }

@@ -81,7 +81,7 @@ object LifetimeMv {
       // totals forever
       pointer(mvDir).foreach { case (_, wm) =>
         if (rewrittenFrom.exists(!_.isAfter(java.time.LocalDate.parse(wm))))
-          deleteRec(new java.io.File(mvDir))
+          TempSweep.rm(new java.io.File(mvDir))
       }
       return 0L
     }
@@ -126,12 +126,7 @@ object LifetimeMv {
       .filter(f => f.isDirectory && f.getName.startsWith("v") &&
         scala.util.Try(f.getName.stripPrefix("v").toLong)
           .toOption.exists(!keep.contains(_)))
-      .foreach(deleteRec)
+      .foreach(TempSweep.rm)
     newDays.size.toLong
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles).toSeq.flatten.foreach(deleteRec)
-    f.delete(): Unit
   }
 }

@@ -27,7 +27,8 @@ private[graft] object TempSweep {
     true
   }
 
-  private def rm(f: java.io.File): Unit = {
+  /** Delete a file, or a directory and everything under it. */
+  def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm))
     f.delete(); ()
   }

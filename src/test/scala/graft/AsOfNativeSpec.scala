@@ -1,53 +1,22 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalacheck.Gen
 
 import graft.operators.AsOfJoin
 
-/** The whole-operator as-of join (AsOfJoinPlan/Strategy/Exec) must be
-  * result-identical to the composed union+window form, and its
-  * physical plan must actually be the custom operator with two
-  * independent child exchanges (no unioned superset-schema shuffle).
+/** The whole-operator as-of join (AsOfJoinPlan/Strategy/Exec): null
+  * payloads, type checks, filter pushdown, and a physical plan that is
+  * the custom operator with two independent child exchanges (no
+  * unioned superset-schema shuffle). PropertySpec checks its results
+  * against a naive quadratic max-filter join.
   */
 class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
-
-  private def forAllSeeded[A](gen: Gen[A], n: Int)(body: A => Unit): Unit =
-    (1 to n).foreach { i =>
-      gen(Gen.Parameters.default, org.scalacheck.rng.Seed(i.toLong)).foreach(body)
-    }
-
-  private val eventsGen: Gen[List[(Long, Long, Long)]] = for {
-    n <- Gen.choose(1, 80)
-    rows <- Gen.listOfN(n, for {
-      k <- Gen.choose(1L, 5L)
-      t <- Gen.choose(0L, 10000L)
-    } yield (k, t))
-  } yield rows.zipWithIndex.map { case ((k, t), i) => (k, t, i.toLong) }
-
-  test("native as-of join matches the composed union+window form") {
-    forAllSeeded(eventsGen, n = 8) { rows =>
-      val s = spark; import s.implicits._
-      val (l, r) = rows.partition(_._3 % 2 == 0)
-      if (l.nonEmpty && r.nonEmpty) {
-        val left = l.toDF("k", "lt", "lid")
-        val right = r.toDF("k", "rt", "rid")
-        def key(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
-            if (x.isNullAt(3)) -1L else x.getLong(3),
-            if (x.isNullAt(4)) -1L else x.getLong(4))).sorted.toList
-        val composed = key(AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid"))
-        val native = key(AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid"))
-        assert(native == composed)
-      }
-    }
-  }
 
   test("left rows with no preceding right row keep null payloads") {
     val s = spark; import s.implicits._
     val left = Seq((1L, 10L, 1L), (2L, 5L, 2L)).toDF("k", "lt", "lid")
     val right = Seq((1L, 3L, 7L), (2L, 6L, 8L)).toDF("k", "rt", "rid")
-    val out = AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+    val out = AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
       .orderBy("lid").collect()
     assert(out(0).getLong(3) == 7L)   // k=1: rt 3 <= lt 10
     assert(out(1).isNullAt(3))        // k=2: rt 6 > lt 5 -> no match
@@ -71,7 +40,7 @@ class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
     val s = spark; import s.implicits._
     val left = Seq((1L, 10L, 1L), (2L, 10L, 2L)).toDF("k", "lt", "lid")
     val right = Seq((1L, 3L, 7L), (2L, 3L, 8L)).toDF("k", "rt", "rid")
-    val df = AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+    val df = AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
       .filter(org.apache.spark.sql.functions.col("k") === 1L)
     val opt = df.queryExecution.optimizedPlan
     // the filter must sit below the as-of node on both sides, not above it
@@ -95,7 +64,7 @@ class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
     // right holds k=0: a mirrored `10 div k = 10` would raise
     // DIVIDE_BY_ZERO under ANSI on a row the query never evaluates
     val right = Seq((0L, 3L, 7L), (1L, 3L, 8L)).toDF("k", "rt", "rid")
-    val df = AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+    val df = AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
       .filter(org.apache.spark.sql.functions.expr("10 div k = 10"))
     val aj = df.queryExecution.optimizedPlan
       .collectFirst { case a: graft.plans.AsOfJoinPlan => a }.get
@@ -113,7 +82,7 @@ class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
     val left = Seq((1L, 10L, 1L)).toDF("k", "lt", "lid")
     val right = Seq((1, 3L, 7L)).toDF("k", "rt", "rid") // k: INT vs LONG
     intercept[IllegalArgumentException] {
-      AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+      AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
     }
   }
 
@@ -121,7 +90,7 @@ class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
     val s = spark; import s.implicits._
     val left = Seq((1L, 10L, 1L), (1L, 2L, 3L)).toDF("k", "lt", "lid")
     val right = Seq((1L, 3L, 7L)).toDF("k", "rt", "rid")
-    val df = AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+    val df = AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
       .filter(org.apache.spark.sql.functions.col("lt") > 5L)
     val aj = df.queryExecution.optimizedPlan
       .collectFirst { case a: graft.plans.AsOfJoinPlan => a }.get
@@ -139,7 +108,7 @@ class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
     val s = spark; import s.implicits._
     val left = Seq((1L, 10L, 1L), (2L, 10L, 2L)).toDF("k", "lt", "lid")
     val right = Seq((1L, 3L, 7L)).toDF("k", "rt", "rid")
-    val df = AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+    val df = AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
       .filter(org.apache.spark.sql.functions.col("rid").isNull)
     val rows = df.collect()
     assert(rows.length == 1 && rows(0).getLong(0) == 2L) // k=2 had no match
@@ -149,7 +118,7 @@ class AsOfNativeSpec extends AnyFunSuite with SparkSpec {
     val s = spark; import s.implicits._
     val left = Seq((1L, 10L, 1L)).toDF("k", "lt", "lid")
     val right = Seq((1L, 3L, 7L)).toDF("k", "rt", "rid")
-    val df = AsOfJoin.leftAsOfNative(s, left, right, "k", "lt", "lid", "rt", "rid")
+    val df = AsOfJoin.leftAsOf(left, right, "k", "lt", "lid", "rt", "rid")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), plan)
     assert(!plan.toLowerCase.contains("union"), plan)

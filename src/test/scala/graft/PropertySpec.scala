@@ -335,35 +335,54 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
 
   test("triangleCounts == brute-force enumeration on random graphs") {
     val sp = spark; import sp.implicits._
-    val edgeGen = for {
+    // undirected (a < b), distinct, loop-free edges from raw pairs
+    def undirected(es: Seq[(Long, Long)]): List[(Long, Long)] =
+      es.filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct.toList
+    // per-node counts by enumerating every node triple; checks the
+    // engine's result on a non-empty graph and returns the expectation
+    def check(edges: List[(Long, Long)]): Seq[(Long, Long)] = {
+      val eset = edges.toSet
+      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      val want = (for {
+        u <- nodes; v <- nodes if v > u; w <- nodes if w > v
+        if eset((u, v)) && eset((u, w)) && eset((v, w))
+      } yield Seq(u, v, w)).flatten
+        .groupBy(identity).map { case (n2, xs) => (n2, xs.size.toLong) }
+        .toSeq.sorted
+      if (edges.nonEmpty) {
+        val got = graft.operators.Graph.triangleCounts(edges.toDF("a", "b"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+        assert(got == want, s"edges: $edges")
+      }
+      want
+    }
+    val randomGen = for {
       n <- Gen.choose(4, 9)
       m <- Gen.choose(3, 18)
       es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n.toLong - 1),
         Gen.choose(0L, n.toLong - 1)))
-    } yield es.filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-    forAllSeeded(edgeGen, n = 15) { edges =>
-      if (edges.nonEmpty) {
-        val eset = edges.toSet
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        val expected = (for {
-          u <- nodes; v <- nodes if v > u; w <- nodes if w > v
-          if eset((u, v)) && eset((u, w)) && eset((v, w))
-        } yield Seq(u, v, w)).flatten
-          .groupBy(identity).map { case (n2, xs) => (n2, xs.size.toLong) }
-          .toSeq.sorted
-        val got = graft.operators.Graph.triangleCounts(
-            edges.toDF("a", "b"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-        assert(got == expected, s"edges: $edges")
-        // the adjacency-intersection form must agree exactly — it is
-        // the same orientation closing triangles via array_intersect
-        val gotAdj = graft.operators.Graph.triangleCountsAdj(
-            edges.toDF("a", "b"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-        assert(gotAdj == expected, s"adj form diverged; edges: $edges")
-      }
-    }
+    } yield undirected(es)
+    // hub 0 joins every spoke 1..n; chords between spokes (1-2 always)
+    // close triangles through the hub, whose degree puts it last in
+    // the (degree, id) orientation
+    val hubGen = for {
+      n <- Gen.choose(5, 12)
+      m <- Gen.choose(1, 14)
+      chords <- Gen.listOfN(m, Gen.zip(Gen.choose(1L, n.toLong),
+        Gen.choose(1L, n.toLong)))
+    } yield undirected((1L to n.toLong).map(v => (0L, v)) ++ ((1L, 2L) :: chords))
+    // bipartite graphs (even ids to odd ids) have no odd cycles, so
+    // no triangles
+    val bipartiteGen = for {
+      n <- Gen.choose(2, 8)
+      m <- Gen.choose(1, 20)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(0L, n.toLong), Gen.choose(0L, n.toLong)))
+    } yield undirected(es.map { case (a, b) => (2 * a, 2 * b + 1) })
+    forAllSeeded(randomGen, n = 15) { es => check(es); () }
+    forAllSeeded(hubGen, n = 8)(es => assert(check(es).head._1 == 0L))
+    forAllSeeded(bipartiteGen, n = 8)(es => assert(check(es).isEmpty))
+    assert(check((1L to 10L).map(v => (0L, v)).toList).isEmpty) // a bare star
   }
 
   test("winnowing == brute-force window minima on random corpora") {
