@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
-import graft.store.Materialize
+import graft.store.{Durable, Materialize}
 
 /** The LLM-curation pipeline as a public API surface — the
   * training-data composition the kp1/kp2 keystones exercise:
@@ -37,18 +37,24 @@ object Curation {
       md5(lower(t)).as("key"))
   }
 
+  /** The canonical-owner index over `docs`: (key, owner_id), the
+    * min doc_id among the quality survivors of each content key — the
+    * static side every streaming curation path joins. */
+  def owners(docs: DataFrame): DataFrame =
+    scored(docs).filter(col("keep") === 1)
+      .groupBy("key").agg(min("doc_id").as("owner_id"))
+
   /** Batch curation report: one row per (source, lang_pred) with
     * docs_in / docs_quality / docs_kept / tok_kept / keep_pm.
     * The canonical owner is elected AMONG the quality survivors of a
     * content key (window partitioned by (key, keep), so rejected
     * rows never shadow a surviving duplicate) — the same election
-    * the streaming side runs (`Streaming.availableNowCuration`
-    * filters `keep === 1` before its min-id owner aggregate). Today
-    * the quality gate is content-pure, so `keep` is constant within
-    * a key and this collapses to the plain first-survivor pick; the
-    * (key, keep) partition makes the batch/stream agreement hold
-    * even for a future quality signal that reads non-content columns
-    * (source reputation, fetch date). */
+    * the streaming side runs ([[owners]] filters `keep === 1` before
+    * its min-id aggregate). Today the quality gate is content-pure, so
+    * `keep` is constant within a key and this collapses to the plain
+    * first-survivor pick; the (key, keep) partition makes the
+    * batch/stream agreement hold even for a future quality signal that
+    * reads non-content columns (source reputation, fetch date). */
   def report(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("key", "keep").orderBy("doc_id")
     accounting(scored(docs)
@@ -183,53 +189,14 @@ object Curation {
   private[graft] def scrubText(df: DataFrame): DataFrame =
     df.withColumn("text", Text.scrubPii(col("text")))
 
-  /** Data fingerprint of a frame's file inputs: one `listStatus` per
-    * distinct parent directory of `df.inputFiles`, folding every
-    * input file's (name, length, mtime) into an md5. The semantic
-    * hash alone keys the PLAN — for file-backed corpora that is just
-    * root paths + schema, so refreshing the data IN PLACE at the same
-    * path would silently serve a stale `.ir2` payload forever (the
-    * cache persists across sessions, unlike the in-JVM clustersTable
-    * map). Folding the listing in makes an in-place refresh a cache
-    * miss by construction. Non-file frames (in-memory test fixtures)
-    * have no input files and fall back to `"mem"` — the semantic
-    * hash still keys their content. Driver-side cost: one FS listing
-    * RPC per directory, not per file. */
-  private[graft] def dataFingerprint(df: DataFrame): String = {
-    val files = df.inputFiles
-    if (files.isEmpty) "mem"
-    else {
-      val conf = df.sparkSession.sessionState.newHadoopConf()
-      val md = java.security.MessageDigest.getInstance("MD5")
-      files.map(f => new org.apache.hadoop.fs.Path(f).getParent)
-        .distinct.sortBy(_.toString)
-        .foreach { dir =>
-          val fs = dir.getFileSystem(conf)
-          fs.listStatus(dir).sortBy(_.getPath.toString).foreach { st =>
-            md.update(
-              s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime};"
-                .getBytes("UTF-8"))
-          }
-        }
-      md.digest().map("%02x".format(_)).mkString
-    }
-  }
-
   /** The md5 cache key params for a curation report/assembly — the
-    * same canonical-params keying [[ReportCache]] uses for the
-    * irstats report surface (ref `cgi/stats/get:80-99`): corpus
-    * identity is the canonicalized-plan semantic hash (the
-    * clustersTable convention — a different corpus, sf dir, or
-    * schema keys its own entry) PLUS a [[dataFingerprint]] of the
-    * backing files, plus every knob that changes the payload. */
-  private def corpusKey(df: DataFrame): String =
-    df.queryExecution.analyzed.canonicalized.semanticHash().toString +
-      ":" + df.schema.catalogString.hashCode +
-      ":" + dataFingerprint(df)
-
+    * same canonical-params keying [[ReportCache]] uses for the irstats
+    * report surface (ref `cgi/stats/get:80-99`): the corpus identity
+    * (`Durable.corpusKey`, so an in-place data refresh is a miss) plus
+    * every knob that changes the payload. */
   private def cacheParams(kind: String, docs: DataFrame,
       extra: Map[String, String]): Map[String, String] =
-    Map("curation" -> kind, "corpus" -> corpusKey(docs)) ++ extra
+    Map("curation" -> kind, "corpus" -> Durable.corpusKey(docs)) ++ extra
 
   /** [[report]] through the report-level file cache — the
     * reference's dashboard-latency strategy applied to the curation
@@ -253,7 +220,7 @@ object Curation {
       materialize: Materialize.Mode = Materialize.Checkpoint): String =
     ReportCache.getOrCompute(cacheDir,
       cacheParams("curate", docs, Map(
-        "benchmark" -> corpusKey(benchmark),
+        "benchmark" -> Durable.corpusKey(benchmark),
         "gram_n" -> gramN.toString,
         "total_target" -> totalTarget.toString)))(
       // the payload is rendered: nothing the assembly pinned is needed

@@ -11,6 +11,7 @@ import graft.processors.Processors
 import graft.query.QueryCompiler
 import graft.query.QueryCompiler.Catalog
 import graft.series.Series
+import graft.store.Durable
 
 import Shared._
 
@@ -37,7 +38,7 @@ private[graft] object CoreQueries {
     * cross-batch path is genuinely exercised; the index snapshot is
     * the sub-cutoff originals. Returns (backlogPath, indexPath). */
   private def novelFixture(s: SparkSession, sfDir: String): (String, String) = {
-    val dir = fixtureDir("kp2novel", sfDir) { dir =>
+    val dir = Durable.memo(sfDir, "graft_kp2novel") { dir =>
       val docs = Tables.documents(s, sfDir)
       docs.coalesce(1).write.mode("append").parquet(s"$dir/backlog")
       docs.withColumn("doc_id", col("doc_id") + NovelCloneOffset)
@@ -68,7 +69,7 @@ private[graft] object CoreQueries {
     * continuous run streams exactly kp3's fixture. Returns
     * (candidatesPath, benchmarkPath). */
   private def curateFixture(s: SparkSession, sfDir: String): (String, String) = {
-    val dir = fixtureDir("kp4curate", sfDir) { dir =>
+    val dir = Durable.memo(sfDir, "graft_kp4curate") { dir =>
       val injected = injectedCloneBacklog(s, sfDir)
       injected.filter(col("source") =!= "src1").write.parquet(s"$dir/cand")
       injected.filter(col("source") === "src1").write.parquet(s"$dir/bench")

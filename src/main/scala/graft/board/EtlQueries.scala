@@ -11,6 +11,7 @@ import graft.model.Context
 import graft.query.QueryCompiler
 import graft.series.Series
 import graft.similarity.Similarity
+import graft.store.Durable
 
 import Shared._
 
@@ -30,7 +31,7 @@ private[graft] object EtlQueries {
     * through the catalog so the scan reports the bucket layout. */
   private def bucketedTable(s: SparkSession, sfDir: String, tag: String,
       name: String, key: String, df: => DataFrame): DataFrame = {
-    val tmp = fixtureDir(tag, sfDir)(_ => ())
+    val tmp = Durable.memo(sfDir, s"graft_$tag")(_ => ())
     val sfx = java.lang.Long.toHexString(
       java.util.UUID.nameUUIDFromBytes(sfDir.getBytes("UTF-8"))
         .getMostSignificantBits)
@@ -1873,10 +1874,10 @@ private[graft] object EtlQueries {
         |FROM f CROSS JOIN a ORDER BY format""".stripMargin)((s, d) => {
       val e = ev(s, d).select(col("event_id"), col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      // dir comes from the session fixture cache (one per sfDir, swept
-      // at JVM exit); the writes below ARE the measured round-trip, so
-      // they rerun each invocation in overwrite mode
-      val tmp = fixtureDir("fmt", d)(_ => ())
+      // one dir per (JVM, sfDir), swept at JVM exit; the writes below
+      // ARE the measured round-trip, so they rerun each invocation in
+      // overwrite mode
+      val tmp = Durable.memo(d, "graft_fmt")(_ => ())
       e.write.mode("overwrite").orc(s"$tmp/orc")
       e.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
       e.write.mode("overwrite").json(s"$tmp/json")
@@ -1906,10 +1907,9 @@ private[graft] object EtlQueries {
         |  CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_missing
         |FROM customer""".stripMargin)((s, d) => {
-      // generations materialize once per (session, sfDir) via the
-      // fixture cache — the TIMED portion is only the mergeSchema
-      // read, which is the operator being gated
-      val tmp = fixtureDir("evo", d) { dir =>
+      // generations materialize once per (JVM, sfDir) — the TIMED
+      // portion is only the mergeSchema read, the operator being gated
+      val tmp = Durable.memo(d, "graft_evo") { dir =>
         val c = Tables.customer(s, d)
         c.filter(col("c_custkey") % 2 === 0)
           .select(col("c_custkey"), col("c_name"))

@@ -19,24 +19,6 @@ private[graft] object Shared {
 
   def ev(s: SparkSession, d: String) = Tables.events(s, d)
 
-  /** Session-level on-disk fixture cache. Queries that need a derived
-    * directory (format round-trips, snapshot generations) materialize
-    * it ONCE per (tag, sfDir) and reuse it for the rest of the JVM —
-    * under the 3-run cold/warm bench protocol a per-invocation
-    * createTempDirectory would otherwise rewrite the fixture 3× per
-    * round, the timed "query" would be dominated by write I/O, and
-    * /tmp would accumulate orphan dirs across rounds.
-    * [[graft.store.TempSweep]] removes each dir at JVM exit. */
-  private val fixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def fixtureDir(tag: String, sfDir: String)
-      (build: String => Unit): String =
-    fixtureCache.computeIfAbsent(s"$tag|$sfDir", { _ =>
-      val dir = graft.store.TempSweep.tempDir(s"graft_$tag").toString
-      build(dir)
-      dir
-    })
-
   /** The shared daily fact (A1) as a DuckDB CTE — mirror of
     * [[Processors.dailyFact]]. */
   val factCte =

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import graft.store.Materialize
+import graft.store.{Durable, Materialize}
 
 /** Deduplication operators for the training-data pipeline: exact,
   * MinHash+LSH, SimHash, and n-gram-Jaccard near-dup.
@@ -459,122 +459,27 @@ object Dedup {
     * mistake; a production pipeline writes the assignment ONCE per
     * corpus generation as a curated table and every report joins it.
     *
-    * In-session emulation of that table: the first caller per
-    * (canonicalized docs plan, parameters) runs the chain and writes
-    * (doc_id, cluster) parquet to a swept temp dir; every later call
-    * in the JVM reads the files back. Parquet, not a cached plan, on
-    * purpose: readers keep column pruning and AQE, results are
-    * byte-stable across consumers by construction (one write, many
-    * reads), and bench/ops cache hygiene (`clearCache`, RDD
-    * unpersists) cannot invalidate what is a file. Keying on the
-    * canonicalized plan means a different corpus, sf dir, or
-    * parameter set builds its own table — never a stale read.
-    *
-    * `tablePath`: the DURABLE form of the same contract — the actual
-    * curated table location a production corpus generation writes.
-    * When given, the in-JVM plan-keyed cache is bypassed and the
-    * FILES are the authority: an existing committed table
-    * (`_SUCCESS` present) is read back as-is — across JVMs, across
-    * sessions — and a missing or uncommitted one is (re)built in
-    * place. The caller owns the keying (one path per corpus
-    * generation) and the eviction (drop the directory to force a
-    * rebuild); a half-written table from a crashed writer has no
-    * `_SUCCESS` and rebuilds rather than serving torn files. */
-  private val clustersCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Single-writer contract for a durable `tablePath`: exactly one
-    * driver may build a given path at a time (concurrent builders
-    * both seeing a missing `_SUCCESS` would overwrite each other's
-    * files mid-commit) — a production corpus generation owns its
-    * table path the way it owns any curated output directory. A
-    * params sidecar (`_graft_params.json`) is committed with the
-    * table; serving a committed table under DIFFERENT parameters
-    * fails fast rather than silently returning clusters computed
-    * with someone else's thresholds. */
+    * The table is a [[Durable]] artifact with Spark's `_SUCCESS` as its
+    * commit marker. Without `tablePath` the first caller per (corpus,
+    * parameters) runs the chain and every later call in the JVM reads
+    * the files back; the corpus key folds in the input files, so a
+    * corpus rewritten in place builds its own table. With `tablePath`
+    * (the curated table location a production corpus generation
+    * writes) the FILES are the authority across JVMs: a committed
+    * table is served after its params sidecar check, anything else is
+    * rebuilt in place under a claim. */
   def clustersTable(docs: DataFrame, num: Int = 1, den: Int = 2,
       k: Int = 16, rowsPerBand: Int = 4,
       idCol: String = "doc_id", tablePath: Option[String] = None): DataFrame = {
-    val params = s"""{"num":$num,"den":$den,"k":$k,""" +
-      s""""rowsPerBand":$rowsPerBand,"idCol":"$idCol"}"""
+    val params = Durable.params("num" -> num, "den" -> den, "k" -> k,
+      "rowsPerBand" -> rowsPerBand, "idCol" -> idCol)
     // the pairs and labels the chain hands back are freed once written
-    def build(dir: String): String =
+    val path = Durable(docs, tablePath, params, "clustersTable", "tablePath") { dir =>
       Materialize.scope(docs.sparkSession, "Dedup.clustersTable") { _ =>
         nearDupClusters(
             minhashNearDup(docs, num, den, k, rowsPerBand), docs, idCol)
           .write.mode("overwrite").parquet(dir)
-        dir
       }
-    val path = tablePath match {
-      case Some(p) =>
-        // Hadoop FS, not java.io.File: the durable path may be on any
-        // cluster filesystem (hdfs://, s3a://), and _SUCCESS is the
-        // committer's atomicity marker on all of them
-        val conf = docs.sparkSession.sessionState.newHadoopConf()
-        val hp = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
-        val sidecar = new org.apache.hadoop.fs.Path(p, "_graft_params.json")
-        val fs = hp.getFileSystem(conf)
-        // committed = _SUCCESS AND sidecar: the sidecar lands after
-        // the parquet commit, so a writer crashing in that window
-        // leaves _SUCCESS with no params record — serving that under
-        // whatever params the NEXT caller passes is exactly the
-        // silent mismatch the sidecar exists to prevent. Treat it as
-        // torn and rebuild (single-writer contract: nobody else owns
-        // this path mid-build).
-        if (fs.exists(hp) && fs.exists(sidecar)) {
-          // committed table: its params sidecar is the authority —
-          // a mismatch means the caller mis-keyed the path, not that
-          // we should rebuild (overwriting a table another generation
-          // committed is the worse failure)
-          val in = fs.open(sidecar)
-          val existing = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          require(existing == params,
-            s"clustersTable at $p was committed with params $existing " +
-              s"but was requested with $params — one tablePath keys ONE " +
-              "parameter set; use a different path or drop the directory " +
-              "to rebuild")
-          p
-        } else {
-          // Destructive-rebuild guard (round-17 advisory): _SUCCESS
-          // with data files but NO sidecar is what an UNRELATED
-          // committed parquet dataset naturally looks like — a caller
-          // who mis-keys tablePath at one must not have it silently
-          // destroyed by our mode("overwrite"). The torn-commit
-          // window this writer owns (crash between parquet commit and
-          // sidecar write) is distinguished by the claim marker below,
-          // created BEFORE the build starts. It lives NEXT TO the
-          // table directory, not inside it — overwrite mode clears
-          // the directory itself, which would erase an inner marker
-          // exactly in the window it must survive.
-          val tableDir = new org.apache.hadoop.fs.Path(p)
-          val claim = new org.apache.hadoop.fs.Path(
-            tableDir.getParent, s".${tableDir.getName}._graft_building")
-          if (fs.exists(hp) && !fs.exists(claim) &&
-              fs.listStatus(tableDir).exists(
-                _.getPath.getName.endsWith(".parquet")))
-            throw new IllegalStateException(
-              s"clustersTable at $p contains a committed parquet dataset " +
-                "with no _graft_params.json sidecar and no _graft_building " +
-                "marker — refusing to overwrite a directory this writer " +
-                "never built; point tablePath elsewhere or drop the " +
-                "directory explicitly")
-          fs.create(claim, true).close()
-          // a build that throws wrote no table this writer must finish:
-          // a claim left behind would disable the guard above for good
-          try build(p)
-          catch { case e: Throwable => fs.delete(claim, false); throw e }
-          val out = fs.create(sidecar, true)
-          try out.write(params.getBytes("UTF-8")) finally out.close()
-          fs.delete(claim, false)
-          p
-        }
-      case None =>
-        val sh = docs.queryExecution.analyzed.canonicalized.semanticHash()
-        clustersCache.computeIfAbsent(
-          s"$sh|${docs.schema.catalogString.hashCode}|$num/$den|$k|$rowsPerBand|$idCol",
-          _ => build(graft.store.TempSweep.tempDir("graft_clusters")
-            .toString + "/clusters"))
     }
     docs.sparkSession.read.parquet(path)
   }

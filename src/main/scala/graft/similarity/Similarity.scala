@@ -1,11 +1,11 @@
 package graft.similarity
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import graft.store.Materialize
+import graft.store.{Durable, Materialize}
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -777,37 +777,6 @@ object Similarity {
       sqDistLong, k, nprobe, idCol, vecCol)
   }
 
-  /** In-JVM emulation of a durable index location for
-    * [[ivfPqIndexTable]] callers that don't name one — same contract
-    * as `Dedup.clustersTable`'s plan-keyed cache: the first caller
-    * per (canonicalized corpus plan, parameters) trains and writes,
-    * every later call in the JVM serves the files. */
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val paramsFile = "_graft_params.json"
-  private val indexMarker = "_GRAFT_INDEX_SUCCESS"
-
-  /** An index directory and the Hadoop filesystem it lives on. */
-  private def indexRoot(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val root = new Path(path)
-    (root.getFileSystem(spark.sessionState.newHadoopConf()), root)
-  }
-
-  /** The params sidecar of the index at `root`, verbatim. */
-  private def readParams(fs: FileSystem, root: Path): String = {
-    val in = fs.open(new Path(root, paramsFile))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  /** Commit the index at `root`: the params sidecar, then the
-    * whole-index marker. */
-  private def commitIndex(fs: FileSystem, root: Path, params: String): Unit = {
-    val out = fs.create(new Path(root, paramsFile), true)
-    try out.write(params.getBytes("UTF-8")) finally out.close()
-    fs.create(new Path(root, indexMarker), true).close()
-  }
-
   /** PERSISTED IVF-PQ index — the deployment shape of [[annIvfPq]]:
     * a production corpus generation trains the index ONCE (coarse
     * centroids + PQ codebook + the full-corpus posting lists) and
@@ -823,18 +792,14 @@ object Similarity {
     *   centroids/  (cid, cv: array<double>)   [[trainedIvfCentroids]]
     *   codebook/   (m, cw, cv: array<long>)   [[pqCodebookTrained]]
     *   postings/   (id, m, code, cid)         full-corpus cell + codes
-    * plus `_graft_params.json` (the parameter sidecar) and
-    * `_GRAFT_INDEX_SUCCESS` (the whole-index commit marker: the three
-    * per-table `_SUCCESS` files can't arbitrate a writer that died
-    * between tables). Same durability contract as
-    * `Dedup.clustersTable`: a committed index is served as-is —
-    * mismatched parameters fail fast rather than silently searching
-    * someone else's geometry — and a torn one (no marker) rebuilds in
-    * place; one driver owns a given path (single-writer, as for any
-    * curated output directory).
     *
-    * With `indexPath = None` the index lands in a swept temp dir
-    * keyed by (canonicalized corpus plan, params) — the in-session
+    * It is a [[Durable]] artifact whose commit marker is the whole-index
+    * `Durable.IndexMarker` (the three per-table `_SUCCESS` files can't
+    * arbitrate a writer that died between tables): a committed index is
+    * served as-is — mismatched parameters fail fast rather than
+    * silently searching someone else's geometry — and a torn one
+    * retrains in place under a claim. With `indexPath = None` the index
+    * is built once per JVM per (corpus, params) — the in-session
     * emulation of the curated table, byte-stable across consumers.
     *
     * Returns (centroids, codebook, postings) — always read FROM THE
@@ -847,12 +812,13 @@ object Similarity {
       cbIters: Int = 1, idCol: String = "vec_id",
       vecCol: String = "embedding",
       indexPath: Option[String] = None): (DataFrame, DataFrame, DataFrame) = {
-    val params = s"""{"dim":$dim,"cells":$cells,"cellStride":$cellStride,""" +
-      s""""cellIters":$cellIters,"m":$m,"subDim":$subDim,""" +
-      s""""cbStride":$cbStride,"cbK":$cbK,"cbIters":$cbIters,""" +
-      s""""idCol":"$idCol","vecCol":"$vecCol"}"""
+    val params = Durable.params("dim" -> dim, "cells" -> cells,
+      "cellStride" -> cellStride, "cellIters" -> cellIters, "m" -> m,
+      "subDim" -> subDim, "cbStride" -> cbStride, "cbK" -> cbK,
+      "cbIters" -> cbIters, "idCol" -> idCol, "vecCol" -> vecCol)
     val spark = corpus.sparkSession
-    def build(dir: String): Unit =
+    val path = Durable(corpus, indexPath, params, "ivfPqIndexTable", "indexPath",
+        Durable.IndexMarker) { dir =>
       Materialize.scope(spark, "Similarity.ivfPqIndexTable") { _ =>
         val cents = trainedIvfCentroids(
           corpus, dim, cellStride, cells, cellIters, idCol, vecCol)
@@ -868,33 +834,6 @@ object Similarity {
             idCol, vecCol)
           .write.mode("overwrite").parquet(s"$dir/postings")
       }
-    val path = indexPath match {
-      case Some(p) =>
-        val (fs, root) = indexRoot(spark, p)
-        if (fs.exists(new Path(root, indexMarker))) {
-          if (fs.exists(new Path(root, paramsFile))) {
-            val existing = readParams(fs, root).trim
-            require(existing == params,
-              s"ivfPqIndexTable at $p was committed with params $existing " +
-                s"but was requested with $params — one indexPath keys ONE " +
-                "parameter set; use a different path or drop the directory " +
-                "to retrain")
-          }
-        } else {
-          build(p)
-          commitIndex(fs, root, params)
-        }
-        p
-      case None =>
-        val sh = corpus.queryExecution.analyzed.canonicalized.semanticHash()
-        ivfPqIndexCache.computeIfAbsent(
-          s"$sh|${corpus.schema.catalogString.hashCode}|$params",
-          _ => {
-            val dir = graft.store.TempSweep.tempDir("graft_ivfpq")
-              .toString + "/index"
-            build(dir)
-            dir
-          })
     }
     (spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/codebook"),
@@ -907,10 +846,10 @@ object Similarity {
     * delta (crashed appender — no `_SUCCESS`) is invisible to
     * readers and harmlessly overwritten by a later append. */
   private def readPostings(spark: SparkSession, indexPath: String): DataFrame = {
-    val (fs, root) = indexRoot(spark, indexPath)
+    val (fs, root) = Durable.locate(spark, indexPath)
     val committed = fs.globStatus(new Path(root, "postings*"))
       .map(_.getPath)
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
+      .filter(p => fs.exists(new Path(p, Durable.TableMarker)))
       .map(_.toString).sorted
     spark.read.parquet(committed.toIndexedSeq: _*)
   }
@@ -936,13 +875,12 @@ object Similarity {
   def ivfPqIndexAppend(newVectors: DataFrame, indexPath: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = newVectors.sparkSession
-    val (fs, root) = indexRoot(spark, indexPath)
-    require(fs.exists(new Path(root, indexMarker)),
-      s"ivfPqIndexAppend: no committed index at $indexPath — train with " +
-        "ivfPqIndexTable first")
     // the sidecar's m/subDim are the encode geometry; the append must
     // quantize exactly as the base build did
-    val params = readParams(fs, root)
+    val params = Durable.committed(spark, indexPath, Durable.IndexMarker)
+      .getOrElse(throw new IllegalArgumentException(
+        s"ivfPqIndexAppend: no committed index at $indexPath — train with " +
+          "ivfPqIndexTable first"))
     def intField(name: String): Int =
       s""""$name":(\\d+)""".r.findFirstMatchIn(params).map(_.group(1).toInt)
         .getOrElse(throw new IllegalArgumentException(
@@ -958,8 +896,9 @@ object Similarity {
     // torn directory forward, matching the readPostings doc ("a
     // markerless delta is harmlessly overwritten by a later append")
     // instead of accumulating dead dirs compaction never folds away.
+    val (fs, root) = Durable.locate(spark, indexPath)
     val next = 1 + fs.globStatus(new Path(root, "postings_delta_*"))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
+      .filter(st => fs.exists(new Path(st.getPath, Durable.TableMarker)))
       .map(_.getPath.getName.stripPrefix("postings_delta_"))
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .foldLeft(0)(math.max)
@@ -980,20 +919,21 @@ object Similarity {
     * against the compacted index are bit-identical. */
   def ivfPqIndexCompact(spark: SparkSession,
       indexPath: String, targetPath: String): Unit = {
-    val (fs, src) = indexRoot(spark, indexPath)
-    val dst = new Path(targetPath)
-    require(fs.exists(new Path(src, indexMarker)),
-      s"ivfPqIndexCompact: no committed index at $indexPath")
-    require(!fs.exists(new Path(dst, indexMarker)),
+    val params = Durable.committed(spark, indexPath, Durable.IndexMarker)
+      .getOrElse(throw new IllegalArgumentException(
+        s"ivfPqIndexCompact: no committed index at $indexPath"))
+    require(Durable.committed(spark, targetPath, Durable.IndexMarker).isEmpty,
       s"ivfPqIndexCompact: $targetPath already holds a committed index " +
         "— compaction publishes a NEW generation, it never overwrites one")
-    spark.read.parquet(s"$indexPath/centroids")
-      .write.mode("overwrite").parquet(s"$targetPath/centroids")
-    spark.read.parquet(s"$indexPath/codebook")
-      .write.mode("overwrite").parquet(s"$targetPath/codebook")
-    readPostings(spark, indexPath)
-      .write.mode("overwrite").parquet(s"$targetPath/postings")
-    commitIndex(fs, dst, readParams(fs, src))
+    Durable.at(spark, targetPath, params, "ivfPqIndexCompact", "targetPath",
+        Durable.IndexMarker) { dir =>
+      spark.read.parquet(s"$indexPath/centroids")
+        .write.mode("overwrite").parquet(s"$dir/centroids")
+      spark.read.parquet(s"$indexPath/codebook")
+        .write.mode("overwrite").parquet(s"$dir/codebook")
+      readPostings(spark, indexPath)
+        .write.mode("overwrite").parquet(s"$dir/postings")
+    }
   }
 
   /** Filtered IVF-PQ search SERVED FROM THE PERSISTED INDEX — v17's

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.api.Curation
 import graft.model.AccessEvent
-import graft.store.Materialize
+import graft.store.{Durable, Materialize}
 
 /** Structured-Streaming ingest (SURVEY.md §2.9): the streaming analog
   * of the batch daily-fact pipeline.
@@ -472,6 +473,21 @@ object Streaming {
     }
   }
 
+  /** Canon election over scored rows left-joined to an owner index
+    * (kp2, kp4): a surviving doc whose key HAS an owner is canonical
+    * only if it IS the owner; a surviving doc with a NOVEL key (no owner
+    * in the static index — content the batch snapshot never saw) elects
+    * ITSELF, so new material is counted kept rather than silently
+    * dropped. Within-backlog duplicates of the same novel key each
+    * self-elect — exact-once for novel keys needs cross-batch state
+    * ([[availableNowCurationExactOnce]]), a trade documented rather
+    * than paid: the index refresh cycle re-canonicalizes them. Rejected
+    * docs (keep = 0) land in the otherwise-0 branch regardless of owner. */
+  private val selfElectCanon =
+    when(col("keep") === 1 &&
+        (col("owner_id").isNull || col("doc_id") === col("owner_id")), 1)
+      .otherwise(0)
+
   /** KP2: the LLM-curation keystone as a CONTINUOUS pipeline —
     * language-ID, the Gopher quality gate and the content key are
     * row-local projections on the stream (no stream-side shuffle
@@ -502,29 +518,15 @@ object Streaming {
       // for the query's duration (freed when the call returns or
       // throws); replay-parity mode (one consumer) keeps the plain
       // lazy frame.
-      val owners0 = scored(indexPath.fold(batchDocs)(s.read.parquet(_)))
-        .filter(col("keep") === 1)
-        .groupBy("key").agg(min("doc_id").as("owner_id"))
+      val owners0 = Curation.owners(indexPath.fold(batchDocs)(s.read.parquet(_)))
       val owners = if (indexPath.isDefined) m("owners")(owners0) else owners0
       val stream = s.readStream.schema(batchDocs.schema)
         .parquet(streamablePath(docsPath))
-      // left join keeps every stream doc in docs_in. Canon election:
-      // a surviving doc whose key HAS an owner is canonical only if it
-      // IS the owner; a surviving doc with a NOVEL key (no owner in the
-      // static index — content the batch snapshot never saw) elects
-      // ITSELF, so new material is counted kept rather than silently
-      // dropped. Within-backlog duplicates of the same novel key each
-      // self-elect — exact-once for novel keys needs cross-batch state
-      // (dropDuplicates on key), a trade documented rather than paid:
-      // the index refresh cycle re-canonicalizes them. Rejected docs
-      // (keep = 0) land in the otherwise-0 branch regardless of owner.
+      // left join keeps every stream doc in docs_in
       val flagged = scored(stream)
         .join(owners, Seq("key"), "left")
-        .withColumn("canon",
-          when(col("keep") === 1 &&
-              (col("owner_id").isNull || col("doc_id") === col("owner_id")),
-            1).otherwise(0))
-      val out = runToMemory(graft.api.Curation.accounting(flagged), "kp2_curation")
+        .withColumn("canon", selfElectCanon)
+      val out = runToMemory(Curation.accounting(flagged), "kp2_curation")
       // Snapshot-mode observability (the self-elect overcount is silent
       // at runtime otherwise): ONE bounded batch aggregate over the
       // already-scanned backlog counts how many kept docs were
@@ -594,33 +596,10 @@ object Streaming {
     * the owner index is rebuilt (overwritten) every call, so
     * retiring ledger rows is exactly re-snapshotting — point
     * `indexPath` at a corpus snapshot that now CONTAINS the
-    * previously-novel keys and clear the ledger/sink dirs. */
-  /** Guard a durable state directory against cross-corpus resume: the
-    * ledger/checkpoint/sink under a `statePath` encode elections made
-    * against ONE (docsPath, indexPath, …) configuration — resuming the
-    * same path against a different corpus would silently merge
-    * inconsistent elections into the accounting. First use writes a
-    * small manifest; every later use fails fast on mismatch. Only
-    * called for caller-supplied statePaths (a swept temp dir is
-    * single-call by construction). */
-  private def checkStateManifest(dir: java.io.File,
-      fields: Map[String, String]): Unit = {
-    val body = fields.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    val mf = new java.io.File(dir, "_graft_manifest.json")
-    if (mf.exists()) {
-      val src = scala.io.Source.fromFile(mf, "UTF-8")
-      val existing = try src.mkString.trim finally src.close()
-      require(existing == body,
-        s"statePath ${dir} was initialized with $existing but this call " +
-          s"passed $body — a durable statePath resumes ONE configuration; " +
-          "use a fresh path (or clear this one) to change corpus/index")
-    } else {
-      val w = new java.io.PrintWriter(mf, "UTF-8")
-      try w.print(body) finally w.close()
-    }
-  }
-
+    * previously-novel keys and clear the ledger/sink dirs. A given
+    * `statePath` resumes ONE (docsPath, indexPath) configuration: its
+    * [[Durable]] params sidecar fails a resume against another corpus
+    * fast, rather than merging inconsistent elections. */
   def availableNowCurationExactOnce(s: SparkSession, docsPath: String,
       indexPath: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None,
@@ -631,8 +610,9 @@ object Streaming {
     val dir = statePath.fold(graft.store.TempSweep.tempDir("kp2b")) { p =>
       val f = new java.io.File(p); f.mkdirs(); f
     }
-    if (statePath.isDefined) checkStateManifest(dir, Map(
-      "docsPath" -> docsPath, "indexPath" -> indexPath.getOrElse("")))
+    statePath.foreach(Durable.resume(s, _, Durable.params(
+        "docsPath" -> docsPath, "indexPath" -> indexPath.getOrElse("")),
+      "availableNowCurationExactOnce", "statePath"))
     val ledgerDir = new java.io.File(dir, "ledger"); ledgerDir.mkdirs()
     val sinkDir = new java.io.File(dir, "flagged"); sinkDir.mkdirs()
     val ledgerSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -651,9 +631,7 @@ object Streaming {
     // mode overwrite: a resumed call (same statePath) refreshes the
     // index rather than failing on the existing directory.
     val ownersDir = new java.io.File(dir, "owners").getAbsolutePath
-    scored(indexPath.fold(batchDocs)(s.read.parquet(_)))
-      .filter(col("keep") === 1)
-      .groupBy("key").agg(min("doc_id").as("owner_id"))
+    Curation.owners(indexPath.fold(batchDocs)(s.read.parquet(_)))
       .write.mode("overwrite").parquet(ownersDir)
     val ownersSchema = org.apache.spark.sql.types.StructType(
       ledgerSchema.fields.filter(_.name != "batch_id"))
@@ -736,7 +714,7 @@ object Streaming {
       scored(batchDocs).schema.fields :+
         org.apache.spark.sql.types.StructField("canon",
           org.apache.spark.sql.types.IntegerType))
-    graft.api.Curation.accounting(
+    Curation.accounting(
       s.read.schema(flaggedSchema).option("recursiveFileLookup", "true")
         .parquet(sinkDir.getAbsolutePath))
   }
@@ -775,25 +753,22 @@ object Streaming {
       maxFilesPerTrigger: Option[Int] = None,
       statePath: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    import graft.api.Curation
     import graft.dedup.Dedup
     val batchDocs = s.read.parquet(docsPath)
     val dir = statePath.fold(graft.store.TempSweep.tempDir("kp4")) { p =>
       val f = new java.io.File(p); f.mkdirs(); f
     }
-    // benchmarkPath/gramN join the manifest: the accumulated sink's
+    // benchmarkPath/gramN join the sidecar: the accumulated sink's
     // `clean` flags were computed against ONE benchmark gram set —
     // resuming with another would mix decontamination regimes
-    if (statePath.isDefined) checkStateManifest(dir, Map(
-      "docsPath" -> docsPath, "indexPath" -> indexPath.getOrElse(""),
-      "benchmarkPath" -> benchmarkPath, "gramN" -> gramN.toString))
+    statePath.foreach(Durable.resume(s, _, Durable.params(
+        "docsPath" -> docsPath, "indexPath" -> indexPath.getOrElse(""),
+        "benchmarkPath" -> benchmarkPath, "gramN" -> gramN),
+      "availableNowCurate", "statePath"))
     val ownersDir = new java.io.File(dir, "owners").getAbsolutePath
     val gramsDir = new java.io.File(dir, "grams").getAbsolutePath
     val sinkDir = new java.io.File(dir, "gated"); sinkDir.mkdirs()
-    Curation.scored(Curation.scrubText(
-        indexPath.fold(batchDocs)(s.read.parquet(_))))
-      .filter(col("keep") === 1)
-      .groupBy("key").agg(min("doc_id").as("owner_id"))
+    Curation.owners(Curation.scrubText(indexPath.fold(batchDocs)(s.read.parquet(_))))
       .write.mode("overwrite").parquet(ownersDir)
     Dedup.slidingGramHashes(
         Curation.scrubText(s.read.parquet(benchmarkPath)), gramN)
@@ -839,10 +814,7 @@ object Streaming {
             .withColumn("__dirty", lit(1))
           Curation.scored(scrubbed)
             .join(owners, Seq("key"), "left")
-            .withColumn("canon",
-              when(col("keep") === 1 &&
-                  (col("owner_id").isNull || col("doc_id") === col("owner_id")),
-                1).otherwise(0))
+            .withColumn("canon", selfElectCanon)
             .drop("owner_id")
             .join(dirty, Seq("doc_id"), "left")
             .withColumn("clean",

@@ -143,6 +143,16 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
     releasedOnThrow(ivfPqIndex(Some(s"$file/index")))
   }
 
+  test("Similarity.ivfPqIndexTable frees its checkpoints and claim when a claimed build throws") {
+    // the index path is a regular file: the claim beside it lands,
+    // training runs, the first table write cannot create its directory
+    val dir = Files.createTempDirectory("ivfpq_release_claim")
+    val file = Files.createFile(dir.resolve("index")).toString
+    releasedOnThrow(ivfPqIndex(Some(file)))
+    assert(!Files.exists(dir.resolve(".index._graft_building")),
+      "a failed index build left its claim marker behind")
+  }
+
   test("vector family: a board row leaves only the checkpoints its result reads") {
     val sf = "/root/testdata/sf0.001"
     val rows = Seq("d9_semantic_dedup", "v1_ann_bruteforce", "v4_ann_lsh",

@@ -680,6 +680,27 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       "the foreign committed dataset was overwritten")
   }
 
+  test("clustersTable: a corpus rewritten in place builds its own table") {
+    val s = spark; import s.implicits._
+    // the plan of a parquet scan keys only its root path and schema:
+    // the in-JVM table must also key the files behind it, or a corpus
+    // refreshed at the same path keeps serving the old clusters
+    def text(i: Int) = (0 until 30).map(j => s"w${i}x$j").mkString(" ")
+    val path = java.nio.file.Files.createTempDirectory("clusters_refresh")
+      .toString + "/docs"
+    def clusters(texts: Seq[Int]): Set[(Long, Long)] = {
+      texts.zipWithIndex.map { case (t, i) => (i + 1L, text(t)) }
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(path)
+      Dedup.clustersTable(s.read.parquet(path))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val before = clusters(Seq(1, 1, 3, 4))
+    assert(before == Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L)), before)
+    val after = clusters(Seq(1, 2, 3, 3))
+    assert(after == Set((1L, 1L), (2L, 2L), (3L, 3L), (4L, 3L)),
+      s"clustersTable served the clusters of the corpus it replaced: $after")
+  }
+
   test("persisted IVF-PQ index: equals v17, durable path is the authority") {
     val s = spark
     val e = Tables.embeddings(s, "/root/testdata/sf0.001")
@@ -820,6 +841,24 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     }
     assert(ex2.getMessage.contains("never overwrites"),
       s"compaction overwrote a committed generation: ${ex2.getMessage}")
+  }
+
+  test("ivfPqIndexTable: refuses an indexPath holding foreign data") {
+    val s = spark
+    val e = Tables.embeddings(s, "/root/testdata/sf0.001")
+    val path = java.nio.file.Files.createTempDirectory("ivfpq_foreign")
+      .toString + "/index"
+    // an unrelated committed parquet dataset sits where the index goes:
+    // training beside it (or over it) would corrupt someone else's data
+    s.range(3).write.parquet(path)
+    val dir = new java.io.File(path)
+    val listing = dir.list().toSet
+    val ex = intercept[IllegalStateException] {
+      Similarity.ivfPqIndexTable(e, indexPath = Some(path))
+    }
+    assert(ex.getMessage.contains("refusing to overwrite"), ex.getMessage)
+    assert(dir.list().toSet == listing,
+      "the foreign directory changed under a refused index build")
   }
 
   test("LSH and IVF ANN recall vs brute force on clustered vectors") {
