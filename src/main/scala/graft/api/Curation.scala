@@ -55,12 +55,17 @@ object Curation {
     * first-survivor pick; the (key, keep) partition makes the
     * batch/stream agreement hold even for a future quality signal that
     * reads non-content columns (source reputation, fetch date). */
-  def report(docs: DataFrame): DataFrame = {
+  def report(docs: DataFrame): DataFrame =
+    accounting(withCanon(scored(docs))).orderBy("source", "lang_pred")
+
+  /** [[scored]] rows plus `canon`: 1 on the min-doc_id quality
+    * survivor of each content key, else 0 — the one canon election
+    * of [[report]] and [[curate]] (see [[report]] for why the window
+    * partitions by (key, keep)). */
+  private def withCanon(scoredDocs: DataFrame): DataFrame = {
     val w = Window.partitionBy("key", "keep").orderBy("doc_id")
-    accounting(scored(docs)
-        .withColumn("canon",
-          (col("keep") === 1 && row_number().over(w) === 1).cast("int")))
-      .orderBy("source", "lang_pred")
+    scoredDocs.withColumn("canon",
+      (col("keep") === 1 && row_number().over(w) === 1).cast("int"))
   }
 
   /** The per-(source, lang) accounting over a flagged frame (scored
@@ -113,9 +118,7 @@ object Curation {
       def scrub(df: DataFrame): DataFrame = scrubText(df)
       val cand = scrub(docs)
       // stage 2+3: score on the SCRUBBED text; canon among survivors
-      val w = Window.partitionBy("key", "keep").orderBy("doc_id")
-      val flagged = scored(cand).withColumn("canon",
-        (col("keep") === 1 && row_number().over(w) === 1).cast("int"))
+      val flagged = withCanon(scored(cand))
       // stage 4: candidates sharing any scrubbed n-gram with the
       // benchmark are contaminated — only clean CANONS enter the mix
       val dirty = Dedup.contamination(scrub(benchmark), cand, gramN)

@@ -1108,8 +1108,9 @@ private[graft] object EtlQueries {
     // ---- O10: systematic rank sample — every 100th customer by
     // balance rank. Forces a FULL exact global ranking (unlike o3's
     // top-N short-circuit), which is exactly what
-    // [[graft.operators.GlobalRank]] parallelizes: range exchange +
-    // per-partition offsets instead of a one-task global window ----
+    // [[graft.operators.GlobalRank]] parallelizes: value-derived
+    // buckets + per-bucket offsets instead of a one-task global
+    // window ----
     Query("o10_rank_sample",
       """WITH r AS (
         |  SELECT c_custkey,
@@ -1136,7 +1137,7 @@ private[graft] object EtlQueries {
     // rows where the 32-tile index increments under the full global
     // ranking). Layout planning as data: these bounds drive range
     // bucketing / sort-order file splits; the ranking itself is the
-    // o10 range-exchange machinery, never a one-task window ----
+    // o10 bucket-and-offset machinery, never a one-task window ----
     Query("o16_range_bounds",
       """WITH r AS (
         |  SELECT o_orderkey,
@@ -1601,8 +1602,8 @@ private[graft] object EtlQueries {
     // ---- O8: NTILE quartiles of customers by total spend (exact
     // decimal money sums). Ranks via [[graft.operators.GlobalRank]]:
     // `ntile(4).over(Window.orderBy(...))` would move every customer
-    // to ONE task; the range-exchange + per-partition-offset form is
-    // the same exact answer with the sort parallel (measured at sf1:
+    // to ONE task; the bucket + per-bucket-offset form is the same
+    // exact answer with the sort parallel (measured at sf1:
     // 2.9 s -> sub-second, and the gap widens linearly with the
     // customer count) ----
     Query("o8_ntile",
@@ -2878,9 +2879,9 @@ private[graft] object EtlQueries {
     // land proportionally to a weight (customer balance), with NO
     // rand(): a row is picked when its weight interval [cum-w, cum)
     // crosses a multiple of the stride. The inclusive prefix sum
-    // comes from [[graft.operators.GlobalRank.withPrefixSum]] (range
-    // exchange + per-partition offsets — every row-level stage
-    // parallel, unlike the naive one-task global window). Integer DIV
+    // comes from [[graft.operators.GlobalRank.withPrefixSum]]
+    // (value-derived buckets + per-bucket offsets — every row-level
+    // stage parallel, unlike the naive one-task global window). Integer DIV
     // so the crossing test is engine-exact; rerun-stable ----
     Query("o11_weighted_sample",
       """WITH c AS (

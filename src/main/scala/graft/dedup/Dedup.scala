@@ -484,55 +484,33 @@ object Dedup {
     docs.sparkSession.read.parquet(path)
   }
 
-  /** n-gram (3-token shingle) Jaccard near-dup via an inverted-index
-    * join on shingle hashes: only docs sharing a shingle ever meet.
-    * Shared-shingle counts give |intersection| directly; set sizes
-    * come from per-doc distinct-shingle counts. Integer threshold. */
-  /** Distinct 3-gram shingle hashes per doc: explode the shingle
-    * STRINGS first so md5 evaluates in whole-stage codegen (inside a
-    * `transform` lambda it runs interpreted, ~10x slower); the final
-    * distinct mirrors the oracle's distinct-over-hashes exactly even
-    * under (improbable) hash collisions. */
+  /** Distinct 3-gram shingle hashes per doc, (id, sh): the grams of
+    * [[Text.grams]] hashed row-locally (md5 in whole-stage codegen,
+    * never inside an interpreted array lambda); the distinct mirrors
+    * the oracle's distinct-over-hashes exactly even under (improbable)
+    * hash collisions. Only (id, 60-bit digest) rows shuffle, once, by
+    * doc: the distinct needs no other exchange, and every consumer's
+    * per-doc aggregate or join reuses it (a distinct keyed by
+    * (id, sh) made each of them reshuffle — d2/d4/d11 measured 20-35%
+    * slower at sf0.1). */
   def shingleHashes(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", dedupe: Boolean = true): DataFrame = {
-    // posexplode + lead windows: every step (split, explode, lead,
-    // concat, md5) is codegen'd; the alternative — building shingle
-    // strings inside a transform() lambda — evaluates interpreted per
-    // element. The per-doc window sort rides the same shuffle the
-    // downstream per-doc aggregate needs anyway. (Measured at sf0.1:
-    // the lambda build is ~3x slower wall-clock on the fingerprint and
-    // minhash pipelines even though it avoids this shuffle — the
-    // interpreted per-element cost dominates. Don't switch back.)
-    //
-    // `dedupe = false` skips the distinct exchange for consumers whose
-    // aggregate is multiset-invariant (MIN for fingerprints): the
-    // window already hash-partitioned by id, so a following
-    // groupBy("id") is exchange-free.
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("id").orderBy("pos")
-    val hashes = docs.select(col(idCol).as("id"),
-        posexplode(Text.tokens(col(textCol))).as(Seq("pos", "tok")))
-      .withColumn("t1", lead("tok", 1).over(w))
-      .withColumn("t2", lead("tok", 2).over(w))
-      .filter(col("t2").isNotNull)
-      .select(col("id"),
-        Text.hash60(concat_ws(" ", col("tok"), col("t1"), col("t2"))).as("sh"))
-    if (dedupe) hashes.distinct() else hashes
-  }
+      idCol: String = "doc_id"): DataFrame =
+    Text.grams(docs, idCol, textCol, 3)
+      .select(col(idCol).as("id"), Text.hash60(Text.gramText(3)).as("sh"))
+      .repartition(col("id"))
+      .distinct()
 
-  /** Document fingerprints, bulk form (same math as
-    * [[Text.fingerprint]] but explode-then-hash, codegen-friendly):
-    * (id, fp) where fp = min shingle hash, or hash of the whole text
-    * for docs under 3 tokens. */
+  /** Document fingerprints: (id, fp) where fp = the min 60-bit hash
+    * over the document's 3-token shingles, or the hash of the whole
+    * (lowercased) text for docs under 3 tokens. Min over the shingle
+    * multiset equals min over the set, so the grams feed the per-doc
+    * MIN directly: its partial aggregate is the only shuffle. */
   def fingerprints(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val n = Text.tokenCount(col(textCol))
-    // min over the shingle SET equals min over the multiset, so the
-    // distinct exchange is skipped: the only shuffle is the per-doc
-    // window sort, and the MIN aggregate reuses its partitioning.
-    val long = shingleHashes(docs.filter(n >= 3), textCol, idCol, dedupe = false)
-      .groupBy("id").agg(min("sh").as("fp"))
-    val short = docs.filter(n < 3)
+    val long = Text.grams(docs, idCol, textCol, 3)
+      .groupBy(col(idCol).as("id"))
+      .agg(min(Text.hash60(Text.gramText(3))).as("fp"))
+    val short = docs.filter(Text.tokenCount(col(textCol)) < 3)
       .select(col(idCol).as("id"),
         Text.hash60(lower(col(textCol))).as("fp"))
     long.unionByName(short)
@@ -579,36 +557,20 @@ object Dedup {
       .filter(col("df") >= minDf)
   }
 
-  /** The gram pipeline shared by [[lineDedup]] (stride = n chunks),
+  /** The gram digests shared by [[lineDedup]] (stride = n chunks),
     * [[slidingGramHashes]] (stride 1), and [[substringSpans]]
-    * (stride 1, positions kept). ROW-LOCAL (round 18): explode the
-    * gram-start position sequence (the stride is its step) and build
-    * each gram by element_at off the document's token array — every
-    * step (split, sequence, explode, element_at, concat, md5) is
-    * codegen'd and the array is never copied per gram row (pruned in
-    * the same stage). The old posexplode + (n-1) lead-window form
-    * paid a per-doc window sort that shuffled EVERY TOKEN ROW of the
-    * corpus before a single digest existed (guide §2.4 "remove
-    * shuffles outright") — and unlike [[shingleHashes]]' window
-    * (whose id-shuffle the minhash aggregate reuses), no gram
-    * consumer reuses id-partitioning: they all reshuffle by digest.
-    * The md5-per-gram dominates compute either way, so sf0.1 is
-    * flat-to-better (grams build 1.6 -> 0.9 s cold, parity
-    * exceptAll 0/0 — plans/r18/kp4_gram_stage_evidence.txt); the
-    * removed shuffle is the part that grew with corpus size.
-    * Output is exactly the old (id, pos, key) row set: pos ranges
-    * over multiples of `stride` up to size-n, 0-based. NOT distinct:
-    * callers choose (lineDedup counts copies; decontamination
-    * distincts). */
+    * (stride 1, positions kept): (id, pos, key) with `key` the md5 of
+    * each [[Text.grams]] gram string. Row-local, so no shuffle before
+    * a digest exists — no gram consumer reuses id-partitioning, they
+    * all reshuffle by digest (measured at sf0.1 against the earlier
+    * posexplode + lead-window form: grams build 1.6 -> 0.9 s cold).
+    * `pos` ranges over multiples of `stride` up to size-n, 0-based.
+    * NOT distinct: callers choose (lineDedup counts copies;
+    * decontamination distincts). */
   private[graft] def gramDigests(docs: DataFrame, n: Int, stride: Int,
       textCol: String, idCol: String): DataFrame =
-    docs.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("id"), col("toks"), explode(
-        sequence(lit(0), size(col("toks")) - n, lit(stride))).as("pos"))
-      .select(col("id"), col("pos"), md5(concat_ws(" ",
-        (0 until n).map(j => element_at(col("toks"), col("pos") + j + 1)): _*))
-        .as("key"))
+    Text.grams(docs, idCol, textCol, n, stride)
+      .select(col(idCol).as("id"), col("pos"), md5(Text.gramText(n)).as("key"))
 
   /** Exact-substring dedup spans (the Lee et al. 2022 "Deduplicating
     * Training Data" pass, re-expressed relationally): for every

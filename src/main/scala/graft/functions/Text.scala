@@ -34,21 +34,6 @@ object Text {
     java.lang.Long.parseLong(d.take(8).map("%02x".format(_)).mkString.take(15), 16)
   }
 
-  /** 3-token shingle strings (HOF over the token array — cheap string
-    * concat; hash AFTER exploding so md5 stays in codegen).
-    * Documents under 3 tokens yield NO shingles (empty array) — the
-    * unguarded `sequence(1, n-2)` DESCENDS through 0 when n < 3
-    * (default step -1) and `slice(_, 0, _)` throws at runtime; the
-    * oracle side (`generate_series(1, n-2)`) is empty there, so the
-    * guard is also the parity-correct semantics. */
-  def shingleStrings(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) >= 3,
-        transform(sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", slice(toks, i, lit(3)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Whitespace tokenization after lowercasing.
     *
     * DEFINED ARTIFACT: Spark's `split` emits an empty first token for
@@ -60,6 +45,32 @@ object Text {
     * explicitly (e.g. dsirScores' `length(w) > 0`). */
   def tokens(text: Column): Column =
     split(lower(text), "\\s+")
+
+  /** Token n-grams, row-local — the one gram builder: one row per
+    * gram of every document with at least `n` tokens, as (idCol, pos,
+    * t0 .. t{n-1}): `pos` is the 0-based gram start, stepping by
+    * `stride` from 0 up to size - n, and `t<j>` the gram's j-th token
+    * ([[tokens]]' artifact included). The gram-start sequence is
+    * exploded and each token read by `element_at` off the document's
+    * token array: every step is codegen'd, nothing shuffles, and the
+    * array is never copied per gram row. (A posexplode + `lead`
+    * window build shuffles every token row of the corpus by document
+    * before one gram exists; an array-lambda build evaluates
+    * interpreted per element.) */
+  def grams(df: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String, n: Int,
+      stride: Int = 1): org.apache.spark.sql.DataFrame =
+    df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+      .filter(size(col("__toks")) >= n)
+      .select(col(idCol), col("__toks"), explode(
+        sequence(lit(0), size(col("__toks")) - n, lit(stride))).as("pos"))
+      .select(col(idCol) +: col("pos") +: (0 until n).map(j =>
+        element_at(col("__toks"), col("pos") + j + 1).as(s"t$j")): _*)
+
+  /** The gram string of a [[grams]] row: its `n` tokens joined by one
+    * space. */
+  def gramText(n: Int): Column =
+    concat_ws(" ", (0 until n).map(j => col(s"t$j")): _*)
 
   /** Distinct token set (for set-similarity ops). */
   def tokenSet(text: Column): Column = array_distinct(tokens(text))
@@ -203,17 +214,6 @@ object Text {
     when(cntCol > 0, langCol).otherwise(lit("und"))
   }
 
-  /** Document fingerprint: minimum 60-bit hash over the document's
-    * 3-token shingles (w-shingling; the rolling-hash fingerprint of
-    * the pipeline). Documents under 3 tokens hash the whole text. */
-  def fingerprint(text: Column): Column = {
-    // ONE shingle definition: [[shingleStrings]] (guarded there); the
-    // n >= 3 branch is bit-identical to the previous inline copy
-    val n = size(tokens(text))
-    when(n >= 3, array_min(transform(shingleStrings(text), s => hash60(s))))
-      .otherwise(hash60(lower(text)))
-  }
-
   /** Gopher-style repetition signals, integer permille per document:
     *  - `dup_tok_pm`  = 1000·(n_tokens − n_distinct) div n_tokens
     *    (fraction of tokens that are repeats of an earlier token);
@@ -222,27 +222,19 @@ object Text {
     * High values mark degenerate/templated text (keyword stuffing,
     * boilerplate loops) that per-token quality scores miss.
     *
-    * Dataflow: ONE posexplode of the token stream feeds both signals —
-    * unigram distinctness aggregates directly; bigrams come from a
-    * per-doc `lead` window over token positions (codegen'd; the HOF
-    * array-building alternative is interpreted per element and ~3x
-    * slower at scale). Each path is a partial-agg-friendly groupBy on
-    * (doc, gram) — the token stream shuffles once per path, already
-    * combined map-side. Documents under 2 tokens are dropped (no
-    * bigram denominator). */
+    * Dataflow: both token counts are row-local (`size` and
+    * `array_distinct` of the token array); bigrams come from
+    * [[grams]] and shuffle once, combined map-side, for the
+    * partial-agg-friendly (doc, gram) count. One row per document
+    * (ids unique); documents under 2 tokens are dropped (no bigram
+    * denominator). */
   def repetitionStats(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = df
-      .filter(tokenCount(col(textCol)) >= 2)
-      .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val uni = toks.groupBy(idCol)
-      .agg(count(lit(1)).as("n_tok"), countDistinct(col("tok")).as("n_dist"))
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    val bigramMax = toks
-      .withColumn("nxt", lead("tok", 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .groupBy(col(idCol), concat_ws(" ", col("tok"), col("nxt")).as("bg"))
+    val uni = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), size(col("__toks")).as("n_tok"),
+        size(array_distinct(col("__toks"))).as("n_dist"))
+    val bigramMax = grams(df, idCol, textCol, 2)
+      .groupBy(col(idCol), gramText(2).as("bg"))
       .agg(count(lit(1)).as("c"))
       .groupBy(idCol).agg(max("c").as("max_bg"))
     uni.join(bigramMax, idCol)
@@ -368,15 +360,10 @@ object Text {
     * document with ≥ 2 tokens. */
   def bigramNll(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    val toks = df.select(col(idCol),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "w1")))
-    val bg = toks.withColumn("w2", lead("w1", 1).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col(idCol), col("w1"),
-        concat_ws(" ", col("w1"), col("w2")).as("b"))
-    val uni = toks.groupBy(col("w1").as("w")).agg(count(lit(1)).as("cu"))
+    val bg = grams(df, idCol, textCol, 2)
+      .select(col(idCol), col("t0").as("w1"), gramText(2).as("b"))
+    val uni = df.select(explode(tokens(col(textCol))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("cu"))
     val vocab = uni.agg(count(lit(1)).as("v"))
     val cb = bg.groupBy("b").agg(count(lit(1)).as("cb"))
     bg.join(cb, "b")
@@ -458,13 +445,10 @@ object Text {
     * (bigram, c12, pmi_x1000). */
   def collocations(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, minCount: Long = 5): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(idCol).orderBy("pos")
-    val toks = df.select(col(idCol),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "w1")))
-    val bg = toks.withColumn("w2", lead("w1", 1).over(w))
-      .filter(col("w2").isNotNull)
-    val uni = toks.groupBy(col("w1").as("w")).agg(count(lit(1)).as("cu"))
+    val bg = grams(df, idCol, textCol, 2)
+      .select(col("t0").as("w1"), col("t1").as("w2"))
+    val uni = df.select(explode(tokens(col(textCol))).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("cu"))
     val totals = uni.agg(sum("cu").as("n"))
     val nb = bg.agg(count(lit(1)).as("nb"))
     bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
@@ -516,25 +500,19 @@ object Text {
   def winnowing(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, k: Int = 3, w: Int = 4): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Grams are assembled CODEGEN'D from exploded tokens + lead
-    // windows (the [[graft.dedup.Dedup.shingleHashes]] pattern), not
-    // in a transform() lambda. Two earlier forms measured at sf0.1:
-    // a lambda gram build with a sibling `ng = size(grams)` column
-    // ran 188 s — the ng projection lands ABOVE the Generate and
-    // re-runs split+transform+slice per exploded row, O(n²) string
-    // work per document — and the lambda build alone ~3x interpreted
-    // overhead. This form: 1 shuffle, everything whole-stage.
-    // "Window is full" is read from the window itself (lead(pos,
-    // w−1) exists ⟺ pos ≤ ng − w); all specs share one sort.
+    // Grams come CODEGEN'D from [[grams]], never from a transform()
+    // lambda. Two lambda forms measured at sf0.1: one with a sibling
+    // `ng = size(grams)` column ran 188 s — the ng projection lands
+    // ABOVE the Generate and re-runs split+transform+slice per
+    // exploded row, O(n²) string work per document — and the lambda
+    // build alone ~3x interpreted overhead. This form: 1 shuffle,
+    // everything whole-stage. "Window is full" is read from the
+    // window itself (lead(pos, w−1) exists ⟺ pos ≤ ng − w); both
+    // specs share one sort.
     val wKey = Window.partitionBy(idCol).orderBy("pos")
-    val leads = (1 until k).map(i => lead("tok", i).over(wKey).as(s"__t$i"))
-    val gramParts = col("tok") +: (1 until k).map(i => col(s"__t$i"))
-    val g = df
-      .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-      .select(col(idCol) +: col("pos") +: col("tok") +: leads: _*)
-      .filter(col(s"__t${k - 1}").isNotNull)
+    val g = grams(df, idCol, textCol, k)
       .select(col(idCol), col("pos"),
-        ((hash60(concat_ws(" ", gramParts: _*))
+        ((hash60(gramText(k))
             % lit(8796093022208L)) * lit(1048576L)
           + (lit(1048575L) - col("pos"))).as("key"))
     val wSpec = Window.partitionBy(idCol).orderBy("pos").rowsBetween(0, w - 1)
@@ -562,7 +540,10 @@ object Text {
     * Production variants add min/max chunk clamps; those make the cut
     * sequential per doc, so this operator keeps the pure local rule
     * (both windows — the lag and the running boundary count — stack
-    * on ONE doc-key shuffle). Returns (id, chunk_no, start_pos, n_tok). */
+    * on ONE doc-key shuffle). It explodes token rows, not [[grams]]:
+    * chunk lengths count every token position, and the lag rides the
+    * running-count window the chunk numbers need anyway. Returns
+    * (id, chunk_no, start_pos, n_tok). */
   def cdcChunks(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, mask: Int = 15): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window

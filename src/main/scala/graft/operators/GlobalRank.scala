@@ -1,65 +1,51 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+
+import graft.store.Materialize
 
 /** Exact global ranking without a single-partition window.
   *
   * `Window.orderBy(...)` with no partition key moves the ENTIRE input
   * to one task (Spark warns and serializes) — fine for a bounded
   * series, fatal for a table-sized rank at scale. This operator gets
-  * the same exact answer with every stage parallel, via two
-  * interchangeable strategies (property-tested equal), picked from
-  * the input's plan (see "Strategy selection" below):
+  * the same exact answer with every stage parallel: the bucket id is
+  * a PURE ROW FUNCTION — sample the sort key once (hash-top-k, a
+  * narrow column-pruned pass), pick ≤ p-1 boundary cut rows, and
+  * compile them into a codegen'd lexicographic-compare expression.
+  * Because every pass derives the bucket from row VALUES, the
+  * per-bucket counts/offsets and the final windowed join agree
+  * structurally — no shared physical partition assignment to
+  * protect, hence no cache. Cost shape: two narrow passes over the
+  * key columns (boundary sample + bucket counts; both prune to the
+  * sort key at the scan) plus ONE full-width shuffle (the per-bucket
+  * window). At 100 TB the narrow passes read a few key columns while
+  * the corpus crosses the wire exactly once.
   *
-  * '''pinned''': the bucket id is a PURE ROW FUNCTION —
-  * sample the sort key once (hash-top-k, a narrow column-pruned
-  * pass), pick ≤ p-1 boundary cut rows, and compile them into a
-  * codegen'd lexicographic-compare expression. Because every pass
-  * derives the bucket from row VALUES, the per-bucket counts/offsets
-  * and the final windowed join agree structurally — no shared
-  * physical partition assignment to protect, hence NO CACHE. Cost
-  * shape: two narrow passes over the key columns (boundary sample +
-  * bucket counts; both prune to the sort key at the scan) plus ONE
-  * full-width shuffle (the per-bucket window). At 100 TB the narrow
-  * passes read a few key columns while the corpus crosses the wire
-  * exactly once and nothing corpus-sized is materialized.
-  *
-  * '''persist''': `repartitionByRange` on the sort key, then persist
-  * the ranged frame so the counts/offsets branch and the join branch
-  * read ONE physical partition assignment (exchange reuse does NOT
-  * deliver that — the branches carry self-join-style fresh exprIds
-  * and each would re-sample its own range boundaries, the round-11
-  * mis-rank hazard). One full shuffle, but the ranked frame is
-  * materialized in the block store. Immune to an upstream whose row
-  * multiset changes between executions: every branch reads the one
-  * materialized assignment.
-  *
-  * Strategy selection: `withRowNumber` / `withPrefixSum` / `withNtile`
-  * pick persist when the input's analyzed plan may yield a different
-  * row multiset on re-execution — it holds a nondeterministic
+  * The one rule: the passes re-execute the input, so its row multiset
+  * must not change between executions. An input whose analyzed plan
+  * may yield different rows on re-execution — a nondeterministic
   * expression (`rand()`, a UDF marked nondeterministic, `first` or
   * `collect_list` over an unordered input, ...) or a `Limit` whose
-  * child is not a `Sort` — and pinned otherwise. The pinned form
-  * re-executes the upstream for its two narrow passes, so a caller
-  * with an EXPENSIVE deterministic upstream (a heavy aggregate or
-  * join) should persist it before ranking.
+  * child is not a `Sort` — is first checkpointed once through
+  * [[graft.store.Materialize]], so every pass reads the same rows.
+  * That checkpoint escapes to the caller (to the caller's open
+  * `Materialize.scope`, else the caller frees it). A caller with an
+  * EXPENSIVE deterministic upstream (a heavy aggregate or join)
+  * should materialize it before ranking.
   *
   * Ranks are total-order exact when the sort key is unique (pass a
   * tiebreaker column, as any deterministic global rank requires).
-  * Rows with equal sort keys always share a bucket in both
-  * strategies, so ties never straddle an offset boundary. The pinned
-  * form is additionally robust to nondeterministic INPUT ORDER
-  * between its passes (bucket membership depends on values, not on
-  * which task saw the row); only a changing row multiset between
-  * passes breaks it, which breaks any multi-pass query.
+  * Rows with equal sort keys always share a bucket, so ties never
+  * straddle an offset boundary, and bucket membership depends on
+  * values, not on which task saw the row.
   *
   * NTILE derives from (rank, n) arithmetically — SQL semantics: the
   * first n mod k buckets get ceil(n/k) rows, the rest floor(n/k).
-  * In the pinned form the total n rides the (tiny) offsets frame, so
-  * ntile costs NO extra pass over the input. */
+  * The total n rides the (tiny) offsets frame, so ntile costs NO
+  * extra pass over the input. */
 object GlobalRank {
 
   /** A single-partition window key that SURVIVES the optimizer:
@@ -74,7 +60,7 @@ object GlobalRank {
   def onePartitionKey(c: Column): Column = pmod(c, lit(1))
 
   /** Whether re-executing `df` may yield a different row multiset —
-    * the input the pinned strategy's re-executed passes cannot rank. */
+    * the input the re-executed passes cannot rank as it stands. */
   private def unstableInput(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Limit, Sort}
     df.queryExecution.analyzed.exists {
@@ -108,7 +94,7 @@ object GlobalRank {
   }
 
   // ---------------------------------------------------------------
-  // pinned strategy internals
+  // rank internals
   // ---------------------------------------------------------------
 
   /** Compile a bucket-id column: sample the sort key (hash-top-k —
@@ -163,9 +149,9 @@ object GlobalRank {
     // lone cut and the final window runs as one giant task, exactly
     // the serialization this operator exists to avoid. Correct
     // (ranks are still exact), so don't fail; warn instead: the fix
-    // is a caller-side tiebreaker column (restores spread) — falling
-    // back to persist would not help, since repartitionByRange
-    // samples the same constant key into the same single range.
+    // is a caller-side tiebreaker column (restores spread) — any
+    // range partitioning samples the same constant key into the same
+    // single range.
     // Constancy is detected DIRECTLY (whole sample's first == last
     // tuple, or >1 interior boundary index collapsing to 1 cut) —
     // the former `cuts.length == 1 && m > p` test fired spuriously
@@ -192,14 +178,18 @@ object GlobalRank {
         searcher))
   }
 
-  /** Shared pinned core: bucket-tag, per-bucket aggregate (narrow
-    * pass — the projection prunes to the sort-key columns), exclusive
-    * prefix offsets + global total over the tiny per-bucket frame,
-    * then ONE full shuffle for the per-bucket window, offsets joined
-    * back by broadcast. `valueCol` switches the offset payload
-    * between row counts (rank) and value sums (prefix sum). */
-  private def pinnedCore(df: DataFrame, order: Seq[Column], out: String,
+  /** The rank core: checkpoint an unstable input (class doc),
+    * bucket-tag, per-bucket aggregate (narrow pass — the projection
+    * prunes to the sort-key columns), exclusive prefix offsets +
+    * global total over the tiny per-bucket frame, then ONE full
+    * shuffle for the per-bucket window, offsets joined back by
+    * broadcast. `valueCol` switches the offset payload between row
+    * counts (rank) and value sums (prefix sum). */
+  private def rankCore(input: DataFrame, order: Seq[Column], out: String,
       partitions: Int, valueCol: Option[Column]): DataFrame = {
+    val df =
+      if (!unstableInput(input)) input
+      else Materialize.scope(input.sparkSession, "GlobalRank")(m => m("input")(input))
     val specs = specsOf(order)
     val p = defaultP(df, partitions)
     val bucket = bucketColumn(df, specs, p)
@@ -226,29 +216,6 @@ object GlobalRank {
       .withColumn(out, col("__off") + metric)
   }
 
-  /** Pinned-boundary exact global row_number — see class doc. */
-  def withRowNumberPinned(df: DataFrame, order: Seq[Column],
-      out: String = "rn", partitions: Int = 0): DataFrame =
-    pinnedCore(df, order, out, partitions, None)
-      .drop("__pid", "__off", "__n")
-
-  /** Pinned-boundary exact global inclusive prefix sum. */
-  def withPrefixSumPinned(df: DataFrame, value: Column, order: Seq[Column],
-      out: String = "cum", partitions: Int = 0): DataFrame =
-    pinnedCore(df, order, out, partitions, Some(value))
-      .drop("__pid", "__off", "__n", "__v")
-
-  /** Pinned-boundary exact NTILE: the global total rides the tiny
-    * offsets frame (`__n`), so this costs NO extra pass over the
-    * input — unlike the persist form's separate count. */
-  def withNtilePinned(df: DataFrame, buckets: Int, order: Seq[Column],
-      out: String = "ntile", partitions: Int = 0): DataFrame = {
-    require(buckets > 0, s"ntile buckets must be positive: $buckets")
-    val rn = pinnedCore(df, order, "__rn", partitions, None)
-    rn.withColumn(out, ntileOf(col("__rn"), col("__n"), buckets))
-      .drop("__pid", "__off", "__n", "__rn")
-  }
-
   /** SQL NTILE arithmetic from (rank, total): the first n mod k
     * buckets get ceil(n/k) rows, the rest floor(n/k). Integer
     * division via double floor — exact for counts < 2^52. */
@@ -265,88 +232,24 @@ object GlobalRank {
   }
 
   // ---------------------------------------------------------------
-  // persist strategy (the round-11 form)
-  // ---------------------------------------------------------------
-
-  /** Persist-strategy row_number: range exchange + persisted shared
-    * frame — both branches read ONE InMemoryRelation (plan invariant
-    * guarded by PlanShapeSpec). The pick for an unstable input;
-    * costs a corpus-sized cache. */
-  def withRowNumberPersist(df: DataFrame, order: Seq[Column],
-      out: String = "rn", partitions: Int = 0): DataFrame = {
-    val p = defaultP(df, partitions)
-    val ranged = df.repartitionByRange(p, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      // shared materialization point — see the strategy doc above
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // one row per partition — bounded, its global window is safe
-    val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("__c"))
-    val offsets = counts.withColumn("__off",
-        coalesce(sum("__c").over(
-          Window.partitionBy(onePartitionKey(col("__pid"))).orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__pid", "__off")
-    val perPart = Window.partitionBy("__pid").orderBy(order: _*)
-    ranged.join(broadcast(offsets), "__pid")
-      .withColumn(out, col("__off") + row_number().over(perPart))
-      .drop("__pid", "__off")
-  }
-
-  /** Persist-strategy inclusive prefix sum (see [[withRowNumberPersist]]). */
-  def withPrefixSumPersist(df: DataFrame, value: Column, order: Seq[Column],
-      out: String = "cum", partitions: Int = 0): DataFrame = {
-    val p = defaultP(df, partitions)
-    val ranged = df.repartitionByRange(p, order: _*)
-      .withColumn("__v", value)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val sums = ranged.groupBy("__pid").agg(sum("__v").as("__s"))
-    val offsets = sums.withColumn("__off",
-        coalesce(sum("__s").over(
-          Window.partitionBy(onePartitionKey(col("__pid"))).orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__pid", "__off")
-    val perPart = Window.partitionBy("__pid").orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    ranged.join(broadcast(offsets), "__pid")
-      .withColumn(out, col("__off") + sum("__v").over(perPart))
-      .drop("__pid", "__off", "__v")
-  }
-
-  /** Persist-strategy NTILE: ranks via [[withRowNumberPersist]], the
-    * total from one extra count of the INPUT (not the ranked output —
-    * aggregating rn would execute the whole rank machinery twice). */
-  def withNtilePersist(df: DataFrame, buckets: Int, order: Seq[Column],
-      out: String = "ntile", partitions: Int = 0): DataFrame = {
-    require(buckets > 0, s"ntile buckets must be positive: $buckets")
-    val rn = withRowNumberPersist(df, order, "__rn", partitions)
-    val n = df.agg(count(lit(1)).as("__n"))
-    rn.crossJoin(broadcast(n))
-      .withColumn(out, ntileOf(col("__rn"), col("__n"), buckets))
-      .drop("__rn", "__n")
-  }
-
-  // ---------------------------------------------------------------
-  // public API — strategy chosen from the input's plan
+  // public API
   //
-  // CALLER CONTRACT: on a stable input (the pinned pick) each of
-  // these launches an EAGER Spark job at plan-construction time (the
-  // boundary sample's executeCollect, bounded at ≤8,192 key tuples),
-  // and the returned plan RE-EXECUTES the upstream for the two narrow
-  // auxiliary passes — 2× column-pruned + 1× full. Persist an
-  // EXPENSIVE upstream (heavy aggregate/join) first when that
-  // dominates. An unstable input ([[unstableInput]]) goes to the
-  // persist form, so no caller has to know which inputs the pinned
-  // passes would mis-rank.
-  // (Also in README "Global-rank strategy choice" — keep the two in sync.)
+  // CALLER CONTRACT: each of these launches an EAGER Spark job at
+  // plan-construction time (the boundary sample's executeCollect,
+  // bounded at ≤8,192 key tuples; an unstable input's checkpoint is
+  // a second), and the returned plan RE-EXECUTES the input for the
+  // two narrow auxiliary passes — 2× column-pruned + 1× full.
+  // Materialize an EXPENSIVE upstream (heavy aggregate/join) first
+  // when that dominates.
+  // (Also in README "Global-rank strategy" — keep the two in sync.)
   // ---------------------------------------------------------------
 
   /** Append `out` = exact global row_number under `order`.
     * Caller contract above. */
   def withRowNumber(df: DataFrame, order: Seq[Column],
       out: String = "rn", partitions: Int = 0): DataFrame =
-    if (unstableInput(df)) withRowNumberPersist(df, order, out, partitions)
-    else withRowNumberPinned(df, order, out, partitions)
+    rankCore(df, order, out, partitions, None)
+      .drop("__pid", "__off", "__n")
 
   /** Append `out` = exact global INCLUSIVE prefix sum of `value`
     * under `order` (`ROWS UNBOUNDED PRECEDING` semantics — exact when
@@ -355,14 +258,18 @@ object GlobalRank {
     * build on this. Caller contract above. */
   def withPrefixSum(df: DataFrame, value: Column, order: Seq[Column],
       out: String = "cum", partitions: Int = 0): DataFrame =
-    if (unstableInput(df)) withPrefixSumPersist(df, value, order, out, partitions)
-    else withPrefixSumPinned(df, value, order, out, partitions)
+    rankCore(df, order, out, partitions, Some(value))
+      .drop("__pid", "__off", "__n", "__v")
 
   /** Append `out` = exact NTILE(buckets) under `order` (SQL
-    * semantics, same rows-per-bucket split as the window function).
-    * Caller contract above. */
+    * semantics, same rows-per-bucket split as the window function):
+    * the global total rides the tiny offsets frame (`__n`), so this
+    * costs NO extra pass over the input. Caller contract above. */
   def withNtile(df: DataFrame, buckets: Int, order: Seq[Column],
-      out: String = "ntile", partitions: Int = 0): DataFrame =
-    if (unstableInput(df)) withNtilePersist(df, buckets, order, out, partitions)
-    else withNtilePinned(df, buckets, order, out, partitions)
+      out: String = "ntile", partitions: Int = 0): DataFrame = {
+    require(buckets > 0, s"ntile buckets must be positive: $buckets")
+    rankCore(df, order, "__rn", partitions, None)
+      .withColumn(out, ntileOf(col("__rn"), col("__n"), buckets))
+      .drop("__pid", "__off", "__n", "__rn")
+  }
 }

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *  1. pick a bucket width w; an interval [lo, hi) is replicated to
   *     every bucket floor(lo/w)..floor(hi/w) it touches;
   *  2. a point belongs to exactly ONE bucket floor(pt/w);
-  *  3. equi-join on the bucket id — hash join, shuffle or broadcast,
-  *     AQE-planned like any other join;
+  *  3. equi-join on the bucket id — a broadcast of the replicated
+  *     intervals in [[pointInInterval]], AQE-planned in
+  *     [[intervalOverlap]];
   *  4. re-check the exact [lo, hi) predicate to discard same-bucket
   *     near-misses.
   *
@@ -40,15 +41,14 @@ object RangeJoin {
     * `points.pt ∈ [intervals.lo, intervals.hi)`.
     *
     * Output columns: all of `points` then all of `intervals` (minus
-    * the internal bucket id). `broadcastIntervals` should stay true
-    * whenever the *replicated* interval table fits in memory (dims of
-    * up to a few hundred MB) — the join then needs no shuffle on the
-    * big point side at all; at 100 TB that is the difference between
-    * a map-side join and repartitioning the fact table.
+    * the internal bucket id). The *replicated* interval table is
+    * broadcast (dims of up to a few hundred MB), so the join needs no
+    * shuffle on the big point side at all; at 100 TB that is the
+    * difference between a map-side join and repartitioning the fact
+    * table.
     */
   def pointInInterval(points: DataFrame, intervals: DataFrame,
       pointCol: String, loCol: String, hiCol: String, bucketWidth: Double,
-      broadcastIntervals: Boolean = true,
       maxReplicasPerInterval: Long = 65536L): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     require(!points.columns.contains("__bucket") &&
@@ -76,9 +76,8 @@ object RangeJoin {
     // sequence() is inclusive of floor(hi/w): when hi lands exactly on
     // a bucket boundary that last replica can never match (hi is
     // exclusive) — harmless, the residual predicate drops it.
-    val build = if (broadcastIntervals) broadcast(replicated) else replicated
     points.withColumn("__bucket", bucketOf(col(pointCol), bucketWidth))
-      .join(build, Seq("__bucket"))
+      .join(broadcast(replicated), Seq("__bucket"))
       .filter(col(pointCol) >= col(loCol) && col(pointCol) < col(hiCol))
       .drop("__bucket")
   }

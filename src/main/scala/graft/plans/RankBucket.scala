@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Native range-bucket assignment for
-  * [[graft.operators.GlobalRank]]'s pinned strategy: the bucket id of
+  * [[graft.operators.GlobalRank]]: the bucket id of
   * a row is the number of sampled boundary cut tuples that sort
   * at-or-before the row's key tuple under the requested
   * per-column direction + null ordering.
@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * composable form — a SUM of p-1 lexicographic CASE WHEN chains —
   * costs O(p · k) comparisons per row through branches the optimizer
   * can't share, measured ~2.9 µs/row at p=32/k=2 on the 30x step
-  * (the bucket projection alone was 10x the whole persist-strategy
-  * query). This expression does ONE binary search over the cut
-  * array: O(k · log p) comparisons through a referenced searcher
-  * object, inside whole-stage codegen.
+  * (the bucket projection alone was 10x the whole query of a
+  * range-partitioned rank). This expression does ONE binary search
+  * over the cut array: O(k · log p) comparisons through a referenced
+  * searcher object, inside whole-stage codegen.
   *
   * Never null (an empty cut array means bucket 0 for every row).
   * The cut tuples hold CATALYST values (UTF8String, Decimal, ...) in

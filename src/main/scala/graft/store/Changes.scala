@@ -14,13 +14,11 @@ import org.apache.spark.sql.functions._
   *    lag, the validity lead, and the final interval assembly all
   *    reuse the same (key, ordered-by-date) window partitioning, so
   *    Catalyst plans a single Exchange feeding stacked Window ops.
-  *  - [[mergeUpsert]] defaults to the broadcast form: at 100 TB the
-  *    base snapshot must NOT be shuffled to apply a 0.1% changeset —
-  *    the base is touched only by a broadcast anti-join (map-side,
-  *    no Exchange on the big side), and the changeset, already
-  *    collapsed to latest-per-key, is unioned in. `broadcastChanges =
-  *    false` switches to the shuffle co-group form for changesets too
-  *    large to broadcast.
+  *  - [[mergeUpsert]] broadcasts the changeset: at 100 TB the base
+  *    snapshot must NOT be shuffled to apply a 0.1% changeset — the
+  *    base is touched only by a broadcast anti-join (map-side, no
+  *    Exchange on the big side), and the changeset, already collapsed
+  *    to latest-per-key, is unioned in.
   */
 object Changes {
 
@@ -52,12 +50,11 @@ object Changes {
     * `version` column (latest version per key wins), and the full
     * row payload for upserts.
     *
-    * Broadcast form (default): latest-per-key collapse runs on the
-    * (small) changeset alone; the base is filtered by a broadcast
-    * anti-join on touched keys and surviving upserts are unioned in —
-    * the base is never shuffled. */
+    * Latest-per-key collapse runs on the (small) changeset alone; the
+    * base is filtered by a broadcast anti-join on touched keys and
+    * surviving upserts are unioned in — the base is never shuffled. */
   def mergeUpsert(base: DataFrame, changes: DataFrame,
-      keyCols: Seq[String], broadcastChanges: Boolean = true): DataFrame = {
+      keyCols: Seq[String]): DataFrame = {
     val keys = keyCols.map(col)
     // latest change per key (version desc; op desc breaks exact ties
     // deterministically — 'U' > 'D' lexicographically)
@@ -67,9 +64,7 @@ object Changes {
       .withColumn("__rn", row_number().over(wLatest))
       .filter(col("__rn") === 1).drop("__rn")
     val upserts = latest.filter(col("op") === "U").drop("op", "version")
-    val touched = latest.select(keys: _*)
-    val touchedSide = if (broadcastChanges) broadcast(touched) else touched
-    base.join(touchedSide, keyCols, "left_anti")
+    base.join(broadcast(latest.select(keys: _*)), keyCols, "left_anti")
       .unionByName(upserts)
   }
 }

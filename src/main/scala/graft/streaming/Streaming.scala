@@ -31,17 +31,15 @@ object Streaming {
     * (every active requester/doc pair) exceeds executor heap — the
     * default in-memory HDFS-backed store OOMs exactly when traffic
     * peaks. RocksDB keeps state off-heap on local disk with block
-    * cache, and changelog checkpointing ships per-batch deltas
-    * instead of full SST snapshots, so checkpoint cost is O(changed
-    * keys), not O(total state). Apply at session build
+    * cache, and changelog checkpointing (always on) ships per-batch
+    * deltas instead of full SST snapshots, so checkpoint cost is
+    * O(changed keys), not O(total state). Apply at session build
     * (`configs.foreach { case (k, v) => builder.config(k, v) }`) or
     * `spark.conf.set` before starting the query — the provider is
     * picked up at query start. */
-  def rocksDbStateStoreConfs(changelogCheckpointing: Boolean = true)
-      : Map[String, String] = Map(
+  def rocksDbStateStoreConfs(): Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      changelogCheckpointing.toString)
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** File-source stream of access events (one day file at a time). */
   def readAccessStream(spark: SparkSession, root: String,
@@ -407,10 +405,11 @@ object Streaming {
     * verify), so d2's DuckDB oracle gates the streaming path too.
     *
     * The streaming-compatibility trick: the batch signature pipeline
-    * is posexplode + window + groupBy-MIN — none of which stream in
-    * append mode. Per-doc signatures are instead computed ROW-LOCALLY
-    * with array lambdas (shingles via `transform(sequence(...))`,
-    * each min-hash via `array_min(transform(sh, _ xor mask))`), which
+    * explodes grams and takes a per-doc groupBy-MIN over them, which
+    * does not stream in append mode. Per-doc signatures are instead
+    * computed ROW-LOCALLY with array lambdas (shingles via
+    * `transform(sequence(...))`, each min-hash via
+    * `array_min(transform(sh, _ xor mask))`), which
     * is also the right production shape: a new document's bands are a
     * pure projection, so the stream side never shuffles — the only
     * shuffle is the bucket join against the (pre-partitioned, reused)
@@ -419,8 +418,8 @@ object Streaming {
     * candidates collapse in the batch distinct.
     *
     * Docs under 3 tokens carry no shingles and are excluded on both
-    * sides (the batch window form drops them via its lead-null
-    * filter). The caller owns the materialized pairs ([[Materialize]]). */
+    * sides (the batch gram builder filters them out). The caller owns
+    * the materialized pairs ([[Materialize]]). */
   def availableNowNearDup(s: SparkSession, docsPath: String,
       k: Int = 16, rowsPerBand: Int = 4,
       num: Int = 1, den: Int = 2): DataFrame = {

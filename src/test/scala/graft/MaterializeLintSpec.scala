@@ -11,20 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * all `initialPartitionNum` partitions of a shuffle (AQE may not
   * coalesce a cached plan) — see Materialize's scaladoc.
   *
-  * Named exceptions, each a `persist` with no shuffle output for AQE to
-  * coalesce:
-  *  - GlobalRank's persist-strategy operators range-partition to an
-  *    explicit partition count, and PlanShapeSpec pins the one
-  *    `InMemoryRelation` both of their branches read;
-  *  - kp2b's per-micro-batch pin (`availableNowCurationExactOnce`): an
-  *    eager checkpoint's extra job per batch measured slower there. */
+  * The one named exception, a `persist` with no shuffle output for AQE
+  * to coalesce: kp2b's per-micro-batch pin
+  * (`availableNowCurationExactOnce`), where an eager checkpoint's extra
+  * job per batch measured slower. */
 class MaterializeLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
   private val primitive = Paths.get("graft/store/Materialize.scala")
   private val exceptions = Map(
-    Paths.get("graft/operators/GlobalRank.scala") ->
-      Set("withRowNumberPersist", "withPrefixSumPersist"),
     Paths.get("graft/streaming/Streaming.scala") ->
       Set("availableNowCurationExactOnce"))
 

@@ -58,6 +58,21 @@ class MaterializeSpec extends AnyFunSuite with SparkSpec {
       (4L, text(9)), (5L, text(20))).toDF("doc_id", "text")
   }
 
+  test("GlobalRank: an unstable input's checkpoint is freed with the caller's scope") {
+    import graft.operators.GlobalRank
+    val before = persistent
+    val noisy = spark.range(200).toDF("id").withColumn("noise", F.rand(7))
+    val order = Seq(F.col("id"))
+    val counts = Materialize.scope(spark, "caller") { _ =>
+      Seq(GlobalRank.withRowNumber(noisy, order).count(),
+        GlobalRank.withNtile(noisy, 4, order).count())
+    }
+    assert(counts == Seq(200L, 200L))
+    assert((persistent -- before).isEmpty,
+      spark.sparkContext.getPersistentRDDs.values.mkString("; "))
+    assert(cacheManagerEmpty)
+  }
+
   test("Materialize.scope frees what it made; a returned frame's checkpoint escapes") {
     val before = persistent
     Materialize.scope(spark, "outer") { _ =>

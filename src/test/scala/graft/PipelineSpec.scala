@@ -370,8 +370,12 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
 
   test("fingerprint equals min shingle hash and is stable") {
     val d = docs((1L, "a b c d"), (2L, "a b c d"))
-    val fps = d.select(Text.fingerprint(col("text"))).collect().map(_.getLong(0))
+    val fps = Dedup.fingerprints(d).orderBy("id")
+      .collect().map(_.getLong(1))
     assert(fps(0) == fps(1))
+    val minShingle = Dedup.shingleHashes(d)
+      .filter(col("id") === 1L).agg(min("sh")).head().getLong(0)
+    assert(fps(0) == minShingle)
   }
 
   test("symbolPermille counts non-alnum non-space chars") {

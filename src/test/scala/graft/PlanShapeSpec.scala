@@ -214,10 +214,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
 
   test("d2/d4 shingle feeder: one scan, digest-only shuffles, no joins") {
     // the d2/d4/d11 queries checkpoint their bounded pair output, so
-    // the guard targets the FEEDER pipeline all of them ride: tokens
-    // explode and shingle, and only (id, 60-bit digest) rows cross an
-    // exchange — the window exchange doubles as the downstream per-doc
-    // partitioning; distinct adds the second
+    // the guard targets the FEEDER pipeline all of them ride: grams
+    // explode and shingle row-locally, and only (id, 60-bit digest)
+    // rows cross an exchange — one by doc, which the distinct and the
+    // downstream per-doc aggregates reuse
     val p = graft.dedup.Dedup.shingleHashes(
       spark.read.parquet(s"$dir/documents.parquet"))
       .queryExecution.executedPlan.toString
@@ -378,7 +378,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     }
     // the 188-second regression: a gram array rebuilt in a lambda and
     // re-projected above the Generate (O(n²) string work per doc) —
-    // the winnowing plan must stay lambda-free, grams via lead windows
+    // the winnowing plan must stay lambda-free, grams via element_at
+    // off the token array
     val p25 = plan("t25_winnowing")
     assert(!p25.contains("lambdafunction"),
       s"t25 gram build fell back to an interpreted lambda:\n$p25")
@@ -596,9 +597,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     "g2_triangles", "g2b_triangles_adj") // checkpointed edge build
 
   /** The blessed NLJ-bearing queries — the round-8 sweep's 20 minus
-    * `o8_ntile` (its persist-strategy `crossJoin(broadcast(total))`
-    * disappeared when the pinned strategy became the default: the
-    * total now rides the offsets frame through an equi-join). Each
+    * `o8_ntile` (GlobalRank's ntile total rides the offsets frame
+    * through an equi-join, not a `crossJoin(broadcast(total))`). Each
     * remaining entry is a 1-row scalar broadcast (grand totals,
     * thresholds, trained centroids/codebooks, query vectors,
     * execution-time row-cap guards) where BroadcastNestedLoopJoin IS
@@ -813,20 +813,18 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // expression), so the offsets branch and the join branch agree
     // structurally — nothing needs a shared physical partition
     // assignment. The plan must carry NO InMemoryRelation (no
-    // corpus-sized cache; the round-11 persist is retired from this
-    // path) and NO rangepartitioning exchange (the corpus crosses the
+    // corpus-sized cache) and NO rangepartitioning exchange (the corpus crosses the
     // wire once, hash-partitioned by the pure-function __pid for the
     // window); every row_number/sum window stays __pid-partitioned.
     //
-    // CALLER CONTRACT NOTE (README "Global-rank strategy choice" +
-    // GlobalRank dispatch scaladoc): the no-cache shape asserted here
-    // is exactly why the pinned form RE-EXECUTES the upstream for its
-    // auxiliary passes and runs an eager boundary-sample job at plan
-    // construction — so an upstream with an unstable row multiset
-    // (a nondeterministic expression, LIMIT without ORDER BY) is
-    // routed to the persist strategy automatically (the automatic-
-    // choice test below), which is immune because its branches read
-    // one InMemoryRelation. These board inputs are deterministic.
+    // CALLER CONTRACT NOTE (README "Global-rank strategy" + GlobalRank
+    // scaladoc): the no-cache shape asserted here is exactly why the
+    // rank RE-EXECUTES the upstream for its auxiliary passes and runs
+    // an eager boundary-sample job at plan construction — so an
+    // upstream with an unstable row multiset (a nondeterministic
+    // expression, LIMIT without ORDER BY) is checkpointed once first
+    // (the unstable-input test below). These board inputs are
+    // deterministic.
     for (q <- Seq("o10_rank_sample", "o11_weighted_sample", "o16_range_bounds")) {
       val p = plan(q)
       assert(!p.contains("InMemoryTableScan"),
@@ -845,56 +843,41 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("GlobalRank persist strategy keeps ONE materialized partition assignment") {
-    // The persist strategy (for expensive-to-recompute upstreams)
-    // keeps the round-11 invariant: the offsets branch and the join
-    // branch must read the SAME physical partition assignment.
-    // Exchange reuse does NOT fire across the two branches (self-join
-    // exprIds) — the persist() is the shared materialization point.
-    val s = spark
-    import org.apache.spark.sql.functions.col
-    val df = graft.Tables.customer(s, dir)
-      .select(col("c_custkey"), col("c_acctbal"))
-    val ranked = graft.operators.GlobalRank.withRowNumberPersist(
-      df, Seq(col("c_acctbal").desc, col("c_custkey")), "rn")
-    try {
-      val p = ranked.queryExecution.executedPlan.toString
-      assert(p.contains("InMemoryTableScan"),
-        s"persist strategy lost its shared cache — the offsets and join " +
-          s"branches re-execute repartitionByRange independently and " +
-          s"may sample different range boundaries:\n$p")
-    } finally s.sharedState.cacheManager.clearCache()
-  }
-
-  test("GlobalRank picks persist for an unstable input, pinned otherwise") {
-    // The choice is read from the input's analyzed plan: rows that can
-    // differ between the pinned form's re-executed passes (here rand(),
-    // or a LIMIT with no ORDER BY beneath it) would be mis-ranked, so
-    // they get the persist form's one materialized InMemoryRelation.
+  test("GlobalRank checkpoints an unstable input, reads a stable one directly") {
+    // The rule is read from the input's analyzed plan: rows that can
+    // differ between the re-executed passes (here rand(), or a LIMIT
+    // with no ORDER BY beneath it) would be mis-ranked, so they are
+    // checkpointed once and every pass scans that one checkpoint. No
+    // input gets a cache.
     val s = spark
     import org.apache.spark.sql.functions.{col, rand}
     import graft.operators.GlobalRank
+    import graft.store.Materialize
     val df = graft.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_acctbal"))
     val order = Seq(col("c_acctbal").desc, col("c_custkey"))
-    def rankPlan(in: org.apache.spark.sql.DataFrame): String =
-      GlobalRank.withRowNumber(in, order).queryExecution.executedPlan.toString
-    try {
-      for ((what, in) <- Seq(
-          "nondeterministic" -> df.withColumn("noise", rand(7)),
-          "unsorted limit" -> df.limit(4))) {
-        val p = rankPlan(in)
-        assert(p.contains("InMemoryRelation"),
-          s"$what upstream was not routed to the persist form:\n$p")
+    /** (executed plan, number of checkpoints the ranked frame reads) */
+    def rankPlan(in: org.apache.spark.sql.DataFrame): (String, Int) =
+      Materialize.scope(s, "PlanShapeSpec.GlobalRank") { _ =>
+        val ranked = GlobalRank.withRowNumber(in, order)
+        (ranked.queryExecution.executedPlan.toString,
+          org.apache.spark.sql.GraftBridge.rddsRead(ranked).size)
       }
-      for ((what, in) <- Seq(
-          "deterministic" -> df,
-          "sorted limit" -> df.orderBy(col("c_custkey")).limit(4))) {
-        val p = rankPlan(in)
-        assert(!p.contains("InMemoryRelation"),
-          s"$what upstream lost the pinned form:\n$p")
-      }
-    } finally s.sharedState.cacheManager.clearCache()
+    for ((what, in) <- Seq(
+        "nondeterministic" -> df.withColumn("noise", rand(7)),
+        "unsorted limit" -> df.limit(4))) {
+      val (p, checkpoints) = rankPlan(in)
+      assert(p.contains("ExistingRDD") && checkpoints == 1,
+        s"$what upstream was not ranked over one checkpoint ($checkpoints):\n$p")
+      assert(!p.contains("InMemoryRelation"), s"$what upstream grew a cache:\n$p")
+    }
+    for ((what, in) <- Seq(
+        "deterministic" -> df,
+        "sorted limit" -> df.orderBy(col("c_custkey")).limit(4))) {
+      val (p, checkpoints) = rankPlan(in)
+      assert(!p.contains("ExistingRDD") && !p.contains("InMemoryRelation") &&
+        checkpoints == 0, s"$what upstream was materialized:\n$p")
+    }
   }
 
   test("c5 strict mode filters the RAW referrer, not the computed label") {

@@ -400,52 +400,49 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     assert(out.toSeq == Seq((1L, 1), (2L, 2)))
   }
 
-  test("GlobalRank pinned and persist strategies agree (nulls, mixed directions)") {
+  test("GlobalRank ranks stable and unstable inputs alike (nulls, mixed directions)") {
     val s = spark; import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import graft.operators.GlobalRank
+    import graft.store.Materialize
     // nulls in the sort value + every direction/null-order combination;
-    // ids unique so the rank is total-order exact in both strategies
+    // ids unique so the rank is total-order exact for both inputs
     val df = (1 to 211).map { i =>
       val v = if (i % 17 == 0) None else Some((i * 7 % 13).toLong)
       (i.toLong, v)
     }.toDF("id", "v")
-    val orders = Seq(
-      Seq(col("v").asc_nulls_first, col("id")),
-      Seq(col("v").asc_nulls_last, col("id")),
-      Seq(col("v").desc_nulls_first, col("id")),
-      Seq(col("v").desc_nulls_last, col("id")),
-      Seq(col("v").desc, col("id").desc))
-    for (order <- orders) {
-      val pinned = GlobalRank.withRowNumberPinned(df, order, "rn", partitions = 8)
-        .select("id", "rn")
-      val persist = GlobalRank.withRowNumberPersist(df, order, "rn", partitions = 8)
-        .select("id", "rn")
-      val window = df.withColumn("rn", row_number().over(onePartition.orderBy(order: _*)))
-        .select("id", "rn")
-      assert(pinned.except(window).isEmpty && window.except(pinned).isEmpty,
-        s"pinned rank diverged for order $order")
-      assert(persist.except(window).isEmpty && window.except(persist).isEmpty,
-        s"persist rank diverged for order $order")
+    // the unstable input's checkpoints escape to this scope
+    Materialize.scope(s, "ScaleSpec.GlobalRank") { _ =>
+      val inputs = Seq("stable" -> df, "unstable" -> df.withColumn("noise", rand(7)))
+      val orders = Seq(
+        Seq(col("v").asc_nulls_first, col("id")),
+        Seq(col("v").asc_nulls_last, col("id")),
+        Seq(col("v").desc_nulls_first, col("id")),
+        Seq(col("v").desc_nulls_last, col("id")),
+        Seq(col("v").desc, col("id").desc))
+      for (order <- orders; (nm, in) <- inputs) {
+        val got = GlobalRank.withRowNumber(in, order, "rn", partitions = 8)
+          .select("id", "rn")
+        val window = df.withColumn("rn", row_number().over(onePartition.orderBy(order: _*)))
+          .select("id", "rn")
+        assert(got.except(window).isEmpty && window.except(got).isEmpty,
+          s"$nm rank diverged for order $order")
+      }
+      // prefix sum + ntile, both inputs, one mixed order
+      val order = Seq(col("v").desc_nulls_last, col("id"))
+      val wSum = df.withColumn("cum", sum("id").over(onePartition.orderBy(order: _*)
+          .rowsBetween(Window.unboundedPreceding, 0))).select("id", "cum")
+      val wNt = df.withColumn("q", ntile(7).over(onePartition.orderBy(order: _*)))
+        .select("id", "q")
+      for ((nm, in) <- inputs) {
+        val cum = GlobalRank.withPrefixSum(in, col("id"), order, "cum", 8)
+          .select("id", "cum")
+        assert(cum.except(wSum).isEmpty && wSum.except(cum).isEmpty,
+          s"$nm prefix sum diverged")
+        val q = GlobalRank.withNtile(in, 7, order, "q", 8).select("id", "q")
+        assert(q.except(wNt).isEmpty && wNt.except(q).isEmpty, s"$nm ntile diverged")
+      }
     }
-    // prefix sum + ntile, both strategies, one mixed order
-    val order = Seq(col("v").desc_nulls_last, col("id"))
-    val wSum = df.withColumn("cum", sum("id").over(onePartition.orderBy(order: _*)
-        .rowsBetween(Window.unboundedPreceding, 0))).select("id", "cum")
-    for ((nm, got) <- Seq(
-        "pinned" -> GlobalRank.withPrefixSumPinned(df, col("id"), order, "cum", 8),
-        "persist" -> GlobalRank.withPrefixSumPersist(df, col("id"), order, "cum", 8)))
-      assert(got.select("id", "cum").except(wSum).isEmpty &&
-        wSum.except(got.select("id", "cum")).isEmpty,
-        s"$nm prefix sum diverged")
-    val wNt = df.withColumn("q", ntile(7).over(onePartition.orderBy(order: _*)))
-      .select("id", "q")
-    for ((nm, got) <- Seq(
-        "pinned" -> GlobalRank.withNtilePinned(df, 7, order, "q", 8),
-        "persist" -> GlobalRank.withNtilePersist(df, 7, order, "q", 8)))
-      assert(got.select("id", "q").except(wNt).isEmpty &&
-        wNt.except(got.select("id", "q")).isEmpty,
-        s"$nm ntile diverged")
   }
 
   test("GlobalRank prefix sum matches the single-partition window sum") {
