@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.filters.{Repeat, Robots}
@@ -14,12 +14,23 @@ import graft.store.{FactStore, Materialize}
   * processor fan-out → per-datatype fact tables → checkpoint.
   *
   * Scale posture:
-  *  - the raw events are read ONCE; the deduped events, the filtered
-  *    events and each processor's fact are materialized once with
-  *    [[graft.store.Materialize]], and every later step reads those
-  *    (the reference's single-pass fan-out, `Access.pm:259-351`); they
-  *    are released when the run returns OR throws, so a failed run
-  *    pins no executor memory;
+  *  - the raw events are read ONCE, by the job that materializes the
+  *    filtered events; the filtered events and each processor's fact
+  *    are materialized once with [[graft.store.Materialize]], and every
+  *    later step reads those (the reference's single-pass fan-out,
+  *    `Access.pm:259-351`); they are released when the run returns OR
+  *    throws, so a failed run pins no executor memory;
+  *  - the driver's decisions ride on those jobs as `Observation`s, not
+  *    jobs of their own: the checkpoint watermark (max file day, taken
+  *    before any filter) on the filter job, each datatype's row count
+  *    and days on its processor's fact job;
+  *  - a night whose day files fit one task (the size rule of
+  *    [[graft.plans.OnePartition]]) runs as one partition end to end:
+  *    the scan is read as one partition, and the line dedup, the
+  *    repeat filter, the processors' aggregates, the fact writes and
+  *    the lifetime-view merge each plan no exchange, one job of one
+  *    task per materialization, write and merge. A larger window (a
+  *    backfill) keeps the parallel plans;
   *  - each datatype writes its own date-partitioned parquet table via
   *    dynamic partition overwrite, so reruns of a window are
   *    idempotent (`--from-date` semantics, St3);
@@ -59,7 +70,7 @@ object Etl {
       reportCacheDir: Option[String] = None)
 
   /** Label the jobs of `body` in the Spark UI / listeners — phase
-    * attribution for ops (which of the ~25 pipeline jobs is slow is
+    * attribution for ops (which of the pipeline jobs is slow is
     * unanswerable from anonymous SQL-execution call sites). */
   private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
     spark.sparkContext.setJobDescription(s"etl: $name")
@@ -80,19 +91,23 @@ object Etl {
         .flatMap(graft.model.DateUtils.parseDate)
         .map(_.plusDays(1)))
 
-    val raw = pin("ingest") {
-      AccessLog.dedupLines(AccessLog.read(spark, cfg.logGlob, from))
-        // St1 day watermark: a file dated today may still be growing —
-        // skipping it (not checkpointing past it) is what makes the
-        // checkpoint safe to advance.
-        .filter(col("file_date") < lit(java.sql.Date.valueOf(cfg.today)))
-        // Partition-safety clamp: facts are partitioned by EVENT date but
-        // pruning is by FILE date; a late event spilling into a day
-        // before `from` would otherwise make dynamic partition overwrite
-        // replace that complete partition with just the spillover rows.
-        .filter(from.map(d => to_date(col("ts")) >= lit(java.sql.Date.valueOf(d)))
-          .getOrElse(lit(true)))
-    }
+    // Checkpoint the newest fully-ingested FILE day, observed before
+    // the robots and repeat filters: a closed day whose hits are all
+    // robots must still advance the watermark or it would be
+    // re-ingested forever.
+    val watermark = Observation()
+    val raw = AccessLog.dedupLines(AccessLog.read(spark, cfg.logGlob, from))
+      // St1 day watermark: a file dated today may still be growing —
+      // skipping it (not checkpointing past it) is what makes the
+      // checkpoint safe to advance.
+      .filter(col("file_date") < lit(java.sql.Date.valueOf(cfg.today)))
+      // Partition-safety clamp: facts are partitioned by EVENT date but
+      // pruning is by FILE date; a late event spilling into a day
+      // before `from` would otherwise make dynamic partition overwrite
+      // replace that complete partition with just the spillover rows.
+      .filter(from.map(d => to_date(col("ts")) >= lit(java.sql.Date.valueOf(d)))
+        .getOrElse(lit(true)))
+      .observe(watermark, max(col("file_date")).as("day"))
     val filtered = pin("filter") {
       Repeat.sequential(
         Robots.filterRobots(raw, uaPatterns = cfg.uaPatterns,
@@ -109,37 +124,30 @@ object Etl {
 
     val written = cfg.processors.flatMap { p =>
       val dts = p.provides.mkString("/")
-      val fact = pin(s"fact $dts")(p.process(filtered))
-      // A multi-datatype processor (downloads/views) tags rows by
-      // datatype in `value`; each datatype gets its OWN fact table —
-      // the reference stores them as separate datasets too, and mixing
-      // them would double-count undifferentiated queries.
-      val outputs =
-        if (p.provides.size == 1) Seq(p.provides.head -> fact)
-        else p.provides.map(dt => dt -> fact.filter(col("value") === dt))
-      // ONE driver job per PROCESSOR (not per datatype): the day-level
-      // (datatype, day, count) rows for every provided datatype come
-      // back in a single pass over the materialized fact — rows = #days x
-      // #datatypes, still driver-tiny, but a multi-datatype processor
-      // no longer pays one sequential job per datatype.
-      // date_format, not cast: the keep set is compared against
-      // `date=yyyy-MM-dd` partition dir names, and a processor that
-      // emits a timestamp-typed date would cast to
+      // Each provided datatype's row count and `yyyy-MM-dd` days are
+      // observed on the job that materializes the fact: no driver job
+      // of its own. date_format, not cast: the days are compared
+      // against `date=yyyy-MM-dd` partition dir names, and a processor
+      // that emits a timestamp-typed date would cast to
       // 'yyyy-MM-dd HH:mm:ss' — the keep set would never match and
       // the diff-delete below would wipe the partitions just written
       val dtCol =
         if (p.provides.size == 1) lit(p.provides.head) else col("value")
-      val perDayByDt = phase(spark, s"day-counts $dts") {
-        fact
-          .groupBy(dtCol.as("dt"),
-            date_format(col("date"), "yyyy-MM-dd").as("d"))
-          .agg(count(lit(1)).as("c")).collect()
-          .groupBy(_.getString(0))
+      val day = date_format(col("date"), "yyyy-MM-dd")
+      val perDt = Observation()
+      val stats = p.provides.indices.flatMap { i =>
+        val mine = dtCol === p.provides(i)
+        Seq(count(when(mine, 1)).as(s"n$i"), collect_set(when(mine, day)).as(s"days$i"))
       }
-      val counts = outputs.map { case (dt, df) =>
-        val perDay = perDayByDt.getOrElse(dt,
-          Array.empty[org.apache.spark.sql.Row])
-        val n = perDay.map(_.getLong(2)).sum
+      val fact = pin(s"fact $dts")(p.process(filtered).observe(perDt, stats.head, stats.tail: _*))
+      val seen = perDt.get
+      // A multi-datatype processor (downloads/views) tags rows by
+      // datatype in `value`; each datatype gets its OWN fact table —
+      // the reference stores them as separate datasets too, and mixing
+      // them would double-count undifferentiated queries.
+      val counts = p.provides.zipWithIndex.map { case (dt, i) =>
+        val df = if (p.provides.size == 1) fact else fact.filter(col("value") === dt)
+        val n = seen(s"n$i").asInstanceOf[Long]
         // n == 0 writes nothing: a parquet dir with no data files
         // breaks schema inference for later readers.
         if (n > 0) phase(spark, s"write $dt") {
@@ -159,7 +167,7 @@ object Etl {
         // checkpoint must never be able to wipe a datatype's history.
         from.foreach { f =>
           FactStore.clearPartitionsFrom(s"${cfg.factRoot}/$dt", Some(f),
-            keep = perDay.map(_.getString(1)).toSet)
+            keep = seen(s"days$i").asInstanceOf[Iterable[String]].toSet)
         }
         dt -> n
       }
@@ -179,14 +187,9 @@ object Etl {
       }
     }
 
-    // Checkpoint the newest fully-ingested FILE day, taken from the
-    // PRE-filter scan: a closed day whose hits are all robots must
-    // still advance the watermark or it would be re-ingested forever.
-    val maxDay = phase(spark, "checkpoint watermark") {
-      raw.agg(max(col("file_date"))).head().getDate(0)
-    }
-    if (maxDay != null)
-      FactStore.saveCheckpoint(cfg.checkpointDir, "access", maxDay.toString)
+    // the filter's job observed the watermark; null when no row was read
+    Option(watermark.get("day")).foreach(d =>
+      FactStore.saveCheckpoint(cfg.checkpointDir, "access", d.toString))
     // new facts invalidate every pre-rendered dashboard payload
     if (written.valuesIterator.sum > 0)
       cfg.reportCacheDir.foreach(ReportCache.clear)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.OnePartition
+
 /** Double-click / repeat filtering (SURVEY.md §2.2 F3, §2.9 St5;
   * ref `Filter/Repeat.pm:39-102`).
   *
@@ -20,7 +22,9 @@ import org.apache.spark.sql.functions._
   *    groups are (ip,item,doc) click chains — small by nature (a
   *    human's clicks on one item), so per-group sort is O(chain);
   *    the shuffle is one hash partition by key, the same shuffle any
-  *    sessionization needs.
+  *    sessionization needs. An input already in one partition (a
+  *    nightly day file, [[graft.plans.OnePartition]]) has every key
+  *    co-located and skips that shuffle.
   *  - [[lagApprox]] — pure window-function variant (no object
   *    serialization), usable when the approximation is acceptable.
   */
@@ -37,15 +41,17 @@ object Repeat {
     * boundaries. No group is ever materialized, so a pathological key
     * (a scraper hammering one item for months) costs O(1) memory
     * instead of O(chain); the `groupByKey.flatMapGroups` formulation
-    * would buffer and sort that chain on the executor heap. */
+    * would buffer and sort that chain on the executor heap. The
+    * repartition only co-locates each key's rows, so an input whose
+    * plan reports one partition is sorted where it is. */
   def sequential(df: DataFrame, keyCols: Seq[String], secCol: String,
       timeout: Long, tieBreakCol: String): DataFrame = {
     val schema = df.schema
     val secIdx = schema.fieldIndex(secCol)
     val keyIdxs = keyCols.map(schema.fieldIndex).toList
     implicit val enc = RowEncoder.encoderFor(schema)
-    df.repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(
+    val keyed = if (OnePartition.reported(df)) df else df.repartition(keyCols.map(col): _*)
+    keyed.sortWithinPartitions(
         (keyCols.map(col) :+ col(secCol) :+ col(tieBreakCol)): _*)
       .mapPartitions { it =>
         var curKey: List[Any] = null

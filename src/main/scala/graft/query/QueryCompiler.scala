@@ -1,11 +1,9 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import graft.model.Context
+import graft.plans.OnePartition
 
 /** Compiles a [[graft.model.Context]] into a DataFrame plan with the
   * reference's canonical query shape (SURVEY.md §2.4 A2, §3 step 8;
@@ -31,10 +29,9 @@ import graft.model.Context
   *    without a global sort;
   *  - a small input runs as one partition. When the files the query
   *    scans after date pruning hold at most
-  *    `spark.sql.files.openCostInBytes` bytes (4 MiB by default), the
-  *    source is read with `coalesce(1)`: Spark prices opening one more
-  *    file at that many bytes of scan, so a second task cannot pay for
-  *    itself. The partial and final aggregate, the ordering, the limit
+  *    `spark.sql.files.openCostInBytes` bytes (4 MiB by default; the
+  *    size rule of [[graft.plans.OnePartition]]), the source is read
+  *    with `coalesce(1)`. The partial and final aggregate, the ordering, the limit
   *    and the view steps above them (`Series.regroup`/`cumulative`,
   *    `KeyFigures`) then see `SinglePartition` and plan no exchange,
   *    and the first set dim joins in the same task by hash (see
@@ -95,7 +92,7 @@ object QueryCompiler {
     // F7 datafilter (ref Handler.pm:296-301): constant column pruned from SELECT
     ctx.datafilter.foreach(v => df = df.filter(col("value") === v))
     // a small stored input runs as one partition (Scale notes above)
-    val single = scanBytes(df).exists(_ <= df.sparkSession.sessionState.conf.filesOpenCostInBytes)
+    val single = OnePartition.scanBytes(df).exists(OnePartition.fits(df.sparkSession, _))
     if (single) df = df.coalesce(1)
     // F6 archive-only semi-join (ref Handler.pm:356-360)
     cat.liveFilter.foreach(live => df = df.join(broadcast(live), Seq("id"), "left_semi"))
@@ -179,27 +176,5 @@ object QueryCompiler {
     ctx.offset.foreach(o => out = out.offset(o))
     ctx.limit.foreach(n => out = out.limit(n))
     out
-  }
-
-  /** The bytes of the files a scan of `df` reads after partition
-    * pruning, when `df` is filters over a file relation; None
-    * otherwise. The relation's file index answers on the driver
-    * (`FactStore.read` and `LifetimeMv.read` frames carry their file
-    * lengths), so no Spark job runs. Only filters over the relation's
-    * own partition columns prune; the rest can only shrink the scan,
-    * so the count is an upper bound. */
-  private def scanBytes(df: DataFrame): Option[Long] = {
-    def walk(p: LogicalPlan, conds: Seq[Expression]): Option[Long] = p match {
-      case Filter(c, child) => walk(child, c +: conds)
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation =>
-          val parts = AttributeSet(l.output.filter(a => fs.partitionSchema.fieldNames.contains(a.name)))
-          val pruning = conds.filter(c => c.references.nonEmpty && c.references.subsetOf(parts))
-          Some(fs.location.listFiles(pruning, Nil).iterator.flatMap(_.files).map(_.getLen).sum)
-        case _ => None
-      }
-      case _ => None
-    }
-    walk(df.queryExecution.analyzed, Nil)
   }
 }

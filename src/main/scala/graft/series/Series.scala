@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.OnePartition
+
 /** Time-series post-processing — the reference's view-layer dataflow
   * (SURVEY.md §2.7), expressed as DataFrame transforms so it runs
   * distributed instead of in the render loop.
@@ -20,7 +22,8 @@ object Series {
     * is already aggregated (day-grain, so it is calendar-sized too).
     * Build the calendar with `sequence()` + `explode`; the left join
     * onto it is left to Spark's join selection — both sides are
-    * bounded by the 20y day count, so any strategy is cheap.
+    * bounded by the 20y day count, so any strategy is cheap — except
+    * that a one-partition series is hash-joined in place (below).
     */
   def densify(series: DataFrame, dateCol: String = "d",
       countCol: String = "cnt",
@@ -50,7 +53,12 @@ object Series {
         col("lo") <= col("hi"))
       .select(
         explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as(dateCol))
-    calendar.join(series, Seq(dateCol), "left")
+    // A series in one partition (a small compiled query) joins the
+    // one-slice calendar by hash in the same task: no broadcast job.
+    // Only an exact SinglePartition qualifies; a hash join over any
+    // other input would shuffle both sides.
+    val right = if (OnePartition.reported(series)) series.hint("shuffle_hash") else series
+    calendar.join(right, Seq(dateCol), "left")
       .select(col(dateCol), coalesce(col(countCol), lit(0L)).as(countCol))
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.model.FactRow
+import graft.plans.OnePartition
 
 /** Fact-table storage (SURVEY.md §2.1 S6/S7, §2.9 St2/St3):
   * date-partitioned parquet per datatype, idempotent backfill, and a
@@ -22,6 +23,8 @@ import graft.model.FactRow
   *    `Handler.pm:756-771` DELETE + re-scan) maps to DYNAMIC partition
   *    overwrite: only the recomputed day partitions are replaced,
   *    atomically per partition — the idempotent-backfill pattern;
+  *  - a write clusters rows by day so each day dir gets one file per
+  *    writing task; a fact already in one partition writes as it is;
   *  - the checkpoint is driver-side metadata (a few bytes), never a
   *    Spark job;
   *  - opening a table ([[read]]) lists the store's own day dirs on the
@@ -39,9 +42,12 @@ object FactStore {
     * daily pre-aggregation (rows per day = distinct (id, value)), so
     * a one-task-per-day write does not skew at scale; a deployment
     * with genuinely huge single days would salt this with a second
-    * column, not remove it. */
+    * column, not remove it. A fact whose plan reports one partition
+    * (a nightly increment, [[graft.plans.OnePartition]]) already has
+    * one task owning every day, one file per day dir, and skips the
+    * shuffle. */
   private def clusterByDay(fact: DataFrame): DataFrame =
-    fact.repartition(col("date"))
+    if (OnePartition.reported(fact)) fact else fact.repartition(col("date"))
 
   /** Append daily fact rows (date, id, value, count) partitioned by date. */
   def append(fact: DataFrame, path: String): Unit =

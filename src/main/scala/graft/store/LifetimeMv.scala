@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.model.FactRow
+import graft.plans.OnePartition
 
 /** Incremental maintenance of the lifetime-totals materialized view
   * (SURVEY §2.4 A5). The reference RECOMPUTES per-eprint cumulative
@@ -22,6 +23,10 @@ import graft.model.FactRow
   * date-partitioned table, so partition pruning skips all already
   * merged days at listing time; the merge itself is a groupBy over
   * (current MV ∪ delta), both small relative to the fact history.
+  * When the delta scan and the current version together fit the size
+  * rule of [[graft.plans.OnePartition]], sized through their file
+  * indexes on the driver, both are read as one partition and the
+  * merge runs as one task with no exchange.
   *
   * Crash safety via versioned commits: each refresh writes a NEW
   * `v<N>` directory, then atomically advances a pointer file holding
@@ -104,11 +109,15 @@ object LifetimeMv {
       case None => fact
     }
 
-    val deltaAgg = delta.groupBy("id", "value").agg(sum("count").as("count"))
-    val merged = cur.map { case (v, _) =>
-      version(spark, mvDir, v).unionByName(deltaAgg)
-        .groupBy("id", "value").agg(sum("count").as("count"))
-    }.getOrElse(deltaAgg)
+    val prev = cur.map { case (v, _) => version(spark, mvDir, v) }
+    val sizes = (delta +: prev.toSeq).map(OnePartition.scanBytes)
+    val single = sizes.forall(_.isDefined) && OnePartition.fits(spark, sizes.flatten.sum)
+    def input(df: DataFrame) = if (single) df.coalesce(1) else df
+
+    val deltaAgg = input(delta).groupBy("id", "value").agg(sum("count").as("count"))
+    val merged = prev.map(p => input(p).unionByName(deltaAgg)
+      .groupBy("id", "value").agg(sum("count").as("count"))
+    ).getOrElse(deltaAgg)
 
     val nextV = committed.map(_._1 + 1).getOrElse(1L)
     merged.write.mode("overwrite").parquet(s"$mvDir/v$nextV")

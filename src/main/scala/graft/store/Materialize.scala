@@ -8,6 +8,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import graft.plans.OnePartition
+
 /** The one way the library materializes a frame that several later
   * steps read — the reference's compute-once, fan-out-many shape
   * (`Access.pm:259-351`); Catalyst has no common-subexpression
@@ -21,6 +23,10 @@ import org.apache.spark.storage.StorageLevel
   *    persisted shuffle runs `initialPartitionNum` (8 x cores) tasks. A
   *    checkpoint is taken from the finished AQE plan and keeps the
   *    coalesced count. Not replayable: a lost executor loses its blocks.
+  *    A frame whose plan is one partition ([[graft.plans.OnePartition]])
+  *    reads back as one partition: the checkpoint of an AQE plan
+  *    reports an unknown partitioning, so the scope restates it with a
+  *    narrow `coalesce(1)`, and an aggregate over it plans no exchange.
   *  - [[Files]]: parquet under a unique `<path>/<phase>-<seq>`, read
   *    back with the frame's own schema — replayable like any scan, the
   *    production setting. A later call never clobbers files a lazy frame
@@ -61,8 +67,15 @@ object Materialize {
           val prev = Seq("callSite.short", "callSite.long").map(k => k -> sc.getLocalProperty(k))
           synchronized(sites += site)
           sc.setCallSite(site)
-          try frame.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-          finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          val ckpt =
+            try frame.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+            finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          // a checkpoint carries the partitioning of the plan it ran,
+          // and AQE's wrapper reports none: restate a one-partition
+          // frame's, or every aggregate over it shuffles again (the
+          // checkpoint ran the frame's own query execution, so its
+          // plan is already there to read: nothing is planned twice)
+          if (OnePartition.reported(frame)) ckpt.coalesce(1) else ckpt
         case Files(path) =>
           val p = s"$path/$phase-$n"
           frame.write.mode("overwrite").parquet(p)

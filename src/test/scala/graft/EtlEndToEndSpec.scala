@@ -181,11 +181,12 @@ class EtlEndToEndSpec extends AnyFunSuite with SparkSpec {
     assert(cacheManagerEmpty)
   }
 
-  test("Etl.run: every job labeled, no stage after the first shuffle at initialPartitionNum tasks") {
-    val initial = spark.conf
-      .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+  /** Run `cfg` with a listener: (rows written, job descriptions,
+    * per stage (tasks, wrote shuffle output, partition counts of
+    * stored RDDs)). */
+  private def traced(cfg: Etl.Config)
+      : (Map[String, Long], Seq[String], Seq[(Int, Boolean, Seq[Int])]) = {
     val jobs = mutable.ArrayBuffer.empty[String]
-    // (tasks, wrote shuffle output, partition counts of stored RDDs)
     val stages = mutable.ArrayBuffer.empty[(Int, Boolean, Seq[Int])]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
@@ -200,8 +201,44 @@ class EtlEndToEndSpec extends AnyFunSuite with SparkSpec {
             i.rddInfos.filter(_.storageLevel.isValid).map(_.numPartitions)))
         }
     }
-    val cfg = twoDays()
     val written = SpecBus.listening(spark.sparkContext, listener)(Etl.run(spark, cfg))
+    (written, jobs.toSeq, stages.toSeq)
+  }
+
+  /** Every fact row and lifetime-view row of a run's store, by table. */
+  private def contents(cfg: Etl.Config): Map[String, Set[String]] = {
+    val dts = Seq("downloads", "views", "browsers")
+    dts.map(dt => dt -> spark.read.parquet(s"${cfg.factRoot}/$dt")
+      .collect().map(_.toString).toSet).toMap ++
+      dts.map(dt => s"mv $dt" -> graft.store.LifetimeMv.read(spark, s"${cfg.factRoot}/_mv/$dt")
+        .get.collect().map(_.toString).toSet)
+  }
+
+  test("Etl.run on a night within the size rule: one task per stage, no shuffle, no decision job") {
+    val cfg = twoDays()
+    val (written, jobs, stages) = traced(cfg)
+    assert(written("downloads") == 2L)
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.startsWith("etl: ")), jobs.mkString("; "))
+    // the day counts and the watermark are observed on jobs that run anyway
+    assert(!jobs.exists(j => j.contains("day-counts") || j.contains("checkpoint watermark")),
+      jobs.mkString("; "))
+    assert(stages.nonEmpty && !stages.exists(_._2), s"a stage wrote shuffle output: $stages")
+    assert(stages.forall(_._1 == 1), s"stage task counts ${stages.map(_._1)}")
+    assert(graft.store.FactStore.loadCheckpoint(cfg.checkpointDir, "access")
+      .contains("2024-03-02"))
+  }
+
+  test("Etl.run: every job labeled, no stage after the first shuffle at initialPartitionNum tasks") {
+    val initial = spark.conf
+      .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt
+    val small = twoDays()
+    Etl.run(spark, small)
+    // the same night above the size rule: today's parallel plans
+    val cfg = twoDays()
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    val (written, jobs, stages) =
+      try traced(cfg) finally spark.conf.unset("spark.sql.files.openCostInBytes")
     assert(written("downloads") == 2L)
 
     assert(jobs.nonEmpty)
@@ -216,6 +253,73 @@ class EtlEndToEndSpec extends AnyFunSuite with SparkSpec {
     val after = stages.drop(firstShuffle + 1).map(_._1)
     assert(after.nonEmpty && after.forall(_ < initial),
       s"task counts after the first shuffle $after, initialPartitionNum $initial")
+    // one partition or many, the store holds the same rows
+    assert(contents(cfg) == contents(small))
+  }
+
+  /** Every file under `root` with its length and modification time. */
+  private def snapshot(root: String): Set[(String, Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk) else Seq(f)
+    walk(new java.io.File(root)).map(f =>
+      (f.getPath.stripPrefix(root), f.length, f.lastModified)).toSet
+  }
+
+  test("a closed day whose hits are all robots advances the checkpoint and writes no fact row") {
+    val cfg = twoDays()
+    assert(Etl.run(spark, cfg)("downloads") == 2L)
+    val before = snapshot(cfg.factRoot)
+    val logs = new java.io.File(cfg.logGlob).getParentFile.getParentFile
+    writeDay(logs, "2024-03-03", Seq(
+      "2024-03-03T09:00:00Z\t5.6.7.8\tGooglebot/2.1\thttps://x.com\tsvc\t12\t7",
+      "2024-03-03T10:00:00Z\t5.6.7.9\tbingbot/2.0\t\tsvc\t13\t"))
+    val written = Etl.run(spark, cfg.copy(today = java.time.LocalDate.of(2024, 3, 5)))
+    assert(written.values.forall(_ == 0L), written)
+    assert(graft.store.FactStore.loadCheckpoint(cfg.checkpointDir, "access")
+      .contains("2024-03-03"))
+    assert(snapshot(cfg.factRoot) == before)
+  }
+
+  test("a run with no new closed day file writes nothing, moves nothing and returns") {
+    val cfg = twoDays()
+    assert(Etl.run(spark, cfg)("downloads") == 2L)
+    val checkpoint = graft.store.FactStore.loadCheckpoint(cfg.checkpointDir, "access")
+    val before = snapshot(cfg.factRoot)
+    assert(before.exists(_._1.endsWith("mv_current.ckpt")), before)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def nothingMoves(): Unit = {
+      val written = Await.result(Future(Etl.run(spark, cfg)),
+        scala.concurrent.duration.Duration(120, "s"))
+      assert(written == Map("downloads" -> 0L, "views" -> 0L, "browsers" -> 0L))
+      assert(graft.store.FactStore.loadCheckpoint(cfg.checkpointDir, "access") == checkpoint)
+      assert(snapshot(cfg.factRoot) == before)
+    }
+    // every listed file is dated before the checkpoint: nothing is read
+    nothingMoves()
+    // a live (today) file is listed but holds no closed day
+    val logs = new java.io.File(cfg.logGlob).getParentFile.getParentFile
+    writeDay(logs, "2024-03-04", Seq(
+      "2024-03-04T09:00:00Z\t3.5.0.1\tMozilla/5.0 Chrome/99\t\tsvc\t12\t9"))
+    nothingMoves()
+  }
+
+  test("AccessLog.read sizes a gzip day file by its text, not its bytes on disk") {
+    val logs = Files.createTempDirectory("etl-logs").toFile
+    val lines = (0 until 200).map(i =>
+      f"2024-03-01T10:${i % 60}%02d:00Z\t1.5.0.1\tMozilla/5.0 Chrome/99\t\tsvc\t12\t7")
+    writeDay(logs, "2024-03-01", lines)
+    val text = (lines.mkString("\n") + "\n").getBytes("UTF-8").length.toLong
+    val gz = new java.io.File(logs, "2024/2024-03-01.log.gz").length
+    assert(gz < text / 4, s"$gz gzip bytes, $text text bytes")
+    def single(limit: Long): Boolean = {
+      spark.conf.set("spark.sql.files.openCostInBytes", limit.toString)
+      try graft.plans.OnePartition.reported(AccessLog.read(spark, logs.getAbsolutePath + "/*/*.log.gz"))
+      finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+    assert(single(text))
+    assert(!single(text - 1))
+    assert(!single(gz))
   }
 
   test("day files dated before the checkpoint are never opened") {

@@ -305,6 +305,34 @@ class EtlSpec extends AnyFunSuite with SparkSpec {
     assert(rows == Set(("2024-03-01", 5L), ("2024-03-02", 9L)))
   }
 
+  test("FactStore: a one-partition overwrite writes one file per day dir, the clustered write's rows") {
+    val s = spark; import s.implicits._
+    val fact = (0 until 40).map(i =>
+        (java.sql.Date.valueOf(java.time.LocalDate.of(2024, 3, 1).plusDays(i % 5L)),
+          i.toLong % 7, "downloads", 1L + i))
+      .toDF("date", "id", "value", "count")
+    val one = Files.createTempDirectory("facts-one").toString
+    val clustered = Files.createTempDirectory("facts-clustered").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    // the write job only: no shuffle-map job clusters a one-partition fact
+    org.apache.spark.SpecBus.listening(spark.sparkContext, listener)(
+      FactStore.overwritePartitions(fact.coalesce(1), one))
+    assert(jobs.get == 1, s"${jobs.get} jobs")
+    FactStore.overwritePartitions(fact.repartition(4), clustered)
+    val days = new java.io.File(one).listFiles.filter(_.getName.startsWith("date=")).toSeq
+    assert(days.size == 5)
+    days.foreach { d =>
+      val files = d.listFiles.map(_.getName).filter(_.endsWith(".parquet")).toSeq
+      assert(files.size == 1, s"$d holds $files")
+    }
+    def rows(path: String) = FactStore.read(spark, path).collect().map(_.toString).toSet
+    assert(rows(one) == rows(clustered) && rows(one).size == 40)
+  }
+
   test("FactStore: compact collapses append-accumulated small files, preserves data") {
     val s = spark; import s.implicits._
     val dir = Files.createTempDirectory("compact").toString

@@ -1034,7 +1034,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     }.toMap
     val seriesCtx = kinds.toMap.apply("series")
     val series = densified(QueryCompiler.compile(seriesCtx, cat))
-    val seriesRows = series.collect().toSeq
+    var seriesRows = Seq.empty[org.apache.spark.sql.Row]
+    // the one-slice calendar hash-joins the one-partition series: no broadcast job
+    val seriesJobs = jobs { seriesRows = series.collect().toSeq }
+    assert(seriesJobs == 1, s"densified series ran $seriesJobs jobs:\n${finalPlan(series)}")
     assert(!shuffles(finalPlan(series)), s"densify/regroup/cumulative shuffled:\n${finalPlan(series)}")
 
     // below the table's bytes: today's parallel plan, equal rows

@@ -159,6 +159,32 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** Hits over a few two-column keys, seconds on a coarse grid so a
+    * key's chain has equal seconds (ties) and gaps on both sides of
+    * the timeout. */
+  private val chainsGen: Gen[List[(Int, Int, Long)]] =
+    Gen.choose(1, 60).flatMap(n => Gen.listOfN(n, for {
+      a <- Gen.choose(0, 2)
+      b <- Gen.choose(0, 1)
+      sec <- Gen.choose(0L, 12L)
+    } yield (a, b, sec * 1000L)))
+
+  test("sequential repeat filter: a one-partition input keeps the rows a repartitioned one does, with no exchange") {
+    forAllSeeded(chainsGen) { hits =>
+      val sp = spark; import sp.implicits._
+      val df = hits.zipWithIndex.map { case ((a, b, sec), i) => (a, s"b$b", sec, i.toLong) }
+        .toDF("ka", "kb", "sec", "tie")
+      def kept(in: org.apache.spark.sql.DataFrame) =
+        Repeat.sequential(in, Seq("ka", "kb"), "sec", 3600L, "tie")
+      def rows(out: org.apache.spark.sql.DataFrame) =
+        out.select("ka", "kb", "sec", "tie").collect().map(_.toString).sorted.toSeq
+      val one = kept(df.coalesce(1))
+      assert(rows(one) == rows(kept(df.repartition(3))))
+      val p = one.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange"), s"the one-partition plan shuffles:\n$p")
+    }
+  }
+
   test("saltedSum equals direct groupBy for arbitrary key/value data") {
     val gen = for {
       n <- Gen.choose(1, 60)
